@@ -166,7 +166,8 @@ object SparkEntry {
       }
     }
 
-  /** profiling accessor (SerpProfile scratch main) — same memoized index. */
+  /** The memoized demo index and ranks, for Bench's SERP prepare/serve
+    * breakdown, which times Searcher.prepare on a fresh Prepared. */
   private[graft] def demoIndexForProfile(spark: SparkSession): (graft.index.IndexTables, DataFrame) =
     demoIndex(spark)
 

@@ -1,21 +1,35 @@
 package graft.rank
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.gfn
 import graft.index.IndexTables
 import graft.text.TextPipeline
 
 /** Query-time retrieval + scoring: the reference's Ranker.rankDocs +
-  * WebController final scoring (Ranker.kt:48-98, WebController.kt:48-83)
-  * as one DataFrame job. The SERP is a DataFrame with the score breakdown
-  * columns (total, cos, pr, title_score) — HTML rendering is presentation,
-  * out of engine scope (SURVEY.md §2.7).
+  * WebController final scoring (Ranker.kt:48-98, WebController.kt:48-83).
+  * The SERP is a DataFrame with the score breakdown columns (total, cos,
+  * pr, title_score) — HTML rendering is presentation, out of engine scope
+  * (SURVEY.md §2.7).
+  *
+  * Serve invariants:
+  *  - one Spark job per query (AQE off on the serve session, no broadcast
+  *    exchange, no subquery): term resolve is driver-side whenever the
+  *    term dictionary fits in memory, and the scoring join, mean score and
+  *    top-K run in the job that collects the SERP;
+  *  - `statics` and postings⋈tfidf are materialized leaves, hash-partitioned
+  *    on url_id to the serve session's shuffle partitions, so the scoring
+  *    aggregate and the statics join need no exchange of a prepared table;
+  *  - no per-query cache: a query leaves nothing persisted behind.
   *
   * Exactness notes:
-  *  - single-word score = tf · tfidf_r6 per occurrence (the reference
-  *    scatter-adds the ROUNDED tfidf once per posting-list occurrence);
+  *  - single-word score = mult · tf · tfidf_r6 (the reference scatter-adds
+  *    the ROUNDED tfidf once per posting-list occurrence, once per repeat
+  *    of the word in the query);
   *  - phrase score = (Σ over phrase TOKENS, duplicates included, of
   *    tfidf_r6) × non-overlapping phrase count;
   *  - an unknown word inside a phrase kills the whole phrase; an unknown
@@ -34,38 +48,52 @@ object Searcher {
                             statics: DataFrame, postingsTfidf: DataFrame,
                             serve: SparkSession, viewNames: Seq[String],
                             wordIdLocal: Option[Map[String, Long]] = None) {
-    /** Release the cached rank + statics + postings⋈tfidf tables and the
-      * global temp views backing the serve session — a long-lived serving
-      * session should close() retired Prepared instances or cached plans
-      * accumulate. */
+    /** Release everything [[prepare]] materialized — the rank cache, the
+      * checkpointed statics and postings⋈tfidf blocks — and the global temp
+      * views backing the serve session. A long-lived serving session should
+      * close() retired Prepared instances. */
     def close(): Unit = {
-      ranks.unpersist(); statics.unpersist(); postingsTfidf.unpersist()
+      ranks.unpersist()
+      Seq(statics, postingsTfidf).foreach(release)
       viewNames.foreach(serve.catalog.dropGlobalTempView)
       ()
     }
   }
 
+  /** Largest vocabulary [[prepare]] holds as a driver-side term map. */
+  private val MaxLocalTerms = 1000000
+
   private val prepareIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** One-time serving prep: cache the rank table, read the global max PR,
-    * and pre-join the four QUERY-INDEPENDENT per-doc dimensions
-    * (max_tf ⋈ rank ⋈ title ⋈ url) into one cached `statics` table. The
-    * per-query serve then pays ONE url_id join against statics instead of
-    * four separate joins — on a latency-bound path each extra join is a
-    * broadcast-exchange job of its own, and all four were identical across
-    * queries (the classic prepared-statement trade: do query-invariant work
-    * once). statics is index-sized (one row per doc), so at cluster scale
-    * it stays a shuffle join keyed the same way as the scoring aggregate.
+  /** The RDD behind a checkpointed DataFrame (a LogicalRDD leaf). */
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+
+  /** Frees a checkpointed DataFrame's blocks — `Dataset.unpersist()` only
+    * drops cache entries, never a local checkpoint. */
+  private def release(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** One-time serving prep: all query-invariant work happens here.
+    *  - the rank table is cached and the global max PR read once;
+    *  - `statics` pre-joins every per-doc value the serve consumes
+    *    (max_tf ⋈ rank ⋈ title ⋈ url ⋈ doc length, plus the tokenized and
+    *    lowercased title);
+    *  - `postingsTfidf` pre-joins postings⋈tfidf on (url_id, word_id);
+    *  - both are eager local checkpoints hash-partitioned on url_id: a
+    *    checkpoint is a leaf, so no per-query plan can re-derive it, and
+    *    its partitioning lets the scoring aggregate and join skip the
+    *    exchange;
+    *  - a term dictionary of ≤ [[MaxLocalTerms]] terms is held driver-side
+    *    (one bounded collect); larger ones keep the distributed lookup.
     *
     * The serve runs on a DEDICATED session (`spark.newSession()` — own
     * SQLConf, shared SparkContext + cache): the latency-path conf choices
-    * ([[serveConf]], e.g. AQE off) are set ONCE there and never touch the
-    * caller's session, so concurrent non-search queries can't observe
-    * serve conf and racing search() calls can't clobber each other's
-    * restore (ADVICE r5 #4 — the old per-call set/restore was non-atomic).
-    * Index tables are rebound onto the serve session through global temp
-    * views; the shared CacheManager still substitutes the parent's cached
-    * plans, so nothing is recomputed or duplicated. */
+    * ([[serveConf]]) are set ONCE there and never touch the caller's
+    * session, so concurrent non-search queries can't observe serve conf and
+    * racing search() calls can't clobber each other. Index tables are
+    * rebound onto the serve session through global temp views; the shared
+    * CacheManager still substitutes the parent's cached plans. */
   def prepare(index: IndexTables, ranks: DataFrame): Prepared = {
     val parent = ranks.sparkSession
     val cached = ranks.cache()
@@ -80,12 +108,9 @@ object Searcher {
         "spark.sql.ansi.enabled", "spark.sql.autoBroadcastJoinThreshold")
       .foreach(k => parent.conf.getOption(k).foreach(serve.conf.set(k, _)))
     serveConf(parent).foreach { case (k, v) => serve.conf.set(k, v) }
-    // serve-side shuffle partitioning is DERIVED from the index size
-    // (round 7, guide §2 scale-adaptive partitioning): the per-query
-    // matched set is ≤ n docs, so a small index stops paying a
-    // cluster-width task wave per tiny shuffle stage while a 10⁸-doc index
-    // keeps the parent's full parallelism (~50k docs/partition, capped at
-    // the parent's configured shuffle partitions).
+    // serve-side shuffle partitioning is derived from the index size: the
+    // per-query matched set is ≤ n docs, so ~50k docs/partition, capped at
+    // the parent's configured shuffle partitions
     val parentSp = parent.conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .getOrElse(parent.sparkContext.defaultParallelism)
@@ -95,16 +120,21 @@ object Searcher {
 
     val id = prepareIds.incrementAndGet()
     var views = List.empty[String]
-    var caches = List.empty[DataFrame]
+    var leaves = List.empty[DataFrame]
     def rebind(df: DataFrame, name: String): DataFrame = {
       val vn = s"graft_serve_${id}_$name"
       df.createOrReplaceGlobalTempView(vn)
       views ::= vn
       serve.table(s"global_temp.$vn")
     }
-    // any failure after the first rebind must drop the views and caches
+    def materialize(df: DataFrame): DataFrame = {
+      val leaf = Bridge.localCheckpoint(df.repartition(serveSp, col("url_id")))
+      leaves ::= leaf
+      leaf
+    }
+    // any failure after the first rebind must drop the views and leaves
     // created so far — Prepared was never constructed, so the caller has
-    // no close() handle to release them (ADVICE r6 #4)
+    // no close() handle to release them
     try {
       val sIdx = IndexTables(
         urlDict = rebind(index.urlDict, "url_dict"),
@@ -120,13 +150,9 @@ object Searcher {
         urlWordCount = rebind(index.urlWordCount, "url_word_count"))
       val sRanks = rebind(cached, "ranks")
 
-      // statics now folds in EVERY query-invariant per-doc value the serve
-      // path consumes (round 7): doc length (the normalizer divisor — was a
-      // separate per-query join), the tokenized + lowercased title (was
-      // re-tokenized per matched doc on every query). docLen's keyset
-      // equals maxTf's (both derive from the postings-bearing docs), so the
-      // inner join changes no rows.
-      val statics = sIdx.maxTf
+      // docLen's keyset equals maxTf's (both derive from the
+      // postings-bearing docs), so the inner joins change no rows
+      val statics = materialize(sIdx.maxTf
         .join(sRanks, Seq("url_id"), "left")
         .join(sIdx.urlInfo.select("url_id", "title"), Seq("url_id"))
         .join(sIdx.urlDict.select("url_id", "url"), Seq("url_id"))
@@ -135,37 +161,25 @@ object Searcher {
           coalesce(col("rank"), lit(0.0)).as("rank"), col("title"), col("url"),
           col("len"),
           gfn.tokenize_words(col("title")).as("title_toks"),
-          lower(col("title")).as("title_lc"))
-        .cache()
-      caches ::= statics
-      statics.count(): Unit // materialize once, outside the first query's wall
+          lower(col("title")).as("title_lc")))
 
-      // the single-word scoring path joins postings⋈tfidf on the SAME
-      // (url_id, word_id) key on every query — pre-join it once here (the
-      // prepared-statement trade again; one serving-index-sized cache)
-      val postingsTfidf = sIdx.postings
+      // tfidf's keyset equals postings' (tfidf derives from postings)
+      val postingsTfidf = materialize(sIdx.postings
         .join(sIdx.tfidf, Seq("url_id", "word_id"))
-        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6"))
-        .cache()
-      caches ::= postingsTfidf
-      postingsTfidf.count(): Unit
+        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6")))
 
-      // serving-side term dictionary (round 7, size-adaptive): resolving
-      // query stems to word ids was a distributed filter+collect JOB on
-      // every serve. A real serving tier holds the term dictionary in
-      // memory when it fits; ≤ 1M terms (~tens of MB) collects to a driver
-      // map here, larger vocabularies keep the distributed lookup — the
-      // same scale-adaptive trade as the statics cache.
+      // coalesce(1): the bounded collect is one job reading at most
+      // MaxLocalTerms + 1 rows, whatever the dictionary's partitioning
+      val terms = sIdx.wordDict.coalesce(1).limit(MaxLocalTerms + 1).collect()
       val wordIdLocal =
-        if (sIdx.wordDict.count() <= 1000000L)
-          Some(sIdx.wordDict.collect()
-            .map(r => r.getString(0) -> r.getLong(1)).toMap)
+        if (terms.length <= MaxLocalTerms)
+          Some(terms.map(r => r.getString(0) -> r.getLong(1)).toMap)
         else None
 
       Prepared(sIdx, cached, maxPR, statics, postingsTfidf, serve, views,
         wordIdLocal)
     } catch { case e: Throwable =>
-      caches.foreach(c => scala.util.Try(c.unpersist()))
+      leaves.foreach(l => scala.util.Try(release(l)))
       views.foreach(v => scala.util.Try(serve.catalog.dropGlobalTempView(v)))
       scala.util.Try(cached.unpersist())
       throw e
@@ -182,28 +196,15 @@ object Searcher {
         StructField("title_score", DoubleType), StructField("title", StringType))))
   }
 
-  private val prof = sys.env.contains("GRAFT_SERP_PROF")
-  private def ptime[T](label: String)(f: => T): T =
-    if (!prof) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[serp-prof] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Serving-path latency confs, applied once to the DEDICATED serve
-    * session in [[prepare]]. AQE turns every query stage of the SERP
-    * plan into its own driver-replanned job with a materialization barrier:
-    * measured on the demo index, the ~15-stage serve plan became ~15
-    * sequential jobs at ~300-400 ms scheduling overhead each — 6 s of a
-    * 6.5 s warm wall was AQE round-trips, not compute (stage task time
-    * summed to <1 s). A latency-bound top-K serve wants the whole DAG
-    * scheduled as ONE job, so AQE is disabled on the serve session by
-    * default; set spark.graft.serve.aqe=true on the PARENT session before
-    * prepare() to restore it (the right trade when the per-query
-    * matched-doc set is large enough that runtime skew handling and
-    * partition coalescing beat scheduling round-trips — e.g. single-token
-    * queries over a multi-TB index). */
+    * session in [[prepare]]. AQE turns every query stage of the SERP plan
+    * into its own driver-replanned job with a materialization barrier, and
+    * a latency-bound top-K serve wants the whole DAG scheduled as ONE job,
+    * so AQE is off on the serve session by default. Set
+    * spark.graft.serve.aqe=true on the PARENT session before prepare() to
+    * restore it (the right trade when the per-query matched-doc set is
+    * large enough that runtime skew handling and partition coalescing beat
+    * scheduling round-trips). */
   private def serveConf(parent: SparkSession): Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> parent.conf.get("spark.graft.serve.aqe", "false"))
 
@@ -211,24 +212,37 @@ object Searcher {
     * executes on the Prepared's dedicated serve session — the caller's
     * session conf is never touched. */
   def search(spark: SparkSession, p: Prepared, query: String, topK: Int = 50): DataFrame =
-    searchImpl(p.serve, p, query, topK)
+    scoringPlan(p, query, topK) match {
+      case None => emptyResult(p.serve)
+      case Some(top) => collectSerp(p.serve, top)
+    }
 
-  private def searchImpl(spark: SparkSession, p: Prepared, query: String, topK: Int): DataFrame = {
-    import spark.implicits._
-    val idx = p.index
+  /** Query word ids → `postingsTfidf` rows, each with the id's multiplicity
+    * in `ids` as the int column `mult`. The ids enter the plan as a filter
+    * and a CASE expression rather than a joined relation, so the plan has
+    * no query-term leaf to broadcast. */
+  private def termRows(p: Prepared, ids: Seq[Long]): DataFrame = {
+    val mults = ids.groupBy(identity).map { case (w, occ) => (w, occ.size) }.toSeq.sortBy(_._1)
+    val wordId = col("word_id")
+    val mult = mults.tail.foldLeft(when(wordId === mults.head._1, mults.head._2)) {
+      case (m, (w, k)) => m.when(wordId === w, k)
+    }
+    p.postingsTfidf.filter(wordId.isin(mults.map(_._1): _*)).withColumn("mult", mult)
+  }
 
+  /** The scoring plan of `query` on the serve session: the top-K rows
+    * (url_id, url, total, cos, pr, title_score, title) ordered by
+    * (total desc, url_id asc), or None when no query term resolves. */
+  private[graft] def scoringPlan(p: Prepared, query: String, topK: Int): Option[DataFrame] = {
     // -- driver-side query analysis (queries are tiny) ----------------------
     val groups = TextPipeline.tokenizeQuery(query)
-    if (groups.isEmpty) return emptyResult(spark)
+    if (groups.isEmpty) return None
     val allStems = groups.flatten
-    val wordIdMap = ptime("wordId lookup") {
-      p.wordIdLocal match {
-        case Some(dict) => // prepared in-memory dictionary (small vocab)
-          allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
-        case None => idx.wordDict
-          .filter(col("word").isInCollection(allStems.distinct))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
+    val wordIdMap = p.wordIdLocal match {
+      case Some(dict) => allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
+      case None => p.index.wordDict
+        .filter(col("word").isInCollection(allStems.distinct))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
 
     // findWordId with the phrase-kill rule (Ranker.kt:100-119)
@@ -239,72 +253,50 @@ object Searcher {
       else if (resolved.isEmpty) None
       else Some(resolved.toVector)
     }
-    if (idGroups.isEmpty) return emptyResult(spark)
+    if (idGroups.isEmpty) return None
 
     val queryLength = math.sqrt(idGroups.map(_.size).sum.toDouble)
 
-    // -- single-word contributions: one broadcast join over the PREPARED
-    // postings⋈tfidf table (the per-query (url_id, word_id) join moved
-    // into prepare(), round 7) --------------------------------------------
+    // -- single-word contributions over the prepared postings⋈tfidf leaf ----
     val singles = idGroups.filter(_.size == 1).map(_.head)
-      .groupBy(identity).map { case (w, occ) => (w, occ.size) }.toSeq
-    val singleScores: Option[DataFrame] =
+    val singleScores =
       if (singles.isEmpty) None
-      else {
-        val sdf = broadcast(singles.toDF("word_id", "mult"))
-        Some(p.postingsTfidf.join(sdf, Seq("word_id"))
-          .select(col("url_id"),
-            (col("mult") * col("tf") * col("tfidf_r6")).as("contrib")))
-      }
+      else Some(termRows(p, singles)
+        .select(col("url_id"), (col("mult") * col("tf") * col("tfidf_r6")).as("contrib")))
 
     // -- phrase contributions: forward-index scan per phrase ----------------
-    val phrases = idGroups.filter(_.size > 1)
-    val phraseScores: Seq[DataFrame] = phrases.map { ph =>
-      val matches = idx.docWords
-        .select(col("url_id"),
-          gfn.count_phrase(col("words"), typedlit(ph)).as("c"))
+    val phraseScores = idGroups.filter(_.size > 1).map { ph =>
+      val matches = p.index.docWords
+        .select(col("url_id"), gfn.count_phrase(col("words"), typedlit(ph)).as("c"))
         .filter(col("c") > 0)
-      val terms = broadcast(
-        ph.groupBy(identity).map { case (w, occ) => (w, occ.size) }
-          .toSeq.toDF("word_id", "mult"))
-      val termSum = idx.tfidf.join(terms, Seq("word_id"))
+      val termSum = termRows(p, ph)
         .groupBy("url_id")
         .agg(sum(col("mult") * col("tfidf_r6")).as("term_sum"))
-      matches.join(termSum, Seq("url_id"))
+      matches.join(termSum.hint("shuffle_hash"), Seq("url_id"))
         .select(col("url_id"), (col("term_sum") * col("c")).as("contrib"))
     }
 
-    val contributions = (singleScores.toSeq ++ phraseScores)
+    val rawScores = (singleScores.toSeq ++ phraseScores)
       .reduce(_ unionByName _)
-    val rawScores = contributions.groupBy("url_id")
+      .groupBy("url_id")
       .agg(sum("contrib").as("raw"))
 
-    // -- normalization (Ranker.kt:92-95) ------------------------------------
-    // ONE join against the prepared statics table per query (round 7):
-    // statics now carries the doc length too, so the normalizer and the
-    // final scoring share a single url_id join instead of two. The cache
-    // cut moves here — same dedup role the old `norm` cache played for the
-    // mean-score aggregate + scoring consumers.
-    val joined = rawScores.join(p.statics, Seq("url_id"))
+    // -- normalization (Ranker.kt:92-95): one url_id join against statics,
+    // which carries the doc length; both sides are url_id-partitioned ------
+    val joined = rawScores.hint("shuffle_hash").join(p.statics, Seq("url_id"))
       .withColumn("score", col("raw") / (col("len") * lit(queryLength)))
-      .cache()
 
-    // meanScore (Σ score / 3n — identical arithmetic to the reference's
-    // driver-side mean) enters the plan as a BROADCAST 1-row aggregate
-    // instead of a driver collect: the whole SERP is then ONE Spark job
-    // after the word-id lookup (was three — the serving-latency lever on
-    // a batch engine, where job launch dominates at top-50 scale). The
-    // statics join changes no rows vs aggregating over rawScores⋈docLen:
-    // statics' keyset equals docLen's (prepare() scaladoc).
+    // meanScore (Σ score / 3n — the reference's driver-side mean) is a
+    // 1-row aggregate replicated to every scoring partition by a cartesian
+    // product, so it stays inside the SERP's job. statics' keyset equals
+    // docLen's, so aggregating over the statics join changes no rows.
     val stats = joined.agg(
       (sum("score") / (count(lit(1)) * 3)).as("mean_score"))
 
     // -- final scoring (WebController.kt:60-83) ------------------------------
-    // title_toks / title_lc are PRECOMPUTED in statics (query-invariant;
-    // the per-query tokenize of every matched title was pure serve tax)
     val stemsLit = typedlit(allStems)
-    val scored = joined
-      .crossJoin(broadcast(stats))
+    val scored = joined.hint("shuffle_replicate_nl")
+      .crossJoin(stats)
       .withColumn("cos", col("score") / col("max_tf"))
       .withColumn("pr", col("rank") / lit(p.maxPR * 3))
       .withColumn("title_score",
@@ -314,17 +306,20 @@ object Searcher {
       .withColumn("total", col("cos") + col("pr") + col("title_score"))
 
     // global top-K as a TakeOrderedAndProject (no single-partition sort
-    // exchange); the rank column is assigned DRIVER-side over the collected
-    // ≤ topK rows — identical semantics to a row_number() window ordered by
-    // (total desc, url_id asc), without the Window's one-partition shuffle
-    // that used to be the serve job's last stage
-    val top = scored
+    // exchange); the rank column is assigned driver-side over the ≤ topK
+    // collected rows
+    Some(scored
       .select("url_id", "url", "total", "cos", "pr", "title_score", "title")
       .orderBy(desc("total"), asc("url_id"))
-      .limit(topK)
+      .limit(topK))
+  }
 
-    // plan-audit hook (round 7): the returned SERP is a LocalRelation, so
-    // the serve's actual scoring plan must be captured here, pre-collect
+  /** Runs the scoring plan as one job and returns the SERP as a
+    * LocalRelation with the 1-based `rank` column prepended — ≤ topK rows,
+    * and a broadcastable local table for downstream joins (serpDetails). */
+  private def collectSerp(spark: SparkSession, top: DataFrame): DataFrame = {
+    // plan-audit hook: the returned SERP is a LocalRelation, so the serve's
+    // scoring plan must be captured here, pre-collect
     sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { dir =>
       try {
         val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -334,15 +329,7 @@ object Searcher {
           top.queryExecution.explainString(mode))
       } catch { case scala.util.control.NonFatal(_) => () }
     }
-    // the SERP is ≤ topK rows — materialize it as a LocalRelation so the
-    // per-query `norm` cache can be released immediately (a serving session
-    // firing many queries must not accumulate cached plans), and downstream
-    // joins (serpDetails) get a broadcastable local table for free. The
-    // unpersist is in a finally: a failed/cancelled serve job must not
-    // leak one cached plan per failed query
-    val collected =
-      try ptime("serp collect") { top.collect() }
-      finally joined.unpersist()
+    val collected = top.collect()
     if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
     // re-assert the order driver-side (TakeOrderedAndProject returns rows
     // already ordered; this is a ≤ topK-element no-op guard, not a sort job)

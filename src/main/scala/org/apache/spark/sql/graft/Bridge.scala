@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Bridge into the `private[sql]` Column↔Expression converters of Spark 4's
   * classic module — the supported way for third-party Catalyst expressions
@@ -11,4 +13,21 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An eager local checkpoint of `df` whose logical statistics are the
+    * size of its stored blocks. `Dataset.localCheckpoint` keeps the source
+    * plan's size estimate, which multiplies across joins when cost-based
+    * optimization is off; an overestimated single-partition leaf is
+    * re-shuffled by the planner (spark.sql.maxSinglePartitionBytes). */
+  def localCheckpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = true)
+    cp.queryExecution.logical match {
+      case r: LogicalRDD =>
+        val stored = r.rdd.sparkContext.getRDDStorageInfo
+          .find(_.id == r.rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
+        val session = df.sparkSession.asInstanceOf[SparkSession]
+        Dataset.ofRows(session, r.copy()(session, Some(Statistics(BigInt(stored))), None))
+      case _ => cp
+    }
+  }
 }

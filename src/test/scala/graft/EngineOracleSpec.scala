@@ -269,7 +269,14 @@ class EngineOracleSpec extends AnyFunSuite {
       "qqqunknown research",       // unknown single word dropped
       "\"hong qqqunknown\" systems" // unknown word kills the phrase
     )
-    queries.foreach { q =>
+    // query-term multiplicities: a repeated single term, a term mixed with
+    // a phrase, and a phrase whose token repeats — each must match
+    // documents to pin anything
+    val multiplicities = Seq("research research",
+      "networks \"hong kong\" networks", "\"systems systems\"")
+    multiplicities.foreach(q =>
+      assert(ReferenceOracle.search(q, oracleIndex, oracleRanks).nonEmpty, q))
+    (queries ++ multiplicities).foreach { q =>
       val engine = Searcher.search(spark, prepared, q)
         .select("rank", "url_id", "total", "cos", "pr", "title_score")
         .as[(Int, Long, Double, Double, Double, Double)].collect().toVector

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +17,9 @@ import graft.oracle.ReferenceOracle.CrawlParams
 import graft.rank.{PageRankSpark, Searcher}
 
 /** A3/T4/J7/S6/F11 fixtures: the word-count list ordering, top-5 terms,
-  * SERP metadata joins, CSV fixture encoding, 6-dp string form. */
+  * SERP metadata joins, CSV fixture encoding, 6-dp string form; and the
+  * serve's shape: one Spark job per query over the prepared leaves, and
+  * close() releasing everything prepare() materialized. */
 class SerpDetailsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -124,6 +132,99 @@ class SerpDetailsSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == parentAqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parentSpBefore)
     prepared.close()
+  }
+
+  private def freshRanks =
+    PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 5)
+
+  /** Jobs started by `f` on this thread, counted by a listener that keeps
+    * only jobs carrying this call's local-property tag. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.test.job") == tag)
+          seen.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.job", tag)
+    try f
+    finally {
+      sc.setLocalProperty("graft.test.job", null)
+      TestListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.size
+  }
+
+  test("serve shape: one job per term, multi-term and phrase query, " +
+       "at most one for an unknown-only query") {
+    val p = Searcher.prepare(eIdx, freshRanks)
+    try {
+      Searcher.search(spark, p, "research").collect() // warm-up
+      Seq("research", "research systems networks", "\"hong kong\"",
+          "\"hong kong\" research").foreach { q =>
+        var rows = 0
+        val jobs = jobsOf { rows = Searcher.search(spark, p, q).collect().length }
+        assert(rows > 0, s"'$q' must match documents for the job count to mean anything")
+        assert(jobs == 1, s"'$q' ran $jobs jobs")
+      }
+      val unknown = jobsOf { Searcher.search(spark, p, "qqqunknown").collect() }
+      assert(unknown <= 1, s"unknown-only query ran $unknown jobs")
+    } finally p.close()
+  }
+
+  test("serve shape: a term query's plan reads only the prepared leaves " +
+       "and has no broadcast exchange") {
+    val p = Searcher.prepare(eIdx, freshRanks)
+    try {
+      val plan: SparkPlan = Searcher.scoringPlan(p, "research systems", 50).get
+        .queryExecution.executedPlan
+      assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
+      val staticsRdd = Searcher.checkpointRdd(p.statics).get.id
+      val leafRdds = Set(staticsRdd, Searcher.checkpointRdd(p.postingsTfidf).get.id)
+      val leaves = plan.collectLeaves()
+      // every leaf is a scan of a prepared checkpoint: statics is never
+      // re-derived, and no join or aggregate sits below its scan
+      leaves.foreach {
+        case s: RDDScanExec => assert(leafRdds.contains(s.rdd.id), plan.treeString)
+        case other => fail(s"unexpected leaf ${other.nodeName}:\n${plan.treeString}")
+      }
+      def isStatics(n: SparkPlan) = n match {
+        case s: RDDScanExec => s.rdd.id == staticsRdd
+        case _ => false
+      }
+      assert(leaves.exists(isStatics), "the statics leaf must be scanned")
+      // statics is partitioned for the scoring join: nothing re-shuffles it
+      plan.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
+        assert(!e.child.collectLeaves().forall(isStatics), plan.treeString)
+      }
+    } finally p.close()
+  }
+
+  test("close() releases every block prepare() materialized, checkpoints included") {
+    val sc = spark.sparkContext
+    // materialize the index's own lazy persists first: they belong to the
+    // index, and prepare() would otherwise be the first to fill them
+    Seq(eIdx.urlDict, eIdx.links, eIdx.docWords, eIdx.wordDict, eIdx.postings,
+      eIdx.maxTf, eIdx.tfidf, eIdx.docLen, eIdx.urlInfo, eIdx.urlWordCount)
+      .foreach(_.count())
+    val ranks = freshRanks
+    ranks.count()
+    def stored: Set[Int] = sc.getRDDStorageInfo.map(_.id).toSet
+    val before = stored
+    val p = Searcher.prepare(eIdx, ranks)
+    Searcher.search(spark, p, "research").collect()
+    Searcher.search(spark, p, "\"hong kong\" research").collect()
+    val added = stored -- before
+    assert(added.size >= 3, s"prepare() must hold ranks, statics and postings⋈tfidf: $added")
+    p.close()
+    // shrinkage is fine (the ContextCleaner may reclaim dead RDDs of other
+    // suites concurrently); nothing prepare() added may survive close()
+    val after = stored
+    assert((after -- before).isEmpty, s"close() left blocks behind: ${after -- before}")
   }
 
   test("S6: quoted-CSV fixture encoding matches the reference's opencsv form") {
