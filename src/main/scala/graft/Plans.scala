@@ -1,16 +1,23 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.corpus.{BenchCorpus, TestCorpus}
 import graft.crawler.{CrawlConfig, Crawler}
 import graft.index.Indexer
 import graft.ops.{TrainingOps => T}
+import graft.rank.{PageRankSpark, Searcher}
 
-/** Physical-plan audit: prints `.explain(formatted)` for the load-bearing
-  * operators so plan quality (pushdown, pruning, broadcast, DPP, codegen
-  * spans) is inspectable — see PLANS.md for the curated findings. */
+/** Untimed physical-plan audit, `sbt "runMain graft.Plans"`: prints
+  * `.explain(formatted)` for the load-bearing lazy operators, and the
+  * executed plans of the eager dedup ops and of one serve, so plan quality
+  * (pushdown, pruning, broadcast, DPP, codegen spans) is inspectable — see
+  * PLANS.md for the curated findings. Timing belongs to perfbench. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -25,6 +32,28 @@ object Plans {
     def section(name: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
       println(s"\n===== $name =====")
       df.explain("formatted")
+    }
+    // an eager op returns an already-materialized table, so its plans are
+    // the ones its own actions executed: a listener on the session that
+    // runs them captures each of them
+    def executed(session: SparkSession, name: String)(run: => Any): Unit = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
+          plans.add(action -> qe)
+        def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      session.listenerManager.register(listener)
+      try run
+      finally {
+        org.apache.spark.sql.graft.Bridge.drainListeners(session.sparkContext)
+        session.listenerManager.unregister(listener)
+      }
+      println(s"\n===== $name: ${plans.size} executed plans =====")
+      for ((action, qe) <- plans.asScala) {
+        println(s"--- $action ---")
+        println(qe.explainString(ExplainMode.fromString("formatted")))
+      }
     }
 
     section("scan_filter: pushdown + column pruning") {
@@ -80,12 +109,18 @@ object Plans {
     section("tfidf DAG: partial aggregation") {
       idx.tfidf
     }
-    section("minhash LSH: shingle arrays + band self-join") {
-      T.minhashLshPairs(spark.read.parquet(s"$sf/documents.parquet"))
-    }
     section("trigram shingles: row-local array transform (ZERO exchanges expected)") {
       T.trigramShingles(spark.read.parquet(s"$sf/documents.parquet"))
     }
+    for (q <- Seq("q_jaccard_pairs", "q_minhash_lsh", "q_simhash_pairs",
+                  "q_simhash_pairs_2stage", "q_winnow_pairs"))
+      executed(spark, s"$q (eager)")(SparkEntry.queries(q)(spark, sf))
+    val prepared = Searcher.prepare(idx,
+      PageRankSpark.run(idx.links, idx.urlDict.select("url_id"), 5))
+    // the serve runs on the prepared state's own session
+    try executed(prepared.serve, "serve: one scoring job over the prepared leaves") {
+      Searcher.search(spark, prepared, "\"hong kong\" research")
+    } finally prepared.close()
 
     // PageRank §8: the weighted edge table is repartition(src)+persisted —
     // one iteration's contribution join must show NO Exchange above the

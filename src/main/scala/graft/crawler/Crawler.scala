@@ -7,7 +7,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.gfn
 import graft.functions.{Bloom, BloomAggExpr, BloomProbeExpr}
-import graft.snapshot.{PartitionLineage, RoundMetrics, Snapshot, SnapshotLog}
+import graft.snapshot.RoundMetrics
 
 /** Crawl configuration. Neutral defaults reproduce the reference exactly:
   * unlimited per-host budget (the reference has no politeness,
@@ -43,6 +43,8 @@ final case class CrawlConfig(
       * close. */
     broadcastMaxRows: Long = 400000L,
     saltBuckets: Int = 16,
+    /** Some(dir) keeps the crawl in resumable snapshot tables under dir;
+      * None keeps it in local checkpoints (see [[SeenStore]]). */
     workDir: Option[String] = None,
     /** false skips the metrics-only jobs (fetch/link/dedup counts) — the
       * throughput-bench mode; state-machine counts (newSeen, frontier) are
@@ -62,28 +64,10 @@ final case class CrawlConfig(
       * DataFrame; callers own this invariant (Bench threads one constant
       * through writer and config for exactly this reason). */
     pagesBuckets: Int = 0,
-    /** memory-mode seen-delta compaction period (see the seen-plan comment
-      * in Crawler.runInternal). Per-run (r3 ADVICE: a JVM-wide env-read
-      * val meant two crawls in one process shared one period and a test
-      * setting the env after class-load silently no-opped); the env var
-      * only seeds the DEFAULT at config construction. */
-    compactEvery: Int =
-      // <= 0 means DISABLE compaction (never trigger) — the naive reading
-      // of 0 would make `deltas.length >= compactEvery` true every round,
-      // re-checkpointing the full cumulative seen set per round (the exact
-      // O(R·N) pathology compaction exists to avoid)
-      sys.env.get("SPARK_GRAFT_SEEN_COMPACT_EVERY").map(_.trim.toInt) match {
-        case Some(n) if n > 0 => n
-        case Some(_)          => Int.MaxValue // 0/negative = disabled
-        case None             => 16
-      }) {
-  /** Normalized compaction period (ADVICE r6 #2): the <=0-means-disabled
-    * rule must hold for PROGRAMMATIC construction too, not only the env
-    * default above — CrawlConfig(compactEvery = 0) would otherwise make
-    * `deltas.length >= compactEvery` true every round and re-checkpoint
-    * the full cumulative seen set per round (the exact O(R·N) pathology
-    * compaction exists to avoid). All engine code reads THIS value. */
-  val compactEveryEff: Int = if (compactEvery <= 0) Int.MaxValue else compactEvery
+    /** the seen set's deltas are compacted into one every `compactEvery`
+      * rounds (see [[SeenStore]]) */
+    compactEvery: Int = 16) {
+  require(compactEvery > 0, s"compactEvery must be positive, got $compactEvery")
 
   def configHash: String =
     java.lang.Long.toHexString(graft.functions.ExprImpl.hashCfg(
@@ -115,9 +99,13 @@ final case class CrawlResult(
   *     skew partition, a second row_number over the ≤ B·S survivors picks
   *     the exact per-host top-B by (depth, url) — identical output to the
   *     single-window plan, no hot-host straggler;
-  *   - every round commits an Iceberg-style snapshot (seen delta + frontier
-  *     + metrics + per-partition lineage) so a killed crawl resumes with
-  *     identical ordering (graft.snapshot.SnapshotLog).
+  *   - the seen set and frontier live in a [[SeenStore]] chosen once from
+  *     `workDir`: local checkpoints, or snapshot tables that commit an
+  *     Iceberg-style manifest per round so a killed crawl resumes with
+  *     identical ordering (graft.snapshot.SnapshotLog). The round loop is
+  *     the same in both modes, and so are its Spark jobs apart from the
+  *     snapshot writes: in memory mode the round's stats aggregate is the
+  *     one job that materializes the seen delta.
   */
 object Crawler {
 
@@ -127,14 +115,6 @@ object Crawler {
   /** Continue from the latest snapshot in cfg.workDir. */
   def resume(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig): CrawlResult =
     runInternal(spark, pages, cfg, resume = true)
-
-  private def emptySeen(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("url", StringType, nullable = false),
-        StructField("url_hash", LongType, nullable = false),
-        StructField("depth", IntegerType, nullable = false))))
-  }
 
   /** host → ARRAY(disallow prefixes), parsed from `…/robots.txt` rows of
     * the pages table (north_rule N2; same parse as the oracle). */
@@ -155,19 +135,15 @@ object Crawler {
 
   /** One-pass candidate selection: TAGS every frontier row instead of
     * filtering, so the deferred remainder (frontier ∖ selected) falls out
-    * of the same pass as the selection. The previous shape computed
-    * `selected` with the politeness windows and then recovered the
-    * remainder with `frontier LEFT ANTI JOIN selected` — two extra
-    * url-shuffles of the ENTIRE frontier per round, pure politeness-mode
-    * tax at 10^10-frontier scale. Here the windows order by
-    * (eligible DESC, depth, url): eligible rows rank 1..E ahead of every
-    * ineligible row, so `eligible && rn <= B` is exactly the old per-host
-    * top-B-of-eligible and everything else is the deferred remainder —
-    * two filters over ONE materialized tagged plan, no join.
+    * of the same pass as the selection, with no anti-join of the frontier
+    * against the selection. The windows order by (eligible DESC, depth,
+    * url): eligible rows rank 1..E ahead of every ineligible row, so
+    * `eligible && rn <= B` is exactly the per-host top-B-of-eligible and
+    * everything else is the deferred remainder — two filters over ONE
+    * materialized tagged plan.
     *
-    * Selection semantics are unchanged (EngineOracleSpec pins per-round
-    * selected counts, the seen set, and frontier contents+depths vs the
-    * reference oracle):
+    * Selection semantics (EngineOracleSpec pins per-round selected counts,
+    * the seen set, and frontier contents+depths vs the reference oracle):
     *   - budget = ∞: eligibility alone decides; no window at all;
     *   - salts > 1: phase 1 caps each (host, salt) bucket at B without a
     *     hot-host single-task partition (a row in the global per-host
@@ -222,29 +198,19 @@ object Crawler {
   private def runInternal(spark: SparkSession, pages: DataFrame,
                           cfg: CrawlConfig, resume: Boolean): CrawlResult = {
     import spark.implicits._
-    val log = cfg.workDir.map(new SnapshotLog(_))
-    // WRITE-FENCE token: all data files this run writes (seen deltas,
-    // frontier snapshots) carry a per-run suffix, so a run that will LOSE
-    // the manifest CAS (stale resumer, concurrent writer, accidental
-    // fresh run on a used workDir) can never overwrite data files already
-    // referenced by committed manifests — the loser's files are merely
-    // orphaned. Readers always go through manifest-recorded paths.
-    val runToken = java.lang.Long.toHexString(
-      java.util.concurrent.ThreadLocalRandom.current().nextLong() | 1L)
+    val store = SeenStore(spark, cfg, resume)
+    val resumed = store.resumed
     val bloomShape = Bloom.shapeFor(cfg.bloomExpectedItems, cfg.bloomFpp)
+    def bloomAgg: Column = org.apache.spark.sql.graft.Bridge.column(
+      BloomAggExpr(org.apache.spark.sql.graft.Bridge.expression(col("url_hash")),
+        bloomShape._1, bloomShape._2).toAggregateExpression())
     var driverBloom = new Bloom(bloomShape._1, bloomShape._2)
 
-    var round = 0
-    var resumedFrom = 0
-    var seenCount = 0L
-    var snapshotId = 0
-    var seenDeltaPaths = Vector.empty[String]
-
-    var seen: DataFrame = emptySeen(spark)
-    var seenDeltas = Vector.empty[DataFrame] // memory mode: checkpointed per-round deltas
-    var frontier: DataFrame =
+    var round = resumed.fold(0)(_.round)
+    var seenCount = resumed.fold(0L)(_.seenCount)
+    var frontier: DataFrame = resumed.fold(
       cfg.seeds.toDF("url")
-        .select(col("url"), gfn.url_host(col("url")).as("host"), lit(0).as("depth"))
+        .select(col("url"), gfn.url_host(col("url")).as("host"), lit(0).as("depth")))(_.frontier)
 
     // bloom maintenance state: active from the start only when the
     // threshold is disabled; otherwise activated (with a one-time rebuild)
@@ -252,56 +218,25 @@ object Crawler {
     var bloomActive = cfg.bloomMinSeen <= 0L
 
     def rebuildBloom(): Unit = if (seenCount > 0) {
-      val bytes = seen.select(
-        org.apache.spark.sql.graft.Bridge.column(
-          BloomAggExpr(org.apache.spark.sql.graft.Bridge.expression(col("url_hash")),
-            bloomShape._1, bloomShape._2).toAggregateExpression()).as("b"))
-        .head().getAs[Array[Byte]](0)
+      val bytes = store.seen.select(bloomAgg.as("b")).head().getAs[Array[Byte]](0)
       driverBloom = Bloom.deserialize(bytes)
     }
+    // a resumed crawl rebuilds the pre-filter from the recovered seen set
+    if (resumed.isDefined && bloomActive) rebuildBloom()
 
-    val resumeState = if (resume) log.flatMap(_.latest) else None
-    resumeState match {
-      case Some(snap) =>
-        // the manifest records the config the chain was built under; a
-        // resume with different seeds/filter/budget/depth would silently
-        // mix incompatible crawl state — fail loudly instead
-        require(snap.configHash == cfg.configHash,
-          s"resume config mismatch: snapshot v${snap.id} was written under " +
-            s"configHash=${snap.configHash}, current config hashes to " +
-            s"${cfg.configHash} — resume with the original CrawlConfig or " +
-            "start a fresh workDir")
-        round = snap.round + 1
-        resumedFrom = round
-        snapshotId = snap.id + 1
-        seenCount = snap.seenCount
-        seenDeltaPaths = snap.seenDeltaPaths
-        seen = if (snap.seenDeltaPaths.nonEmpty)
-          spark.read.parquet(snap.seenDeltaPaths: _*) else emptySeen(spark)
-        frontier = spark.read.parquet(snap.frontierPath)
-        // rebuild the pre-filter from the recovered seen set (if active)
-        if (bloomActive) rebuildBloom()
-      case None => ()
-    }
-
-    // robots rules are collected ONCE to a driver-local relation (round 7,
-    // VERDICT r6 #4): the per-round `broadcast(robots)` used to re-run a
-    // distributed scan-and-collect job over the persisted table on EVERY
-    // politeness wave — pure per-wave serial latency on an unchanged
-    // table. The rules are driver-sized by construction (a broadcast
-    // collects them to the driver anyway); building the broadcast from a
-    // LocalRelation costs no Spark job at all.
+    // robots rules are collected ONCE per crawl to a driver-local relation:
+    // they are driver-sized by construction (a broadcast collects them to
+    // the driver anyway), and a broadcast built from a LocalRelation costs
+    // no Spark job on any politeness wave
     val robots = if (cfg.respectRobots) {
       val rt = robotsTable(pages)
-      val rows = rt.collect()
-      Some(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), rt.schema))
+      Some(spark.createDataFrame(java.util.Arrays.asList(rt.collect(): _*), rt.schema))
     } else None
 
     val metrics = Vector.newBuilder[RoundMetrics]
     var stop = false
     var lastFrontierCount: Long =
-      if (resumeState.isDefined) -1L else cfg.seeds.size.toLong
+      if (resumed.isDefined) -1L else cfg.seeds.size.toLong
 
     while (!stop && round < cfg.maxRounds && seenCount <= cfg.maxSeen) {
       val t0 = System.currentTimeMillis()
@@ -388,11 +323,9 @@ object Crawler {
         } else (-1L, -1L)
 
         // --- per-round link dedup with min discovery depth -----------------
-        // persisted ONLY in metrics mode (round 7): the throughput path has
-        // exactly one consumer (the seen anti-join, or the eager
-        // localCheckpoint on the bloom branch), so the persist was a pure
-        // memory-store write of every link row per round; metrics mode
-        // reads it twice (count + anti-join) and keeps the cache
+        // persisted ONLY in metrics mode, which reads it twice (count +
+        // anti-join); the throughput path has exactly one consumer (the
+        // seen anti-join, or the bloom branch's eager checkpoint)
         val roundLinks0 = fetched
           .select(explode(col("links")).as("url"), (col("depth") + 1).as("depth"))
           .groupBy("url")
@@ -407,6 +340,10 @@ object Crawler {
           rebuildBloom()
           bloomActive = true
         }
+        // the seen side must NEVER be broadcast: it grows every round, and
+        // a broadcast rebuild is a serial driver collect per round (and at
+        // 10^10-url scale an OOM); shuffle_hash keeps the anti-join
+        // distributed
         val newSeen = if (seenCount == 0) {
           roundLinks.select(col("url"), xxhash64(col("url")).as("url_hash"),
             col("depth"))
@@ -414,96 +351,36 @@ object Crawler {
           // below bloomMinSeen: the exact anti-join alone (see the config
           // scaladoc — the filter's serial maintenance dominates there)
           roundLinks
-            .join(seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
+            .join(store.seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
             .select(col("url"), xxhash64(col("url")).as("url_hash"), col("depth"))
         } else {
-          // MATERIALIZE the per-round dedup ONCE before the two probe
-          // branches consume it. An eager localCheckpoint (not persist):
-          // the branches' filter-over-cache plans were observed to MISS the
-          // InMemoryRelation and recompute the whole 146-task
-          // fetch+extract+dedup per branch — event-log forensics showed the
-          // newSeen materialization stage repeating the full scan shape,
-          // making bloom mode 2.31× exact mode (+236 cpu-s) in the round-5
-          // bench. Checkpointing truncates the plan to the materialized
-          // RDD, so a recompute is impossible by construction.
+          // the two probe branches read ONE eager checkpoint of the round's
+          // links: a checkpoint truncates the plan, so neither branch can
+          // recompute the fetch+extract+dedup (a persist does not
+          // guarantee that — filter-over-cache plans can miss the cache)
           val rl = roundLinks.localCheckpoint(true)
           val bc = spark.sparkContext.broadcast(driverBloom)
           val probe = org.apache.spark.sql.graft.Bridge.column(BloomProbeExpr(
             org.apache.spark.sql.graft.Bridge.expression(xxhash64(col("url"))), bc))
-          // the seen side must NEVER be broadcast: it grows every round, and
-          // a broadcast rebuild is a serial driver collect per round (and at
-          // 10^10-url scale an OOM). shuffle_hash keeps the anti-join fully
-          // distributed; the bloom pre-filter has already shrunk the probe
-          // side to likely-dups only.
           val maybeSeen = rl.filter(probe)
-            .join(seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
+            .join(store.seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
           val definitelyNew = rl.filter(!probe)
           definitelyNew.unionByName(maybeSeen)
             .select(col("url"), xxhash64(col("url")).as("url_hash"), col("depth"))
         }
+        val delta = store.append(round, newSeen)
 
-        // --- persist the round: snapshot delta or in-memory checkpoint -----
-        val (newSeenStable, lineage) = log match {
-          case Some(l) =>
-            val deltaPath = s"${l.dir}/seen/delta_r${round}_$runToken"
-            newSeen.write.mode("overwrite").parquet(deltaPath)
-            seenDeltaPaths = seenDeltaPaths :+ deltaPath
-            val back = spark.read.parquet(deltaPath)
-            // per-partition lineage straight from the written parquet
-            // FOOTERS — driver-side metadata reads. The previous
-            // groupBy(spark_partition_id) recount was a full extra Spark
-            // job per round: pure snapshot-mode tax (the round-4 bench
-            // measured resumable mode at 2.8× memory mode; this and the
-            // per-file chmod forks were the serial parts)
-            // Footer reads run CONCURRENTLY (round-4 ADVICE): on a remote
-            // store (HDFS/S3) a sequential loop would be N serial metadata
-            // round-trips per round — the opposite of the speedup. Each
-            // read is one ~8-byte-footer-length + footer fetch, so a small
-            // I/O pool covers the latency without a Spark job.
-            val hconf = spark.sessionState.newHadoopConf()
-            val dp = new org.apache.hadoop.fs.Path(deltaPath)
-            val dfs = dp.getFileSystem(hconf)
-            val statuses = dfs.listStatus(dp)
-              .filter(_.getPath.getName.startsWith("part-"))
-              .sortBy(_.getPath.getName).zipWithIndex.toVector
-            val lin = {
-              import scala.concurrent.{Await, Future}
-              import scala.concurrent.duration.Duration
-              import scala.concurrent.ExecutionContext.Implicits.global
-              Await.result(Future.traverse(statuses) { case (st, i) =>
-                Future {
-                  val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                    .fromStatus(st, hconf)
-                  val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-                  try PartitionLineage(i, r.getRecordCount) finally r.close()
-                }
-              }, Duration.Inf)
-            }
-            (back, lin)
-          case None =>
-            // LAZY checkpoint: the statsRow aggregation below materializes
-            // it, so delta-materialize + count + seed-hits + bloom-shard is
-            // ONE Spark job per round, not two — per-round driver latency
-            // is parallelism-independent and was the main scaling-efficiency
-            // tax at high core counts (7 rounds × ~0.3 s)
-            val cp = newSeen.localCheckpoint(false)
-            (cp, Vector.empty[PartitionLineage])
-        }
-        // one pass over the materialized delta: row count, seed hits (for
-        // the frontier arithmetic below), and — only while the filter is
-        // active — the bloom shard; instead of three separate jobs. With
+        // one pass over the stored delta: row count, seed hits (for the
+        // frontier arithmetic below), and — only while the filter is
+        // active — the bloom shard, instead of three separate jobs. With
         // the bloom below threshold the aggregate carries 16-byte buffers
         // per partition instead of filter-sized ones.
         val baseAggs = Seq(
           count(lit(1)),
           coalesce(sum(when(col("url").isInCollection(cfg.seeds), 1L)
             .otherwise(0L)), lit(0L)))
-        val aggs = if (bloomActive) baseAggs :+
-          org.apache.spark.sql.graft.Bridge.column(
-            BloomAggExpr(org.apache.spark.sql.graft.Bridge.expression(col("url_hash")),
-              bloomShape._1, bloomShape._2).toAggregateExpression())
-          else baseAggs
-        val statsRow = newSeenStable.agg(aggs.head, aggs.tail: _*).head()
+        val aggs = if (bloomActive) baseAggs :+ bloomAgg else baseAggs
+        val statsRow = delta.agg(aggs.head, aggs.tail: _*).head()
         val newCount = statsRow.getLong(0)
         val newSeenSeeds = statsRow.getLong(1)
         if (bloomActive && newCount > 0)
@@ -513,27 +390,13 @@ object Crawler {
         // --- next state -----------------------------------------------------
         // only seeds can sit in frontier∖seen, so "already known to the
         // frontier or already visited" ⇔ "is a seed" for newly-seen urls
-        val frontierAdd = newSeenStable
+        val frontierAdd = delta
           .filter(!col("url").isInCollection(cfg.seeds))
           .select(col("url"), gfn.url_host(col("url")).as("host"), col("depth"))
         // the deferred remainder is already two filters over this round's
         // checkpointed tagged plan — no anti-join (see tagAndSplit)
-        val frontierNextRaw =
-          if (noFilters) frontierAdd
-          else deferred.unionByName(frontierAdd)
-
-        val frontierNext = log match {
-          case Some(l) =>
-            val p = s"${l.dir}/frontier/r${round}_$runToken"
-            frontierNextRaw.write.mode("overwrite").parquet(p)
-            spark.read.parquet(p)
-          case None =>
-            // filters + union over already-materialized checkpoints (the
-            // tagged plan and this round's seen delta) — nothing new to
-            // materialize; next round's tagAndSplit checkpoint re-truncates
-            // the lineage, so plan depth stays O(1)
-            frontierNextRaw
-        }
+        val frontierNext = store.keep(round,
+          if (noFilters) frontierAdd else deferred.unionByName(frontierAdd))
         // |frontierNext| is arithmetic: deferred ⊎ selected ≡ frontier, and
         // frontierAdd = newSeen ∖ seeds is disjoint from the old frontier
         // (frontier residents are already in the seen set, newSeen is not).
@@ -546,61 +409,13 @@ object Crawler {
           else frontierNext.count()
         lastFrontierCount = frontierCount
 
-        // keep the seen plan FLAT and CHEAP: one multi-path parquet scan in
-        // snapshot mode; in memory mode a lazy union of the per-round
-        // checkpointed deltas — each delta was already materialized once,
-        // so re-checkpointing the whole seen set every round would copy
-        // O(total) rows per round (O(R·N) over the crawl) for nothing.
-        // The delta list is COMPACTED every compactEveryEff rounds (union
-        // of K checkpointed deltas → one checkpoint): without it the plan
-        // is a left-deep union re-analyzed every round — O(R²) total
-        // planning cost, a real driver tax at 10³-round depth (round-2
-        // ADVICE). Compaction copies each row O(R/K) times total; K=16
-        // balances the copy cost against plan depth ≤ K.
-        //
-        seen = log match {
-          case Some(_) => spark.read.parquet(seenDeltaPaths: _*)
-          case None =>
-            seenDeltas = seenDeltas :+ newSeenStable
-            if (seenDeltas.length >= cfg.compactEveryEff) {
-              val compacted = seenDeltas.reduce(_ unionByName _).localCheckpoint(true)
-              seenDeltas = Vector(compacted)
-              compacted
-            } else seenDeltas.reduce(_ unionByName _)
-        }
-
         val m = RoundMetrics(round, selCount, fetchCount, linksExtracted,
           dedupDropped = if (cfg.collectMetrics) distinctLinks - newCount else -1L,
           newSeen = newCount, seenTotal = seenCount,
           frontierNext = frontierCount,
           wallMillis = System.currentTimeMillis() - t0)
         metrics += m
-        log.foreach { l =>
-          l.commit(Snapshot(snapshotId, snapshotId - 1, round, seenDeltaPaths,
-            s"${l.dir}/frontier/r${round}_$runToken", seenCount, cfg.configHash, m, lineage))
-          snapshotId += 1
-          // SNAPSHOT-mode seen-delta compaction (round 7 — VERDICT r6 #1,
-          // the resumable path's only unbounded-growth term): every K
-          // rounds the accumulated delta files are rewritten into ONE
-          // write-fenced parquet delta, bounding the manifest's path list,
-          // the per-round multi-path seen scan, and the per-round file
-          // listings at ≤ K+1 instead of O(rounds) — the Iceberg
-          // manifest-compaction contract, mirroring memory mode above.
-          // Runs AFTER this round's commit so every manifest invariant is
-          // unchanged (the list's last entry is always the round's own
-          // delta, matching the lineage field), and a crash anywhere in
-          // the compaction write is harmless: the committed chain still
-          // references the original files (orphaned, never deleted) and
-          // the NEXT commit is what atomically publishes the compacted
-          // list. Each row is copied O(R/K) times total, the same
-          // amortized cost memory mode already pays.
-          if (seenDeltaPaths.length >= cfg.compactEveryEff) {
-            val cp = s"${l.dir}/seen/compact_r${round}_$runToken"
-            seen.write.mode("overwrite").parquet(cp)
-            seenDeltaPaths = Vector(cp)
-            seen = spark.read.parquet(cp)
-          }
-        }
+        store.commit(round, seenCount, m)
 
         frontier = frontierNext
         fetched.unpersist(); roundLinks.unpersist()
@@ -615,6 +430,6 @@ object Crawler {
       }
     }
 
-    CrawlResult(seen, frontier, metrics.result(), resumedFrom)
+    CrawlResult(store.seen, frontier, metrics.result(), resumed.fold(0)(_.round))
   }
 }

@@ -27,31 +27,12 @@ import graft.gfn
   * localCheckpoint / collect that lets intermediate caches release
   * immediately — cache-leak hygiene in long-lived sessions outweighs plan
   * composability here). Compose further transformations on the returned
-  * (already materialized, near-dup-sized) DataFrame freely; audit plans
-  * with `.explain` BEFORE calling, on the inputs. The purely lazy ops
+  * (already materialized, near-dup-sized) DataFrame freely; their executed
+  * plans are printed by `graft.Plans`. The purely lazy ops
   * (text analysis, [[quantizeEmbeddings]], [[cosineDupPairsExact]],
   * [[bruteForceCosineTopK]], [[sessionize]]) stay transformations.
   */
 object TrainingOps {
-
-  /** Plan-audit hook for the EAGER ops: their returned DataFrames are
-    * already-materialized LocalRelations/LogicalRDDs, so the interesting
-    * physical plan must be captured BEFORE the materialization. When
-    * GRAFT_PLAN_DUMP_DIR is set, writes `df.explain("formatted")` there
-    * (suffix from GRAFT_PLAN_SUFFIX); otherwise a no-op. Plan-only — never
-    * executes the query. */
-  private def planDump(name: String, df: DataFrame): Unit =
-    sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { dir =>
-      try {
-        val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        val s = df.queryExecution.explainString(mode)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir,
-          s"$name${sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")}.txt"), s)
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[planDump] $name failed: ${e.getMessage}")
-      }
-    }
 
   def documents(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -343,7 +324,6 @@ object TrainingOps {
     // must not accumulate cached plans (round-2 ADVICE leak class); the
     // checkpoint blocks are ContextCleaner-managed, unlike CacheManager
     // entries which pin until an explicit unpersist
-    planDump("q_jaccard_pairs", result)
     val out = result.localCheckpoint(true)
     arrs.unpersist()
     out
@@ -398,7 +378,6 @@ object TrainingOps {
     val result = l.join(r, Seq("band", "sig")).filter(col("a") < col("b"))
       .select("a", "b").distinct()
       .orderBy("a", "b")
-    planDump("q_minhash_lsh", result)
     val out = result.localCheckpoint(true) // release the cache (leak hygiene)
     sig.unpersist()
     out
@@ -533,7 +512,6 @@ object TrainingOps {
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .orderBy("a", "b")
-    planDump("q_simhash_pairs", result)
     val out = result.localCheckpoint(true)
     fps.unpersist()
     out
@@ -580,7 +558,6 @@ object TrainingOps {
     val result = shared
       .filter(col("shared") >= minShared)
       .orderBy("a", "b")
-    planDump("q_winnow_pairs", result)
     val out = result.localCheckpoint(true)
     posting.unpersist()
     out
@@ -622,7 +599,6 @@ object TrainingOps {
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .orderBy("a", "b")
-    planDump("q_simhash_pairs_2stage", result)
     val out = result.localCheckpoint(true)
     fps.unpersist()
     out

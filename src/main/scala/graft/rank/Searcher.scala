@@ -318,17 +318,6 @@ object Searcher {
     * LocalRelation with the 1-based `rank` column prepended — ≤ topK rows,
     * and a broadcastable local table for downstream joins (serpDetails). */
   private def collectSerp(spark: SparkSession, top: DataFrame): DataFrame = {
-    // plan-audit hook: the returned SERP is a LocalRelation, so the serve's
-    // scoring plan must be captured here, pre-collect
-    sys.env.get("GRAFT_PLAN_DUMP_DIR").foreach { dir =>
-      try {
-        val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir,
-          s"q_serp${sys.env.getOrElse("GRAFT_PLAN_SUFFIX", "")}.txt"),
-          top.queryExecution.explainString(mode))
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
     val collected = top.collect()
     if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
     // re-assert the order driver-side (TakeOrderedAndProject returns rows

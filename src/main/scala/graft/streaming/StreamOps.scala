@@ -82,60 +82,9 @@ object StreamOps {
     seenFilter(fetched)
   }
 
-  /** Cross-batch seen dedup with the batch crawler's EXACT depth
-    * semantics: within a micro-batch, duplicates of a url collapse to the
-    * MIN discovery depth (the batch `groupBy(url).agg(min(depth))`), and
-    * across batches only the first micro-batch's row is emitted. Plain
-    * [[seenFilter]] keeps an arbitrary duplicate's depth within a batch;
-    * this variant is what the polite end-to-end equivalence needs. State
-    * is one boolean per url, hash-partitioned on the same key the batch
-    * anti-join shuffles on. */
-  def seenFilterMinDepth(urls: Dataset[(String, Int)]): Dataset[(String, Int)] = {
-    import urls.sparkSession.implicits._
-    urls
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Boolean, (String, Int)](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (url: String, rows: Iterator[(String, Int)], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single((url, rows.map(_._2).min))
-          }
-      }
-  }
-
   final case class FetchRequest(host: String, url: String)
   final case class GatedFetch(host: String, url: String, seq: Long,
                               allowed: Boolean)
-
-  final case class PoliteRequest(host: String, url: String, depth: Int)
-  final case class PoliteGated(host: String, url: String, depth: Int,
-                               allowed: Boolean)
-
-  /** Per-host politeness with the batch crawler's PER-ROUND semantics
-    * (one micro-batch = one crawl round): within each batch, each host's
-    * requests are ranked by (depth, url) and the first `budget` are
-    * allowed; the remainder emit `allowed = false` for the caller to
-    * re-offer next round — exactly the batch `tagAndSplit` window.
-    * Unlike [[politenessGate]] (a total-crawl quota), NO counter persists
-    * across batches: the group state is never written, so the budget
-    * resets every round just like the batch window re-ranks every round. */
-  def politenessGateByRound(requests: Dataset[PoliteRequest],
-                            budget: Int): Dataset[PoliteGated] = {
-    import requests.sparkSession.implicits._
-    requests
-      .groupByKey(_.host)
-      .flatMapGroupsWithState[Long, PoliteGated](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (host: String, batch: Iterator[PoliteRequest], _: GroupState[Long]) =>
-          batch.toVector.sortBy(r => (r.depth, r.url)).zipWithIndex.map {
-            case (r, i) => PoliteGated(host, r.url, r.depth, allowed = i < budget)
-          }.iterator
-      }
-  }
 
   final case class PoliteTaggedRequest(host: String, url: String, depth: Int,
                                        eligible: Boolean)
@@ -170,9 +119,11 @@ object StreamOps {
       }
   }
 
-  /** [[seenFilterMinDepth]] with ROUTING: `discovered` rows get the exact
-    * cross-batch min-depth seen dedup; every other kind passes through
-    * unchanged (and writes no state). Lets deferred/blocked frontier
+  /** Seen dedup with ROUTING: `discovered` rows get the exact cross-batch
+    * seen dedup with the batch crawler's depth (duplicates within a
+    * micro-batch collapse to the MIN discovery depth; across batches only
+    * the first micro-batch's row is emitted); every other kind passes
+    * through unchanged (and writes no state). Lets deferred/blocked frontier
     * residents share the discovered rows' url-keyed shuffle instead of
     * bypassing the state store through a separate union branch. */
   def seenFilterRouted(rows: Dataset[RoundTagged]): Dataset[RoundTagged] = {

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -30,4 +31,8 @@ object Bridge {
       case _ => cp
     }
   }
+
+  /** Blocks until the listener bus has delivered every posted event, so a
+    * listener's view is complete right after an action returns. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

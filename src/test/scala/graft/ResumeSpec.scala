@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.TestCorpus
-import graft.crawler.{CrawlConfig, Crawler}
+import graft.crawler.{CrawlConfig, CrawlResult, Crawler}
 import graft.snapshot.SnapshotLog
 
 /** North_rule checkpoint semantics: a crawl killed mid-run resumes from the
@@ -151,7 +151,7 @@ class ResumeSpec extends AnyFunSuite {
     // never the O(rounds) cumulative list)
     val logAtKill = new SnapshotLog(dir)
     val snapAtKill = logAtKill.latest.get
-    assert(snapAtKill.seenDeltaPaths.size <= cfg0.compactEveryEff + 1,
+    assert(snapAtKill.seenDeltaPaths.size <= cfg0.compactEvery + 1,
       s"path list not compacted: ${snapAtKill.seenDeltaPaths.size} paths")
 
     val resumed = Crawler.resume(spark, pages, cfgK.copy(maxRounds = Int.MaxValue))
@@ -166,7 +166,7 @@ class ResumeSpec extends AnyFunSuite {
     // every committed manifest stays bounded, including post-resume ones
     val log = new SnapshotLog(dir)
     log.listIds.map(log.read).foreach { s =>
-      assert(s.seenDeltaPaths.size <= cfg0.compactEveryEff + 1,
+      assert(s.seenDeltaPaths.size <= cfg0.compactEvery + 1,
         s"manifest v${s.id} holds ${s.seenDeltaPaths.size} delta paths")
       // the chain stays READABLE: every referenced path exists
       s.seenDeltaPaths.foreach(p => assert(new java.io.File(p).exists(), p))
@@ -177,11 +177,11 @@ class ResumeSpec extends AnyFunSuite {
     assert(spark.read.parquet(last.seenDeltaPaths: _*).count() == last.seenCount)
   }
 
-  test("CrawlConfig(compactEvery = 0) disables compaction instead of " +
-       "re-checkpointing every round (ADVICE r6 #2)") {
-    assert(CrawlConfig(Seq("x"), "f", compactEvery = 0).compactEveryEff == Int.MaxValue)
-    assert(CrawlConfig(Seq("x"), "f", compactEvery = -3).compactEveryEff == Int.MaxValue)
-    assert(CrawlConfig(Seq("x"), "f", compactEvery = 4).compactEveryEff == 4)
+  test("CrawlConfig rejects a compaction period of 0 or below") {
+    for (k <- Seq(0, -3))
+      intercept[IllegalArgumentException](CrawlConfig(Seq("x"), "f", compactEvery = k))
+    assert(CrawlConfig(Seq("x"), "f", compactEvery = 4).compactEvery == 4)
+    assert(CrawlConfig(Seq("x"), "f").compactEvery == 16)
   }
 
   test("deep crawl (45 rounds, memory mode): seen plan stays FLAT via delta " +
@@ -211,5 +211,61 @@ class ResumeSpec extends AnyFunSuite {
       (if (p.nodeName == "Union") 1 else 0) + p.children.map(unionCount).sum
     val depth = unionCount(res.seen.queryExecution.logical)
     assert(depth <= 16, s"seen plan holds $depth unions — compaction not applied")
+  }
+
+  // the production crawl shape on the tiny corpus: per-host budget waves,
+  // robots rules, the bloom pre-filter from round 0, and a compaction every
+  // 2 rounds, so both stores compact
+  private val prodCfg = CrawlConfig(seeds, filter, hostBudget = 2,
+    respectRobots = true, bloomMinSeen = 0L, compactEvery = 2)
+  private def tmpDir(prefix: String) = Some(Files.createTempDirectory(prefix).toString)
+
+  test("memory mode ≡ snapshot mode ≡ kill at round 2 + resume, " +
+       "under the production config") {
+    def roundsOf(rounds: Vector[graft.snapshot.RoundMetrics]) =
+      rounds.map(_.copy(wallMillis = 0L))
+    def seenOf(r: CrawlResult) =
+      r.seen.select("url", "url_hash", "depth").as[(String, Long, Int)].collect().toSeq.sorted
+    def frontierOf(r: CrawlResult) =
+      r.frontier.select("url", "host", "depth").as[(String, String, Int)].collect().toSeq.sorted
+
+    val mem = Crawler.run(spark, pagesDf, prodCfg)
+    val snapDir = tmpDir("graft-prod-snap")
+    val snap = Crawler.run(spark, pagesDf, prodCfg.copy(workDir = snapDir))
+    val killDir = tmpDir("graft-prod-kill")
+    val killed = Crawler.run(spark, pagesDf, prodCfg.copy(workDir = killDir, maxRounds = 2))
+    val resumed = Crawler.resume(spark, pagesDf, prodCfg.copy(workDir = killDir))
+    assert(resumed.resumedFromRound == 2)
+
+    // the crawl runs past the kill point, and both stores compacted
+    assert(mem.rounds.size > 3)
+    assert(new SnapshotLog(snapDir.get).latest.get.seenDeltaPaths.size <= 2)
+    def unions(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+      (if (p.nodeName == "Union") 1 else 0) + p.children.map(unions).sum
+    assert(unions(mem.seen.queryExecution.logical) <= 1)
+
+    assert(roundsOf(snap.rounds) == roundsOf(mem.rounds))
+    assert(roundsOf(killed.rounds ++ resumed.rounds) == roundsOf(mem.rounds))
+    assert(seenOf(snap) == seenOf(mem))
+    assert(seenOf(resumed) == seenOf(mem))
+    assert(frontierOf(mem).nonEmpty) // robots-blocked urls stay in the frontier
+    assert(frontierOf(snap) == frontierOf(mem))
+    assert(frontierOf(resumed) == frontierOf(mem))
+  }
+
+  test("Spark jobs per tiny-corpus crawl are pinned in memory and snapshot mode") {
+    pagesDf.count() // the cached pages table is built outside the counts
+    def jobs(cfg: CrawlConfig) =
+      SparkJobs.count(spark.sparkContext)(Crawler.run(spark, pagesDf, cfg))
+    val memDefault = jobs(CrawlConfig(seeds, filter))
+    val memProd = jobs(prodCfg)
+    val snapProd = jobs(prodCfg.copy(workDir = tmpDir("graft-jobs-snap")))
+    // the benchmark's shape: throughput mode, stopped at round 2 and resumed
+    val benchCfg = prodCfg.copy(collectMetrics = false, workDir = tmpDir("graft-jobs-resume"))
+    val snapResume = SparkJobs.count(spark.sparkContext) {
+      Crawler.run(spark, pagesDf, benchCfg.copy(maxRounds = 2))
+      Crawler.resume(spark, pagesDf, benchCfg)
+    }
+    assert((memDefault, memProd, snapProd, snapResume) == ((58, 201, 254, 208)))
   }
 }

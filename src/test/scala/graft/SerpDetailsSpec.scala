@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
@@ -137,27 +133,7 @@ class SerpDetailsSpec extends AnyFunSuite {
   private def freshRanks =
     PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 5)
 
-  /** Jobs started by `f` on this thread, counted by a listener that keeps
-    * only jobs carrying this call's local-property tag. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.job") == tag)
-          seen.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.job", tag)
-    try f
-    finally {
-      sc.setLocalProperty("graft.test.job", null)
-      TestListenerBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    seen.size
-  }
+  private def jobsOf(f: => Unit): Int = SparkJobs.count(spark.sparkContext)(f)
 
   test("serve shape: one job per term, multi-term and phrase query, " +
        "at most one for an unknown-only query") {
