@@ -20,8 +20,8 @@ import graft.gfn
   *
   * EAGERNESS CONTRACT: the pairwise dedup ops ([[jaccardPairs]],
   * [[minhashLshPairs]], [[simhashPairsFromFps]],
-  * [[simhashPairsFromFpsTwoStage]], [[winnowPairs]], [[dupClusters]])
-  * and [[ivfCosineTopK]]
+  * [[simhashPairsFromFpsTwoStage]], [[simhashPairsFromFpsWide]],
+  * [[winnowPairs]], [[dupClusters]]) and [[ivfCosineTopK]]
   * are ACTIONS, not lazy transformations — constructing the result runs
   * Spark jobs on the caller's thread (the hot-key scan, an eager
   * localCheckpoint / collect that lets intermediate caches release
@@ -197,56 +197,110 @@ object TrainingOps {
   val DefaultMaxBucketDf: Long = 100000L
 
   /** Drop bucket keys whose posting count exceeds maxDf before a pairwise
-    * self-join (skew guard, see [[DefaultMaxBucketDf]]). The hot-key set is
-    * tiny by construction (≤ |rows|/maxDf keys — ≤ 10⁶ keys even at 10¹¹
-    * rows with the default cap), so it is COLLECTED to the driver: capping
-    * is then observable (a WARN names the op and the dropped-key count —
-    * silent recall loss was the round-2 ADVICE finding) and the anti-join
-    * probe is a guaranteed-broadcast local relation. maxDf <= 0 disables.
+    * self-join (skew guard, see [[DefaultMaxBucketDf]]); returns the kept
+    * rows and the dropped keys (None when nothing was dropped). The
+    * hot-key set holds ≤ |rows|/maxDf keys, so it is COLLECTED: capping is
+    * observable (a WARN names the dropped-key count) and the anti-join
+    * probe is a broadcast local relation. maxDf <= 0 disables the cap.
     *
-    * `keyDfBound` (round-7, guide §2.4 — remove shuffles outright): an
-    * a-priori upper bound on any key's df, when the CALLER can prove one.
-    * Every pairwise op here derives its bucket keys DISTINCT-PER-SOURCE-ROW
-    * (shingles are list_distinct per doc, band/block keys appear once per
-    * (doc, band), winnow fingerprints are deduplicated per doc), so
-    * df(key) ≤ #source rows. When that bound is ≤ maxDf the hot-key scan
-    * provably returns empty and is SKIPPED — at fixture/bench corpus sizes
-    * this removes a full groupBy-shuffle + driver collect per op, while at
-    * production scale (#rows > maxDf) the scan runs exactly as before.
-    * Pass a negative bound when no bound is known. */
+    * `keyDfBound` is an upper bound on any key's df, or negative when none
+    * is known. Every pairwise op here derives its keys distinct per source
+    * row, so df(key) ≤ #source rows; when that bound is ≤ maxDf the scan
+    * cannot find a hot key and is skipped (no groupBy shuffle, no collect). */
   private def capHotKeys(df: DataFrame, maxDf: Long, keyDfBound: Long,
-                         keys: String*): DataFrame =
-    capHotKeysEx(df, maxDf, keyDfBound, keys: _*)._1
-
-  /** [[capHotKeys]] plus the dropped-keys table itself (a tiny broadcast
-    * local relation, or None when nothing was capped) — for ops that must
-    * CORRECT their per-pair counts for the dropped keys rather than merely
-    * losing hot-only candidates (jaccardPairs/winnowPairs). */
-  private def capHotKeysEx(df: DataFrame, maxDf: Long, keyDfBound: Long,
-                           keys: String*)
-      : (DataFrame, Option[DataFrame]) = {
-    if (maxDf <= 0L) (df, None)
-    else if (keyDfBound >= 0L && keyDfBound <= maxDf) (df, None)
+                         keys: Seq[String]): (DataFrame, Option[DataFrame]) = {
+    if (maxDf <= 0L || (keyDfBound >= 0L && keyDfBound <= maxDf)) (df, None)
     else {
       val hot = df.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("__df")).filter(col("__df") > maxDf)
         .select(keys.map(col): _*)
       val hotRows = hot.collect()
-      if (hotRows.nonEmpty)
+      if (hotRows.isEmpty) (df, None)
+      else {
         org.apache.log4j.Logger.getLogger(getClass)
           .warn(s"capHotKeys: dropping ${hotRows.length} bucket key(s) with df > " +
             s"$maxDf before pairwise self-join on (${keys.mkString(", ")}) — " +
             "pairs ONLY reachable through a dropped key are lost (raise maxDf " +
             "or widen the bucket keys if that trade is wrong here)")
-      if (hotRows.isEmpty) (df, None)
-      else {
         val local = df.sparkSession.createDataFrame(
           java.util.Arrays.asList(hotRows: _*), hot.schema)
         // using-columns joins move the keys to the front — restore the order
-        (df.join(broadcast(local), keys.toSeq, "left_anti")
+        (df.join(broadcast(local), keys, "left_anti")
           .select(df.columns.map(col).toIndexedSeq: _*), Some(local))
       }
     }
+  }
+
+  /** The eager lifecycle of every pairwise op. `src` (per-doc shingle
+    * arrays, signatures or fingerprints: small next to the corpus but
+    * costly to compute) is persisted, because the hot-key scan and both
+    * join sides read it; its count materializes the cache and is nDocs,
+    * the df bound for [[capHotKeys]]. `body` builds the result from the
+    * cached table; the result (near-dup-sized) is checkpointed eagerly and
+    * the cache released, so repeated calls in a long-lived session hold no
+    * CacheManager entries (checkpoint blocks are ContextCleaner-managed). */
+  private def eagerPairs(src: DataFrame)(body: (DataFrame, Long) => DataFrame): DataFrame = {
+    val cached = src.persist()
+    val nDocs = cached.count()
+    val out = body(cached, nDocs).localCheckpoint(true)
+    cached.unpersist()
+    out
+  }
+
+  /** The one candidate self-join: `posting` (doc_id, payload…, keys…) is
+    * df-capped on `keys`, then joined with itself on them. One row per
+    * shared key and doc pair a < b; payload column p becomes pa / pb.
+    * Also returns the dropped hot keys. */
+  private def sharedKeyJoin(posting: DataFrame, keys: Seq[String], maxDf: Long,
+                            nDocs: Long): (DataFrame, Option[DataFrame]) = {
+    val (capped, hot) = capHotKeys(posting, maxDf, nDocs, keys)
+    def side(s: String): DataFrame = capped.toDF(capped.columns.toIndexedSeq.map {
+      case "doc_id" => s
+      case c if keys.contains(c) => c
+      case c => c + s
+    }: _*)
+    (side("a").join(side("b"), keys).filter(col("a") < col("b")), hot)
+  }
+
+  /** Shared-key count per doc pair, as (a, b, `countAs`): the per-doc key
+    * arrays in column `arrays` (distinct per doc) are exploded into `key`
+    * and self-joined. The df cap bounds candidate generation only: when
+    * keys were dropped, each pair's count is corrected by the hot keys the
+    * two docs share (per-doc hot-key subsets from one broadcast join,
+    * intersected per pair — never a hot-key self-join). So a surviving
+    * pair's count is exact; only pairs sharing nothing but hot keys are
+    * lost. With no hot keys the plan is the plain capped count. */
+  private def pairCounts(arrs: DataFrame, arrays: String, key: String, countAs: String,
+                         maxDf: Long, nDocs: Long): DataFrame = {
+    val posting = arrs.select(col("doc_id"), explode(col(arrays)).as(key))
+    val (joined, hot) = sharedKeyJoin(posting, Seq(key), maxDf, nDocs)
+    val counts = joined.groupBy("a", "b").agg(count(lit(1)).as(countAs))
+    hot.fold(counts) { hotKeys =>
+      val hotPerDoc = posting.join(broadcast(hotKeys), Seq(key))
+        .groupBy("doc_id").agg(collect_set(col(key)).as("hot"))
+      counts
+        .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
+        .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
+        .withColumn(countAs, col(countAs) + size(array_intersect(
+          coalesce(col("hot_a"), array()),
+          coalesce(col("hot_b"), array()))).cast("long"))
+        .select("a", "b", countAs)
+    }
+  }
+
+  /** Distinct candidate pairs from per-doc bucket keys (bands, blocks):
+    * one pass + posexplode of `keys` into `keyNames` = (position, value) —
+    * a per-key union would recompute the upstream hashes once per key.
+    * A doc has one key per position, so df ≤ nDocs. The result is
+    * (a, b, verify…) with `payload` columns renamed pa / pb for `verify`. */
+  private def bucketPairs(fps: DataFrame, nDocs: Long, maxDf: Long, keys: Seq[Column],
+                          keyNames: Seq[String], payload: Seq[String] = Nil)
+                         (verify: Column*): DataFrame = {
+    val posting = fps.select((col("doc_id") +: payload.map(col)) :+
+      posexplode(array(keys: _*)).as(keyNames): _*)
+    sharedKeyJoin(posting, keyNames, maxDf, nDocs)._1
+      .select(col("a") +: col("b") +: verify: _*)
+      .distinct()
   }
 
   /** distinct word-trigram shingles per doc as one row-local ARRAY column —
@@ -267,67 +321,24 @@ object TrainingOps {
     shingleArrays(docs)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
-  /** n-gram Jaccard near-dup pairs: shingle-bucketed self-join (the join
-    * explodes only where shingles collide — candidate-bounded, not O(n²)),
-    * exact Jaccard ≥ threshold. Set sizes come from the shingle ARRAY
-    * row-locally (no extra aggregation shuffle).
-    *
-    * The df cap bounds CANDIDATE GENERATION only: when keys were actually
-    * dropped, the per-pair count is CORRECTED by the pair's shared hot
-    * keys (each doc's hot-key subset is a tiny row-local array from one
-    * broadcast join — never a hot-key self-join), so a dropped hot
-    * shingle can only lose pairs reachable SOLELY through it — it can
-    * never deflate the Jaccard of a surviving pair (counting the capped
-    * join rows alone would: two docs sharing a hot shingle plus others
-    * would score (inter−1)/(sa+sb−inter+1)). With no hot keys (the common
-    * case) the plan is exactly the cheap capped-count shape. */
+  /** n-gram Jaccard near-dup pairs: shingle-bucketed `pairCounts` (the
+    * join explodes only where shingles collide — candidate-bounded, not
+    * O(n²)), exact Jaccard ≥ threshold. Set sizes come from the shingle
+    * ARRAY row-locally (no extra aggregation shuffle); the intersection
+    * stays exact under the df cap. */
   def jaccardPairs(docs: DataFrame, threshold: Double,
-                   maxShingleDf: Long = DefaultMaxBucketDf): DataFrame = {
-    val arrs = shingleArrays(docs).persist()
-    // materialize the persist AND bound the hot-key scan in one cheap job:
-    // shingles are distinct per doc, so df(shingle) ≤ nDocs — when nDocs ≤
-    // maxShingleDf the scan cannot fire and capHotKeysEx skips it (§2.4)
-    val nDocs = arrs.count()
-    val sizes = arrs.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val exploded0 =
-      arrs.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val (sh, hotOpt) = capHotKeysEx(exploded0, maxShingleDf, nDocs, "shingle")
-    val a = sh.toDF("a", "shingle")
-    val b = sh.toDF("b", "shingle")
-    val interSub = a.join(b, "shingle").filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    val inter = hotOpt match {
-      case None => interSub
-      case Some(hotDf) =>
-        // per-doc hot-key subset: linear broadcast join + collect_set (the
-        // hot POSTINGS are at most |docs|·|hot| rows, never joined pairwise)
-        val hotPerDoc = exploded0.join(broadcast(hotDf), Seq("shingle"))
-          .groupBy("doc_id").agg(collect_set(col("shingle")).as("hot"))
-        interSub
-          .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
-          .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
-          .withColumn("inter", col("inter") + size(array_intersect(
-            coalesce(col("hot_a"), array()),
-            coalesce(col("hot_b"), array()))).cast("long"))
-          .select("a", "b", "inter")
+                   maxShingleDf: Long = DefaultMaxBucketDf): DataFrame =
+    eagerPairs(shingleArrays(docs)) { (arrs, nDocs) =>
+      val sizes = arrs.select(col("doc_id"), size(col("shingles")).as("sz"))
+      pairCounts(arrs, "shingles", "shingle", "inter", maxShingleDf, nDocs)
+        .join(sizes.toDF("a", "sa"), "a")
+        .join(sizes.toDF("b", "sb"), "b")
+        .withColumn("jaccard", gfn.round_exact(col("inter").cast("double") /
+          (col("sa") + col("sb") - col("inter")).cast("double"), 4))
+        .filter(col("jaccard") >= threshold)
+        .select("a", "b", "jaccard")
+        .orderBy("a", "b")
     }
-    val result = inter
-      .join(sizes.toDF("a", "sa"), "a")
-      .join(sizes.toDF("b", "sb"), "b")
-      .withColumn("jaccard", gfn.round_exact(col("inter").cast("double") /
-        (col("sa") + col("sb") - col("inter")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .orderBy("a", "b")
-    // materialize the (near-dup-sized, ≪ corpus) result so the shingle
-    // cache can be released NOW — repeated calls in a long-lived session
-    // must not accumulate cached plans (round-2 ADVICE leak class); the
-    // checkpoint blocks are ContextCleaner-managed, unlike CacheManager
-    // entries which pin until an explicit unpersist
-    val out = result.localCheckpoint(true)
-    arrs.unpersist()
-    out
-  }
 
   /** MinHash signatures: k md5-salted lexicographic-min hashes over the
     * shingle set (md5 is portable to the DuckDB oracle; at production
@@ -356,31 +367,13 @@ object TrainingOps {
     require(k > 0 && rowsPerBand > 0 && k % rowsPerBand == 0,
       s"k=$k must be a positive multiple of rowsPerBand=$rowsPerBand — " +
         "trailing signature hashes would otherwise never bucket anything")
-    // the signature table is TINY (one row of k hashes per doc, ≪ corpus
-    // text) but EXPENSIVE (k salted md5 minima over every shingle) — and
-    // it has three consumers (hot-key scan + both self-join sides), so
-    // persist it; recomputing it per consumer dominated the op's cost
-    val sig = minhashSignatures(docs, k).persist()
-    // materialize the persist and bound the hot-key scan in one job: one
-    // signature row per doc and one (band, sig) key per (doc, band), so
-    // df(band, sig) ≤ nDocs — at nDocs ≤ maxBandDf the scan is skipped
-    val nDocs = sig.count()
-    // one pass + posexplode (a per-band union would recompute the k
-    // signature hashes once PER BAND)
     val bandCols = (0 until k / rowsPerBand).map { bnd =>
       concat((0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}")): _*)
     }
-    val bands = sig
-      .select(col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band", "sig")))
-    val capped = capHotKeys(bands, maxBandDf, nDocs, "band", "sig")
-    val l = capped.toDF("a", "band", "sig")
-    val r = capped.toDF("b", "band", "sig")
-    val result = l.join(r, Seq("band", "sig")).filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true) // release the cache (leak hygiene)
-    sig.unpersist()
-    out
+    eagerPairs(minhashSignatures(docs, k)) { (sig, nDocs) =>
+      bucketPairs(sig, nDocs, maxBandDf, bandCols, Seq("band", "sig"))()
+        .orderBy("a", "b")
+    }
   }
 
   /** Near-dup CLUSTERS from a pair list: connected components by HashMin
@@ -465,103 +458,65 @@ object TrainingOps {
     spread(docs).select(col("doc_id"), fp.as("simhash")).orderBy("doc_id")
   }
 
-  /** SimHash near-dup pairs within Hamming distance `maxHamming`, bucketed
-    * by `maxHamming + 1` bit-blocks: two fingerprints differing in ≤ h bits
-    * must agree EXACTLY on at least one of h+1 disjoint blocks (pigeonhole
-    * — h differing bits cannot touch all h+1 blocks), so candidate
-    * generation is complete for the promised radius and the self-join is
-    * block-bucket-bounded instead of O(n²). */
+  /** SimHash near-dup pairs within Hamming distance `maxHamming` over the
+    * md5-token fingerprints (the ones the DuckDB oracle recomputes
+    * bit-exactly), bucketed by `maxHamming + 1` bit-blocks: two
+    * fingerprints differing in ≤ h bits must agree EXACTLY on at least one
+    * of h+1 disjoint blocks (pigeonhole — h differing bits cannot touch
+    * all h+1 blocks), so candidate generation is complete for the promised
+    * radius and the self-join is block-bucket-bounded instead of O(n²). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   portable: Boolean = true,
                    maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     val sims = spread(docs).select(col("doc_id"),
-      (if (portable) gfn.simhash_md5(wsTokens(col("text")))
-       else gfn.simhash(wsTokens(col("text")))).as("sh"))
+      gfn.simhash_md5(wsTokens(col("text"))).as("sh"))
     simhashPairsFromFps(sims, maxHamming, maxBucketDf)
   }
+
+  /** The `n` disjoint bit-blocks of the 64-bit fingerprint `sh`, as LONGs. */
+  private def blocks64(n: Int): IndexedSeq[Column] = {
+    val starts = (0 to n).map(i => i * 64 / n)
+    (0 until n).map { q =>
+      val width = starts(q + 1) - starts(q)
+      val mask = if (width >= 64) -1L else (1L << width) - 1L
+      shiftright(col("sh"), starts(q)).bitwiseAND(lit(mask))
+    }
+  }
+
+  /** The SimHash candidate join: fingerprints (doc_id, sh) bucketed by the
+    * block `keys` of sh, verified by `hamming` ≤ maxHamming. Complete
+    * whenever the keys are pigeonhole-complete for the radius. */
+  private def hammingPairs(sims: DataFrame, maxHamming: Int, maxBucketDf: Long,
+                           keys: Seq[Column], hamming: (Column, Column) => Column): DataFrame =
+    eagerPairs(sims) { (fps, nDocs) =>
+      bucketPairs(fps, nDocs, maxBucketDf, keys, Seq("q", "bucket"), Seq("sh"))(
+          hamming(col("sha"), col("shb")).cast("long").as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+        .orderBy("a", "b")
+    }
+
+  private def bitHamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** [[simhashPairs]] over precomputed fingerprints (doc_id, sh LONG) —
     * the block-bucketed candidate join, unit-testable at the bit level. */
   def simhashPairsFromFps(sims: DataFrame, maxHamming: Int,
                           maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming")
-    val nBlocks = maxHamming + 1
-    val starts = (0 to nBlocks).map(i => i * 64 / nBlocks)
-    // fingerprints are one LONG per doc but may be expensive upstream
-    // (a simhash over every token) — persist for the three consumers;
-    // the count materializes it and bounds the hot-key scan (one (q,
-    // bucket) key per (doc, block) ⇒ df ≤ nDocs — scan skipped when ≤ cap)
-    val fps = sims.persist()
-    val nDocs = fps.count()
-    // one pass + posexplode (a per-block union would recompute the
-    // fingerprint once PER BLOCK)
-    val blockCols = (0 until nBlocks).map { q =>
-      val lo = starts(q)
-      val width = starts(q + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("sh"), lo).bitwiseAND(lit(mask))
-    }
-    val blocked = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(blockCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(blocked, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    hammingPairs(sims, maxHamming, maxBucketDf, blocks64(maxHamming + 1), bitHamming)
   }
 
-  /** winnowing fingerprint overlap pairs. `portable=true` uses md5 k-gram
-    * hashes (DuckDB-oracle-matched); false uses the rolling-hash kernel.
-    * As in [[jaccardPairs]], the df cap bounds candidate generation only —
-    * when keys were dropped, `shared` is corrected by the pair's shared
-    * hot fingerprints (winnow fingerprints are deduplicated per doc, so
-    * the per-pair count + hot-subset intersection is the exact overlap),
-    * never deflated by a dropped hot key. */
+  /** winnowing fingerprint overlap pairs over md5 k-gram hashes (the
+    * DuckDB-oracle-matched variant): `pairCounts` of the per-doc
+    * fingerprint sets, `shared` ≥ minShared. Winnow fingerprints are
+    * deduplicated per doc, so `shared` is the exact overlap, also under
+    * the df cap. */
   def winnowPairs(docs: DataFrame, minShared: Int,
-                  portable: Boolean = true,
-                  maxFpDf: Long = DefaultMaxBucketDf): DataFrame = {
-    val fpsExpr = if (portable) gfn.winnow_md5(col("text"), lit(8), lit(4))
-                  else gfn.winnow_fingerprints(col("text"), lit(8), lit(4))
-    // fingerprint posting list: ~|text|/w longs per doc (≪ text bytes) but
-    // costs a full rolling-hash pass to build — persist for the hot-key
-    // scan + both join sides
-    val posting = spread(docs).select(col("doc_id"), explode(fpsExpr).as("fp")).persist()
-    // winnow fingerprints are deduplicated per doc ⇒ df(fp) ≤ nDocs; the
-    // bound skips the hot-key scan at sub-cap corpus sizes (§2.4). docs is
-    // typically a parquet scan, so the count is metadata-cheap.
-    val nDocs = docs.count()
-    val (fp, hotOpt) = capHotKeysEx(posting, maxFpDf, nDocs, "fp")
-    val l = fp.toDF("a", "fp")
-    val r = fp.toDF("b", "fp")
-    val sharedSub = l.join(r, "fp").filter(col("a") < col("b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("shared"))
-    val shared = hotOpt match {
-      case None => sharedSub
-      case Some(hotDf) =>
-        val hotPerDoc = posting.join(broadcast(hotDf), Seq("fp"))
-          .groupBy("doc_id").agg(collect_set(col("fp")).as("hot"))
-        sharedSub
-          .join(hotPerDoc.toDF("a", "hot_a"), Seq("a"), "left")
-          .join(hotPerDoc.toDF("b", "hot_b"), Seq("b"), "left")
-          .withColumn("shared", col("shared") + size(array_intersect(
-            coalesce(col("hot_a"), array()),
-            coalesce(col("hot_b"), array()))).cast("long"))
-          .select("a", "b", "shared")
+                  maxFpDf: Long = DefaultMaxBucketDf): DataFrame =
+    eagerPairs(spread(docs).select(col("doc_id"),
+        gfn.winnow_md5(col("text"), lit(8), lit(4)).as("fps"))) { (fps, nDocs) =>
+      pairCounts(fps, "fps", "fp", "shared", maxFpDf, nDocs)
+        .filter(col("shared") >= minShared)
+        .orderBy("a", "b")
     }
-    val result = shared
-      .filter(col("shared") >= minShared)
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true)
-    posting.unpersist()
-    out
-  }
 
   /** [[simhashPairsFromFps]] upgraded for web-scale corpora: bucket by
     * PAIRS of blocks. With b = maxHamming + 2 disjoint blocks, ≤ h
@@ -574,34 +529,11 @@ object TrainingOps {
   def simhashPairsFromFpsTwoStage(sims: DataFrame, maxHamming: Int,
                                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 62, s"maxHamming=$maxHamming")
-    val nBlocks = maxHamming + 2
-    val starts = (0 to nBlocks).map(i => i * 64 / nBlocks)
-    def block(q: Int): Column = {
-      val lo = starts(q)
-      val width = starts(q + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("sh"), lo).bitwiseAND(lit(mask))
-    }
-    // both block values packed into one 64-bit key (widths ≤ 32);
-    // single pass + posexplode over all C(b,2) block-pair keys
-    val fps = sims.persist() // three consumers, expensive upstream
-    val nDocs = fps.count() // materialize + hot-scan bound (df ≤ nDocs)
-    val pairCols = (for { i <- 0 until nBlocks; j <- i + 1 until nBlocks }
-      yield shiftleft(block(i), 32).bitwiseOR(block(j)))
-    val keyed = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(pairCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(keyed, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sha").bitwiseXOR(col("shb"))).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    val blocks = blocks64(maxHamming + 2)
+    // both block values packed into one 64-bit key (widths ≤ 32)
+    val pairKeys = for { i <- blocks.indices; j <- i + 1 until blocks.size }
+      yield shiftleft(blocks(i), 32).bitwiseOR(blocks(j))
+    hammingPairs(sims, maxHamming, maxBucketDf, pairKeys, bitHamming)
   }
 
   /** Bit-slice [lo, lo+width) of an ARRAY<LONG> sketch as a LONG (little-
@@ -655,29 +587,15 @@ object TrainingOps {
     val starts = (0 to nBlocks).map(i => i * nbits / nBlocks)
     def block(q: Int): Column =
       sliceBitsWide(col("sh"), starts(q), starts(q + 1) - starts(q))
-    val fps = sims.persist()
-    val nDocs = fps.count() // materialize + hot-scan bound (df ≤ nDocs)
     val keyCols: Seq[Column] =
       if (twoStage)
         for { i <- 0 until nBlocks; j <- i + 1 until nBlocks }
           yield struct(block(i).as("b1"), block(j).as("b2"))
       else
         (0 until nBlocks).map(q => struct(block(q).as("b1"), lit(0L).as("b2")))
-    val keyed = fps.select(col("doc_id"), col("sh"),
-      posexplode(array(keyCols: _*)).as(Seq("q", "bucket")))
-    val capped = capHotKeys(keyed, maxBucketDf, nDocs, "q", "bucket")
-    val l = capped.toDF("a", "sha", "q", "bucket")
-    val r = capped.toDF("b", "shb", "q", "bucket")
-    val result = l.join(r, Seq("q", "bucket")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        gfn.hamming_words(col("sha"), col("shb")).cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("a", "b")
-    val out = result.localCheckpoint(true)
-    fps.unpersist()
-    out
+    hammingPairs(sims, maxHamming, maxBucketDf, keyCols, gfn.hamming_words)
   }
+
 
   /** int8 max-abs quantization of the embedding column — the standard
     * 4× storage/bandwidth cut before ANN indexing at 100 TB scale. Pure

@@ -474,6 +474,17 @@ class OpsSpec extends AnyFunSuite {
     assert(T.minhashLshPairs(dups, maxBandDf = 0).count() == 30L * 29 / 2)
     assert(T.minhashLshPairs(dups, maxBandDf = 10).count() == 0)
 
+    // and on the three SimHash block joins: 30 docs with one fingerprint
+    val sameFp = (0L until 30L).map(i => (i, 0x5a5a5a5a5a5a5a5aL)).toDF("doc_id", "sh")
+    assert(T.simhashPairsFromFps(sameFp, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
+    assert(T.simhashPairsFromFps(sameFp, 6, maxBucketDf = 10).count() == 0)
+    assert(T.simhashPairsFromFpsTwoStage(sameFp, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
+    assert(T.simhashPairsFromFpsTwoStage(sameFp, 6, maxBucketDf = 10).count() == 0)
+    val sameWide = (0L until 30L).map(i => (i, Seq(0x5a5a5a5a5a5a5a5aL, -7L)))
+      .toDF("doc_id", "sh")
+    assert(T.simhashPairsFromFpsWide(sameWide, 128, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
+    assert(T.simhashPairsFromFpsWide(sameWide, 128, 6, maxBucketDf = 10).count() == 0)
+
     // default caps are no-ops on the sf0.001 fixture corpus (df ≪ cap)
     val fix = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     assert(T.jaccardPairs(fix, 0.4).collect().map(_.toString).toSeq ==
@@ -512,6 +523,38 @@ class OpsSpec extends AnyFunSuite {
     wCapped.foreach { case (k, v) =>
       assert(wUncapped(k) == v, s"winnow pair $k: capped $v != uncapped ${wUncapped(k)}")
     }
+  }
+
+  test("jaccard and winnow pairs read the documents table exactly once") {
+    val path = "/root/testdata/sf0.001/documents.parquet"
+    val rows = spark.read.parquet(path).count()
+    val sc = spark.sparkContext
+    assert(SparkJobs.fileRecordsRead(sc)(
+      T.jaccardPairs(spark.read.parquet(path), 0.4)) == rows)
+    assert(SparkJobs.fileRecordsRead(sc)(
+      T.winnowPairs(spark.read.parquet(path), minShared = 60)) == rows)
+  }
+
+  test("Spark jobs per pairwise dedup op are pinned on the sf0.001 fixture") {
+    def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    def sims = docs.select(col("doc_id"), gfn.simhash_md5(T.wsTokens(col("text"))).as("sh"))
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "jaccardPairs" -> (() => T.jaccardPairs(docs, 0.4)),
+      "minhashLshPairs" -> (() => T.minhashLshPairs(docs)),
+      "simhashPairs" -> (() => T.simhashPairs(docs, maxHamming = 6)),
+      "simhashPairsFromFpsTwoStage" -> (() => T.simhashPairsFromFpsTwoStage(sims, maxHamming = 6)),
+      "winnowPairs" -> (() => T.winnowPairs(docs, minShared = 60)),
+      "cosineDupPairsLsh 0.9" -> (() => T.cosineDupPairsLsh(emb, 0.9)),
+      "cosineDupPairsLsh 0.4" -> (() => T.cosineDupPairsLsh(emb, 0.4)))
+    // each count covers the parquet schema read, the call (eager for all
+    // but the cosine verify join) and one collect of its result
+    val got = ops.map { case (name, op) =>
+      name -> SparkJobs.count(spark.sparkContext)(op().collect()) }.toMap
+    assert(got == Map(
+      "jaccardPairs" -> 13, "minhashLshPairs" -> 11, "simhashPairs" -> 11,
+      "simhashPairsFromFpsTwoStage" -> 10, "winnowPairs" -> 11,
+      "cosineDupPairsLsh 0.9" -> 14, "cosineDupPairsLsh 0.4" -> 15))
   }
 
   test("multimodal: decode stub plumbing — schema, determinism, frame explode") {

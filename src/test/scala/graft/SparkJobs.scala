@@ -1,30 +1,61 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.Properties
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.graft.Bridge
 
 object SparkJobs {
-  /** Jobs started by `f` on this thread, counted by a listener that keeps
-    * only jobs carrying this call's local-property tag. */
-  def count(sc: SparkContext)(f: => Unit): Int = {
+  private val TagKey = "graft.test.job"
+
+  /** Runs `f` with this thread's jobs carrying a fresh local-property tag
+    * and `listener(tag)` registered; the listener should keep only events
+    * whose properties carry that tag (see [[ours]]). */
+  private def tagged(sc: SparkContext)(listener: String => SparkListener)(f: => Unit): Unit = {
     val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.test.job") == tag)
-          seen.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.job", tag)
+    val l = listener(tag)
+    sc.addSparkListener(l)
+    sc.setLocalProperty(TagKey, tag)
     try f
     finally {
-      sc.setLocalProperty("graft.test.job", null)
+      sc.setLocalProperty(TagKey, null)
       Bridge.drainListeners(sc)
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
+  }
+
+  private def ours(props: Properties, tag: String): Boolean =
+    props != null && props.getProperty(TagKey) == tag
+
+  /** Jobs started by `f` on this thread. */
+  def count(sc: SparkContext)(f: => Unit): Int = {
+    val seen = new ConcurrentLinkedQueue[Int]()
+    tagged(sc)(tag => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties, tag)) seen.add(e.jobId)
+    })(f)
     seen.size
+  }
+
+  /** Rows read from files by the jobs `f` starts on this thread: the sum of
+    * `inputMetrics.recordsRead` over the stages that scan a file. Stages
+    * without a file scan are left out because reading a cached block also
+    * counts there, one record per cached batch. */
+  def fileRecordsRead(sc: SparkContext)(f: => Unit): Long = {
+    val scanStages = ConcurrentHashMap.newKeySet[Int]()
+    val records = new AtomicLong()
+    tagged(sc)(tag => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties, tag) && e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanStages.add(e.stageInfo.stageId)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (scanStages.contains(e.stageInfo.stageId))
+          records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    })(f)
+    records.get
   }
 }
