@@ -15,7 +15,8 @@ import graft.rank.{PageRankSpark, Searcher}
 
 /** Untimed physical-plan audit, `sbt "runMain graft.Plans"`: prints
   * `.explain(formatted)` for the load-bearing lazy operators, and the
-  * executed plans of the eager dedup ops and of one serve, so plan quality
+  * executed plans of one governed crawl round, of the eager dedup ops and
+  * of one serve, so plan quality
   * (pushdown, pruning, broadcast, DPP, codegen spans) is inspectable — see
   * PLANS.md for the curated findings. Timing belongs to perfbench. */
 object Plans {
@@ -94,6 +95,17 @@ object Plans {
     val crawl = Crawler.run(spark, pagesDf,
       CrawlConfig(Seq(TestCorpus.seedUrl), TestCorpus.filterPrefix))
     val idx = Indexer.build(spark, pagesDf, crawl.seen, TestCorpus.filterPrefix, 4)
+    // a governed snapshot round (per-host budget waves, robots rules, the
+    // bloom pre-filter) resumed after round 0: the resume's robots collect
+    // and bloom rebuild, then the round's checkpoints and writes, showing
+    // the stage each round count's CollectMetrics node sits in
+    val governed = CrawlConfig(Seq(TestCorpus.seedUrl), TestCorpus.filterPrefix,
+      hostBudget = 2, respectRobots = true, bloomMinSeen = 0L,
+      workDir = Some(java.nio.file.Files.createTempDirectory("graft-plans-crawl").toString))
+    Crawler.run(spark, pagesDf, governed.copy(maxRounds = 1))
+    executed(spark, "crawler: one resumed governed snapshot round") {
+      Crawler.resume(spark, pagesDf, governed.copy(maxRounds = 2))
+    }
     section("tokenize/extract pipeline: WholeStageCodegen over custom exprs") {
       // parquet-backed so whole-stage codegen engages (LocalTableScan won't)
       val pq = "/tmp/graft-plans-fixture-pages"

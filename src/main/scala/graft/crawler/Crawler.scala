@@ -1,12 +1,13 @@
 package graft.crawler
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.gfn
-import graft.functions.{Bloom, BloomAggExpr, BloomProbeExpr}
+import graft.functions.{Bloom, BloomAggExpr, BloomProbeExpr, RobotsAllowedExpr}
 import graft.snapshot.RoundMetrics
 
 /** Crawl configuration. Neutral defaults reproduce the reference exactly:
@@ -46,9 +47,10 @@ final case class CrawlConfig(
     /** Some(dir) keeps the crawl in resumable snapshot tables under dir;
       * None keeps it in local checkpoints (see [[SeenStore]]). */
     workDir: Option[String] = None,
-    /** false skips the metrics-only jobs (fetch/link/dedup counts) — the
-      * throughput-bench mode; state-machine counts (newSeen, frontier) are
-      * always exact. */
+    /** Has no effect: every round count is observed on the jobs the round
+      * already runs, so both values run one plan and report the same
+      * [[RoundMetrics]]. The parameter stays because the frozen `Bench`
+      * and perfbench pass it. */
     collectMetrics: Boolean = true,
     /** >0 ⇒ the pages table is hive-partitioned by a `bucket` column equal
       * to pmod(xxhash64(url), pagesBuckets); the fetch join then includes
@@ -103,9 +105,26 @@ final case class CrawlResult(
   *     `workDir`: local checkpoints, or snapshot tables that commit an
   *     Iceberg-style manifest per round so a killed crawl resumes with
   *     identical ordering (graft.snapshot.SnapshotLog). The round loop is
-  *     the same in both modes, and so are its Spark jobs apart from the
-  *     snapshot writes: in memory mode the round's stats aggregate is the
-  *     one job that materializes the seen delta.
+  *     the same in both modes: the delta's one materializing job is an
+  *     eager checkpoint in memory mode and the parquet write in snapshot
+  *     mode, and the frontier costs one more write in snapshot mode only.
+  *
+  * Round counts are `Dataset.observe` metrics on the jobs that already
+  * materialize their data; no job runs only to count. Invariants:
+  *   - counts that drive crawl state (the selection count, and the delta's
+  *     row count and seed hits) are observed only in the RESULT stage of
+  *     the eager checkpoint or write that materializes them. Spark applies
+  *     a result task's accumulator update once per partition, but applies
+  *     a map stage's updates again on every stage retry. Metrics-only
+  *     counts (fetched, links extracted, distinct links) may sit in a map
+  *     stage;
+  *   - every round creates fresh `Observation`s, and reads each one only
+  *     after the action that executes its plan has returned: `get` blocks
+  *     forever on a plan that never ran;
+  *   - under AQE, a map stage that emits no rows is replaced by an empty
+  *     relation, and an observation inside it is dropped. A metrics-only
+  *     observation counts nothing unless its stage emits a row, so a
+  *     dropped one reads 0 (see [[metric]]).
   */
 object Crawler {
 
@@ -152,26 +171,27 @@ object Crawler {
     *     2 orders by (depth, url) alone;
     *   - salts = 1: one window over the host.
     *
-    * Returns (selected, deferred): selected ⊎ deferred ≡ frontier
-    * (projected to url/host/depth), both as filters over the eagerly
-    * checkpointed tagged plan — the returned DFs' lineage keeps the
-    * checkpoint blocks reachable until the next round's checkpoint
-    * truncates it, so no extra lifecycle bookkeeping is needed. */
+    * Returns (selected, deferred, |selected|): selected ⊎ deferred ≡
+    * frontier, both as filters over the eagerly checkpointed tagged plan —
+    * the returned DFs' lineage keeps the checkpoint blocks reachable until
+    * the next round's checkpoint truncates it, so no extra lifecycle
+    * bookkeeping is needed. The count is observed in the result stage of
+    * the checkpoint that materializes the selection. */
   private def tagAndSplit(frontier: DataFrame, eligible: Column,
                           budget: Int, salts: Int)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, Long) = {
     val outCols = Seq(col("url"), col("host"), col("depth"))
-    // drop the robots `prefixes` array BEFORE any materialization: it is
-    // per-host metadata and would otherwise be copied into every row of
-    // the checkpoint
-    val base = frontier.withColumn("__elig", eligible)
-      .select(outCols :+ col("__elig"): _*)
+    val base = frontier.select(outCols :+ eligible.as("__elig"): _*)
+    val selObs = Observation()
+    def materialize(tagged: DataFrame, sel: Column) =
+      tagged.observe(selObs, count(when(sel, 1)).as("selected")).localCheckpoint(true)
+    def selCount = selObs.get("selected").asInstanceOf[Long]
     if (budget == Int.MaxValue) {
-      // eligibility alone decides — both branches are shuffle-free filters
-      // (the robots join is a broadcast), so one materialization suffices
-      val ann = base.localCheckpoint(true)
+      // eligibility alone decides — both branches are shuffle-free filters,
+      // so one materialization suffices
+      val ann = materialize(base, col("__elig"))
       (ann.filter(col("__elig")).select(outCols: _*),
-       ann.filter(!col("__elig")).select(outCols: _*))
+       ann.filter(!col("__elig")).select(outCols: _*), selCount)
     } else if (salts > 1) {
       val w1 = Window.partitionBy(col("host"), pmod(xxhash64(col("url")), lit(salts)))
         .orderBy(col("__elig").desc, col("depth").asc, col("url").asc)
@@ -179,21 +199,26 @@ object Crawler {
       val sel1 = col("__elig") && col("__rn1") <= budget
       val w2 = Window.partitionBy(col("host"))
         .orderBy(col("depth").asc, col("url").asc)
-      val ann2 = ann1.filter(sel1).withColumn("__rn", row_number().over(w2))
-        .localCheckpoint(true)
+      val ann2 = materialize(ann1.filter(sel1).withColumn("__rn", row_number().over(w2)),
+        col("__rn") <= budget)
       val selected = ann2.filter(col("__rn") <= budget).select(outCols: _*)
       val deferred = ann1.filter(!sel1).select(outCols: _*)
         .unionByName(ann2.filter(col("__rn") > budget).select(outCols: _*))
-      (selected, deferred)
+      (selected, deferred, selCount)
     } else {
       val w = Window.partitionBy(col("host"))
         .orderBy(col("__elig").desc, col("depth").asc, col("url").asc)
-      val ann = base.withColumn("__rn", row_number().over(w)).localCheckpoint(true)
       val sel = col("__elig") && col("__rn") <= budget
+      val ann = materialize(base.withColumn("__rn", row_number().over(w)), sel)
       (ann.filter(sel).select(outCols: _*),
-       ann.filter(!sel).select(outCols: _*))
+       ann.filter(!sel).select(outCols: _*), selCount)
     }
   }
+
+  /** A metrics-only count, 0 when AQE dropped its observation together
+    * with the stage that emitted no rows. */
+  private def metric(obs: Observation, name: String): Long =
+    obs.get.getOrElse(name, 0L).asInstanceOf[Long]
 
   private def runInternal(spark: SparkSession, pages: DataFrame,
                           cfg: CrawlConfig, resume: Boolean): CrawlResult = {
@@ -201,8 +226,8 @@ object Crawler {
     val store = SeenStore(spark, cfg, resume)
     val resumed = store.resumed
     val bloomShape = Bloom.shapeFor(cfg.bloomExpectedItems, cfg.bloomFpp)
-    def bloomAgg: Column = org.apache.spark.sql.graft.Bridge.column(
-      BloomAggExpr(org.apache.spark.sql.graft.Bridge.expression(col("url_hash")),
+    def bloomAgg: Column = Bridge.column(
+      BloomAggExpr(Bridge.expression(col("url_hash")),
         bloomShape._1, bloomShape._2).toAggregateExpression())
     var driverBloom = new Bloom(bloomShape._1, bloomShape._2)
 
@@ -211,6 +236,9 @@ object Crawler {
     var frontier: DataFrame = resumed.fold(
       cfg.seeds.toDF("url")
         .select(col("url"), gfn.url_host(col("url")).as("host"), lit(0).as("depth")))(_.frontier)
+    // |frontier| is always known without a job: the seeds, the resumed
+    // manifest's count, then the arithmetic below
+    var lastFrontierCount: Long = resumed.fold(cfg.seeds.size.toLong)(_.frontierCount)
 
     // bloom maintenance state: active from the start only when the
     // threshold is disabled; otherwise activated (with a one-time rebuild)
@@ -224,49 +252,34 @@ object Crawler {
     // a resumed crawl rebuilds the pre-filter from the recovered seen set
     if (resumed.isDefined && bloomActive) rebuildBloom()
 
-    // robots rules are collected ONCE per crawl to a driver-local relation:
-    // they are driver-sized by construction (a broadcast collects them to
-    // the driver anyway), and a broadcast built from a LocalRelation costs
-    // no Spark job on any politeness wave
-    val robots = if (cfg.respectRobots) {
-      val rt = robotsTable(pages)
-      Some(spark.createDataFrame(java.util.Arrays.asList(rt.collect(): _*), rt.schema))
-    } else None
+    // robots rules are collected ONCE per crawl (one row per host with
+    // rules) and broadcast from the driver, which runs no Spark job; each
+    // round probes them with one hash lookup per frontier row (a broadcast
+    // join of the collected rows would run a broadcast job every round)
+    val robotsOk: Column = if (cfg.respectRobots) {
+      val rules = robotsTable(pages).filter(col("host").isNotNull).collect()
+        .map(r => UTF8String.fromString(r.getString(0)) ->
+          r.getSeq[String](1).map(UTF8String.fromString).toArray).toMap
+      Bridge.column(RobotsAllowedExpr(Bridge.expression(col("host")),
+        Bridge.expression(gfn.url_path(col("url"))), spark.sparkContext.broadcast(rules)))
+    } else lit(true)
+    val depthOk: Column =
+      if (cfg.maxDepth == Int.MaxValue) lit(true) else col("depth") <= cfg.maxDepth
+    // when nothing filters the frontier, selected ≡ frontier and its size
+    // is already known
+    val noFilters = cfg.hostBudget == Int.MaxValue &&
+      !cfg.respectRobots && cfg.maxDepth == Int.MaxValue
 
     val metrics = Vector.newBuilder[RoundMetrics]
     var stop = false
-    var lastFrontierCount: Long =
-      if (resumed.isDefined) -1L else cfg.seeds.size.toLong
 
     while (!stop && round < cfg.maxRounds && seenCount <= cfg.maxSeen) {
       val t0 = System.currentTimeMillis()
 
       // --- candidate selection: depth cap, robots, politeness -------------
-      // when nothing filters the frontier, selected ≡ frontier and its
-      // size is already known from the previous round — saves one count
-      // job per round
-      val noFilters = cfg.hostBudget == Int.MaxValue &&
-        !cfg.respectRobots && cfg.maxDepth == Int.MaxValue
-      val (selected, deferred) =
-        if (noFilters) (frontier, frontier.limit(0))
-        else {
-          val withRules = robots match {
-            case Some(r) => frontier.join(broadcast(r), Seq("host"), "left")
-            case None    => frontier
-          }
-          val allowed: Column = robots match {
-            case Some(_) => coalesce(
-              !exists(col("prefixes"), p => gfn.url_path(col("url")).startsWith(p)),
-              lit(true))
-            case None => lit(true)
-          }
-          val depthOk: Column =
-            if (cfg.maxDepth == Int.MaxValue) lit(true)
-            else col("depth") <= cfg.maxDepth
-          tagAndSplit(withRules, depthOk && allowed, cfg.hostBudget, cfg.saltBuckets)
-        }
-      val selCount = if (noFilters && lastFrontierCount >= 0) lastFrontierCount
-                     else selected.count()
+      val (selected, deferred, selCount) =
+        if (noFilters) (frontier, frontier.limit(0), lastFrontierCount)
+        else tagAndSplit(frontier, depthOk && robotsOk, cfg.hostBudget, cfg.saltBuckets)
 
       if (selCount == 0) {
         stop = true
@@ -278,61 +291,53 @@ object Crawler {
               pmod(xxhash64(col("url")), lit(cfg.pagesBuckets)).cast("int"))
           else selected
         val joinKeys = if (cfg.pagesBuckets > 0) Seq("bucket", "url") else Seq("url")
-        // TINY rounds (seeds, stragglers): collect the whole frontier once —
-        // the bucket-IN set AND the broadcast both derive from the local
-        // rows, so the round pays ONE collect job instead of a distinct-
-        // buckets job plus a broadcast-build job (per-round serial latency
-        // is the scaling-efficiency tax; see PLANS.md §9)
-        val selLocal: Option[Array[org.apache.spark.sql.Row]] =
-          if (selCount <= 4096L) Some(selKeyed.collect()) else None
         // manual partition pruning: Spark's DPP heuristic won't fire for an
-        // unfiltered frontier side, so when the frontier is small enough
-        // that it plausibly misses buckets, collect its ≤pagesBuckets
-        // distinct bucket ids (tiny driver action) and push a static IN
-        // filter — the scan then reads only the touched partitions
-        val pagesSide =
-          if (cfg.pagesBuckets > 0 && selLocal.isDefined) {
-            val buckets = selLocal.get
-              .map(_.getAs[Int]("bucket")).distinct.toSeq
-            pages.filter(col("bucket").isInCollection(buckets))
-          } else if (cfg.pagesBuckets > 0 && selCount < 8L * cfg.pagesBuckets) {
+        // unfiltered frontier side, so a bucketed round small enough that
+        // it plausibly misses buckets pushes a static IN filter of its
+        // bucket ids — the scan then reads only the touched partitions.
+        // TINY bucketed rounds (seeds, stragglers) collect the whole
+        // frontier once, and both the IN set and the broadcast side come
+        // from those rows: a collect job plus the broadcast's own job, the
+        // same two jobs a distinct-buckets collect and a broadcast cost.
+        // Unbucketed rounds collect nothing and broadcast the selection
+        val selLocal: Option[Array[org.apache.spark.sql.Row]] =
+          if (cfg.pagesBuckets > 0 && selCount <= 4096L) Some(selKeyed.collect()) else None
+        val pagesSide = selLocal match {
+          case Some(rows) =>
+            pages.filter(col("bucket").isInCollection(rows.map(_.getAs[Int]("bucket")).distinct))
+          case None if cfg.pagesBuckets > 0 && selCount < 8L * cfg.pagesBuckets =>
             val buckets = selKeyed.select("bucket").distinct()
               .collect().map(_.getInt(0)).toSeq
             pages.filter(col("bucket").isInCollection(buckets))
-          } else pages
+          case None => pages
+        }
         val selForJoin = selLocal match {
           case Some(rows) => broadcast(spark.createDataFrame(
             java.util.Arrays.asList(rows: _*), selKeyed.schema))
           case None =>
             if (selCount <= cfg.broadcastMaxRows) broadcast(selKeyed) else selKeyed
         }
-        // the parsed-links intermediate is cached ONLY when the metrics
-        // pass re-reads it; in throughput mode it streams straight into the
-        // per-round dedup (caching it would write every link array to
-        // memory for a single consumer)
-        val fetched0 = pagesSide.join(selForJoin, joinKeys, "inner")
+        // metrics-only counts ride on the fetch and the round dedup, both
+        // materialized by the checkpoint or write further down. explode_outer
+        // keeps one null-url row for a page without links, so the fetch
+        // stage emits a row for every fetched page (see [[metric]]); the
+        // null group is dropped after the dedup
+        val fetchObs = Observation()
+        val fetched = pagesSide.join(selForJoin, joinKeys, "inner")
           .select(col("url"), col("depth"),
             gfn.extract_links(col("html"), col("url"), lit(cfg.filter), lit(true))
               .as("links"))
-        val fetched = if (cfg.collectMetrics) fetched0.persist(StorageLevel.MEMORY_AND_DISK)
-                      else fetched0
-        val (fetchCount, linksExtracted) = if (cfg.collectMetrics) {
-          val a = fetched.agg(count(lit(1)),
-            coalesce(sum(size(col("links"))), lit(0L))).head()
-          (a.getLong(0), a.getLong(1))
-        } else (-1L, -1L)
+          .observe(fetchObs, count(lit(1)).as("fetched"),
+            coalesce(sum(size(col("links"))), lit(0L)).as("links"))
 
         // --- per-round link dedup with min discovery depth -----------------
-        // persisted ONLY in metrics mode, which reads it twice (count +
-        // anti-join); the throughput path has exactly one consumer (the
-        // seen anti-join, or the bloom branch's eager checkpoint)
-        val roundLinks0 = fetched
-          .select(explode(col("links")).as("url"), (col("depth") + 1).as("depth"))
+        val linksObs = Observation()
+        val roundLinks = fetched
+          .select(explode_outer(col("links")).as("url"), (col("depth") + 1).as("depth"))
           .groupBy("url")
           .agg(min("depth").as("depth"))
-        val roundLinks = if (cfg.collectMetrics)
-          roundLinks0.persist(StorageLevel.MEMORY_AND_DISK) else roundLinks0
-        val distinctLinks = if (cfg.collectMetrics) roundLinks.count() else -1L
+          .observe(linksObs, count(col("url")).as("distinct"))
+          .filter(col("url").isNotNull)
 
         // --- seen-set dedup: bloom pre-filter + exact anti-join ------------
         // activate (and one-time-rebuild) the bloom at the threshold
@@ -360,31 +365,30 @@ object Crawler {
           // guarantee that — filter-over-cache plans can miss the cache)
           val rl = roundLinks.localCheckpoint(true)
           val bc = spark.sparkContext.broadcast(driverBloom)
-          val probe = org.apache.spark.sql.graft.Bridge.column(BloomProbeExpr(
-            org.apache.spark.sql.graft.Bridge.expression(xxhash64(col("url"))), bc))
+          val probe = Bridge.column(BloomProbeExpr(
+            Bridge.expression(xxhash64(col("url"))), bc))
           val maybeSeen = rl.filter(probe)
             .join(store.seen.select("url").hint("shuffle_hash"), Seq("url"), "left_anti")
           val definitelyNew = rl.filter(!probe)
           definitelyNew.unionByName(maybeSeen)
             .select(col("url"), xxhash64(col("url")).as("url_hash"), col("depth"))
         }
-        val delta = store.append(round, newSeen)
 
-        // one pass over the stored delta: row count, seed hits (for the
-        // frontier arithmetic below), and — only while the filter is
-        // active — the bloom shard, instead of three separate jobs. With
-        // the bloom below threshold the aggregate carries 16-byte buffers
-        // per partition instead of filter-sized ones.
-        val baseAggs = Seq(
-          count(lit(1)),
+        // the delta's stats arrive with the job that stores it: row count,
+        // seed hits (for the frontier arithmetic below), and — only while
+        // the filter is active — the bloom shard
+        val deltaObs = Observation()
+        val baseStats = Seq(
+          count(lit(1)).as("rows"),
           coalesce(sum(when(col("url").isInCollection(cfg.seeds), 1L)
-            .otherwise(0L)), lit(0L)))
-        val aggs = if (bloomActive) baseAggs :+ bloomAgg else baseAggs
-        val statsRow = delta.agg(aggs.head, aggs.tail: _*).head()
-        val newCount = statsRow.getLong(0)
-        val newSeenSeeds = statsRow.getLong(1)
+            .otherwise(0L)), lit(0L)).as("seeds"))
+        val stats = if (bloomActive) baseStats :+ bloomAgg.as("bloom") else baseStats
+        val delta = store.append(round, newSeen.observe(deltaObs, stats.head, stats.tail: _*))
+        val deltaStats = deltaObs.get
+        val newCount = deltaStats("rows").asInstanceOf[Long]
+        val newSeenSeeds = deltaStats("seeds").asInstanceOf[Long]
         if (bloomActive && newCount > 0)
-          driverBloom.mergeInPlace(Bloom.deserialize(statsRow.getAs[Array[Byte]](2)))
+          driverBloom.mergeInPlace(Bloom.deserialize(deltaStats("bloom").asInstanceOf[Array[Byte]]))
         seenCount += newCount
 
         // --- next state -----------------------------------------------------
@@ -399,18 +403,14 @@ object Crawler {
           if (noFilters) frontierAdd else deferred.unionByName(frontierAdd))
         // |frontierNext| is arithmetic: deferred ⊎ selected ≡ frontier, and
         // frontierAdd = newSeen ∖ seeds is disjoint from the old frontier
-        // (frontier residents are already in the seen set, newSeen is not).
-        // The one real count left is the first round after a resume, where
-        // the recovered frontier's size is unknown.
-        val frontierCount =
-          if (noFilters) newCount - newSeenSeeds // frontierAdd, arithmetically
-          else if (lastFrontierCount >= 0)
-            (lastFrontierCount - selCount) + (newCount - newSeenSeeds)
-          else frontierNext.count()
+        // (frontier residents are already in the seen set, newSeen is not)
+        val frontierCount = (lastFrontierCount - selCount) + (newCount - newSeenSeeds)
         lastFrontierCount = frontierCount
 
-        val m = RoundMetrics(round, selCount, fetchCount, linksExtracted,
-          dedupDropped = if (cfg.collectMetrics) distinctLinks - newCount else -1L,
+        val m = RoundMetrics(round, selCount,
+          fetched = metric(fetchObs, "fetched"),
+          linksExtracted = metric(fetchObs, "links"),
+          dedupDropped = metric(linksObs, "distinct") - newCount,
           newSeen = newCount, seenTotal = seenCount,
           frontierNext = frontierCount,
           wallMillis = System.currentTimeMillis() - t0)
@@ -418,7 +418,6 @@ object Crawler {
         store.commit(round, seenCount, m)
 
         frontier = frontierNext
-        fetched.unpersist(); roundLinks.unpersist()
         // tagged-checkpoint lifecycle needs no extra bookkeeping: the lazy
         // `frontier` plan references this round's checkpointed RDDs, and
         // the next round's eager tagAndSplit checkpoint truncates that

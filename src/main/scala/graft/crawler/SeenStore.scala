@@ -1,12 +1,14 @@
 package graft.crawler
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.snapshot.{PartitionLineage, RoundMetrics, Snapshot, SnapshotLog}
 
 /** Crawl state recovered from the latest committed round: the round to run
-  * next, the seen count, and the frontier. */
-private[crawler] final case class Resumed(round: Int, seenCount: Long, frontier: DataFrame)
+  * next, the seen count, the frontier and its size. */
+private[crawler] final case class Resumed(round: Int, seenCount: Long, frontier: DataFrame,
+                                          frontierCount: Long)
 
 /** Where a crawl keeps its seen set (url, url_hash, depth) and frontier
   * between rounds. Each round the crawler [[append]]s its new-seen delta,
@@ -19,7 +21,9 @@ private[crawler] final case class Resumed(round: Int, seenCount: Long, frontier:
   *     R rounds), and each row is copied O(R / compactEvery) times;
   *   - compaction runs only after the round's commit;
   *   - the returned delta and frontier are stable: reading them again
-  *     never re-runs the round. */
+  *     never re-runs the round;
+  *   - `append` runs the delta's plan exactly once, in one eager action, so
+  *     an `Observation` attached to the delta is filled when it returns. */
 private[crawler] sealed trait SeenStore {
   /** the state to continue from; None starts a fresh crawl */
   def resumed: Option[Resumed]
@@ -31,11 +35,14 @@ private[crawler] sealed trait SeenStore {
 }
 
 private[crawler] object SeenStore {
+  val SeenSchema: StructType =
+    StructType.fromDDL("url STRING NOT NULL, url_hash BIGINT NOT NULL, depth INT NOT NULL")
+  val FrontierSchema: StructType = StructType.fromDDL("url STRING, host STRING, depth INT")
+
   /** A work directory selects snapshot mode, its absence memory mode. */
   def apply(spark: SparkSession, cfg: CrawlConfig, resume: Boolean): SeenStore = {
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "url STRING NOT NULL, url_hash BIGINT NOT NULL, depth INT NOT NULL"))
+      SeenSchema)
     cfg.workDir match {
       case Some(dir) => new SnapshotTables(spark, new SnapshotLog(dir), cfg, resume, empty)
       case None      => new Checkpoints(cfg.compactEvery, empty)
@@ -44,8 +51,9 @@ private[crawler] object SeenStore {
 }
 
 /** Memory mode: local checkpoints, nothing to resume from.
-  *   - A delta is a LAZY checkpoint: the round's stats aggregate is the job
-  *     that materializes it, so delta + stats cost one Spark job.
+  *   - A delta is an EAGER checkpoint: its one job also fills the round's
+  *     delta observation (a lazy checkpoint would run the plan outside any
+  *     action that reports observed metrics).
   *   - The frontier is kept as is: filters and a union over checkpoints
   *     already materialized, whose lineage the next round's selection
   *     checkpoint truncates.
@@ -57,7 +65,7 @@ private[crawler] final class Checkpoints(compactEvery: Int, empty: DataFrame)
   def resumed: Option[Resumed] = None
 
   def append(round: Int, delta: DataFrame): DataFrame = {
-    val cp = delta.localCheckpoint(false)
+    val cp = delta.localCheckpoint(true)
     deltas :+= cp
     seen = deltas.reduce(_ unionByName _)
     cp
@@ -81,6 +89,8 @@ private[crawler] final class Checkpoints(compactEvery: Int, empty: DataFrame)
   *     a file a committed manifest references; its files are only orphaned.
   *   - Readers go only through manifest paths: `seen` is one multi-path
   *     scan of the delta list, and resume reads `latest`.
+  *   - Every table is read back with its known schema, so no read runs a
+  *     schema-inference job.
   *   - A delta's lineage comes from its parquet footers, read on the
   *     driver instead of by a Spark job, and concurrently: on a remote
   *     store a sequential loop would be one metadata round-trip per file.
@@ -101,9 +111,11 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
   private var nextId = latest.fold(0)(_.id + 1)
   private var paths = latest.fold(Vector.empty[String])(_.seenDeltaPaths)
   private var lineage = Vector.empty[PartitionLineage]
-  var seen: DataFrame = if (paths.nonEmpty) spark.read.parquet(paths: _*) else empty
-  val resumed: Option[Resumed] = latest.map(snap =>
-    Resumed(snap.round + 1, snap.seenCount, spark.read.parquet(snap.frontierPath)))
+  private def readSeen(ps: Seq[String]) = spark.read.schema(SeenStore.SeenSchema).parquet(ps: _*)
+  private def readFrontier(p: String) = spark.read.schema(SeenStore.FrontierSchema).parquet(p)
+  var seen: DataFrame = if (paths.nonEmpty) readSeen(paths) else empty
+  val resumed: Option[Resumed] = latest.map(snap => Resumed(snap.round + 1, snap.seenCount,
+    readFrontier(snap.frontierPath), snap.metrics.frontierNext))
 
   private def fenced(prefix: String, round: Int) = s"${log.dir}/$prefix${round}_$runToken"
 
@@ -112,13 +124,13 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
     delta.write.mode("overwrite").parquet(path)
     paths :+= path
     lineage = footerLineage(path)
-    seen = spark.read.parquet(paths: _*)
-    spark.read.parquet(path)
+    seen = readSeen(paths)
+    readSeen(Seq(path))
   }
 
   def keep(round: Int, frontier: DataFrame): DataFrame = {
     frontier.write.mode("overwrite").parquet(fenced("frontier/r", round))
-    spark.read.parquet(fenced("frontier/r", round))
+    readFrontier(fenced("frontier/r", round))
   }
 
   def commit(round: Int, seenCount: Long, metrics: RoundMetrics): Unit = {
@@ -129,7 +141,7 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
       val path = fenced("seen/compact_r", round)
       seen.write.mode("overwrite").parquet(path)
       paths = Vector(path)
-      seen = spark.read.parquet(path)
+      seen = readSeen(paths)
     }
   }
 

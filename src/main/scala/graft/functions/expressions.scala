@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -324,6 +325,35 @@ case class UrlPathExpr(child: Expression) extends UnaryExpression with GraftUnar
   protected def implCall = "urlPath"
   protected def implEval(v: Any): Any = ExprImpl.urlPath(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `robots_allowed(host, path)` — false iff the host's broadcast
+  * robots.txt rules hold a disallow prefix of `path`. One hash lookup per
+  * row however many hosts have rules; the rules are deserialized once per
+  * executor and never enter the plan. A null host or path, or a host
+  * without rules, is allowed. CodegenFallback for the same reason as
+  * `BloomProbeExpr`: the broadcast handle can't cross into generated Java
+  * source. */
+case class RobotsAllowedExpr(
+    left: Expression,
+    right: Expression,
+    rules: org.apache.spark.broadcast.Broadcast[Map[UTF8String, Array[UTF8String]]])
+  extends BinaryExpression
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def prettyName: String = "robots_allowed"
+  override def eval(input: InternalRow): Any = {
+    val host = left.eval(input)
+    host == null || (rules.value.get(host.asInstanceOf[UTF8String]) match {
+      case None => true
+      case Some(prefixes) =>
+        val path = right.eval(input).asInstanceOf[UTF8String]
+        path == null || !prefixes.exists(path.startsWith)
+    })
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
 }
 
 /** Non-overlapping phrase count over ARRAY<LONG> forward indexes

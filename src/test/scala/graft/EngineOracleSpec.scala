@@ -2,10 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.{PageRow, TestCorpus}
 import graft.crawler.{CrawlConfig, Crawler}
+import graft.functions.RobotsAllowedExpr
 import graft.index.Indexer
 import graft.oracle.ReferenceOracle
 import graft.oracle.ReferenceOracle.CrawlParams
@@ -79,6 +82,8 @@ class EngineOracleSpec extends AnyFunSuite {
     val o = oracleCrawl.rounds
     val e = engineCrawl.rounds
     assert(e.map(_.selected) == o.map(_.selected))
+    assert(e.map(_.fetched) == o.map(_.fetched))
+    assert(e.map(_.linksExtracted) == o.map(_.linksExtracted))
     assert(e.map(_.newSeen) == o.map(_.newSeen))
     assert(e.map(_.seenTotal) == o.map(_.seenTotal))
   }
@@ -166,6 +171,24 @@ class EngineOracleSpec extends AnyFunSuite {
     val ef = e.frontier.select("url").as[String].collect().toSet
     assert(ef == o.frontier.keySet)
     assert(ef.exists(_.contains("/private/")))
+  }
+
+  test("robots_allowed: rules of many hosts are probed from a broadcast " +
+       "and never enter the plan") {
+    val rules = (0 until 5000).map(i =>
+      UTF8String.fromString(s"h$i.example") ->
+        Array(s"/private$i/", "/tmp/").map(UTF8String.fromString)).toMap
+    val allowed = Bridge.column(RobotsAllowedExpr(Bridge.expression(col("host")),
+      Bridge.expression(col("path")), spark.sparkContext.broadcast(rules)))
+    val rows = Seq[(Int, String, String)](
+      (0, "h7.example", "/private7/a"), (1, "h7.example", "/private8/a"),
+      (2, "h4999.example", "/tmp/x"), (3, "other.example", "/private7/a"),
+      (4, null, "/tmp/"), (5, "h7.example", null))
+    val probed = rows.toDF("id", "host", "path").repartition(2)
+      .select(col("id"), allowed.as("ok"))
+    assert(probed.orderBy("id").select("ok").as[Boolean].collect().toSeq ==
+      Seq(false, true, false, true, true, true))
+    assert(!probed.queryExecution.executedPlan.toString.contains("/private4999/"))
   }
 
   test("GUARD: the politeness DuckDB oracle's unroll depth covers the " +

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.corpus.TestCorpus
 import graft.crawler.{CrawlConfig, CrawlResult, Crawler}
@@ -11,7 +14,7 @@ import graft.snapshot.SnapshotLog
   * latest Iceberg-style snapshot with IDENTICAL ordering — the resumed
   * run's rounds and final state must be indistinguishable from an
   * uninterrupted run. */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TimeLimits {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -124,20 +127,24 @@ class ResumeSpec extends AnyFunSuite {
     assert(roundsOf(cross) == roundsOf(off))
   }
 
+  private def chainUrl(i: Int) = s"https://chain.test/p$i.html"
+  /** pages p0 → p1 → … → p(n-1): one round per page, and the last round
+    * fetches the chain end and discovers nothing */
+  private def chainPages(n: Int) = spark.createDataset((0 until n).map { i =>
+    val html =
+      if (i + 1 < n) s"""<html><body><a href="p${i + 1}.html">n</a></body></html>"""
+      else "<html><body>end</body></html>"
+    graft.corpus.PageRow(chainUrl(i), new java.sql.Timestamp(0L),
+      html.getBytes("UTF-8"), "", "en")
+  }).toDF()
+
   test("snapshot-mode seen-delta compaction: manifest path list bounded, " +
        "kill past a compaction boundary + resume ≡ uninterrupted (r7)") {
     // a 10-deep chain forces one round per page — enough rounds to cross
     // the compaction period twice
     val n = 10
-    def url(i: Int) = s"https://chain.test/p$i.html"
-    val rows = (0 until n).map { i =>
-      val html =
-        if (i + 1 < n) s"""<html><body><a href="p${i + 1}.html">n</a></body></html>"""
-        else "<html><body>end</body></html>"
-      graft.corpus.PageRow(url(i), new java.sql.Timestamp(0L),
-        html.getBytes("UTF-8"), "", "en")
-    }
-    val pages = spark.createDataset(rows).toDF()
+    def url(i: Int) = chainUrl(i)
+    val pages = chainPages(n)
     val cfg0 = CrawlConfig(Seq(url(0)), ".test/", compactEvery = 3)
 
     val full = Crawler.run(spark, pages, cfg0) // memory-mode reference
@@ -190,15 +197,8 @@ class ResumeSpec extends AnyFunSuite {
     // the memory-mode union tower the round-2 ADVICE flagged (O(R²)
     // planning without compaction)
     val n = 46
-    def url(i: Int) = s"https://chain.test/p$i.html"
-    val rows = (0 until n).map { i =>
-      val html =
-        if (i + 1 < n) s"""<html><body><a href="p${i + 1}.html">n</a></body></html>"""
-        else "<html><body>end</body></html>"
-      graft.corpus.PageRow(url(i), new java.sql.Timestamp(0L),
-        html.getBytes("UTF-8"), "", "en")
-    }
-    val pages = spark.createDataset(rows).toDF()
+    def url(i: Int) = chainUrl(i)
+    val pages = chainPages(n)
     val res = Crawler.run(spark, pages, CrawlConfig(Seq(url(0)), ".test/"))
     // n-1 discovery rounds + the final round that fetches the chain end
     // and discovers nothing
@@ -253,6 +253,52 @@ class ResumeSpec extends AnyFunSuite {
     assert(frontierOf(resumed) == frontierOf(mem))
   }
 
+  test("both collectMetrics values report the same RoundMetrics " +
+       "(default and production configs, memory and snapshot mode)") {
+    def rounds(cfg: CrawlConfig) =
+      Crawler.run(spark, pagesDf, cfg).rounds.map(_.copy(wallMillis = 0L))
+    for (cfg <- Seq(CrawlConfig(seeds, filter), prodCfg,
+                    prodCfg.copy(workDir = tmpDir("graft-modes-snap")))) {
+      val on = rounds(cfg)
+      val off = rounds(cfg.copy(collectMetrics = false,
+        workDir = cfg.workDir.map(_ => Files.createTempDirectory("graft-modes").toString)))
+      assert(on.nonEmpty)
+      assert(off == on)
+      assert(on.forall(m => m.fetched >= 0 && m.linksExtracted >= 0 && m.dedupDropped >= 0))
+    }
+  }
+
+  // an Observation read over a plan that never ran blocks forever; the time
+  // limit turns such a wait into a failure
+  private implicit val signaler: Signaler = ThreadSignaler
+
+  test("round observations are filled when the last round adds no url and " +
+       "when a finished snapshot crawl is resumed") {
+    // the last round fetches a page without links, or (p3 linking to a
+    // missing p4) fetches nothing
+    val lastLinkless = chainPages(4)
+    val lastMissing = chainPages(5).filter(col("url") =!= chainUrl(4))
+    val cfg = CrawlConfig(Seq(chainUrl(0)), ".test/", hostBudget = 2, bloomMinSeen = 0L)
+    failAfter(Span(120, Seconds)) {
+      for ((pages, fetched) <- Seq(lastLinkless -> Vector(1L, 1L, 1L, 1L),
+                                   lastMissing -> Vector(1L, 1L, 1L, 1L, 0L));
+           workDir <- Seq(None, tmpDir("graft-finished"))) {
+        val done = Crawler.run(spark, pages, cfg.copy(workDir = workDir))
+        assert(done.rounds.map(_.fetched) == fetched)
+        assert(done.rounds.map(_.newSeen) == fetched.init.map(_ => 1L) :+ 0L)
+        assert(done.rounds.last.linksExtracted == 0L)
+        assert(done.rounds.last.frontierNext == 0L)
+        assert(done.frontier.count() == 0L)
+        workDir.foreach { _ =>
+          val again = Crawler.resume(spark, pages, cfg.copy(workDir = workDir))
+          assert(again.resumedFromRound == fetched.size)
+          assert(again.rounds.isEmpty)
+          assert(again.seen.count() == fetched.size - 1L)
+        }
+      }
+    }
+  }
+
   test("Spark jobs per tiny-corpus crawl are pinned in memory and snapshot mode") {
     pagesDf.count() // the cached pages table is built outside the counts
     def jobs(cfg: CrawlConfig) =
@@ -266,6 +312,6 @@ class ResumeSpec extends AnyFunSuite {
       Crawler.run(spark, pagesDf, benchCfg.copy(maxRounds = 2))
       Crawler.resume(spark, pagesDf, benchCfg)
     }
-    assert((memDefault, memProd, snapProd, snapResume) == ((58, 201, 254, 208)))
+    assert((memDefault, memProd, snapProd, snapResume) == ((19, 100, 109, 113)))
   }
 }
