@@ -6,20 +6,16 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 /** A `file://` filesystem that never shells out — for single-user
   * scratch-dir workloads (tests, local benches, local snapshot stores).
   *
-  * Hadoop's RawLocalFileSystem (no native lib in this container) FORKS a
-  * `chmod` process on every file create/mkdir to apply permissions, and
-  * the FileContext path additionally forks `readlink`/`stat` per status
-  * call. On this sandbox VM the process-spawn path intermittently goes
-  * pathological (observed: a 1-row streaming micro-batch wedged >15 min
-  * inside Shell.runCommand, twice), and even when healthy the per-file
-  * fork tax lands on every parquet task commit — the snapshot-mode crawl
-  * writes 32 delta files + 32 frontier files + a manifest per round.
-  * Permission bits carry zero information on a single-user scratch dir,
-  * so permission maintenance becomes a no-op and every state-store /
-  * checkpoint / parquet-commit file op stays a pure java.io call.
+  * Without hadoop's native library, RawLocalFileSystem FORKS a `chmod`
+  * process on every file create/mkdir to apply permissions, so the
+  * per-file fork tax lands on every parquet task commit — the
+  * snapshot-mode crawl writes 32 delta files + 32 frontier files + a
+  * manifest per round. Permission bits carry zero information on a
+  * single-user scratch dir, so permission maintenance becomes a no-op and
+  * every checkpoint / parquet-commit file op stays a pure java.io call.
   *
-  * Registered via `spark.hadoop.fs.file.impl` in SparkTestSession and
-  * Bench.session (replacing ChecksumFileSystem — .crc sidecars are also
+  * Registered via `spark.hadoop.fs.file.impl` in SparkTestSession,
+  * Bench.session and perfbench's session (replacing ChecksumFileSystem — .crc sidecars are also
   * dropped). Cluster deployments against HDFS/S3/Iceberg are untouched:
   * this class only ever binds the `file` scheme. */
 class BareLocalFileSystem extends RawLocalFileSystem {

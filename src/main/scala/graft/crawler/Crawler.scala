@@ -23,7 +23,6 @@ final case class CrawlConfig(
     respectRobots: Boolean = false,
     maxRounds: Int = Int.MaxValue,
     bloomExpectedItems: Long = 1L << 22,
-    bloomFpp: Double = 0.03,
     /** Bloom pre-filter activation threshold on the SEEN count. Below it
       * the exact shuffle-hash anti-join alone is cheaper than maintaining
       * the filter: per round, the bloom costs a multi-hundred-KB aggregate
@@ -43,7 +42,6 @@ final case class CrawlConfig(
       * shuffle wins the scaling ratio even when the absolute wall is
       * close. */
     broadcastMaxRows: Long = 400000L,
-    saltBuckets: Int = 16,
     /** Some(dir) keeps the crawl in resumable snapshot tables under dir;
       * None keeps it in local checkpoints (see [[SeenStore]]). */
     workDir: Option[String] = None,
@@ -99,8 +97,8 @@ final case class CrawlResult(
   *   - per-host politeness via two-phase windowing: a first row_number
   *     inside (host, salt) buckets caps hot hosts without a single-task
   *     skew partition, a second row_number over the ≤ B·S survivors picks
-  *     the exact per-host top-B by (depth, url) — identical output to the
-  *     single-window plan, no hot-host straggler;
+  *     the exact per-host top-B by (depth, url) — identical output to one
+  *     window per host, no hot-host straggler;
   *   - the seen set and frontier live in a [[SeenStore]] chosen once from
   *     `workDir`: local checkpoints, or snapshot tables that commit an
   *     Iceberg-style manifest per round so a killed crawl resumes with
@@ -137,7 +135,7 @@ object Crawler {
 
   /** host → ARRAY(disallow prefixes), parsed from `…/robots.txt` rows of
     * the pages table (north_rule N2; same parse as the oracle). */
-  def robotsTable(pages: DataFrame): DataFrame =
+  private def robotsTable(pages: DataFrame): DataFrame =
     pages.filter(col("url").endsWith("/robots.txt"))
       // cast, not decode(…, 'UTF-8'): under ANSI mode (Spark 4 default)
       // decode THROWS on malformed byte sequences, so one binary blob
@@ -152,24 +150,26 @@ object Crawler {
       .filter(length(col("prefix")) > 0)
       .groupBy("host").agg(collect_list("prefix").as("prefixes"))
 
+  /** phase-1 salt buckets per host of the budgeted selection */
+  private val SaltBuckets = 16
+
   /** One-pass candidate selection: TAGS every frontier row instead of
     * filtering, so the deferred remainder (frontier ∖ selected) falls out
     * of the same pass as the selection, with no anti-join of the frontier
-    * against the selection. The windows order by (eligible DESC, depth,
-    * url): eligible rows rank 1..E ahead of every ineligible row, so
-    * `eligible && rn <= B` is exactly the per-host top-B-of-eligible and
-    * everything else is the deferred remainder — two filters over ONE
-    * materialized tagged plan.
+    * against the selection. The phase-1 window orders by (eligible DESC,
+    * depth, url): eligible rows rank 1..E ahead of every ineligible row,
+    * so `eligible && rn1 <= B` keeps each bucket's top-B-of-eligible and
+    * everything else is deferred — filters over the materialized tagged
+    * plans.
     *
     * Selection semantics (EngineOracleSpec pins per-round selected counts,
     * the seen set, and frontier contents+depths vs the reference oracle):
     *   - budget = ∞: eligibility alone decides; no window at all;
-    *   - salts > 1: phase 1 caps each (host, salt) bucket at B without a
+    *   - budget B: phase 1 caps each (host, salt) bucket at B without a
     *     hot-host single-task partition (a row in the global per-host
     *     top-B is in its bucket's top-B a fortiori); phase 2 ranks the
-    *     ≤ B·S survivors per host — survivors are all eligible, so phase
-    *     2 orders by (depth, url) alone;
-    *   - salts = 1: one window over the host.
+    *     ≤ B·[[SaltBuckets]] survivors per host — survivors are all
+    *     eligible, so phase 2 orders by (depth, url) alone.
     *
     * Returns (selected, deferred, |selected|): selected ⊎ deferred ≡
     * frontier, both as filters over the eagerly checkpointed tagged plan —
@@ -177,8 +177,7 @@ object Crawler {
     * the next round's checkpoint truncates it, so no extra lifecycle
     * bookkeeping is needed. The count is observed in the result stage of
     * the checkpoint that materializes the selection. */
-  private def tagAndSplit(frontier: DataFrame, eligible: Column,
-                          budget: Int, salts: Int)
+  private def tagAndSplit(frontier: DataFrame, eligible: Column, budget: Int)
       : (DataFrame, DataFrame, Long) = {
     val outCols = Seq(col("url"), col("host"), col("depth"))
     val base = frontier.select(outCols :+ eligible.as("__elig"): _*)
@@ -192,8 +191,8 @@ object Crawler {
       val ann = materialize(base, col("__elig"))
       (ann.filter(col("__elig")).select(outCols: _*),
        ann.filter(!col("__elig")).select(outCols: _*), selCount)
-    } else if (salts > 1) {
-      val w1 = Window.partitionBy(col("host"), pmod(xxhash64(col("url")), lit(salts)))
+    } else {
+      val w1 = Window.partitionBy(col("host"), pmod(xxhash64(col("url")), lit(SaltBuckets)))
         .orderBy(col("__elig").desc, col("depth").asc, col("url").asc)
       val ann1 = base.withColumn("__rn1", row_number().over(w1)).localCheckpoint(true)
       val sel1 = col("__elig") && col("__rn1") <= budget
@@ -205,13 +204,6 @@ object Crawler {
       val deferred = ann1.filter(!sel1).select(outCols: _*)
         .unionByName(ann2.filter(col("__rn") > budget).select(outCols: _*))
       (selected, deferred, selCount)
-    } else {
-      val w = Window.partitionBy(col("host"))
-        .orderBy(col("__elig").desc, col("depth").asc, col("url").asc)
-      val sel = col("__elig") && col("__rn") <= budget
-      val ann = materialize(base.withColumn("__rn", row_number().over(w)), sel)
-      (ann.filter(sel).select(outCols: _*),
-       ann.filter(!sel).select(outCols: _*), selCount)
     }
   }
 
@@ -220,12 +212,15 @@ object Crawler {
   private def metric(obs: Observation, name: String): Long =
     obs.get.getOrElse(name, 0L).asInstanceOf[Long]
 
+  /** the bloom pre-filter's target false-positive rate */
+  private val BloomFpp = 0.03
+
   private def runInternal(spark: SparkSession, pages: DataFrame,
                           cfg: CrawlConfig, resume: Boolean): CrawlResult = {
     import spark.implicits._
     val store = SeenStore(spark, cfg, resume)
     val resumed = store.resumed
-    val bloomShape = Bloom.shapeFor(cfg.bloomExpectedItems, cfg.bloomFpp)
+    val bloomShape = Bloom.shapeFor(cfg.bloomExpectedItems, BloomFpp)
     def bloomAgg: Column = Bridge.column(
       BloomAggExpr(Bridge.expression(col("url_hash")),
         bloomShape._1, bloomShape._2).toAggregateExpression())
@@ -279,7 +274,7 @@ object Crawler {
       // --- candidate selection: depth cap, robots, politeness -------------
       val (selected, deferred, selCount) =
         if (noFilters) (frontier, frontier.limit(0), lastFrontierCount)
-        else tagAndSplit(frontier, depthOk && robotsOk, cfg.hostBudget, cfg.saltBuckets)
+        else tagAndSplit(frontier, depthOk && robotsOk, cfg.hostBudget)
 
       if (selCount == 0) {
         stop = true

@@ -448,15 +448,11 @@ object TrainingOps {
     out
   }
 
-  /** SimHash near-dup fingerprints. `portable=true` (default) hashes tokens
-    * with md5-lower-64 so the DuckDB oracle recomputes the fingerprint
-    * bit-exactly; `portable=false` uses the faster xxhash64 kernel
-    * (production default at scale — same plan shape, fixture-tested). */
-  def simhashes(docs: DataFrame, portable: Boolean = true): DataFrame = {
-    val fp = if (portable) gfn.simhash_md5(wsTokens(col("text")))
-             else gfn.simhash(wsTokens(col("text")))
-    spread(docs).select(col("doc_id"), fp.as("simhash")).orderBy("doc_id")
-  }
+  /** SimHash near-dup fingerprints. Tokens hash with md5-lower-64 so the
+    * DuckDB oracle recomputes the fingerprint bit-exactly. */
+  def simhashes(docs: DataFrame): DataFrame =
+    spread(docs).select(col("doc_id"),
+      gfn.simhash_md5(wsTokens(col("text"))).as("simhash")).orderBy("doc_id")
 
   /** SimHash near-dup pairs within Hamming distance `maxHamming` over the
     * md5-token fingerprints (the ones the DuckDB oracle recomputes

@@ -23,16 +23,7 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // streaming checkpoints default to the FileContext-based manager,
-      // whose every file op resolves symlinks by FORKING a `readlink`
-      // shell (hadoop RawLocalFs) — on this sandbox VM the process-spawn
-      // path intermittently wedges (observed: a StreamingSpec micro-batch
-      // stuck >15 min inside Shell.runCommand). The FileSystem-based
-      // manager does plain java.io status calls — no forks, no wedge.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      // …and the FileSystem path itself must not fork `chmod` per created
-      // file — see BareLocalFileSystem's scaladoc
+      // no `chmod` fork per created file — see BareLocalFileSystem's scaladoc
       .config("spark.hadoop.fs.file.impl", classOf[BareLocalFileSystem].getName)
       .config("spark.hadoop.fs.file.impl.disable.cache", "false")
       .getOrCreate()
@@ -98,24 +89,23 @@ class EngineOracleSpec extends AnyFunSuite {
     assert(ef == o.frontier)
   }
 
-  test("politeness tag-and-split: salts=1 ≡ salts=16 (single-window ≡ " +
-       "two-phase), and the arithmetic frontierNext metric ≡ a real count") {
+  test("politeness tag-and-split ≡ oracle (budget 2, robots); " +
+       "arithmetic frontierNext ≡ a real count") {
     // robots ON so the terminal frontier is NONEMPTY (blocked residents) —
     // otherwise the final frontierNext pin below is a trivial 0 == 0
-    val base = CrawlConfig(seeds, filter, hostBudget = 2, respectRobots = true)
-    val a = Crawler.run(spark, pagesDf, base.copy(saltBuckets = 1))
-    val b = Crawler.run(spark, pagesDf, base.copy(saltBuckets = 16))
-    assert(a.seen.select("url").as[String].collect().toSet ==
-           b.seen.select("url").as[String].collect().toSet)
-    assert(a.rounds.map(r => (r.selected, r.newSeen, r.frontierNext)) ==
-           b.rounds.map(r => (r.selected, r.newSeen, r.frontierNext)))
-    assert(a.frontier.select("url", "depth").as[(String, Int)].collect().toMap ==
-           b.frontier.select("url", "depth").as[(String, Int)].collect().toMap)
+    val o = ReferenceOracle.crawl(corpus,
+      CrawlParams(seeds, filter, hostBudget = 2, respectRobots = true))
+    val e = Crawler.run(spark, pagesDf,
+      CrawlConfig(seeds, filter, hostBudget = 2, respectRobots = true))
+    assert(e.seen.select("url").as[String].collect().toSet == o.seen)
+    assert(e.rounds.map(r => (r.selected, r.newSeen)) ==
+           o.rounds.map(r => (r.selected, r.newSeen)))
+    val ef = e.frontier.select("url", "depth").as[(String, Int)].collect().toMap
+    assert(ef.nonEmpty && ef == o.frontier)
     // the per-round frontierNext metric is ARITHMETIC (old frontier −
     // selected + newly-seen non-seeds, no count job); pin the final one
     // against a real count of the returned frontier
-    assert(a.rounds.last.frontierNext == a.frontier.count())
-    assert(b.rounds.last.frontierNext == b.frontier.count())
+    assert(e.rounds.last.frontierNext == e.frontier.count())
   }
 
   test("RANDOMIZED equivalence sweep: engine ≡ oracle across corpus " +
@@ -133,10 +123,10 @@ class EngineOracleSpec extends AnyFunSuite {
       (TestCorpus.Spec(hosts = 3, basePagesPerHost = 10, seed = 23L),
         CrawlConfig(seeds, filter, hostBudget = 2, maxDepth = 2,
           respectRobots = true)),
-      // robots-free corpus, 16 salt buckets
+      // robots-free corpus
       (TestCorpus.Spec(hosts = 6, basePagesPerHost = 8, seed = 31L,
         robots = false),
-        CrawlConfig(seeds, filter, hostBudget = 2, saltBuckets = 16)),
+        CrawlConfig(seeds, filter, hostBudget = 2)),
       // depth cap alone (no politeness window at all)
       (TestCorpus.Spec(hosts = 4, basePagesPerHost = 12, seed = 43L),
         CrawlConfig(seeds, filter, maxDepth = 1, respectRobots = true)))
@@ -148,7 +138,7 @@ class EngineOracleSpec extends AnyFunSuite {
         respectRobots = cfg.respectRobots))
       val e = Crawler.run(spark, df, cfg)
       val clue = s"spec=$spec budget=${cfg.hostBudget} depth=${cfg.maxDepth} " +
-        s"robots=${cfg.respectRobots} salts=${cfg.saltBuckets}: "
+        s"robots=${cfg.respectRobots}: "
       assert(e.seen.select("url").as[String].collect().toSet == o.seen, clue)
       assert(e.rounds.map(_.selected) == o.rounds.map(_.selected), clue)
       assert(e.rounds.map(_.newSeen) == o.rounds.map(_.newSeen), clue)

@@ -54,11 +54,16 @@ class OpsSpec extends AnyFunSuite {
       (0L, "the quick brown fox jumps over the lazy dog"),
       (1L, "the quick brown fox jumps over the lazy cat"), // near dup
       (2L, "completely different content about spark engines")).toDF("doc_id", "text")
-    for (portable <- Seq(true, false)) {
-      val got = T.simhashes(docs, portable).as[(Long, Long)].collect().toMap
+    // md5 through the op; the xxhash64 kernel through gfn.simhash directly
+    val variants = Seq(
+      true -> T.simhashes(docs),
+      false -> docs.select(col("doc_id"),
+        gfn.simhash(T.wsTokens(col("text"))).as("simhash")))
+    for ((md5, fps) <- variants) {
+      val got = fps.as[(Long, Long)].collect().toMap
       docs.collect().foreach { r =>
         val toks = r.getString(1).split(" ").filter(_.nonEmpty)
-        assert(got(r.getLong(0)) == naiveSimhash(toks.toSeq, md5 = portable))
+        assert(got(r.getLong(0)) == naiveSimhash(toks.toSeq, md5))
       }
       def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
       assert(hamming(got(0L), got(1L)) < hamming(got(0L), got(2L)))

@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's DuckDB oracle compare (round-7
-optimization aid): reads the graft.Verify dump (spark parquet per query +
-oracle_sql.json), loads the sf tables into DuckDB, runs each oracle SQL,
-and compares row counts, column names, and values (floats at 1e-9 rel/abs
-tolerance, everything else exact).
+"""DuckDB oracle compare for the gated queries: reads the graft.Verify dump
+(spark parquet per query + oracle_sql.json), loads the sf tables into
+DuckDB, runs each oracle SQL, and compares row counts, column names, and
+values (floats at 1e-9 rel/abs tolerance, everything else exact).
+
+Rows compare positionally. A positional mismatch still passes when it is
+a sort-key tie reordered: see compare_rows.
 
 Usage: oracle_compare.py <sf_dir> <verify_out_dir> [query ...]
 """
@@ -11,8 +13,6 @@ import json
 import math
 import os
 import sys
-
-import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -36,7 +36,49 @@ def val_eq(a, b):
     return a == b
 
 
+def first_diff(srows, orows):
+    """(row, col index, spark value, oracle value) of the first positional
+    difference, or None."""
+    for i, (sr, orow) in enumerate(zip(srows, orows)):
+        for j, (a, b) in enumerate(zip(sr, orow)):
+            if not val_eq(a, b):
+                return (i, j, a, b)
+    return None
+
+
+def compare_rows(srows, orows):
+    """Compare two equally long row lists. Returns (ok, first positional
+    difference or None).
+
+    A positional difference passes only as a sort-key tie reorder (Spark
+    and DuckDB may order rows with equal sort keys differently). The key
+    columns are the columns whose values agree positionally on every row;
+    the set must be non-empty, and within each maximal run of consecutive
+    rows sharing those key values the two sides must hold the same rows
+    as a multiset."""
+    bad = first_diff(srows, orows)
+    if bad is None:
+        return True, None
+    keys = [j for j in range(len(srows[0]))
+            if all(val_eq(sr[j], orow[j]) for sr, orow in zip(srows, orows))]
+    if not keys:
+        return False, bad
+    order = lambda r: tuple((v is None, str(v)) for v in r)
+    start = 0
+    for end in range(1, len(srows) + 1):
+        if end < len(srows) and all(
+                val_eq(srows[end][j], srows[start][j]) for j in keys):
+            continue
+        if first_diff(sorted(srows[start:end], key=order),
+                      sorted(orows[start:end], key=order)) is not None:
+            return False, bad
+        start = end
+    return True, bad
+
+
 def main():
+    import duckdb
+
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:]) or None
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
@@ -82,27 +124,14 @@ def main():
             print(f"{name}: ROWS mismatch spark={len(srows)} oracle={len(orows)}")
             fails += 1
             continue
-        def first_diff(sr_list, or_list):
-            for i, (sr, orow) in enumerate(zip(sr_list, or_list)):
-                for j, (a, b) in enumerate(zip(sr, orow)):
-                    if not val_eq(a, b):
-                        return (i, scols[j], a, b)
-            return None
-
-        bad = first_diff(srows, orows)
-        if bad:
-            # positional mismatch can be a SORT-TIE reorder (duplicate sort
-            # keys ordered differently by Spark vs DuckDB) — the driver's
-            # comparator tolerates those (r6 passed 42/42 at sf0.1 with a
-            # q_scan_filter tie); retry with both sides fully sorted
-            key = lambda r: tuple((v is None, str(v)) for v in r)
-            if first_diff(sorted(srows, key=key), sorted(orows, key=key)) is None:
-                print(f"{name}: OK ({len(srows)} rows; tie-order differs at "
-                      f"row={bad[0]} col={bad[1]})")
-            else:
-                print(f"{name}: VALUE mismatch row={bad[0]} col={bad[1]} "
-                      f"spark={bad[2]!r} oracle={bad[3]!r}")
-                fails += 1
+        ok, bad = compare_rows(srows, orows)
+        if not ok:
+            print(f"{name}: VALUE mismatch row={bad[0]} col={scols[bad[1]]} "
+                  f"spark={bad[2]!r} oracle={bad[3]!r}")
+            fails += 1
+        elif bad:
+            print(f"{name}: OK ({len(srows)} rows; tie-order differs at "
+                  f"row={bad[0]} col={scols[bad[1]]})")
         else:
             print(f"{name}: OK ({len(srows)} rows)")
     print(f"== {checked} checked, {fails} failed ==")
