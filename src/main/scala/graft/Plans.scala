@@ -16,7 +16,7 @@ import graft.rank.{PageRankSpark, Searcher}
 /** Untimed physical-plan audit, `sbt "runMain graft.Plans"`: prints
   * `.explain(formatted)` for the load-bearing lazy operators, and the
   * executed plans of one governed crawl round, of the eager dedup ops and
-  * of one serve, so plan quality
+  * of one serve bound into a cached query shape, so plan quality
   * (pushdown, pruning, broadcast, DPP, codegen spans) is inspectable — see
   * PLANS.md for the curated findings. Timing belongs to perfbench. */
 object Plans {
@@ -129,9 +129,15 @@ object Plans {
       executed(spark, s"$q (eager)")(SparkEntry.queries(q)(spark, sf))
     val prepared = Searcher.prepare(idx,
       PageRankSpark.run(idx.links, idx.urlDict.select("url_id"), 5))
-    // the serve runs on the prepared state's own session
-    try executed(prepared.serve, "serve: one scoring job over the prepared leaves") {
-      Searcher.search(spark, prepared, "\"hong kong\" research")
+    // the serve runs on the prepared state's own session; the audited query
+    // is bound into the plan its shape cached at the first query, so its
+    // ids, stems and length show as parameters, never as literals
+    try {
+      Searcher.search(spark, prepared, "\"hong kong\" networks")
+      executed(prepared.serve, "serve: one scoring job over the prepared leaves, " +
+          "a query bound into its shape's cached plan") {
+        Searcher.search(spark, prepared, "\"hong kong\" research")
+      }
     } finally prepared.close()
 
     // PageRank §8: the weighted edge table is repartition(src)+persisted —

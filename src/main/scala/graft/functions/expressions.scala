@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -368,4 +368,23 @@ case class CountPhraseExpr(left: Expression, right: Expression) extends BinaryEx
     defineCodeGen(ctx, ev, (w, p) => s"graft.functions.ExprImpl.countPhrase($w, $p)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** A per-query value bound into a cached plan. Its generated code reads
+  * the value from the generated class's `references` array, never as a
+  * source literal, so every binding of one plan compiles to the same Java
+  * and hits Janino's cache. It is not foldable, so the optimizer keeps it
+  * a leaf of whatever plan it was bound into. */
+case class QueryParam(slot: Int, dataType: DataType, value: Any) extends LeafExpression {
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = s"param$slot"
+  override def sql: String = toString
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj(toString, value, CodeGenerator.boxedType(dataType))
+    val v = if (CodeGenerator.isPrimitiveType(dataType))
+      s"$ref.${CodeGenerator.javaType(dataType)}Value()" else ref
+    ExprCode.forNonNullValue(JavaCode.expression(v, dataType))
+  }
 }

@@ -1,11 +1,18 @@
 package graft.rank
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.QueryParam
 import graft.gfn
 import graft.index.IndexTables
 import graft.text.TextPipeline
@@ -24,7 +31,14 @@ import graft.text.TextPipeline
   *  - `statics` and postings⋈tfidf are materialized leaves, hash-partitioned
   *    on url_id to the serve session's shuffle partitions, so the scoring
   *    aggregate and the statics join need no exchange of a prepared table;
-  *  - no per-query cache: a query leaves nothing persisted behind.
+  *  - no per-query cache: a query leaves nothing persisted behind;
+  *  - one plan per query shape ([[Shape]]): it is analyzed, optimized and
+  *    compiled at the shape's first query, and kept on the Prepared;
+  *  - values bound per query: word ids, multiplicities, phrases, stems and
+  *    the query length are [[QueryParam]]s, never source literals, so a
+  *    new query of a known shape compiles no class;
+  *  - a fresh physical plan per query, planned from the bound optimized
+  *    plan: an executed plan's shuffle output is never served again.
   *
   * Exactness notes:
   *  - single-word score = mult · tf · tfidf_r6 (the reference scatter-adds
@@ -39,6 +53,8 @@ import graft.text.TextPipeline
   *  - title match uses ALL query stems (pre-resolution,
   *    WebController.kt:69), testing tokenized-title membership OR raw
   *    case-insensitive substring;
+  *  - a matched zero-length document scores NaN (0/0), as in the
+  *    reference; NaN totals sort after every finite total;
   *  - canonical tie-break: url_id ascending (the reference's tie order is
   *    racy map iteration — SURVEY.md §2.5 T3).
   */
@@ -48,11 +64,17 @@ object Searcher {
                             statics: DataFrame, postingsTfidf: DataFrame,
                             serve: SparkSession, viewNames: Seq[String],
                             wordIdLocal: Option[Map[String, Long]] = None) {
+    /** The optimized scoring plan of each query [[Shape]] served so far,
+      * built at that shape's first query. */
+    private[rank] val plans = new ConcurrentHashMap[Shape, LogicalPlan]()
+
     /** Release everything [[prepare]] materialized — the rank cache, the
-      * checkpointed statics and postings⋈tfidf blocks — and the global temp
-      * views backing the serve session. A long-lived serving session should
-      * close() retired Prepared instances. */
+      * checkpointed statics and postings⋈tfidf blocks, the cached shape
+      * plans — and the global temp views backing the serve session. A
+      * long-lived serving session should close() retired Prepared
+      * instances. */
     def close(): Unit = {
+      plans.clear()
       ranks.unpersist()
       Seq(statics, postingsTfidf).foreach(release)
       viewNames.foreach(serve.catalog.dropGlobalTempView)
@@ -217,24 +239,41 @@ object Searcher {
       case Some(top) => collectSerp(p.serve, top)
     }
 
-  /** Query word ids → `postingsTfidf` rows, each with the id's multiplicity
-    * in `ids` as the int column `mult`. The ids enter the plan as a filter
-    * and a CASE expression rather than a joined relation, so the plan has
-    * no query-term leaf to broadcast. */
-  private def termRows(p: Prepared, ids: Seq[Long]): DataFrame = {
-    val mults = ids.groupBy(identity).map { case (w, occ) => (w, occ.size) }.toSeq.sortBy(_._1)
-    val wordId = col("word_id")
-    val mult = mults.tail.foldLeft(when(wordId === mults.head._1, mults.head._2)) {
-      case (m, (w, k)) => m.when(wordId === w, k)
-    }
-    p.postingsTfidf.filter(wordId.isin(mults.map(_._1): _*)).withColumn("mult", mult)
-  }
+  /** What a query's scoring plan is built from besides its values: whether
+    * single terms are present, the number of phrases and the SERP size.
+    * Every shape has at least one term group, so no plan has an empty
+    * branch. */
+  private[rank] final case class Shape(singles: Boolean, phrases: Int, topK: Int)
+
+  /** A resolved query: its shape and the value of each [[QueryParam]] slot
+    * — the query length, the stems, then three slots per term group (the
+    * single terms first, then each phrase): its distinct word ids, their
+    * multiplicities and its ids in query order (read by phrases only). */
+  private final case class Bound(shape: Shape, values: IndexedSeq[Any])
+
+  private val LengthSlot = 0
+  private val StemsSlot = 1
+  private def groupSlot(g: Int) = 2 + 3 * g
 
   /** The scoring plan of `query` on the serve session: the top-K rows
     * (url_id, url, total, cos, pr, title_score, title) ordered by
-    * (total desc, url_id asc), or None when no query term resolves. */
-  private[graft] def scoringPlan(p: Prepared, query: String, topK: Int): Option[DataFrame] = {
-    // -- driver-side query analysis (queries are tiny) ----------------------
+    * (NaN total last, total desc, url_id asc), or None when no query term
+    * resolves. The query's values are bound into its shape's cached
+    * optimized plan, and each call plans a fresh physical plan from it: an
+    * executed plan keeps its shuffle output, so one is never re-run with
+    * new values. */
+  private[graft] def scoringPlan(p: Prepared, query: String, topK: Int): Option[DataFrame] =
+    resolve(p, query, topK).map { q =>
+      val plan = p.plans.computeIfAbsent(q.shape,
+        _ => shapePlan(p, q).queryExecution.optimizedPlan)
+      Bridge.ofRows(p.serve, plan.transformAllExpressions {
+        case QueryParam(slot, dt, _) => QueryParam(slot, dt, q.values(slot))
+      })
+    }
+
+  /** Driver-side query analysis (queries are tiny): stems → word ids with
+    * the phrase-kill rule (Ranker.kt:100-119), and the parameter values. */
+  private def resolve(p: Prepared, query: String, topK: Int): Option[Bound] = {
     val groups = TextPipeline.tokenizeQuery(query)
     if (groups.isEmpty) return None
     val allStems = groups.flatten
@@ -244,8 +283,6 @@ object Searcher {
         .filter(col("word").isInCollection(allStems.distinct))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
-
-    // findWordId with the phrase-kill rule (Ranker.kt:100-119)
     val idGroups: List[Vector[Long]] = groups.flatMap { g =>
       val isPhrase = g.size > 1
       val resolved = g.flatMap(wordIdMap.get)
@@ -255,21 +292,54 @@ object Searcher {
     }
     if (idGroups.isEmpty) return None
 
-    val queryLength = math.sqrt(idGroups.map(_.size).sum.toDouble)
+    val (singles, phrases) = idGroups.partition(_.size == 1)
+    val termGroups = (if (singles.isEmpty) Nil else List(singles.flatten)) ++ phrases
+    val values = Vector[Any](
+      math.sqrt(idGroups.map(_.size).sum.toDouble),
+      new GenericArrayData(allStems.map(s => UTF8String.fromString(s): Any).toArray)) ++
+      termGroups.flatMap { ids =>
+        val mults = ids.groupBy(identity).map { case (w, occ) => (w, occ.size) }.toSeq.sortBy(_._1)
+        Seq(ArrayData.toArrayData(mults.map(_._1).toArray),
+          ArrayData.toArrayData(mults.map(_._2).toArray), ArrayData.toArrayData(ids.toArray))
+      }
+    Some(Bound(Shape(singles.nonEmpty, phrases.size, topK), values))
+  }
+
+  /** `postingsTfidf` rows of the word ids in `ids`, each with its
+    * multiplicity from the aligned `mults` as the int column `mult`. The
+    * ids enter the plan as parameters rather than a joined relation, so
+    * the plan has no query-term leaf to broadcast. */
+  private def termRows(p: Prepared, ids: Column, mults: Column): DataFrame = {
+    val wordId = col("word_id")
+    p.postingsTfidf.filter(array_contains(ids, wordId))
+      .withColumn("mult", element_at(mults, array_position(ids, wordId).cast("int")))
+  }
+
+  /** The scoring plan of `q`'s shape, with `q`'s values in its parameters. */
+  private def shapePlan(p: Prepared, q: Bound): DataFrame = {
+    def param(slot: Int, dt: DataType): Column = Bridge.column(QueryParam(slot, dt, q.values(slot)))
+    val idsType = ArrayType(LongType, containsNull = false)
+    def group(g: Int) = (param(groupSlot(g), idsType),
+      param(groupSlot(g) + 1, ArrayType(IntegerType, containsNull = false)),
+      param(groupSlot(g) + 2, idsType))
 
     // -- single-word contributions over the prepared postings⋈tfidf leaf ----
-    val singles = idGroups.filter(_.size == 1).map(_.head)
     val singleScores =
-      if (singles.isEmpty) None
-      else Some(termRows(p, singles)
-        .select(col("url_id"), (col("mult") * col("tf") * col("tfidf_r6")).as("contrib")))
+      if (!q.shape.singles) None
+      else {
+        val (ids, mults, _) = group(0)
+        Some(termRows(p, ids, mults)
+          .select(col("url_id"), (col("mult") * col("tf") * col("tfidf_r6")).as("contrib")))
+      }
 
     // -- phrase contributions: forward-index scan per phrase ----------------
-    val phraseScores = idGroups.filter(_.size > 1).map { ph =>
+    val firstPhrase = if (q.shape.singles) 1 else 0
+    val phraseScores = (firstPhrase until firstPhrase + q.shape.phrases).map { g =>
+      val (ids, mults, phrase) = group(g)
       val matches = p.index.docWords
-        .select(col("url_id"), gfn.count_phrase(col("words"), typedlit(ph)).as("c"))
+        .select(col("url_id"), gfn.count_phrase(col("words"), phrase).as("c"))
         .filter(col("c") > 0)
-      val termSum = termRows(p, ph)
+      val termSum = termRows(p, ids, mults)
         .groupBy("url_id")
         .agg(sum(col("mult") * col("tfidf_r6")).as("term_sum"))
       matches.join(termSum.hint("shuffle_hash"), Seq("url_id"))
@@ -282,9 +352,13 @@ object Searcher {
       .agg(sum("contrib").as("raw"))
 
     // -- normalization (Ranker.kt:92-95): one url_id join against statics,
-    // which carries the doc length; both sides are url_id-partitioned ------
+    // which carries the doc length; both sides are url_id-partitioned. A
+    // zero-length document gets the IEEE quotient (NaN for 0/0), as in the
+    // reference, instead of ANSI's DIVIDE_BY_ZERO ----------------------------
+    val norm = col("len") * param(LengthSlot, DoubleType)
     val joined = rawScores.hint("shuffle_hash").join(p.statics, Seq("url_id"))
-      .withColumn("score", col("raw") / (col("len") * lit(queryLength)))
+      .withColumn("score", when(norm === 0.0, signum(col("raw")) * Double.PositiveInfinity)
+        .otherwise(col("raw") / norm))
 
     // meanScore (Σ score / 3n — the reference's driver-side mean) is a
     // 1-row aggregate replicated to every scoring partition by a cartesian
@@ -293,25 +367,28 @@ object Searcher {
     val stats = joined.agg(
       (sum("score") / (count(lit(1)) * 3)).as("mean_score"))
 
-    // -- final scoring (WebController.kt:60-83) ------------------------------
-    val stemsLit = typedlit(allStems)
+    // -- final scoring (WebController.kt:60-83): the title score adds the
+    // mean once per matching stem, so no match scores 0.0 even when the
+    // mean is NaN ------------------------------------------------------------
     val scored = joined.hint("shuffle_replicate_nl")
       .crossJoin(stats)
       .withColumn("cos", col("score") / col("max_tf"))
       .withColumn("pr", col("rank") / lit(p.maxPR * 3))
-      .withColumn("title_score",
-        size(filter(stemsLit, t =>
+      .withColumn("title_hits",
+        size(filter(param(StemsSlot, ArrayType(StringType, containsNull = false)), t =>
           array_contains(col("title_toks"), t) ||
-            contains(col("title_lc"), t))) * col("mean_score"))
+            contains(col("title_lc"), t))))
+      .withColumn("title_score", when(col("title_hits") === 0, lit(0.0))
+        .otherwise(col("title_hits") * col("mean_score")))
       .withColumn("total", col("cos") + col("pr") + col("title_score"))
 
     // global top-K as a TakeOrderedAndProject (no single-partition sort
     // exchange); the rank column is assigned driver-side over the ≤ topK
     // collected rows
-    Some(scored
+    scored
       .select("url_id", "url", "total", "cos", "pr", "title_score", "title")
-      .orderBy(desc("total"), asc("url_id"))
-      .limit(topK))
+      .orderBy(isnan(col("total")), desc("total"), asc("url_id"))
+      .limit(q.shape.topK)
   }
 
   /** Runs the scoring plan as one job and returns the SERP as a
@@ -322,7 +399,7 @@ object Searcher {
     if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
     // re-assert the order driver-side (TakeOrderedAndProject returns rows
     // already ordered; this is a ≤ topK-element no-op guard, not a sort job)
-    val ordered = collected.sortBy(r => (-r.getDouble(2), r.getLong(0)))
+    val ordered = collected.sortBy(r => (r.getDouble(2).isNaN, -r.getDouble(2), r.getLong(0)))
     val rows: Seq[org.apache.spark.sql.Row] = ordered.zipWithIndex.map {
       case (r, i) => org.apache.spark.sql.Row.fromSeq((i + 1) +: r.toSeq)
     }.toSeq

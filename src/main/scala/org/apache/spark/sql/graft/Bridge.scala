@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -14,6 +14,11 @@ import org.apache.spark.sql.execution.LogicalRDD
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over `plan` on `session`: a fresh QueryExecution, so a
+    * fresh physical plan, for a logical plan built elsewhere. */
+  def ofRows(session: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(session.asInstanceOf[SparkSession], plan)
 
   /** An eager local checkpoint of `df` whose logical statistics are the
     * size of its stored blocks. `Dataset.localCheckpoint` keeps the source

@@ -289,20 +289,82 @@ class EngineOracleSpec extends AnyFunSuite {
       "networks \"hong kong\" networks", "\"systems systems\"")
     multiplicities.foreach(q =>
       assert(ReferenceOracle.search(q, oracleIndex, oracleRanks).nonEmpty, q))
-    (queries ++ multiplicities).foreach { q =>
-      val engine = Searcher.search(spark, prepared, q)
-        .select("rank", "url_id", "total", "cos", "pr", "title_score")
-        .as[(Int, Long, Double, Double, Double, Double)].collect().toVector
-      val oracle = ReferenceOracle.search(q, oracleIndex, oracleRanks)
-      assert(engine.size == oracle.size, s"result count for '$q'")
-      engine.zip(oracle).foreach { case ((rk, id, tot, cos, pr, ts), (ork, o)) =>
-        assert(rk == ork && id == o.urlId, s"ordering mismatch for '$q' at rank $rk: $id vs ${o.urlId}")
-        assert(math.abs(tot - o.total) <= 1e-9, s"total for '$q' #$rk")
-        assert(math.abs(cos - o.cos) <= 1e-9, s"cos for '$q' #$rk")
-        assert(math.abs(pr - o.pr) <= 1e-9, s"pr for '$q' #$rk")
-        assert(math.abs(ts - o.title) <= 1e-9, s"title for '$q' #$rk")
-      }
+    (queries ++ multiplicities).foreach(assertSerp(prepared, oracleIndex, oracleRanks, _))
+  }
+
+  /** The engine's SERP for `q` equals the oracle's: ranks and url ids
+    * exactly, every score to 1e-9, a NaN score only where the oracle's is
+    * NaN. */
+  private def assertSerp(prepared: Searcher.Prepared, oIdx: ReferenceOracle.Index,
+                         oRanks: Array[Double], q: String, topK: Int = 50): Unit = {
+    val engine = Searcher.search(spark, prepared, q, topK)
+      .select("rank", "url_id", "total", "cos", "pr", "title_score")
+      .as[(Int, Long, Double, Double, Double, Double)].collect().toVector
+    val oracle = ReferenceOracle.search(q, oIdx, oRanks, topK)
+    assert(engine.size == oracle.size, s"result count for '$q'")
+    def same(a: Double, b: Double) = if (b.isNaN) a.isNaN else math.abs(a - b) <= 1e-9
+    engine.zip(oracle).foreach { case ((rk, id, tot, cos, pr, ts), (ork, o)) =>
+      assert(rk == ork && id == o.urlId, s"ordering mismatch for '$q' at rank $rk: $id vs ${o.urlId}")
+      assert(same(tot, o.total), s"total for '$q' #$rk: $tot vs ${o.total}")
+      assert(same(cos, o.cos), s"cos for '$q' #$rk")
+      assert(same(pr, o.pr), s"pr for '$q' #$rk")
+      assert(same(ts, o.title), s"title for '$q' #$rk")
     }
+  }
+
+  test("search: distinct phrase queries back to back on one prepared state " +
+       "each match the oracle (no stale shuffle output)") {
+    val prepared = Searcher.prepare(engineIndex,
+      PageRankSpark.run(engineIndex.links, engineIndex.urlDict.select("url_id"), 40))
+    val oracleRanks = ReferenceOracle.pageRank(oracleIndex, 40)
+    try {
+      val phrases = Seq("\"hong kong\"", "\"crawler indexing\"", "\"databases research\"",
+        "\"hong kong\"")
+      phrases.foreach(q => assert(ReferenceOracle.search(q, oracleIndex, oracleRanks).nonEmpty, q))
+      phrases.foreach(assertSerp(prepared, oracleIndex, oracleRanks, _))
+    } finally prepared.close()
+  }
+
+  test("search: a matched zero-length document scores NaN as in the oracle, " +
+       "NaN totals ranked after every finite total") {
+    // "alpha" is on every page, so its idf is 0; p1 and p4 hold only
+    // "alpha", so their tf-idf length is 0 and the normalization is 0/0
+    val site = "https://zero.test/"
+    def page(path: String, title: Option[String], body: String, links: Seq[String]) = {
+      val html = "<html><head>" + title.fold("")(t => s"<title>$t</title>") +
+        s"</head><body><p>$body</p>" +
+        links.map(l => s"""<a href="$site$l">go</a>""").mkString(" ") + "</body></html>"
+      val bytes = html.getBytes("UTF-8")
+      PageRow(site + path, new java.sql.Timestamp(0L), bytes,
+        graft.html.Html.parseBytes(bytes).text, "en")
+    }
+    val zPages = Vector(
+      page("", Some("home"), "alpha beta gamma", Seq("p1.html", "p2.html", "p3.html", "p4.html")),
+      page("p1.html", None, "alpha alpha", Seq("p2.html")),
+      page("p2.html", Some("alpha page"), "alpha beta", Seq("")),
+      page("p3.html", Some("delta page"), "alpha delta", Seq("p1.html")),
+      page("p4.html", None, "alpha", Seq("")))
+    val zFilter = ".test/"
+    val oCrawl = ReferenceOracle.crawl(zPages, CrawlParams(Seq(site), zFilter))
+    val oIdx = ReferenceOracle.buildIndex(zPages, oCrawl.seen, zFilter)
+    val oRanks = ReferenceOracle.pageRank(oIdx, 40)
+    assert(oIdx.docLen.values.count(_ == 0.0) == 2, "the fixture needs two zero-length documents")
+
+    val zDf = spark.createDataset(zPages).toDF()
+    val zIdx = Indexer.build(spark, zDf,
+      Crawler.run(spark, zDf, CrawlConfig(Seq(site), zFilter)).seen, zFilter, partitions = 4)
+    val prepared = Searcher.prepare(zIdx,
+      PageRankSpark.run(zIdx.links, zIdx.urlDict.select("url_id"), 40))
+    try {
+      val alpha = ReferenceOracle.search("alpha", oIdx, oRanks).map(_._2.total)
+      assert(alpha.exists(_.isNaN) && alpha.exists(t => !t.isNaN),
+        s"'alpha' must rank NaN and finite totals: $alpha")
+      assert(alpha.dropWhile(t => !t.isNaN).forall(_.isNaN), s"NaN totals last: $alpha")
+      Seq("alpha", "alpha beta", "beta", "\"alpha beta\" delta")
+        .foreach(assertSerp(prepared, oIdx, oRanks, _))
+      // a top-K cut above the NaN rows keeps only finite ones
+      assertSerp(prepared, oIdx, oRanks, "alpha", alpha.count(t => !t.isNaN))
+    } finally prepared.close()
   }
 
   test("titles: lastChild semantics + Unauthorized fallback, engine == oracle, " +

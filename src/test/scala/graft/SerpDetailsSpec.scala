@@ -86,44 +86,42 @@ class SerpDetailsSpec extends AnyFunSuite {
     prepared.close()
   }
 
-  test("concurrent serves on the dedicated session: two racing search() " +
-       "calls while the parent runs an AQE query — results exact, parent " +
-       "conf untouched (r6 verdict #7)") {
-    val ranks = PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40)
-    val prepared = Searcher.prepare(eIdx, ranks)
-    // reference results, computed single-threaded first
-    def serpOf(q: String): Seq[(Int, Long, Double)] =
-      Searcher.search(spark, prepared, q)
+  test("concurrent serves on the dedicated session: four racing search() " +
+       "calls of one shape while the parent runs an AQE query — results " +
+       "exact, parent conf untouched") {
+    def serpOf(p: Searcher.Prepared, q: String): Seq[(Int, Long, Double)] =
+      Searcher.search(spark, p, q)
         .select("rank", "url_id", "total")
         .as[(Int, Long, Double)].collect().toSeq
-    val exp1 = serpOf("research systems")
-    val exp2 = serpOf("\"hong kong\" research")
+    // distinct values bound into one shape (a phrase and a single term):
+    // the racing threads share its cached plan, built by the first of them
+    val queries = Seq("\"hong kong\" research", "\"hong kong\" systems",
+      "\"crawler indexing\" networks", "\"databases research\" computing")
+    // reference results, computed single-threaded on their own prepared state
+    val serial = Searcher.prepare(eIdx,
+      PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
+    val expected = try queries.map(q => q -> serpOf(serial, q)).toMap finally serial.close()
+    assert(expected.values.toSet.size == queries.size, "the queries must differ in their SERPs")
+
+    val prepared = Searcher.prepare(eIdx,
+      PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
     val parentAqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val parentSpBefore = spark.conf.get("spark.sql.shuffle.partitions")
-
     val results = new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Long, Double)]]()
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val barrier = new java.util.concurrent.CyclicBarrier(3)
-    val t1 = new Thread(() => {
-      try { barrier.await(); results.put("q1", serpOf("research systems")) }
-      catch { case e: Throwable => errors.add(e) }
+    val barrier = new java.util.concurrent.CyclicBarrier(queries.size + 1)
+    def thread(body: => Unit) = new Thread(() => {
+      try { barrier.await(); body } catch { case e: Throwable => errors.add(e) }
     })
-    val t2 = new Thread(() => {
-      try { barrier.await(); results.put("q2", serpOf("\"hong kong\" research")) }
-      catch { case e: Throwable => errors.add(e) }
-    })
-    val t3 = new Thread(() => { // a PARENT-session AQE query racing the serves
-      try {
-        barrier.await()
+    val threads = queries.map(q => thread(results.put(q, serpOf(prepared, q)))) :+
+      thread { // a PARENT-session AQE query racing the serves
         (1 to 3).foreach { _ =>
           pagesDf.groupBy(length(col("url")) % 7).count().collect()
         }
-      } catch { case e: Throwable => errors.add(e) }
-    })
-    Seq(t1, t2, t3).foreach(_.start()); Seq(t1, t2, t3).foreach(_.join())
+      }
+    threads.foreach(_.start()); threads.foreach(_.join())
     assert(errors.isEmpty, s"concurrent serve threw: ${errors.peek()}")
-    assert(results.get("q1") == exp1, "racing serve changed q1's SERP")
-    assert(results.get("q2") == exp2, "racing serve changed q2's SERP")
+    queries.foreach(q => assert(results.get(q) == expected(q), s"racing serve changed the SERP of $q"))
     // the parent session's conf was never touched by the serves
     assert(spark.conf.get("spark.sql.adaptive.enabled") == parentAqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parentSpBefore)
@@ -149,6 +147,29 @@ class SerpDetailsSpec extends AnyFunSuite {
       }
       val unknown = jobsOf { Searcher.search(spark, p, "qqqunknown").collect() }
       assert(unknown <= 1, s"unknown-only query ran $unknown jobs")
+    } finally p.close()
+  }
+
+  test("serve plans: once a shape has served a query, a distinct query of " +
+       "that shape compiles no class and runs one job without a broadcast") {
+    val p = Searcher.prepare(eIdx, freshRanks)
+    try {
+      // one term shape and one phrase shape
+      Seq("research", "\"hong kong\"").foreach(q => Searcher.search(spark, p, q).collect())
+      // a new id, multiplicity, query length and stems; more single terms;
+      // a new phrase
+      Seq("systems systems", "research systems networks", "\"crawler indexing\"").foreach { q =>
+        var rows = 0
+        var jobs = 0
+        val compiled = SparkJobs.compiles {
+          jobs = jobsOf { rows = Searcher.search(spark, p, q).collect().length }
+        }
+        assert(rows > 0, s"'$q' must match documents")
+        assert(compiled == 0, s"'$q' compiled $compiled classes")
+        assert(jobs == 1, s"'$q' ran $jobs jobs")
+        val plan = Searcher.scoringPlan(p, q, 50).get.queryExecution.executedPlan
+        assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
+      }
     } finally p.close()
   }
 

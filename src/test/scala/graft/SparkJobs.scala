@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.graft.Bridge
@@ -39,6 +40,14 @@ object SparkJobs {
         if (ours(e.properties, tag)) seen.add(e.jobId)
     })(f)
     seen.size
+  }
+
+  /** Classes Janino compiled while `f` ran, on any thread: the generated
+    * code cache counts only its misses. */
+  def compiles(f: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    f
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
   /** Rows read from files by the jobs `f` starts on this thread: the sum of
