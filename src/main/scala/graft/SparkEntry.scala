@@ -33,8 +33,8 @@ object SparkEntry {
     * band (cos 0.9165-0.9535) — the HARD case for the LSH radius: the
     * old fixed radius 16 measured 1995/2000 recall here at sf0.1 (≈3.2σ,
     * the quantified boundary leak); the auto-calibrated radius
-    * (TrainingOps.srpRadiusFor: mean + 4σ at the threshold boundary ⇒ 21
-    * for threshold 0.9) recalls 1.0 at both scales. BASELINE.md records
+    * (TrainingOps.srpRadiusForN(0.9, 64): mean + 4σ at the threshold
+    * boundary ⇒ 21) recalls 1.0 at both scales. BASELINE.md records
     * the calibration history. */
   private def prodDupEmbeddings(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -417,12 +417,12 @@ object SparkEntry {
 
     // the PRODUCTION banding scheme (block-PAIR keys for the 10¹¹-doc
     // regime) run end-to-end against the same brute-force-all-pairs oracle
-    // as q_simhash_pairs — proving the two-stage candidate generation is
-    // complete at h=6, not just plan-shape-equivalent (VERDICT r2 next #2)
+    // as q_simhash_pairs — proving the block-pair candidate generation is
+    // complete at h=6, not just plan-shape-equivalent
     "q_simhash_pairs_2stage" -> ((s, d) => {
       val sims = t(s, d, "documents")
-        .select(col("doc_id"), gfn.simhash_md5(T.wsTokens(col("text"))).as("sh"))
-      T.simhashPairsFromFpsTwoStage(sims, maxHamming = 6)
+        .select(col("doc_id"), array(gfn.simhash_md5(T.wsTokens(col("text")))).as("sh"))
+      T.hammingPairs(sims, nbits = 64, radius = 6, blockPairs = true)
     }),
 
     "q_winnow_pairs" -> ((s, d) =>
@@ -460,19 +460,19 @@ object SparkEntry {
 
     // the SRP-LSH research-threshold path against the SAME exact-all-pairs
     // oracle, fully AUTO: threshold 0.4 needs a 4σ radius of 40 on 64 bits
-    // — past the pigeonhole collapse bound 31, which is exactly why the
-    // 64-bit radius-30 gate measured 893/920 at sf0.1 (r5's one red row).
-    // The auto path now picks a 128-bit sketch there (relative σ halves ⇒
+    // (srpRadiusForN(0.4, 64)) — past the pigeonhole collapse bound 31,
+    // where a 64-bit radius-30 gate measured 893/920 at sf0.1. The auto
+    // path picks a 128-bit sketch there (relative σ halves ⇒
     // srpRadiusForN(0.4, 128) = 70 IS a guaranteed-recall radius) and the
     // gate hash-matches the exact oracle at BOTH scales. Production
-    // corpora dedup at cos ≥ 0.85-0.95 where the 64-bit two-stage branch
-    // (q_cosine_pairs_lsh_prod below) runs unchanged.
+    // corpora dedup at cos ≥ 0.85-0.95, on the 64-bit block-pair branch
+    // (q_cosine_pairs_lsh_prod below).
     "q_cosine_pairs_lsh" -> ((s, d) =>
       T.cosineDupPairsLsh(t(s, d, "embeddings"), threshold = 0.4)),
 
-    // the PRODUCTION-threshold SRP-LSH regime (round-4 verdict item 5,
-    // hardened in round 5): cos ≥ 0.9 at the AUTO-CALIBRATED radius
-    // (srpRadiusFor(0.9) = 21 — boundary mean 9.2 + 4σ). The driver's
+    // the PRODUCTION-threshold SRP-LSH regime: cos ≥ 0.9 at the
+    // AUTO-CALIBRATED radius (srpRadiusForN(0.9, 64) = 21 — boundary mean
+    // 9.2 + 4σ). The generated
     // embeddings table has no high-cosine pairs (max 0.51/0.60), so the
     // gate derives a near-dup corpus DETERMINISTICALLY inside the query:
     // each vector unioned with an elementwise (+0.05 in double, cast back

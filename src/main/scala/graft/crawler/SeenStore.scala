@@ -3,7 +3,7 @@ package graft.crawler
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.snapshot.{PartitionLineage, RoundMetrics, Snapshot, SnapshotLog}
+import graft.snapshot.{RoundMetrics, Snapshot, SnapshotLog}
 
 /** Crawl state recovered from the latest committed round: the round to run
   * next, the seen count, the frontier and its size. */
@@ -91,9 +91,6 @@ private[crawler] final class Checkpoints(compactEvery: Int, empty: DataFrame)
   *     scan of the delta list, and resume reads `latest`.
   *   - Every table is read back with its known schema, so no read runs a
   *     schema-inference job.
-  *   - A delta's lineage comes from its parquet footers, read on the
-  *     driver instead of by a Spark job, and concurrently: on a remote
-  *     store a sequential loop would be one metadata round-trip per file.
   *   - Compaction rewrites the delta list into one fenced delta after the
   *     commit, and the next commit publishes it: a crash inside the
   *     rewrite leaves the committed chain intact. */
@@ -110,7 +107,6 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
       "with the original CrawlConfig or start a fresh workDir"))
   private var nextId = latest.fold(0)(_.id + 1)
   private var paths = latest.fold(Vector.empty[String])(_.seenDeltaPaths)
-  private var lineage = Vector.empty[PartitionLineage]
   private def readSeen(ps: Seq[String]) = spark.read.schema(SeenStore.SeenSchema).parquet(ps: _*)
   private def readFrontier(p: String) = spark.read.schema(SeenStore.FrontierSchema).parquet(p)
   var seen: DataFrame = if (paths.nonEmpty) readSeen(paths) else empty
@@ -123,7 +119,6 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
     val path = fenced("seen/delta_r", round)
     delta.write.mode("overwrite").parquet(path)
     paths :+= path
-    lineage = footerLineage(path)
     seen = readSeen(paths)
     readSeen(Seq(path))
   }
@@ -135,7 +130,7 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
 
   def commit(round: Int, seenCount: Long, metrics: RoundMetrics): Unit = {
     log.commit(Snapshot(nextId, nextId - 1, round, paths, fenced("frontier/r", round),
-      seenCount, cfg.configHash, metrics, lineage))
+      seenCount, cfg.configHash, metrics))
     nextId += 1
     if (paths.length >= cfg.compactEvery) {
       val path = fenced("seen/compact_r", round)
@@ -143,25 +138,5 @@ private[crawler] final class SnapshotTables(spark: SparkSession, log: SnapshotLo
       paths = Vector(path)
       seen = readSeen(paths)
     }
-  }
-
-  /** Rows per part- file, in sorted-filename order (the manifest's lineage
-    * contract), one footer read per file. */
-  private def footerLineage(path: String): Vector[PartitionLineage] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val hconf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val files = dir.getFileSystem(hconf).listStatus(dir)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName).zipWithIndex.toVector
-    Await.result(Future.traverse(files) { case (st, i) =>
-      Future {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-        try PartitionLineage(i, r.getRecordCount) finally r.close()
-      }
-    }, Duration.Inf)
   }
 }

@@ -231,8 +231,6 @@ object TextExprImpl {
     new GenericArrayData(out)
   }
 
-  /** Hamming distance between two equal-length ARRAY<LONG> bit sketches
-    * (XOR + popcount per word; extra words on the longer side ignored). */
   /** Index-order dot product of two ARRAY<DOUBLE>s — BIT-IDENTICAL to the
     * higher-order-function form it replaces,
     * `aggregate(zip_with(a, b, (x,y) => x*y), 0.0, (acc,v) => acc+v)`:
@@ -257,6 +255,8 @@ object TextExprImpl {
     java.lang.Double.valueOf(s)
   }
 
+  /** Hamming distance between two equal-length ARRAY<LONG> bit sketches
+    * (XOR + popcount per word; extra words on the longer side ignored). */
   def hammingWords(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var h = 0
@@ -353,7 +353,7 @@ case class SrpSketchExpr(child: Expression) extends UnaryExpression {
   * Wide sketches shrink the RELATIVE Hamming spread (σ/mean ∝ 1/√nbits),
   * which is what makes guaranteed-recall radii usable at low cosine
   * thresholds where a 64-bit radius would have to exceed the pigeonhole
-  * collapse bound (TrainingOps.srpRadiusFor's cap 31). */
+  * collapse bound 31 (TrainingOps.cosineDupPairsLsh). */
 case class SrpSketchNExpr(child: Expression, words: Int) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

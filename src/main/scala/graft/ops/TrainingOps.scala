@@ -19,16 +19,16 @@ import graft.gfn
   * rounded at the boundary.
   *
   * EAGERNESS CONTRACT: the pairwise dedup ops ([[jaccardPairs]],
-  * [[minhashLshPairs]], [[simhashPairsFromFps]],
-  * [[simhashPairsFromFpsTwoStage]], [[simhashPairsFromFpsWide]],
-  * [[winnowPairs]], [[dupClusters]]) and [[ivfCosineTopK]]
-  * are ACTIONS, not lazy transformations — constructing the result runs
-  * Spark jobs on the caller's thread (the hot-key scan, an eager
-  * localCheckpoint / collect that lets intermediate caches release
-  * immediately — cache-leak hygiene in long-lived sessions outweighs plan
-  * composability here). Compose further transformations on the returned
-  * (already materialized, near-dup-sized) DataFrame freely; their executed
-  * plans are printed by `graft.Plans`. The purely lazy ops
+  * [[minhashLshPairs]], [[simhashPairs]], [[hammingPairs]],
+  * [[winnowPairs]], [[dupClusters]]), the candidate join of
+  * [[cosineDupPairsLsh]] and [[ivfCosineTopK]] are ACTIONS, not lazy
+  * transformations — constructing the result runs Spark jobs on the
+  * caller's thread (the hot-key scan, an eager localCheckpoint / collect
+  * that lets intermediate caches release immediately — cache-leak hygiene
+  * in long-lived sessions outweighs plan composability here). Compose
+  * further transformations on the returned (near-dup-sized) DataFrame
+  * freely (the cosine verify join is one, over the eager candidates);
+  * their executed plans are printed by `graft.Plans`. The purely lazy ops
   * (text analysis, [[quantizeEmbeddings]], [[cosineDupPairsExact]],
   * [[bruteForceCosineTopK]], [[sessionize]]) stay transformations.
   */
@@ -288,20 +288,16 @@ object TrainingOps {
     }
   }
 
-  /** Distinct candidate pairs from per-doc bucket keys (bands, blocks):
-    * one pass + posexplode of `keys` into `keyNames` = (position, value) —
-    * a per-key union would recompute the upstream hashes once per key.
-    * A doc has one key per position, so df ≤ nDocs. The result is
-    * (a, b, verify…) with `payload` columns renamed pa / pb for `verify`. */
-  private def bucketPairs(fps: DataFrame, nDocs: Long, maxDf: Long, keys: Seq[Column],
-                          keyNames: Seq[String], payload: Seq[String] = Nil)
-                         (verify: Column*): DataFrame = {
-    val posting = fps.select((col("doc_id") +: payload.map(col)) :+
-      posexplode(array(keys: _*)).as(keyNames): _*)
-    sharedKeyJoin(posting, keyNames, maxDf, nDocs)._1
+  /** Distinct candidate pairs from per-doc bucket keys (bands, blocks).
+    * `posting` is (doc_id, payload…, keys…): one row per doc and key
+    * position, exploded in one pass (a per-key union would recompute the
+    * upstream hashes once per key), so df ≤ nDocs. The result is
+    * (a, b, verify…), with payload column p renamed pa / pb for `verify`. */
+  private def bucketPairs(posting: DataFrame, keys: Seq[String], nDocs: Long, maxDf: Long)
+                         (verify: Column*): DataFrame =
+    sharedKeyJoin(posting, keys, maxDf, nDocs)._1
       .select(col("a") +: col("b") +: verify: _*)
       .distinct()
-  }
 
   /** distinct word-trigram shingles per doc as one row-local ARRAY column —
     * ZERO shuffle: shingles are a pure function of the text (a
@@ -371,7 +367,9 @@ object TrainingOps {
       concat((0 until rowsPerBand).map(r => col(s"mh${bnd * rowsPerBand + r}")): _*)
     }
     eagerPairs(minhashSignatures(docs, k)) { (sig, nDocs) =>
-      bucketPairs(sig, nDocs, maxBandDf, bandCols, Seq("band", "sig"))()
+      val posting = sig.select(col("doc_id"),
+        posexplode(array(bandCols: _*)).as(Seq("band", "sig")))
+      bucketPairs(posting, Seq("band", "sig"), nDocs, maxBandDf)()
         .orderBy("a", "b")
     }
   }
@@ -454,51 +452,15 @@ object TrainingOps {
     spread(docs).select(col("doc_id"),
       gfn.simhash_md5(wsTokens(col("text"))).as("simhash")).orderBy("doc_id")
 
-  /** SimHash near-dup pairs within Hamming distance `maxHamming` over the
-    * md5-token fingerprints (the ones the DuckDB oracle recomputes
-    * bit-exactly), bucketed by `maxHamming + 1` bit-blocks: two
-    * fingerprints differing in ≤ h bits must agree EXACTLY on at least one
-    * of h+1 disjoint blocks (pigeonhole — h differing bits cannot touch
-    * all h+1 blocks), so candidate generation is complete for the promised
-    * radius and the self-join is block-bucket-bounded instead of O(n²). */
+  /** SimHash near-dup pairs (a, b, hamming) within Hamming distance
+    * `maxHamming` of the md5-token fingerprints (the ones the DuckDB oracle
+    * recomputes bit-exactly): [[hammingPairs]] over the one-word sketch,
+    * with h+1 single-block keys. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
-    val sims = spread(docs).select(col("doc_id"),
-      gfn.simhash_md5(wsTokens(col("text"))).as("sh"))
-    simhashPairsFromFps(sims, maxHamming, maxBucketDf)
-  }
-
-  /** The `n` disjoint bit-blocks of the 64-bit fingerprint `sh`, as LONGs. */
-  private def blocks64(n: Int): IndexedSeq[Column] = {
-    val starts = (0 to n).map(i => i * 64 / n)
-    (0 until n).map { q =>
-      val width = starts(q + 1) - starts(q)
-      val mask = if (width >= 64) -1L else (1L << width) - 1L
-      shiftright(col("sh"), starts(q)).bitwiseAND(lit(mask))
-    }
-  }
-
-  /** The SimHash candidate join: fingerprints (doc_id, sh) bucketed by the
-    * block `keys` of sh, verified by `hamming` ≤ maxHamming. Complete
-    * whenever the keys are pigeonhole-complete for the radius. */
-  private def hammingPairs(sims: DataFrame, maxHamming: Int, maxBucketDf: Long,
-                           keys: Seq[Column], hamming: (Column, Column) => Column): DataFrame =
-    eagerPairs(sims) { (fps, nDocs) =>
-      bucketPairs(fps, nDocs, maxBucketDf, keys, Seq("q", "bucket"), Seq("sh"))(
-          hamming(col("sha"), col("shb")).cast("long").as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .orderBy("a", "b")
-    }
-
-  private def bitHamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
-  /** [[simhashPairs]] over precomputed fingerprints (doc_id, sh LONG) —
-    * the block-bucketed candidate join, unit-testable at the bit level. */
-  def simhashPairsFromFps(sims: DataFrame, maxHamming: Int,
-                          maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64, s"maxHamming=$maxHamming")
-    hammingPairs(sims, maxHamming, maxBucketDf, blocks64(maxHamming + 1), bitHamming)
-  }
+                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame =
+    hammingPairs(spread(docs).select(col("doc_id"),
+        array(gfn.simhash_md5(wsTokens(col("text")))).as("sh")),
+      64, maxHamming, blockPairs = false, maxBucketDf)
 
   /** winnowing fingerprint overlap pairs over md5 k-gram hashes (the
     * DuckDB-oracle-matched variant): `pairCounts` of the per-doc
@@ -513,24 +475,6 @@ object TrainingOps {
         .filter(col("shared") >= minShared)
         .orderBy("a", "b")
     }
-
-  /** [[simhashPairsFromFps]] upgraded for web-scale corpora: bucket by
-    * PAIRS of blocks. With b = maxHamming + 2 disjoint blocks, ≤ h
-    * differing bits leave at least TWO blocks identical (pigeonhole), so
-    * every qualifying pair shares at least one (block_i, block_j) key.
-    * C(b,2) keys of ~2·(64/b) bits each: for h=6 that is 28 keys of ~16
-    * bits vs 7 keys of ~9 bits — ~500× more buckets, pushing the
-    * hot-bucket ceiling from ~10⁹ to ~10¹¹ docs before the df cap starts
-    * trading recall, at 4× the candidate-row cost. Same exact output. */
-  def simhashPairsFromFpsTwoStage(sims: DataFrame, maxHamming: Int,
-                                  maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 62, s"maxHamming=$maxHamming")
-    val blocks = blocks64(maxHamming + 2)
-    // both block values packed into one 64-bit key (widths ≤ 32)
-    val pairKeys = for { i <- blocks.indices; j <- i + 1 until blocks.size }
-      yield shiftleft(blocks(i), 32).bitwiseOR(blocks(j))
-    hammingPairs(sims, maxHamming, maxBucketDf, pairKeys, bitHamming)
-  }
 
   /** Bit-slice [lo, lo+width) of an ARRAY<LONG> sketch as a LONG (little-
     * endian global bit order: bit k lives in word k/64 at position k%64 —
@@ -548,50 +492,59 @@ object TrainingOps {
     c.bitwiseAND(lit(mask))
   }
 
-  /** [[simhashPairsFromFps]] / [[simhashPairsFromFpsTwoStage]] generalized
-    * to WIDE (`nbits` = n×64) ARRAY<LONG> sketches — the candidate join
-    * behind the research-threshold branch of [[cosineDupPairsLsh]].
+  /** The Hamming-radius join: every pair a < b of bit sketches
+    * (doc_id, sh ARRAY<LONG> of nbits/64 words) that differ in at most
+    * `radius` bits, as (a, b, hamming) ordered by (a, b). SimHash and SRP
+    * sketches both go through it.
     *
-    * Stage choice is automatic from the block geometry: block-PAIR keys
-    * (h+2 blocks, completeness: ≤ h differing bits leave ≥ 2 blocks clean)
-    * when a pair key keeps ≥ 7 bits — the hot-bucket-ceiling regime; else
-    * single-block keys (h+1 blocks, ≥ 1 clean block). At guaranteed-recall
-    * radii for LOW thresholds the blocks are 1-2 bits wide whichever way
-    * they are cut — that is not an implementation defect but the
-    * information-theoretic position of the problem (boundary pairs differ
-    * in ~θ/π of ALL bits, so exact-match keys must be narrow to survive
-    * h errors) — and there single-block keys are strictly cheaper:
-    * C(h+2,2) pair keys of ~2 widths would multiply the candidate volume
-    * ~h/4-fold over h+1 single keys for zero extra selectivity.
-    * Completeness (recall 1.0 within the radius) holds for BOTH stagings
-    * by pigeonhole; hamming verification is the codegen'd
-    * [[gfn.hamming_words]]. Bucket keys are (q, bucket-value) structs,
-    * df-capped with WARNs like every other pairwise join here. */
-  def simhashPairsFromFpsWide(sims: DataFrame, nbits: Int, maxHamming: Int,
-                              maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
-    require(nbits % 64 == 0 && nbits >= 64, s"nbits=$nbits")
-    require(maxHamming >= 1 && maxHamming <= nbits - 2, s"maxHamming=$maxHamming")
-    val pairKeyWidth = 2 * nbits / (maxHamming + 2)
-    val twoStage = pairKeyWidth >= 7
-    // clamp the block count so every block fits sliceBitsWide's 64-bit
-    // slice (e.g. nbits=256, maxHamming=1 would otherwise ask for 85-bit
-    // blocks and throw). EXTRA blocks are always completeness-safe: with
-    // b blocks and ≤ h differing bits at least b−h blocks are identical,
-    // so raising b only widens the pigeonhole margin (more candidates).
-    val baseBlocks = if (twoStage) maxHamming + 2 else maxHamming + 1
-    val nBlocks = math.max(baseBlocks, nbits / 64)
+    * Candidates come from pigeonhole block tables (Manku, Jain & Das Sarma,
+    * WWW 2007). The sketch is cut into nBlocks contiguous blocks starting at
+    * bit i·nbits/nBlocks, and ≤ h differing bits leave at least nBlocks − h
+    * of them identical. So every pair within the radius shares a key:
+    *   - single keys (`blockPairs` = false): h+1 blocks, one (position,
+    *     block) key per block; at least one block is identical;
+    *   - block pairs: h+2 blocks, one (position, later position, block,
+    *     later block) key per pair of blocks; at least two blocks are
+    *     identical. Keys are about twice as wide, so buckets are far
+    *     smaller and the df cap binds later, at (h+2)/2 times the posting
+    *     rows. Each block is sliced once and paired by a second explode:
+    *     one key expression per pair would be C(h+2, 2) expressions, past
+    *     what whole-stage codegen compiles at h = 70.
+    * nBlocks is at least nbits/64 so that every block fits one 64-bit
+    * slice; extra blocks only widen the pigeonhole margin. Radii: 0 ≤ h <
+    * nbits for single keys, h ≤ nbits − 2 for block pairs.
+    *
+    * Candidates are verified with [[gfn.hamming_words]], so a row whose
+    * sketch is null never pairs. Keys with df > `maxBucketDf` are dropped
+    * before the join, with a WARN, like every pairwise join here. EAGER
+    * (object scaladoc). */
+  def hammingPairs(sketches: DataFrame, nbits: Int, radius: Int, blockPairs: Boolean,
+                   maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
+    require(nbits >= 64 && nbits % 64 == 0, s"nbits=$nbits")
+    val minBlocks = if (blockPairs) radius + 2 else radius + 1
+    require(radius >= 0 && minBlocks <= nbits,
+      s"radius=$radius for nbits=$nbits, blockPairs=$blockPairs")
+    val nBlocks = math.max(minBlocks, nbits / 64)
     val starts = (0 to nBlocks).map(i => i * nbits / nBlocks)
-    def block(q: Int): Column =
-      sliceBitsWide(col("sh"), starts(q), starts(q + 1) - starts(q))
-    val keyCols: Seq[Column] =
-      if (twoStage)
-        for { i <- 0 until nBlocks; j <- i + 1 until nBlocks }
-          yield struct(block(i).as("b1"), block(j).as("b2"))
-      else
-        (0 until nBlocks).map(q => struct(block(q).as("b1"), lit(0L).as("b2")))
-    hammingPairs(sims, maxHamming, maxBucketDf, keyCols, gfn.hamming_words)
+    val blocks = (0 until nBlocks).map(q =>
+      sliceBitsWide(col("sh"), starts(q), starts(q + 1) - starts(q)))
+    eagerPairs(sketches) { (fps, nDocs) =>
+      val posting =
+        if (!blockPairs)
+          fps.select(col("doc_id"), col("sh"),
+            posexplode(array(blocks: _*)).as(Seq("q", "bucket")))
+        else // each block against every later one: C(n, 2) keys from n slices
+          fps.select(col("doc_id"), col("sh"), array(blocks: _*).as("blk"))
+            .select(col("doc_id"), col("sh"), col("blk"),
+              posexplode(col("blk")).as(Seq("q", "bucket")))
+            .select(col("doc_id"), col("sh"), col("q"), col("bucket"),
+              posexplode(slice(col("blk"), col("q") + 2, lit(nBlocks))).as(Seq("q2", "bucket2")))
+      bucketPairs(posting, posting.columns.drop(2), nDocs, maxBucketDf)(
+          gfn.hamming_words(col("sha"), col("shb")).cast("long").as("hamming"))
+        .filter(col("hamming") <= radius)
+        .orderBy("a", "b")
+    }
   }
-
 
   /** int8 max-abs quantization of the embedding column — the standard
     * 4× storage/bandwidth cut before ANN indexing at 100 TB scale. Pure
@@ -651,36 +604,14 @@ object TrainingOps {
       .orderBy("a", "b")
   }
 
-  /** Hamming radius for [[cosineDupPairsLsh]] AUTO-CALIBRATED from the
-    * cosine threshold (round-5: a fixed radius was measured leaking 0.25%
-    * of pairs at the threshold boundary — the radius must be a function of
-    * the threshold, not a constant). For a 64-bit SRP sketch and a pair at
-    * angle θ, each bit differs independently with p = θ/π, so hamming ~
-    * Binomial(64, p): mean 64p, σ = √(64p(1−p)). The radius covers the
-    * WORST admissible pair (cos exactly = threshold) at `sigmas` standard
-    * deviations — default 4σ ⇒ per-pair miss ≈ 3×10⁻⁵ at the boundary and
-    * vanishing for anything deeper in the band. Capped at 31: past h ≈ 31
-    * the h+2 pigeonhole blocks hold ≤ 2 bits and every bucket collapses
-    * into one (the round-2 failure mode) — thresholds that low (cos ≲ 0.5)
-    * are research territory where candidates ≈ all pairs anyway; pass an
-    * explicit radius there. Larger radii also widen buckets (fewer bits
-    * per block key): for ≥10⁷-vector corpora watch the df-cap WARNs and
-    * consider an explicit radius or a higher threshold. */
-  def srpRadiusFor(threshold: Double, sigmas: Double = 4.0): Int =
-    math.min(31, srpRadiusForN(threshold, 64, sigmas))
-
-  /** [[srpRadiusFor]] generalized to an `nbits`-wide SRP sketch: hamming ~
-    * Binomial(nbits, θ/π) at the threshold boundary, radius = mean +
-    * `sigmas`·σ. NOT capped at the 64-bit pigeonhole bound — the caller
-    * picks the sketch width precisely because the 64-bit cap is the thing
-    * being escaped; only a sanity clamp to [1, nbits−2] (the blocked join
-    * needs ≥ 2 blocks). Wide sketches shrink σ/mean ∝ 1/√nbits, so the
-    * guaranteed-recall radius moves toward the boundary mean as bits grow —
-    * 0.4 ⇒ 40 (uncapped) at 64 bits but 70/128 = 0.55·nbits at 128 bits vs
-    * 0.63·nbits at 64. The honest limit: block WIDTH nbits/(radius+2) tends
-    * to 1/(θ/π+ε) ≈ 2.7 bits regardless of nbits, so at research thresholds
-    * blocked candidate generation is inherently near-all-pairs — see
-    * [[cosineDupPairsLsh]]'s scaladoc for the full cost argument. */
+  /** The Hamming radius an `nbits`-wide SRP sketch needs for a cosine
+    * `threshold`. A pair at the threshold boundary (angle θ) differs in each
+    * bit with p = θ/π, so its distance is Binomial(nbits, p); the radius is
+    * the mean + `sigmas`·σ. At 4σ a boundary pair is missed with p ≈ 3×10⁻⁵,
+    * and pairs deeper in the band almost never. Clamped to [1, nbits − 2],
+    * so a block-pair join has at least two blocks. σ/mean falls as
+    * 1/√nbits, so a wider sketch needs a relatively smaller radius:
+    * threshold 0.4 needs 40 of 64 bits but 70 of 128. */
   def srpRadiusForN(threshold: Double, nbits: Int, sigmas: Double = 4.0): Int = {
     require(nbits >= 16, s"nbits=$nbits")
     val theta = math.acos(math.min(math.max(threshold, -1.0), 1.0))
@@ -690,67 +621,40 @@ object TrainingOps {
     math.min(nbits - 2, math.max(1, math.ceil(mean + sigmas * sigma).toInt))
   }
 
-  /** approximate embedding-cosine near-dup pairs at scale: sign-random-
-    * projection sketches (angular distance θ maps to expected Hamming
-    * nbits·θ/π), candidates from the pigeonhole block self-join of the
-    * sketches, exact cosine verification on the candidates only.
-    * `maxHamming ≤ 0` (the default) auto-calibrates the radius from the
-    * threshold via [[srpRadiusFor]] / [[srpRadiusForN]] — e.g. threshold
-    * 0.9 ⇒ radius 21 of 64, which hash-matches the exact oracle at the
-    * band BOTTOM (cos 0.9165) where the old fixed 16 measured 1995/2000.
-    *
-    * Sketch WIDTH (`bits`, 0 = auto) is the round-6 generalization that
-    * closed the research-threshold recall gap: when the 4σ radius fits
-    * under the 64-bit pigeonhole collapse bound 31 (thresholds ≳ 0.62 —
-    * every production dedup regime), the proven 64-bit two-stage path
-    * runs unchanged and is bucket-bounded, never O(n²). Below that
-    * (research thresholds like 0.4, where 64-bit radius 31 measured
-    * 893/920 recall at sf0.1), a 128-bit sketch halves the relative σ so
-    * a guaranteed 4σ radius EXISTS (srpRadiusForN(0.4, 128) = 70 vs an
-    * uncappable 40/64) and recall 1.0 is restored. The honest cost
-    * statement for that regime: boundary pairs differ in ~θ/π ≈ 37% of
-    * ALL sketch bits, so complete blocked keys are 1-2 bits wide and
-    * candidates approach all-pairs — widening the sketch buys guaranteed
-    * recall, not sub-quadratic candidates (no exact-match banding can;
-    * at 10⁷+ vectors use the production threshold or accept sampling).
-    * The 64-bit production branch's scale story is unchanged. */
+  /** Approximate embedding-cosine near-dup pairs (cos ≥ threshold):
+    * sign-random-projection sketches (angular distance θ maps to expected
+    * Hamming distance nbits·θ/π), candidates from [[hammingPairs]], and
+    * exact cosine verification on the candidates only. The sketch width,
+    * the radius and the key scheme are all picked here, from the threshold:
+    *   - the radius is [[srpRadiusForN]] at the chosen width, so recall at
+    *     the threshold boundary is 1 up to the 4σ tail (0.9 ⇒ 21 of 64);
+    *   - 64 bits while that radius is ≤ 31 (thresholds ≳ 0.62, where
+    *     production dedup runs), with block-pair keys: single keys at
+    *     radius 16 are ~4 bits wide, so a bucket holds ~n/13 vectors and
+    *     the df cap would erase recall near 10⁶ vectors; pair keys of ~7
+    *     bits hold ~n/128 and push that past 10⁷;
+    *   - 128 bits below, where 64 bits would need a radius past 31 and
+    *     blocks of ≤ 2 bits. The relative σ halves, so a guaranteed radius
+    *     exists (0.4 ⇒ 70 of 128). Block pairs only while a pair key keeps
+    *     ≥ 7 bits; otherwise single keys, which cost less for the same
+    *     selectivity when blocks are 1-2 bits wide.
+    * Boundary pairs differ in ~θ/π of all bits, so at low thresholds any
+    * complete exact-match key is narrow and the candidates approach all
+    * pairs: the wider sketch buys guaranteed recall, not sub-quadratic
+    * candidates. */
   def cosineDupPairsLsh(emb: DataFrame, threshold: Double,
-                        maxHamming: Int = -1,
-                        maxBucketDf: Long = DefaultMaxBucketDf,
-                        bits: Int = 0): DataFrame = {
-    val width = if (bits > 0) bits
-                else if (srpRadiusForN(threshold, 64) <= 31) 64 else 128
-    val radius = if (maxHamming > 0) maxHamming
-                 else if (width == 64) srpRadiusFor(threshold)
-                 else srpRadiusForN(threshold, width)
-    // no persist on the vector table: it has three consumers, but at the
-    // 10⁶+-vector scale this path exists for, re-reading the source (with
-    // column pruning) is the right trade — caching the full corpus is the
-    // thing that does NOT survive a 100× scale-up, and a persist here was
-    // the round-2 ADVICE leak (never unpersisted in a long-lived session)
+                        maxBucketDf: Long = DefaultMaxBucketDf): DataFrame = {
+    val width = if (srpRadiusForN(threshold, 64) <= 31) 64 else 128
+    val radius = srpRadiusForN(threshold, width)
+    val blockPairs = width == 64 || 2 * width / (radius + 2) >= 7
+    // the vectors have three consumers but are not persisted: at the scale
+    // this op is for, re-reading the pruned source costs less than caching
+    // the corpus, and no cache is left behind in a long-lived session
     val e = spread(emb).select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
-    // TWO-STAGE block-pair candidate keys (round-2 ADVICE) on the 64-bit
-    // branch: single-block pigeonhole keys at h=16 are only 64/17 ≈ 3-4
-    // bits wide, so typical per-bucket df ≈ n/13 crosses the df cap near
-    // n ≈ 10⁶ and capping would silently erase recall exactly at the
-    // advertised scale. Block PAIRS give C(h+2,2) keys of ~2·(64/(h+2))
-    // bits (h=16: 153 keys of ~7 bits vs 17 of ~3.7) — per-bucket df ≈
-    // n/128, pushing the capping ceiling past 10⁷ vectors per cap unit,
-    // at ~4× candidate-row cost. Completeness is unchanged (≤ h differing
-    // bits leave ≥ 2 of the h+2 blocks untouched), and capHotKeys WARNS
-    // when it drops keys. The wide branch delegates the same stage choice
-    // to simhashPairsFromFpsWide's block geometry.
-    val cands =
-      if (width == 64) {
-        val fps = e.select(col("vec_id").as("doc_id"), gfn.srp_sketch(col("v")).as("sh"))
-        simhashPairsFromFpsTwoStage(fps, radius, maxBucketDf)
-      } else {
-        val fps = e.select(col("vec_id").as("doc_id"),
-          gfn.srp_sketch_n(col("v"), width / 64).as("sh"))
-        simhashPairsFromFpsWide(fps, width, radius, maxBucketDf)
-      }
-    cands
+    val sketches = e.select(col("vec_id").as("doc_id"),
+      gfn.srp_sketch_n(col("v"), width / 64).as("sh"))
+    hammingPairs(sketches, width, radius, blockPairs, maxBucketDf)
       .join(e.select(col("vec_id").as("a"), col("v").as("va")), Seq("a"))
       .join(e.select(col("vec_id").as("b"), col("v").as("vb")), Seq("b"))
       .withColumn("cos", gfn.round_exact(dot(col("va"), col("vb")) /

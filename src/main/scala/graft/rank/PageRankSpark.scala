@@ -18,16 +18,14 @@ import org.apache.spark.storage.StorageLevel
   * iterative DataFrame jobs). Floating-point reassociation across the
   * shuffle is absorbed by the 1e-6 fixture tolerance (BASELINE.json).
   *
-  * Round-7 execution shape (guide §1.2 step 3 + §2): the 40-iteration loop
-  * runs ~2 exchanges per iteration with a FIXED, data-independent
-  * structure, so AQE's per-stage re-planning is a pure driver-latency tax
-  * on it (measured 2.6× the whole loop's wall at demo scale — the same
-  * finding as the crawler's aqe=false bench mode and the serve session's
-  * serveConf). The loop therefore executes on a DEDICATED child session
-  * (`newSession()` — own SQLConf, shared context/cache; the caller's
-  * session conf is never touched) with AQE off by default
-  * (`spark.graft.pagerank.aqe=true` on the caller's session restores it)
-  * and `spark.sql.shuffle.partitions` DERIVED from the edge count
+  * Execution shape: the 40-iteration loop runs ~2 exchanges per
+  * iteration with a FIXED, data-independent structure, so AQE's per-stage
+  * re-planning is a pure driver-latency tax on it (measured 2.6× the whole
+  * loop's wall at demo scale — the same finding as the crawler's aqe=false
+  * bench mode and the serve session). The loop therefore executes on a
+  * DEDICATED child session (`newSession()` — own SQLConf, shared
+  * context/cache; the caller's session conf is never touched) with AQE
+  * always off and `spark.sql.shuffle.partitions` DERIVED from the edge count
   * (~500k edges/partition, capped at the cluster's default parallelism) —
   * scale-adaptive, not a local[32] constant: a 10¹⁰-edge graph still gets
   * full-cluster partitioning, while a small graph stops paying 32 tasks
@@ -55,8 +53,7 @@ object PageRankSpark {
     val child = parent.newSession()
     Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
       .foreach(k => parent.conf.getOption(k).foreach(child.conf.set(k, _)))
-    child.conf.set("spark.sql.adaptive.enabled",
-      parent.conf.get("spark.graft.pagerank.aqe", "false"))
+    child.conf.set("spark.sql.adaptive.enabled", "false")
     child.conf.set("spark.sql.shuffle.partitions", parts.toString)
 
     val id = runIds.incrementAndGet()

@@ -111,8 +111,8 @@ object Searcher {
     *
     * The serve runs on a DEDICATED session (`spark.newSession()` — own
     * SQLConf, shared SparkContext + cache): the latency-path conf choices
-    * ([[serveConf]]) are set ONCE there and never touch the caller's
-    * session, so concurrent non-search queries can't observe serve conf and
+    * (AQE off, the derived shuffle partitions) are set ONCE there and never
+    * touch the caller's session, so concurrent non-search queries can't observe serve conf and
     * racing search() calls can't clobber each other. Index tables are
     * rebound onto the serve session through global temp views; the shared
     * CacheManager still substitutes the parent's cached plans. */
@@ -129,7 +129,10 @@ object Searcher {
     Seq("spark.sql.session.timeZone",
         "spark.sql.ansi.enabled", "spark.sql.autoBroadcastJoinThreshold")
       .foreach(k => parent.conf.getOption(k).foreach(serve.conf.set(k, _)))
-    serveConf(parent).foreach { case (k, v) => serve.conf.set(k, v) }
+    // AQE off: it turns every query stage of the SERP plan into its own
+    // driver-replanned job behind a materialization barrier, and the
+    // one-job-per-query invariant needs the whole DAG scheduled as one job
+    serve.conf.set("spark.sql.adaptive.enabled", "false")
     // serve-side shuffle partitioning is derived from the index size: the
     // per-query matched set is ≤ n docs, so ~50k docs/partition, capped at
     // the parent's configured shuffle partitions
@@ -217,18 +220,6 @@ object Searcher {
         StructField("cos", DoubleType), StructField("pr", DoubleType),
         StructField("title_score", DoubleType), StructField("title", StringType))))
   }
-
-  /** Serving-path latency confs, applied once to the DEDICATED serve
-    * session in [[prepare]]. AQE turns every query stage of the SERP plan
-    * into its own driver-replanned job with a materialization barrier, and
-    * a latency-bound top-K serve wants the whole DAG scheduled as ONE job,
-    * so AQE is off on the serve session by default. Set
-    * spark.graft.serve.aqe=true on the PARENT session before prepare() to
-    * restore it (the right trade when the per-query matched-doc set is
-    * large enough that runtime skew handling and partition coalescing beat
-    * scheduling round-trips). */
-  private def serveConf(parent: SparkSession): Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.enabled" -> parent.conf.get("spark.graft.serve.aqe", "false"))
 
   /** The `spark` parameter is retained for API stability but the query
     * executes on the Prepared's dedicated serve session — the caller's

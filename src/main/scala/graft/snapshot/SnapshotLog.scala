@@ -1,36 +1,10 @@
 package graft.snapshot
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.JsonDSL._
-
-/** Minimal Iceberg-style snapshot log over Parquet (the Iceberg runtime jar
-  * is not available offline — SURVEY.md §7.3): an append-only chain of JSON
-  * manifests under `<dir>/_snapshots/v{N}.json`, each recording
-  *
-  *   - snapshot id + parent id + crawl round,
-  *   - the cumulative list of seen-set delta paths (the seen table is the
-  *     union of its deltas),
-  *   - the current frontier path,
-  *   - fetch/dedup metrics for the round,
-  *   - per-partition lineage (rows per written partition) for the delta,
-  *
-  * giving the north_rule's resume semantics: a killed job re-reads the
-  * latest manifest and continues with identical ordering (every round is a
-  * deterministic function of (seen, frontier, pages, config)). Commits are
-  * atomic via write-to-temp + CREATE_NEW hard link, with an optimistic
-  * parent-must-be-latest check — two interleaved writers cannot silently
-  * last-writer-win ([[CommitConflictException]]).
-  */
-/** Rows per written file of a seen-set delta. `partition` is the ORDINAL
-  * of the part- file under the delta directory in SORTED-FILENAME order —
-  * NOT `spark_partition_id()` (round 4 moved lineage from a per-round
-  * recount job to parquet-footer metadata reads; Spark's task-attempt
-  * naming keeps sorted-filename order equal to writer-partition order for
-  * successful commits, but the manifest contract is the ordinal). */
-final case class PartitionLineage(partition: Int, rows: Long)
 
 final case class RoundMetrics(
     round: Int,
@@ -51,8 +25,7 @@ final case class Snapshot(
     frontierPath: String,
     seenCount: Long,
     configHash: String,
-    metrics: RoundMetrics,
-    lineage: Vector[PartitionLineage])
+    metrics: RoundMetrics)
 
 /** Thrown when a commit loses the optimistic-concurrency race: either the
   * declared parent is no longer the latest snapshot, or another writer
@@ -60,6 +33,25 @@ final case class Snapshot(
   * `latest` and rebase — exactly Iceberg's table-commit contract. */
 final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
+/** Minimal Iceberg-style snapshot log over Parquet (the Iceberg runtime jar
+  * is not available offline — SURVEY.md §7.3): an append-only chain of JSON
+  * manifests under `<dir>/_snapshots/v{N}.json`, each recording
+  *
+  *   - snapshot id + parent id + crawl round,
+  *   - the cumulative list of seen-set delta paths (the seen table is the
+  *     union of its deltas),
+  *   - the current frontier path,
+  *   - fetch/dedup metrics for the round,
+  *
+  * giving the north_rule's resume semantics: a killed job re-reads the
+  * latest manifest and continues with identical ordering (every round is a
+  * deterministic function of (seen, frontier, pages, config)). Commits are
+  * atomic via write-to-temp + CREATE_NEW hard link, with an optimistic
+  * parent-must-be-latest check — two interleaved writers cannot silently
+  * last-writer-win ([[CommitConflictException]]). Fields a manifest
+  * carries beyond [[Snapshot]]'s (older manifests have a `lineage` array)
+  * are ignored on read.
+  */
 final class SnapshotLog(val dir: String) {
   private val snapDir = Paths.get(dir, "_snapshots")
   Files.createDirectories(snapDir)
@@ -106,8 +98,7 @@ final class SnapshotLog(val dir: String) {
          ("dedupDropped" -> s.metrics.dedupDropped) ~
          ("newSeen" -> s.metrics.newSeen) ~ ("seenTotal" -> s.metrics.seenTotal) ~
          ("frontierNext" -> s.metrics.frontierNext) ~
-         ("wallMillis" -> s.metrics.wallMillis))) ~
-      ("lineage" -> s.lineage.map(l => ("partition" -> l.partition) ~ ("rows" -> l.rows)))
+         ("wallMillis" -> s.metrics.wallMillis)))
     val bytes = JsonMethods.pretty(JsonMethods.render(j)).getBytes("UTF-8")
     // Optimistic-concurrency CAS (VERDICT r5 #6 — Iceberg's core commit
     // guarantee): (1) the declared parent must still be the latest

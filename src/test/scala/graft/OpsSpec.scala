@@ -88,35 +88,64 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.exists(p => p._1 == 0L && p._2 == 1L))
   }
 
-  test("simhash block bucketing is COMPLETE for the promised radius " +
-       "(distance-5 pair spanning all four old quarters must be found)") {
-    // bits 2, 18, 34, 50, 60 touch every 16-bit quarter — the round-1
-    // 4-quarter scheme missed this pair at maxHamming=6 (VERDICT.md #2)
+  test("hammingPairs is COMPLETE for the promised radius: ≡ brute-force " +
+       "hamming_words on 64- and 128-bit sketches, radius 0 included, " +
+       "under both key schemes") {
+    // bits 2, 18, 34, 50, 60 touch every 16-bit quarter of the sketch: a
+    // 4-quarter scheme misses this distance-5 pair at radius 6, the h+1
+    // single blocks and the h+2 block pairs must not
     val base = 0x0123456789abcdefL
     val diff = base ^ ((1L << 2) | (1L << 18) | (1L << 34) | (1L << 50) | (1L << 60))
     assert(java.lang.Long.bitCount(base ^ diff) == 5)
-    val fps = Seq((0L, base), (1L, diff), (2L, ~base)).toDF("doc_id", "sh")
-    val pairs = T.simhashPairsFromFps(fps, maxHamming = 6)
-      .as[(Long, Long, Long)].collect()
-    assert(pairs.toSeq == Seq((0L, 1L, 5L)))
-    // exhaustive property: every pair within the radius is produced, for a
-    // fingerprint cloud around a few centers
-    val rnd = new scala.util.Random(7)
-    val centers = Seq(0L, -1L, 0x5555555555555555L)
-    val cloud = (0 until 60).map { i =>
-      val c = centers(i % centers.size)
-      var v = c
-      (0 until rnd.nextInt(9)).foreach(_ => v ^= 1L << rnd.nextInt(64))
-      (i.toLong, v)
+    val quarters = Seq((0L, Seq(base)), (1L, Seq(diff)), (2L, Seq(~base))).toDF("doc_id", "sh")
+    for (blockPairs <- Seq(false, true))
+      assert(T.hammingPairs(quarters, 64, 6, blockPairs).as[(Long, Long, Long)]
+        .collect().toSeq == Seq((0L, 1L, 5L)), s"blockPairs=$blockPairs")
+
+    // 64-bit clouds: up to 8 random bit flips around a few centers (a flip
+    // count of 0 gives exact duplicates of a center)
+    def cloud(seed: Int, n: Int, centers: Seq[Long]) = {
+      val rnd = new scala.util.Random(seed)
+      (0 until n).map { i =>
+        var v = centers(i % centers.size)
+        (0 until rnd.nextInt(9)).foreach(_ => v ^= 1L << rnd.nextInt(64))
+        (i.toLong, Seq(v))
+      }.toDF("doc_id", "sh").localCheckpoint(true)
     }
-    val fdf = cloud.toDF("doc_id", "sh")
-    val got = T.simhashPairsFromFps(fdf, maxHamming = 6)
-      .as[(Long, Long, Long)].collect().map(p => (p._1, p._2)).toSet
-    val want = (for {
-      (i, a) <- cloud; (j, b) <- cloud
-      if i < j && java.lang.Long.bitCount(a ^ b) <= 6
-    } yield (i, j)).toSet
-    assert(got == want)
+    val cloudA = cloud(7, 60, Seq(0L, -1L, 0x5555555555555555L))
+    val cloudB = cloud(13, 50, Seq(0L, -1L, 0x0f0f0f0f0f0f0f0fL))
+    // 128-bit SRP sketches of 120 seeded random vectors (random pairs sit
+    // ~64 bits apart): at radius 10 a pair key keeps 2·128/12 = 21 bits,
+    // at radius 70 only 3
+    val gauss = new scala.util.Random(3)
+    val srp = (0 until 120).map(i => (i.toLong, Seq.fill(32)(gauss.nextGaussian())))
+      .toDF("doc_id", "v")
+      .select(col("doc_id"), gfn.srp_sketch_n(col("v"), 2).as("sh"))
+      .localCheckpoint(true)
+    // (name, sketches, nbits, radius, brute force must find pairs)
+    val cases = Seq(
+      ("cloud A", cloudA, 64, 6, true), ("cloud B", cloudB, 64, 6, true),
+      ("cloud A", cloudA, 64, 0, true),
+      ("srp", srp, 128, 10, false), ("srp", srp, 128, 70, true),
+      ("srp", srp, 128, 0, false))
+    for ((name, sketches, nbits, radius, nonEmpty) <- cases) {
+      val brute = sketches.toDF("a", "sa").crossJoin(sketches.toDF("b", "sb"))
+        .filter(col("a") < col("b"))
+        .select(col("a"), col("b"),
+          gfn.hamming_words(col("sa"), col("sb")).cast("long").as("hamming"))
+        .filter(col("hamming") <= radius)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(brute.nonEmpty == nonEmpty, s"$name radius $radius")
+      for (blockPairs <- Seq(false, true)) {
+        val got = T.hammingPairs(sketches, nbits, radius, blockPairs)
+          .as[(Long, Long, Long)].collect().toSet
+        assert(got == brute, s"$name nbits $nbits radius $radius blockPairs $blockPairs")
+      }
+    }
+    // radius range: below nbits for single keys, at most nbits − 2 for pairs
+    intercept[IllegalArgumentException](T.hammingPairs(cloudA, 64, 64, blockPairs = false))
+    intercept[IllegalArgumentException](T.hammingPairs(cloudA, 64, 63, blockPairs = true))
+    intercept[IllegalArgumentException](T.hammingPairs(cloudA, 64, -1, blockPairs = false))
   }
 
   test("winnow fingerprints: shared k-grams overlap for near dups") {
@@ -229,22 +258,19 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("srpRadiusFor: auto radius = boundary mean + 4 sigma, capped at 31 " +
-       "(bucket-collapse bound); measured calibration points pinned") {
+  test("srpRadiusForN at 64 bits: auto radius = boundary mean + 4 sigma; " +
+       "measured calibration points pinned") {
     // threshold 0.9: θ = 25.84° ⇒ p = 0.1436 ⇒ mean 9.19, σ 2.81 ⇒ 21
-    assert(T.srpRadiusFor(0.9) == 21)
-    // the r5 measurement: fixed radius 16 ⇒ 1995/2000 at the 0.9 boundary;
-    // the auto radius must clear the measured worst pair (hamming ≤ 21 at
-    // cos 0.9165 over 2000 deterministic pairs — gate-verified at sf0.1)
-    assert(T.srpRadiusFor(0.9) > 16)
+    assert(T.srpRadiusForN(0.9, 64) == 21)
+    // a fixed radius 16 measured 1995/2000 at the 0.9 boundary; the auto
+    // radius must clear the measured worst pair (hamming ≤ 21 at cos
+    // 0.9165 over 2000 deterministic pairs — gate-verified at sf0.1)
+    assert(T.srpRadiusForN(0.9, 64) > 16)
     // deeper thresholds need smaller radii (monotone in threshold)
-    assert(T.srpRadiusFor(0.95) < T.srpRadiusFor(0.9))
-    assert(T.srpRadiusFor(0.99) < T.srpRadiusFor(0.95))
-    // research-low thresholds hit the pigeonhole cap (≤2-bit blocks would
-    // collapse buckets — round-2 failure mode): explicit radius territory
-    assert(T.srpRadiusFor(0.4) == 31)
+    assert(T.srpRadiusForN(0.95, 64) < T.srpRadiusForN(0.9, 64))
+    assert(T.srpRadiusForN(0.99, 64) < T.srpRadiusForN(0.95, 64))
     // sigma knob: 0σ = just the boundary mean
-    assert(T.srpRadiusFor(0.9, sigmas = 0.0) == 10) // ceil(9.19)
+    assert(T.srpRadiusForN(0.9, 64, sigmas = 0.0) == 10) // ceil(9.19)
   }
 
   test("srpRadiusForN: wide-sketch radius math pinned; auto width escapes " +
@@ -253,12 +279,10 @@ class OpsSpec extends AnyFunSuite {
     // σ 5.46 ⇒ ceil(47.23 + 4·5.46) = 70
     assert(T.srpRadiusForN(0.4, 128) == 70)
     // the SAME math at 64 bits says 40 — past the pigeonhole collapse
-    // bound 31, which is WHY srpRadiusFor caps there and the auto path in
-    // cosineDupPairsLsh must widen the sketch instead (r5's 893/920)
+    // bound 31, which is WHY the auto path in cosineDupPairsLsh widens the
+    // sketch there (a 64-bit radius 30 measured 893/920 recall)
     assert(T.srpRadiusForN(0.4, 64) == 40)
-    assert(T.srpRadiusFor(0.4) == 31)
-    // production threshold: uncapped 64-bit value ≡ the capped pin (21),
-    // so the auto path keeps the proven 64-bit branch there
+    // production threshold: 21 ≤ 31, so the auto path keeps 64 bits there
     assert(T.srpRadiusForN(0.9, 64) == 21)
     // relative radius shrinks with bits (σ/mean ∝ 1/√nbits): that shrink
     // is the entire value of the wide sketch
@@ -285,33 +309,6 @@ class OpsSpec extends AnyFunSuite {
         (bit_count(element_at(col("wa"), 1).bitwiseXOR(element_at(col("wb"), 1))) +
          bit_count(element_at(col("wa"), 2).bitwiseXOR(element_at(col("wb"), 2)))))
     assert(bad.count() == 0)
-  }
-
-  test("wide SRP pairs: blocked candidates ≡ brute-force hamming at both a " +
-       "two-stage and a degenerate single-stage radius") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(120)
-      .select(col("vec_id").as("doc_id"),
-        gfn.srp_sketch_n(
-          transform(col("embedding"), x => x.cast("double")), 2).as("sh"))
-      .localCheckpoint(true)
-    // radius 10 ⇒ pair keys 2·128/12 = 21 bits ⇒ two-stage; radius 70 ⇒
-    // pair keys would be 3 bits ⇒ single-stage. Pigeonhole completeness
-    // must make BOTH byte-identical to the all-pairs hamming filter.
-    val a = emb.toDF("ia", "wa")
-    val b = emb.toDF("ib", "wb")
-    val all = a.crossJoin(b).filter(col("ia") < col("ib"))
-      .select(col("ia").as("a"), col("ib").as("b"),
-        gfn.hamming_words(col("wa"), col("wb")).cast("long").as("hamming"))
-      .localCheckpoint(true)
-    for (radius <- Seq(10, 70)) {
-      val brute = all.filter(col("hamming") <= radius)
-        .as[(Long, Long, Long)].collect().toSet
-      val blocked = T.simhashPairsFromFpsWide(emb, 128, radius)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(blocked == brute, s"radius $radius")
-      if (radius == 70) assert(brute.nonEmpty)
-    }
   }
 
   test("research-threshold LSH (auto 128-bit branch) ≡ exact pairs on the " +
@@ -416,23 +413,6 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.9, s"recall $recall below 0.9 at 10% probe fraction")
   }
 
-  test("two-stage simhash banding (block pairs) produces the identical pair set") {
-    val rnd = new scala.util.Random(13)
-    val centers = Seq(0L, -1L, 0x0f0f0f0f0f0f0f0fL)
-    val cloud = (0 until 50).map { i =>
-      var v = centers(i % centers.size)
-      (0 until rnd.nextInt(9)).foreach(_ => v ^= 1L << rnd.nextInt(64))
-      (i.toLong, v)
-    }
-    val fdf = cloud.toDF("doc_id", "sh")
-    val single = T.simhashPairsFromFps(fdf, maxHamming = 6)
-      .as[(Long, Long, Long)].collect().toSet
-    val twoStage = T.simhashPairsFromFpsTwoStage(fdf, maxHamming = 6)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(twoStage == single)
-    assert(single.nonEmpty)
-  }
-
   test("embedding-cosine dup pairs: SRP-LSH recovers the exact pairs on a clustered corpus") {
     // deterministic clustered vectors: 8 centers × 5 members with small
     // perturbation → within-cluster cos ≈ 0.99, across ≈ orthogonal
@@ -479,16 +459,16 @@ class OpsSpec extends AnyFunSuite {
     assert(T.minhashLshPairs(dups, maxBandDf = 0).count() == 30L * 29 / 2)
     assert(T.minhashLshPairs(dups, maxBandDf = 10).count() == 0)
 
-    // and on the three SimHash block joins: 30 docs with one fingerprint
-    val sameFp = (0L until 30L).map(i => (i, 0x5a5a5a5a5a5a5a5aL)).toDF("doc_id", "sh")
-    assert(T.simhashPairsFromFps(sameFp, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
-    assert(T.simhashPairsFromFps(sameFp, 6, maxBucketDf = 10).count() == 0)
-    assert(T.simhashPairsFromFpsTwoStage(sameFp, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
-    assert(T.simhashPairsFromFpsTwoStage(sameFp, 6, maxBucketDf = 10).count() == 0)
-    val sameWide = (0L until 30L).map(i => (i, Seq(0x5a5a5a5a5a5a5a5aL, -7L)))
-      .toDF("doc_id", "sh")
-    assert(T.simhashPairsFromFpsWide(sameWide, 128, 6, maxBucketDf = 0).count() == 30L * 29 / 2)
-    assert(T.simhashPairsFromFpsWide(sameWide, 128, 6, maxBucketDf = 10).count() == 0)
+    // and on the Hamming join, both widths and key schemes: 30 docs with
+    // one sketch
+    for { sh <- Seq(Seq(0x5a5a5a5a5a5a5a5aL), Seq(0x5a5a5a5a5a5a5a5aL, -7L))
+          blockPairs <- Seq(false, true) } {
+      val same = (0L until 30L).map(i => (i, sh)).toDF("doc_id", "sh")
+      assert(T.hammingPairs(same, 64 * sh.size, 6, blockPairs, maxBucketDf = 0)
+        .count() == 30L * 29 / 2)
+      assert(T.hammingPairs(same, 64 * sh.size, 6, blockPairs, maxBucketDf = 10)
+        .count() == 0)
+    }
 
     // default caps are no-ops on the sf0.001 fixture corpus (df ≪ cap)
     val fix = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -543,12 +523,13 @@ class OpsSpec extends AnyFunSuite {
   test("Spark jobs per pairwise dedup op are pinned on the sf0.001 fixture") {
     def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def sims = docs.select(col("doc_id"), gfn.simhash_md5(T.wsTokens(col("text"))).as("sh"))
+    def sims = docs.select(col("doc_id"),
+      array(gfn.simhash_md5(T.wsTokens(col("text")))).as("sh"))
     val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "jaccardPairs" -> (() => T.jaccardPairs(docs, 0.4)),
       "minhashLshPairs" -> (() => T.minhashLshPairs(docs)),
       "simhashPairs" -> (() => T.simhashPairs(docs, maxHamming = 6)),
-      "simhashPairsFromFpsTwoStage" -> (() => T.simhashPairsFromFpsTwoStage(sims, maxHamming = 6)),
+      "hammingPairs blockPairs" -> (() => T.hammingPairs(sims, 64, 6, blockPairs = true)),
       "winnowPairs" -> (() => T.winnowPairs(docs, minShared = 60)),
       "cosineDupPairsLsh 0.9" -> (() => T.cosineDupPairsLsh(emb, 0.9)),
       "cosineDupPairsLsh 0.4" -> (() => T.cosineDupPairsLsh(emb, 0.4)))
@@ -558,7 +539,7 @@ class OpsSpec extends AnyFunSuite {
       name -> SparkJobs.count(spark.sparkContext)(op().collect()) }.toMap
     assert(got == Map(
       "jaccardPairs" -> 13, "minhashLshPairs" -> 11, "simhashPairs" -> 11,
-      "simhashPairsFromFpsTwoStage" -> 10, "winnowPairs" -> 11,
+      "hammingPairs blockPairs" -> 10, "winnowPairs" -> 11,
       "cosineDupPairsLsh 0.9" -> 14, "cosineDupPairsLsh 0.4" -> 15))
   }
 

@@ -47,7 +47,8 @@ class ResumeSpec extends AnyFunSuite with TimeLimits {
     assert(resTail == fullTail)
   }
 
-  test("snapshot manifests: chained ids, cumulative deltas, lineage rows sum to delta size") {
+  test("snapshot manifests: chained ids, cumulative deltas; a manifest with " +
+       "the dropped lineage field still reads") {
     val dir = Files.createTempDirectory("graft-snap").toString
     Crawler.run(spark, pagesDf,
       CrawlConfig(seeds, filter, maxRounds = 3, workDir = Some(dir)))
@@ -59,23 +60,37 @@ class ResumeSpec extends AnyFunSuite with TimeLimits {
     snaps.foreach { s =>
       assert(s.seenDeltaPaths.size == s.round + 1) // cumulative
       val deltaRows = spark.read.parquet(s.seenDeltaPaths.last).count()
-      assert(s.lineage.map(_.rows).sum == deltaRows)
       assert(s.metrics.newSeen == deltaRows)
     }
     // seenCount is monotone and equals the union of deltas
     assert(snaps.map(_.seenCount) == snaps.map(_.seenCount).sorted)
     val totalSeen = spark.read.parquet(snaps.last.seenDeltaPaths: _*).count()
     assert(totalSeen == snaps.last.seenCount)
+
+    // manifests used to carry per-file row counts ("lineage"); they must
+    // still read, with the field ignored
+    import graft.snapshot.{RoundMetrics, Snapshot}
+    val old = Files.createTempDirectory("graft-snap-old")
+    Files.createDirectories(old.resolve("_snapshots"))
+    Files.writeString(old.resolve("_snapshots/v0.json"),
+      """{"id": 0, "parentId": -1, "round": 0, "seenDeltaPaths": ["d0"],
+        | "frontierPath": "f0", "seenCount": 3, "configHash": "cfg",
+        | "metrics": {"round": 0, "selected": 1, "fetched": 1, "linksExtracted": 4,
+        |   "dedupDropped": 0, "newSeen": 3, "seenTotal": 3, "frontierNext": 2,
+        |   "wallMillis": 9},
+        | "lineage": [{"partition": 0, "rows": 2}, {"partition": 1, "rows": 1}]}""".stripMargin)
+    assert(new SnapshotLog(old.toString).read(0) == Snapshot(0, -1, 0, Vector("d0"), "f0",
+      3L, "cfg", RoundMetrics(0, 1, 1, 4, 0, 3, 3, 2, 9)))
   }
 
   test("snapshot commit CAS: two interleaved committers — exactly one wins, " +
        "the loser gets CommitConflictException, no manifest is lost") {
-    import graft.snapshot.{CommitConflictException, PartitionLineage, RoundMetrics, Snapshot}
+    import graft.snapshot.{CommitConflictException, RoundMetrics, Snapshot}
     val dir = Files.createTempDirectory("graft-cas").toString
     val log = new SnapshotLog(dir)
     def snap(id: Int, parent: Int, tag: Long) = Snapshot(id, parent, id,
       Vector(s"d$id"), s"f$id", tag, "cfg",
-      RoundMetrics(id, tag, 0, 0, 0, 0, tag, 0, 0), Vector(PartitionLineage(0, tag)))
+      RoundMetrics(id, tag, 0, 0, 0, 0, tag, 0, 0))
     log.commit(snap(0, -1, 100L))
 
     // sequential interleave: B sees A's v1 already at HEAD → stale parent
