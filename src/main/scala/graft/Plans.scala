@@ -16,7 +16,7 @@ import graft.rank.{PageRankSpark, Searcher}
 /** Untimed physical-plan audit, `sbt "runMain graft.Plans"`: prints
   * `.explain(formatted)` for the load-bearing lazy operators, and the
   * executed plans of one governed crawl round, of the eager dedup ops and
-  * of one serve bound into a cached query shape, so plan quality
+  * of one query bound into its shape's cached serve plan, so plan quality
   * (pushdown, pruning, broadcast, DPP, codegen spans) is inspectable — see
   * PLANS.md for the curated findings. Timing belongs to perfbench. */
 object Plans {
@@ -129,15 +129,15 @@ object Plans {
       executed(spark, s"$q (eager)")(SparkEntry.queries(q)(spark, sf))
     val prepared = Searcher.prepare(idx,
       PageRankSpark.run(idx.links, idx.urlDict.select("url_id"), 5))
-    // the serve runs on the prepared state's own session; the audited query
-    // is bound into the plan its shape cached at the first query, so its
-    // ids, stems and length show as parameters, never as literals
+    // the serve runs no QueryExecution per query, so no listener sees it:
+    // the audited plan is the copy of the executed plan its shape cached at
+    // the first query, with a second query's ids, stems and length bound in
+    // as parameters, never as literals
     try {
       Searcher.search(spark, prepared, "\"hong kong\" networks")
-      executed(prepared.serve, "serve: one scoring job over the prepared leaves, " +
-          "a query bound into its shape's cached plan") {
-        Searcher.search(spark, prepared, "\"hong kong\" research")
-      }
+      println("\n===== serve: the executed plan of a query bound into its shape's " +
+        "cached plan, one scoring job over the prepared leaves =====")
+      println(Searcher.boundPlan(prepared, "\"hong kong\" research", 50).get.treeString)
     } finally prepared.close()
 
     // PageRank §8: the weighted edge table is repartition(src)+persisted —

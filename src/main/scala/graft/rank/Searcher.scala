@@ -3,10 +3,13 @@ package graft.rank
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
@@ -32,13 +35,28 @@ import graft.text.TextPipeline
   *    on url_id to the serve session's shuffle partitions, so the scoring
   *    aggregate and the statics join need no exchange of a prepared table;
   *  - no per-query cache: a query leaves nothing persisted behind;
-  *  - one plan per query shape ([[Shape]]): it is analyzed, optimized and
-  *    compiled at the shape's first query, and kept on the Prepared;
+  *  - one executed plan per query shape ([[Shape]]): it is analyzed,
+  *    optimized, planned and compiled at the shape's first query, and kept
+  *    on the Prepared until close();
   *  - values bound per query: word ids, multiplicities, phrases, stems and
   *    the query length are [[QueryParam]]s, never source literals, so a
   *    new query of a known shape compiles no class;
-  *  - a fresh physical plan per query, planned from the bound optimized
-  *    plan: an executed plan's shuffle output is never served again.
+  *  - a deep copy of that plan per query, with the query's values bound
+  *    into the copy, so no plan node, and no exchange with its shuffle
+  *    output, is shared between two runs. A copy still points where a
+  *    reused node points, so the serve session reuses no exchange, and a
+  *    shape's plan may hold no reused, broadcast or adaptive node
+  *    ([[sharedNodes]]);
+  *  - no analysis, optimization or physical planning per query, and a
+  *    serve query posts no SQL-execution events;
+  *  - the scoring join runs once: the mean score is a window aggregate
+  *    over the scored rows. At one serve partition (every index of up to
+  *    50,000 documents) the window needs no exchange. Above one, it
+  *    gathers the matched rows into one task, where a cartesian product
+  *    with a one-row aggregate scored each partition in place but ran the
+  *    scoring join a second time under that aggregate; at 20,000 pages and
+  *    4 partitions the window plan still served a term query in 29–108 ms
+  *    against 65–134 ms.
   *
   * Exactness notes:
   *  - single-word score = mult · tf · tfidf_r6 (the reference scatter-adds
@@ -64,9 +82,10 @@ object Searcher {
                             statics: DataFrame, postingsTfidf: DataFrame,
                             serve: SparkSession, viewNames: Seq[String],
                             wordIdLocal: Option[Map[String, Long]] = None) {
-    /** The optimized scoring plan of each query [[Shape]] served so far,
-      * built at that shape's first query. */
-    private[rank] val plans = new ConcurrentHashMap[Shape, LogicalPlan]()
+    /** The executed scoring plan of each query [[Shape]] served so far,
+      * built at that shape's first query. It is never run itself: each
+      * query runs a deep copy. */
+    private[rank] val plans = new ConcurrentHashMap[Shape, SparkPlan]()
 
     /** Release everything [[prepare]] materialized — the rank cache, the
       * checkpointed statics and postings⋈tfidf blocks, the cached shape
@@ -111,9 +130,10 @@ object Searcher {
     *
     * The serve runs on a DEDICATED session (`spark.newSession()` — own
     * SQLConf, shared SparkContext + cache): the latency-path conf choices
-    * (AQE off, the derived shuffle partitions) are set ONCE there and never
-    * touch the caller's session, so concurrent non-search queries can't observe serve conf and
-    * racing search() calls can't clobber each other. Index tables are
+    * (AQE off, no exchange reuse, the derived shuffle partitions) are set
+    * ONCE there and never touch the caller's session, so concurrent
+    * non-search queries can't observe serve conf and racing search() calls
+    * can't clobber each other. Index tables are
     * rebound onto the serve session through global temp views; the shared
     * CacheManager still substitutes the parent's cached plans. */
   def prepare(index: IndexTables, ranks: DataFrame): Prepared = {
@@ -133,6 +153,11 @@ object Searcher {
     // driver-replanned job behind a materialization barrier, and the
     // one-job-per-query invariant needs the whole DAG scheduled as one job
     serve.conf.set("spark.sql.adaptive.enabled", "false")
+    // no exchange reuse: a query runs a copy of its shape's cached plan, and
+    // a copied ReusedExchange still points at the cached plan's exchange
+    // (two phrases share the forward index's shuffle), so racing queries
+    // would run one node
+    serve.conf.set("spark.sql.exchange.reuse", "false")
     // serve-side shuffle partitioning is derived from the index size: the
     // per-query matched set is ≤ n docs, so ~50k docs/partition, capped at
     // the parent's configured shuffle partitions
@@ -213,7 +238,7 @@ object Searcher {
 
   private def emptyResult(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(
         StructField("rank", IntegerType), StructField("url_id", LongType),
         StructField("url", StringType), StructField("total", DoubleType),
@@ -225,9 +250,9 @@ object Searcher {
     * executes on the Prepared's dedicated serve session — the caller's
     * session conf is never touched. */
   def search(spark: SparkSession, p: Prepared, query: String, topK: Int = 50): DataFrame =
-    scoringPlan(p, query, topK) match {
+    boundPlan(p, query, topK) match {
       case None => emptyResult(p.serve)
-      case Some(top) => collectSerp(p.serve, top)
+      case Some(plan) => collectSerp(p.serve, plan)
     }
 
   /** What a query's scoring plan is built from besides its values: whether
@@ -246,21 +271,42 @@ object Searcher {
   private val StemsSlot = 1
   private def groupSlot(g: Int) = 2 + 3 * g
 
-  /** The scoring plan of `query` on the serve session: the top-K rows
-    * (url_id, url, total, cos, pr, title_score, title) ordered by
+  /** The executed scoring plan of `query` on the serve session: the top-K
+    * rows (url_id, url, total, cos, pr, title_score, title) ordered by
     * (NaN total last, total desc, url_id asc), or None when no query term
-    * resolves. The query's values are bound into its shape's cached
-    * optimized plan, and each call plans a fresh physical plan from it: an
-    * executed plan keeps its shuffle output, so one is never re-run with
-    * new values. */
-  private[graft] def scoringPlan(p: Prepared, query: String, topK: Int): Option[DataFrame] =
+    * resolves. It is a deep copy of its shape's cached executed plan with
+    * the query's values bound into it: an executed plan keeps its shuffle
+    * output, and code generation records each node's parent on the node,
+    * so two runs never share a node. */
+  private[graft] def boundPlan(p: Prepared, query: String, topK: Int): Option[SparkPlan] =
     resolve(p, query, topK).map { q =>
-      val plan = p.plans.computeIfAbsent(q.shape,
-        _ => shapePlan(p, q).queryExecution.optimizedPlan)
-      Bridge.ofRows(p.serve, plan.transformAllExpressions {
-        case QueryParam(slot, dt, _) => QueryParam(slot, dt, q.values(slot))
-      })
+      p.plans.computeIfAbsent(q.shape, _ => executedShapePlan(shapePlan(p, q)))
+        .clone()
+        .transformAllExpressions {
+          case QueryParam(slot, dt, _) => QueryParam(slot, dt, q.values(slot))
+        }
     }
+
+  /** The nodes of `plan` that a bound copy would share with the plan it
+    * was copied from, or whose result another run could see: reused
+    * exchanges and subqueries (binding does not reach the node a reused
+    * one points at), subquery expressions, broadcast exchanges and
+    * adaptive plans (both re-plan or cache at run time). */
+  private[graft] def sharedNodes(plan: SparkPlan): Seq[String] =
+    plan.collectWithSubqueries {
+      case n @ (_: ReusedExchangeExec | _: ReusedSubqueryExec | _: BroadcastExchangeExec |
+                _: AdaptiveSparkPlanExec) => n.nodeName
+      case n if n.subqueries.nonEmpty => s"${n.nodeName} with a subquery"
+    }
+
+  /** `df`'s executed plan, required to hold no [[sharedNodes]]. */
+  private def executedShapePlan(df: DataFrame): SparkPlan = {
+    val plan = df.queryExecution.executedPlan
+    val shared = sharedNodes(plan)
+    require(shared.isEmpty, "a serve plan must share no node between queries: " +
+      s"${shared.mkString(", ")}\n${plan.treeString}")
+    plan
+  }
 
   /** Driver-side query analysis (queries are tiny): stems → word ids with
     * the phrase-kill rule (Ranker.kt:100-119), and the parameter values. */
@@ -352,17 +398,17 @@ object Searcher {
         .otherwise(col("raw") / norm))
 
     // meanScore (Σ score / 3n — the reference's driver-side mean) is a
-    // 1-row aggregate replicated to every scoring partition by a cartesian
-    // product, so it stays inside the SERP's job. statics' keyset equals
-    // docLen's, so aggregating over the statics join changes no rows.
-    val stats = joined.agg(
-      (sum("score") / (count(lit(1)) * 3)).as("mean_score"))
+    // window aggregate over every scored row, so it stays inside the SERP's
+    // job and the scoring join runs once. statics' keyset equals docLen's,
+    // so aggregating over the statics join changes no rows.
+    val all = Window.partitionBy()
+    val meanScore = sum("score").over(all) / (count(lit(1)).over(all) * 3)
 
     // -- final scoring (WebController.kt:60-83): the title score adds the
     // mean once per matching stem, so no match scores 0.0 even when the
     // mean is NaN ------------------------------------------------------------
-    val scored = joined.hint("shuffle_replicate_nl")
-      .crossJoin(stats)
+    val scored = joined
+      .withColumn("mean_score", meanScore)
       .withColumn("cos", col("score") / col("max_tf"))
       .withColumn("pr", col("rank") / lit(p.maxPR * 3))
       .withColumn("title_hits",
@@ -382,21 +428,23 @@ object Searcher {
       .limit(q.shape.topK)
   }
 
-  /** Runs the scoring plan as one job and returns the SERP as a
+  /** Runs the bound scoring plan as one job and returns the SERP as a
     * LocalRelation with the 1-based `rank` column prepended — ≤ topK rows,
     * and a broadcastable local table for downstream joins (serpDetails). */
-  private def collectSerp(spark: SparkSession, top: DataFrame): DataFrame = {
-    val collected = top.collect()
+  private def collectSerp(spark: SparkSession, plan: SparkPlan): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(plan.schema)
+    val collected = Bridge.withSessionConf(spark)(plan.executeCollect())
+      .map(toRow(_).asInstanceOf[Row])
     if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
     // re-assert the order driver-side (TakeOrderedAndProject returns rows
     // already ordered; this is a ≤ topK-element no-op guard, not a sort job)
     val ordered = collected.sortBy(r => (r.getDouble(2).isNaN, -r.getDouble(2), r.getLong(0)))
-    val rows: Seq[org.apache.spark.sql.Row] = ordered.zipWithIndex.map {
-      case (r, i) => org.apache.spark.sql.Row.fromSeq((i + 1) +: r.toSeq)
+    val rows: Seq[Row] = ordered.zipWithIndex.map {
+      case (r, i) => Row.fromSeq((i + 1) +: r.toSeq)
     }.toSeq
     val schema = org.apache.spark.sql.types.StructType(
       org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false) +: top.schema.fields)
+        org.apache.spark.sql.types.IntegerType, nullable = false) +: plan.schema.fields)
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), schema)
   }

@@ -3,9 +3,9 @@ package org.apache.spark.sql.graft
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Bridge into the `private[sql]` Column↔Expression converters of Spark 4's
   * classic module — the supported way for third-party Catalyst expressions
@@ -15,10 +15,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** A DataFrame over `plan` on `session`: a fresh QueryExecution, so a
-    * fresh physical plan, for a logical plan built elsewhere. */
-  def ofRows(session: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
-    Dataset.ofRows(session.asInstanceOf[SparkSession], plan)
+  /** Runs `body`, which executes a physical plan directly, with `session`
+    * active on the driver and its SQL conf propagated to the tasks, as a
+    * Dataset action would. No QueryExecution is made, so nothing is
+    * analyzed, optimized or planned, and no SQL-execution event is posted. */
+  def withSessionConf[T](session: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val s = session.asInstanceOf[SparkSession]
+    s.withActive(SQLExecution.withSQLConfPropagated(s)(body))
+  }
 
   /** An eager local checkpoint of `df` whose logical statistics are the
     * size of its stored blocks. `Dataset.localCheckpoint` keeps the source

@@ -318,17 +318,21 @@ class EngineOracleSpec extends AnyFunSuite {
       PageRankSpark.run(engineIndex.links, engineIndex.urlDict.select("url_id"), 40))
     val oracleRanks = ReferenceOracle.pageRank(oracleIndex, 40)
     try {
+      // one phrase, then terms plus a phrase: each shape serves a copy of
+      // its cached plan to distinct values in turn
       val phrases = Seq("\"hong kong\"", "\"crawler indexing\"", "\"databases research\"",
-        "\"hong kong\"")
+        "\"hong kong\"", "\"hong kong\" research", "networks \"crawler indexing\"",
+        "systems \"databases research\"", "\"hong kong\" computing", "\"hong kong\" research")
       phrases.foreach(q => assert(ReferenceOracle.search(q, oracleIndex, oracleRanks).nonEmpty, q))
       phrases.foreach(assertSerp(prepared, oracleIndex, oracleRanks, _))
     } finally prepared.close()
   }
 
-  test("search: a matched zero-length document scores NaN as in the oracle, " +
-       "NaN totals ranked after every finite total") {
-    // "alpha" is on every page, so its idf is 0; p1 and p4 hold only
-    // "alpha", so their tf-idf length is 0 and the normalization is 0/0
+  /** A five-page corpus with two matched zero-length documents: "alpha" is
+    * on every page, so its idf is 0; p1 and p4 hold only "alpha", so their
+    * tf-idf length is 0 and the normalization is 0/0. The oracle index and
+    * ranks, and the engine index. */
+  private lazy val zero: (ReferenceOracle.Index, Array[Double], graft.index.IndexTables) = {
     val site = "https://zero.test/"
     def page(path: String, title: Option[String], body: String, links: Seq[String]) = {
       val html = "<html><head>" + title.fold("")(t => s"<title>$t</title>") +
@@ -351,8 +355,13 @@ class EngineOracleSpec extends AnyFunSuite {
     assert(oIdx.docLen.values.count(_ == 0.0) == 2, "the fixture needs two zero-length documents")
 
     val zDf = spark.createDataset(zPages).toDF()
-    val zIdx = Indexer.build(spark, zDf,
-      Crawler.run(spark, zDf, CrawlConfig(Seq(site), zFilter)).seen, zFilter, partitions = 4)
+    (oIdx, oRanks, Indexer.build(spark, zDf,
+      Crawler.run(spark, zDf, CrawlConfig(Seq(site), zFilter)).seen, zFilter, partitions = 4))
+  }
+
+  test("search: a matched zero-length document scores NaN as in the oracle, " +
+       "NaN totals ranked after every finite total") {
+    val (oIdx, oRanks, zIdx) = zero
     val prepared = Searcher.prepare(zIdx,
       PageRankSpark.run(zIdx.links, zIdx.urlDict.select("url_id"), 40))
     try {
@@ -365,6 +374,35 @@ class EngineOracleSpec extends AnyFunSuite {
       // a top-K cut above the NaN rows keeps only finite ones
       assertSerp(prepared, oIdx, oRanks, "alpha", alpha.count(t => !t.isNaN))
     } finally prepared.close()
+  }
+
+  test("search: at 4 serve partitions, term, multi-term, phrase and " +
+       "template SERPs match the oracle") {
+    // a copy of a Prepared whose leaves are re-materialized at 4 url_id
+    // partitions, served at 4 shuffle partitions: the mean score's window
+    // then gathers the scored rows across partitions
+    def at4(p: Searcher.Prepared): Searcher.Prepared = {
+      p.serve.conf.set("spark.sql.shuffle.partitions", "4")
+      def leaf(df: DataFrame) = Bridge.localCheckpoint(df.repartition(4, col("url_id")))
+      p.copy(statics = leaf(p.statics), postingsTfidf = leaf(p.postingsTfidf))
+    }
+    def check(index: graft.index.IndexTables, oIdx: ReferenceOracle.Index,
+              oRanks: Array[Double], queries: Seq[String]): Unit = {
+      val p = Searcher.prepare(index,
+        PageRankSpark.run(index.links, index.urlDict.select("url_id"), 40))
+      val p4 = at4(p)
+      try {
+        assert(Searcher.checkpointRdd(p4.statics).get.getNumPartitions == 4)
+        queries.foreach(assertSerp(p4, oIdx, oRanks, _))
+      } finally { p4.close(); p.close() }
+    }
+    check(engineIndex, oracleIndex, ReferenceOracle.pageRank(oracleIndex, 40),
+      Seq("research", "university networks", "research systems networks", "\"hong kong\"",
+        "\"hong kong\" research", "\"hong kong\" \"crawler indexing\""))
+    // "alpha" is the zero-length corpus's template term: NaN totals
+    val (oIdx, oRanks, zIdx) = zero
+    assert(ReferenceOracle.search("alpha", oIdx, oRanks).exists(_._2.total.isNaN))
+    check(zIdx, oIdx, oRanks, Seq("alpha", "alpha beta", "\"alpha beta\" delta"))
   }
 
   test("titles: lastChild semantics + Unauthorized fallback, engine == oracle, " +

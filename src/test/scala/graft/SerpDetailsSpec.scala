@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -122,6 +124,14 @@ class SerpDetailsSpec extends AnyFunSuite {
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errors.isEmpty, s"concurrent serve threw: ${errors.peek()}")
     queries.foreach(q => assert(results.get(q) == expected(q), s"racing serve changed the SERP of $q"))
+    // racing serves are safe because each runs its own copy of the shape's
+    // plan: code generation records a node's parent on the node, so a node
+    // shared by two runs could read the other query's values
+    val first = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    Searcher.boundPlan(prepared, queries(0), 50).get.foreach(first.add)
+    val second = Searcher.boundPlan(prepared, queries(1), 50).get
+    assert(!second.exists(first.contains), s"two bound plans share a node:\n${second.treeString}")
     // the parent session's conf was never touched by the serves
     assert(spark.conf.get("spark.sql.adaptive.enabled") == parentAqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parentSpBefore)
@@ -167,7 +177,7 @@ class SerpDetailsSpec extends AnyFunSuite {
         assert(rows > 0, s"'$q' must match documents")
         assert(compiled == 0, s"'$q' compiled $compiled classes")
         assert(jobs == 1, s"'$q' ran $jobs jobs")
-        val plan = Searcher.scoringPlan(p, q, 50).get.queryExecution.executedPlan
+        val plan = Searcher.boundPlan(p, q, 50).get
         assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
       }
     } finally p.close()
@@ -177,8 +187,7 @@ class SerpDetailsSpec extends AnyFunSuite {
        "and has no broadcast exchange") {
     val p = Searcher.prepare(eIdx, freshRanks)
     try {
-      val plan: SparkPlan = Searcher.scoringPlan(p, "research systems", 50).get
-        .queryExecution.executedPlan
+      val plan: SparkPlan = Searcher.boundPlan(p, "research systems", 50).get
       assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
       val staticsRdd = Searcher.checkpointRdd(p.statics).get.id
       val leafRdds = Set(staticsRdd, Searcher.checkpointRdd(p.postingsTfidf).get.id)
@@ -198,6 +207,31 @@ class SerpDetailsSpec extends AnyFunSuite {
       plan.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
         assert(!e.child.collectLeaves().forall(isStatics), plan.treeString)
       }
+    } finally p.close()
+  }
+
+  test("serve plans: each shape kind's cached plan shares no node between " +
+       "queries, and the guard flags a reused exchange and an adaptive plan") {
+    val p = Searcher.prepare(eIdx, freshRanks)
+    try {
+      // single terms, one phrase, terms plus a phrase, two phrases
+      Seq("research systems", "\"hong kong\"", "\"hong kong\" research",
+          "\"hong kong\" \"crawler indexing\"").foreach { q =>
+        val plan = Searcher.boundPlan(p, q, 50).get
+        assert(Searcher.sharedNodes(plan).isEmpty, plan.treeString)
+        assert(plan.exists(_.isInstanceOf[WindowExec]), s"'$q' has no window:\n${plan.treeString}")
+        assert(!plan.exists(_.isInstanceOf[CartesianProductExec]), plan.treeString)
+      }
+      // outside the serve session, a self-join reuses its aggregate's exchange
+      val plain = spark.newSession()
+      plain.conf.set("spark.sql.adaptive.enabled", "false")
+      plain.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val agg = plain.range(100).groupBy((col("id") % 3).as("k")).count()
+      val selfJoin = agg.join(agg, "k").queryExecution.executedPlan
+      assert(Searcher.sharedNodes(selfJoin) == Seq("ReusedExchange"), selfJoin.treeString)
+      val adaptive = spark.range(100).groupBy((col("id") % 3).as("k")).count()
+        .queryExecution.executedPlan
+      assert(Searcher.sharedNodes(adaptive) == Seq("AdaptiveSparkPlan"), adaptive.treeString)
     } finally p.close()
   }
 
