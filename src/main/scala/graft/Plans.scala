@@ -129,15 +129,20 @@ object Plans {
       executed(spark, s"$q (eager)")(SparkEntry.queries(q)(spark, sf))
     val prepared = Searcher.prepare(idx,
       PageRankSpark.run(idx.links, idx.urlDict.select("url_id"), 5))
-    // the serve runs no QueryExecution per query, so no listener sees it:
-    // the audited plan is the copy of the executed plan its shape cached at
-    // the first query, with a second query's ids, stems and length bound in
-    // as parameters, never as literals
+    // a serve query runs no QueryExecution, so no listener sees it: the
+    // audited plan is the one each shape kind executed at its first query,
+    // whose RDD every later query of the shape runs again with its own
+    // values in the paramN slots
     try {
-      Searcher.search(spark, prepared, "\"hong kong\" networks")
-      println("\n===== serve: the executed plan of a query bound into its shape's " +
-        "cached plan, one scoring job over the prepared leaves =====")
-      println(Searcher.boundPlan(prepared, "\"hong kong\" research", 50).get.treeString)
+      for ((kind, q) <- Seq("single terms" -> "research systems",
+                            "one phrase" -> "\"hong kong\"",
+                            "terms plus a phrase" -> "\"hong kong\" research",
+                            "two phrases" -> "\"hong kong\" \"crawler indexing\"")) {
+        Searcher.search(spark, prepared, q)
+        println(s"\n===== serve: $kind: the one-stage plan its shape prepared, " +
+          "run as one job per query =====")
+        println(Searcher.shapeRun(prepared, q, 50).get.plan.treeString)
+      }
     } finally prepared.close()
 
     // PageRank §8: the weighted edge table is repartition(src)+persisted —

@@ -12,6 +12,7 @@ object gfn {
 
   def porter_stem(c: Column): Column = column(PorterStemExpr(expression(c)))
   def tokenize_words(c: Column): Column = column(TokenizeWordsExpr(expression(c)))
+  def word_positions(tokens: Column): Column = column(WordPositionsExpr(expression(tokens)))
   def extract_text(html: Column): Column = column(ExtractTextExpr(expression(html)))
   def extract_title(html: Column): Column = column(ExtractTitleExpr(expression(html)))
   def extract_copyright_date(html: Column): Column =
@@ -31,6 +32,9 @@ object gfn {
 
   def count_phrase(words: Column, phrase: Column): Column =
     column(CountPhraseExpr(expression(words), expression(phrase)))
+  /** `count_phrase` over a document's (word_id, positions) postings. */
+  def count_phrase_at(postings: Column, phrase: Column): Column =
+    column(CountPhraseAtExpr(expression(postings), expression(phrase)))
 
   def simhash(tokens: Column): Column = column(SimHashExpr(expression(tokens)))
   def simhash_md5(tokens: Column): Column = column(SimHashMd5Expr(expression(tokens)))

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.{SparkContext, SparkEnv, TaskContext}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
@@ -168,6 +170,76 @@ object ExprImpl {
     }
     count
   }
+
+  /** See [[WordPositionsExpr]]. */
+  def wordPositions(tokens: ArrayData): ArrayData = {
+    val at = new java.util.LinkedHashMap[UTF8String, scala.collection.mutable.ArrayBuilder.ofInt]()
+    var i = 0
+    while (i < tokens.numElements()) {
+      val t = tokens.getUTF8String(i)
+      var positions = at.get(t)
+      if (positions == null) {
+        positions = new scala.collection.mutable.ArrayBuilder.ofInt
+        at.put(t.copy(), positions) // the token may point into a reused buffer
+      }
+      positions.addOne(i)
+      i += 1
+    }
+    val out = new Array[Any](at.size)
+    var j = 0
+    at.forEach { (w, positions) =>
+      out(j) = InternalRow(w, UnsafeArrayData.fromPrimitiveArray(positions.result()))
+      j += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** [[countPhrase]] from positions: a phrase of m words starts at p when
+    * its j-th word occurs at p + j for every j, and the greedy scan over the
+    * sorted starts of its first word skips m positions after each match, as
+    * [[countPhrase]]'s scan does. `postings` holds one (word_id, positions
+    * ascending) struct per word; a phrase word without one matches nothing. */
+  def countPhraseAt(postings: ArrayData, phrase: ArrayData): Int = {
+    val m = phrase.numElements()
+    if (m == 0) return 0
+    val at = new Array[ArrayData](m)
+    var j = 0
+    while (j < m) {
+      val w = phrase.getLong(j)
+      var i = 0
+      while (at(j) == null && i < postings.numElements()) {
+        val p = postings.getStruct(i, 2)
+        if (p.getLong(0) == w) at(j) = p.getArray(1)
+        i += 1
+      }
+      if (at(j) == null) return 0
+      j += 1
+    }
+    var count = 0
+    var next = Int.MinValue // the first start the last match leaves free
+    var s = 0
+    while (s < at(0).numElements()) {
+      val start = at(0).getInt(s)
+      if (start >= next) {
+        j = 1
+        while (j < m && containsSorted(at(j), start + j)) j += 1
+        if (j == m) { count += 1; next = start + m }
+      }
+      s += 1
+    }
+    count
+  }
+
+  private def containsSorted(a: ArrayData, x: Int): Boolean = {
+    var lo = 0
+    var hi = a.numElements() - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val v = a.getInt(mid)
+      if (v < x) lo = mid + 1 else if (v > x) hi = mid - 1 else return true
+    }
+    false
+  }
 }
 
 /** `round6_exact(x DOUBLE) → DOUBLE` — exact-binary-value 6-dp HALF_UP
@@ -222,6 +294,26 @@ case class TokenizeWordsExpr(child: Expression) extends UnaryExpression with Gra
   protected def implCall = "tokenizeWords"
   protected def implEval(v: Any): Any = ExprImpl.tokenizeWords(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `word_positions(tokens ARRAY<STRING>)`: each distinct token with its
+  * positions, ascending, in order of first occurrence — a document's
+  * positional postings before word ids are assigned. */
+case class WordPositionsExpr(child: Expression) extends UnaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = WordPositionsExpr.Type
+  override def prettyName: String = "word_positions"
+  override protected def nullSafeEval(v: Any): Any = ExprImpl.wordPositions(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.wordPositions($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object WordPositionsExpr {
+  val Type: DataType = ArrayType(StructType(Seq(
+    StructField("word", StringType, nullable = false),
+    StructField("positions", ArrayType(IntegerType, containsNull = false), nullable = false))),
+    containsNull = false)
 }
 
 /** Visible text of an html:BINARY page (reference: HTMLParser.kt:102-107
@@ -370,21 +462,78 @@ case class CountPhraseExpr(left: Expression, right: Expression) extends BinaryEx
     copy(left = l, right = r)
 }
 
-/** A per-query value bound into a cached plan. Its generated code reads
-  * the value from the generated class's `references` array, never as a
-  * source literal, so every binding of one plan compiles to the same Java
-  * and hits Janino's cache. It is not foldable, so the optimizer keeps it
-  * a leaf of whatever plan it was bound into. */
-case class QueryParam(slot: Int, dataType: DataType, value: Any) extends LeafExpression {
+/** Non-overlapping phrase count over one document's positional postings:
+  * `postings` holds a (word_id, positions ARRAY<INT>) struct per word of
+  * the document (positions ascending), `phrase` the phrase's word ids in
+  * query order. Equals `count_phrase` over the document's word array. */
+case class CountPhraseAtExpr(left: Expression, right: Expression) extends BinaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "count_phrase_at"
+  override protected def nullSafeEval(postings: Any, phrase: Any): Any =
+    ExprImpl.countPhraseAt(postings.asInstanceOf[ArrayData], phrase.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (w, p) => s"graft.functions.ExprImpl.countPhraseAt($w, $p)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** A per-query value of a plan that is built once and run again for each
+  * query. The value is not in the plan: the job that runs it carries every
+  * parameter of the query as one job-local property
+  * ([[QueryParam.withValues]]), which each task decodes once. Generated code
+  * reads the value into a field of its class when the class is instantiated
+  * inside the task, never as a source literal, so every query of one plan
+  * runs the same generated class. It is not foldable, so the optimizer keeps
+  * it a leaf of whatever plan it is in. */
+case class QueryParam(slot: Int, dataType: DataType) extends LeafExpression {
   override def nullable: Boolean = false
   override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
+  override def eval(input: InternalRow): Any = QueryParam.valueOf(slot)
   override def toString: String = s"param$slot"
   override def sql: String = toString
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj(toString, value, CodeGenerator.boxedType(dataType))
-    val v = if (CodeGenerator.isPrimitiveType(dataType))
-      s"$ref.${CodeGenerator.javaType(dataType)}Value()" else ref
-    ExprCode.forNonNullValue(JavaCode.expression(v, dataType))
+    val read = s"graft.functions.QueryParam$$.MODULE$$.valueOf($slot)"
+    val boxed = CodeGenerator.boxedType(dataType)
+    val init = if (CodeGenerator.isPrimitiveType(dataType))
+      s"(($boxed) $read).${CodeGenerator.javaType(dataType)}Value()" else s"($boxed) $read"
+    val v = ctx.addMutableState(CodeGenerator.javaType(dataType), toString, v => s"$v = $init;")
+    ExprCode.forNonNullValue(JavaCode.variable(v, dataType))
+  }
+}
+
+object QueryParam {
+  /** The job-local property that carries a job's parameter values. */
+  private val Property = "graft.serve.params"
+
+  /** Runs `body` with `values` (Catalyst values, indexed by slot) as the
+    * [[QueryParam]] values of every job it starts on this thread. */
+  def withValues[T](sc: SparkContext, values: IndexedSeq[Any])(body: => T): T = {
+    val bytes = SparkEnv.get.closureSerializer.newInstance().serialize(values.toArray)
+    val previous = sc.getLocalProperty(Property)
+    sc.setLocalProperty(Property,
+      java.util.Base64.getEncoder.encodeToString(JavaUtils.bufferToArray(bytes)))
+    try body finally sc.setLocalProperty(Property, previous)
+  }
+
+  /** The running task's values, decoded at the task's first read. */
+  private val decoded = new ThreadLocal[(Long, Array[Any])]
+
+  /** The value of `slot` in the job of the running task. */
+  def valueOf(slot: Int): Any = {
+    val task = TaskContext.get()
+    require(task != null, s"param$slot is read outside a task")
+    val cached = decoded.get()
+    val values =
+      if (cached != null && cached._1 == task.taskAttemptId()) cached._2
+      else {
+        val encoded = task.getLocalProperty(Property)
+        require(encoded != null, s"param$slot is read by a job run without values")
+        val v = SparkEnv.get.closureSerializer.newInstance().deserialize[Array[Any]](
+          java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(encoded)))
+        decoded.set((task.taskAttemptId(), v))
+        v
+      }
+    values(slot)
   }
 }

@@ -13,9 +13,9 @@ import graft.gfn
 final case class IndexTables(
     urlDict: DataFrame,   // url, url_id, url_hash        (URL_DB + REVERSE_URL)
     links: DataFrame,     // src, dst                      (URL_CHILD; parent = swap)
-    docWords: DataFrame,  // url_id, words ARRAY<LONG>     (URL_WORDS forward index)
     wordDict: DataFrame,  // word, word_id                 (WORD_DB + REVERSE_WORD)
-    postings: DataFrame,  // word_id, url_id, tf, first_pos (SPIDER + URL_WORD_COUNT)
+    postings: DataFrame,  // url_id, word_id, tf, first_pos, positions ARRAY<INT>
+                          //   (SPIDER + URL_WORD_COUNT; positions stand in for URL_WORDS)
     maxTf: DataFrame,     // url_id, max_tf                 (URL_WORD_COUNT[1])
     tfidf: DataFrame,     // url_id, word_id, tfidf, tfidf_r6 (TF_IDF rounded + raw)
     docLen: DataFrame,    // url_id, len                    (URL_LENGTH)
@@ -93,40 +93,35 @@ object Indexer {
     val tokenized = docs.select(col("url_id"),
       when(col("html").isNotNull, gfn.tokenize_words(gfn.extract_text(col("html"))))
         .otherwise(array()).as("toks"))
-    val exploded = tokenized
-      .select(col("url_id"), posexplode(col("toks")).as(Seq("pos", "word")))
+    // each document's distinct words with their positions, in document
+    // order: one row per (doc, word), never one per token occurrence
+    val docPositions = tokenized
+      .select(col("url_id"), explode(gfn.word_positions(col("toks"))).as("wp"))
+      .select(col("url_id"), col("wp.word").as("word"), col("wp.positions").as("positions"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // word ids: first-encounter order scanning docs ascending url_id, words
     // in document order (canonicalized SpiderMain.kt:143-158)
-    val firstSeen = exploded.groupBy("word")
-      .agg(min(struct(col("url_id"), col("pos"))).as("first"))
+    val firstSeen = docPositions.groupBy("word")
+      .agg(min(struct(col("url_id"), col("positions")(0).as("pos"))).as("first"))
       .select(col("word"), col("first.url_id").as("f_url"), col("first.pos").as("f_pos"))
     val wordDict = denseIds(firstSeen, Seq("f_url", "f_pos"), "word_id", partitions)
       .select("word", "word_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val docWordIds = exploded.join(wordDict, Seq("word"))
-      .select("url_id", "pos", "word_id")
+    // A1/A2: postings with tf, first position and every position in
+    // document order; the serve matches phrases on the positions, so no
+    // forward index (URL_WORDS) is built
+    val postings = docPositions.join(wordDict, Seq("word"))
+      .select(col("url_id"), col("word_id"), size(col("positions")).as("tf"),
+        col("positions")(0).as("first_pos"), col("positions"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE dropping the exploded cache: docWordIds is lazy,
+    // materialize BEFORE dropping the docPositions cache: postings is lazy,
     // and unpersisting its input first would re-run the whole
-    // extract+tokenize+posexplode pass (the most expensive CPU stage of
-    // indexing) when docWordIds first evaluates
-    docWordIds.count()
-    exploded.unpersist()
-
-    // forward index (URL_WORDS): word ids in document order
-    val docWords = docWordIds
-      .groupBy("url_id")
-      .agg(sort_array(collect_list(struct(col("pos"), col("word_id")))).as("pw"))
-      .select(col("url_id"),
-        transform(col("pw"), x => x.getField("word_id")).as("words"))
-
-    // A1/A2: postings with tf and first position
-    val postings = docWordIds.groupBy("url_id", "word_id")
-      .agg(count(lit(1)).cast("int").as("tf"), min("pos").as("first_pos"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // extract+tokenize pass (the most expensive CPU stage of indexing)
+    // when postings first evaluates
+    postings.count()
+    docPositions.unpersist()
 
     // A3: per-doc word-count list, count desc with FIRST-OCCURRENCE-stable
     // ties (SpiderMain.kt:167-174 — Kotlin's stable sortedByDescending over
@@ -178,7 +173,7 @@ object Indexer {
         to_timestamp(lit("1990-01-01 00:00:00"))).as("last_modified"),
       coalesce(octet_length(col("html")), lit(0)).as("size_bytes"))
 
-    IndexTables(urlDict, links, docWords, wordDict, postings, maxTf, tfidf,
+    IndexTables(urlDict, links, wordDict, postings, maxTf, tfidf,
       docLen, urlInfo, n, urlWordCount)
   }
 

@@ -2,17 +2,19 @@ package graft.rank
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.{LogicalRDD, ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.{BaseSubqueryExec, LogicalRDD, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.QueryParam
@@ -27,36 +29,34 @@ import graft.text.TextPipeline
   * (SURVEY.md §2.7).
   *
   * Serve invariants:
-  *  - one Spark job per query (AQE off on the serve session, no broadcast
-  *    exchange, no subquery): term resolve is driver-side whenever the
-  *    term dictionary fits in memory, and the scoring join, mean score and
-  *    top-K run in the job that collects the SERP;
+  *  - one Spark job of one stage and one task per query (AQE off on the
+  *    serve session, no exchange, no broadcast, no subquery): term resolve
+  *    is driver-side whenever the term dictionary fits in memory, and the
+  *    scoring aggregate, mean score and per-partition top-K run in the job
+  *    that collects the SERP;
   *  - `statics` and postings⋈tfidf are materialized leaves, hash-partitioned
   *    on url_id to the serve session's shuffle partitions, so the scoring
-  *    aggregate and the statics join need no exchange of a prepared table;
+  *    aggregate and the statics join need no exchange. Phrases read the
+  *    positions on the postings leaf, not a forward index;
   *  - no per-query cache: a query leaves nothing persisted behind;
-  *  - one executed plan per query shape ([[Shape]]): it is analyzed,
-  *    optimized, planned and compiled at the shape's first query, and kept
-  *    on the Prepared until close();
-  *  - values bound per query: word ids, multiplicities, phrases, stems and
-  *    the query length are [[QueryParam]]s, never source literals, so a
-  *    new query of a known shape compiles no class;
-  *  - a deep copy of that plan per query, with the query's values bound
-  *    into the copy, so no plan node, and no exchange with its shuffle
-  *    output, is shared between two runs. A copy still points where a
-  *    reused node points, so the serve session reuses no exchange, and a
-  *    shape's plan may hold no reused, broadcast or adaptive node
-  *    ([[sharedNodes]]);
-  *  - no analysis, optimization or physical planning per query, and a
-  *    serve query posts no SQL-execution events;
+  *  - one prepared run per query shape ([[Shape]]): its plan is analyzed,
+  *    optimized, planned and compiled, and the RDD under its top-K is
+  *    built, at the shape's first query, and kept on the Prepared until
+  *    close(). Every query of the shape runs that RDD again, so a query
+  *    runs no analysis, optimization, planning or whole-stage code
+  *    generation, builds no RDD, and posts no SQL-execution events;
+  *  - values carried per query: word ids, multiplicities, phrases, stems
+  *    and the query length are [[QueryParam]]s, carried as a job-local
+  *    property of the query's job and decoded once per task, so racing
+  *    queries of one shape each read their own values;
+  *  - a shape's plan holds no exchange, subquery, broadcast or adaptive
+  *    node ([[rerunBlockers]], required at the shape's first query): a
+  *    shuffle's output would be reused by the next run of the RDD, which
+  *    would then return the first query's rows;
   *  - the scoring join runs once: the mean score is a window aggregate
-  *    over the scored rows. At one serve partition (every index of up to
-  *    50,000 documents) the window needs no exchange. Above one, it
-  *    gathers the matched rows into one task, where a cartesian product
-  *    with a one-row aggregate scored each partition in place but ran the
-  *    scoring join a second time under that aggregate; at 20,000 pages and
-  *    4 partitions the window plan still served a term query in 29–108 ms
-  *    against 65–134 ms.
+  *    over a narrow `coalesce(1)` of the scored rows, so above one serve
+  *    partition the scored partitions are read by one task, with no
+  *    exchange.
   *
   * Exactness notes:
   *  - single-word score = mult · tf · tfidf_r6 (the reference scatter-adds
@@ -82,18 +82,16 @@ object Searcher {
                             statics: DataFrame, postingsTfidf: DataFrame,
                             serve: SparkSession, viewNames: Seq[String],
                             wordIdLocal: Option[Map[String, Long]] = None) {
-    /** The executed scoring plan of each query [[Shape]] served so far,
-      * built at that shape's first query. It is never run itself: each
-      * query runs a deep copy. */
-    private[rank] val plans = new ConcurrentHashMap[Shape, SparkPlan]()
+    /** The prepared run of each query [[Shape]] served so far, built at
+      * that shape's first query and run again by each query of it. */
+    private[rank] val runs = new ConcurrentHashMap[Shape, ShapeRun]()
 
     /** Release everything [[prepare]] materialized — the rank cache, the
-      * checkpointed statics and postings⋈tfidf blocks, the cached shape
-      * plans — and the global temp views backing the serve session. A
-      * long-lived serving session should close() retired Prepared
-      * instances. */
+      * checkpointed statics and postings⋈tfidf blocks, the shape runs —
+      * and the global temp views backing the serve session. A long-lived
+      * serving session should close() retired Prepared instances. */
     def close(): Unit = {
-      plans.clear()
+      runs.clear()
       ranks.unpersist()
       Seq(statics, postingsTfidf).foreach(release)
       viewNames.foreach(serve.catalog.dropGlobalTempView)
@@ -103,6 +101,9 @@ object Searcher {
 
   /** Largest vocabulary [[prepare]] holds as a driver-side term map. */
   private val MaxLocalTerms = 1000000
+
+  /** Documents per serve partition that [[prepare]] sizes the leaves for. */
+  private val DocsPerServePartition = 50000L
 
   private val prepareIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -120,7 +121,8 @@ object Searcher {
     *  - `statics` pre-joins every per-doc value the serve consumes
     *    (max_tf ⋈ rank ⋈ title ⋈ url ⋈ doc length, plus the tokenized and
     *    lowercased title);
-    *  - `postingsTfidf` pre-joins postings⋈tfidf on (url_id, word_id);
+    *  - `postingsTfidf` pre-joins postings⋈tfidf on (url_id, word_id),
+    *    positions included;
     *  - both are eager local checkpoints hash-partitioned on url_id: a
     *    checkpoint is a leaf, so no per-query plan can re-derive it, and
     *    its partitioning lets the scoring aggregate and join skip the
@@ -130,13 +132,18 @@ object Searcher {
     *
     * The serve runs on a DEDICATED session (`spark.newSession()` — own
     * SQLConf, shared SparkContext + cache): the latency-path conf choices
-    * (AQE off, no exchange reuse, the derived shuffle partitions) are set
-    * ONCE there and never touch the caller's session, so concurrent
-    * non-search queries can't observe serve conf and racing search() calls
-    * can't clobber each other. Index tables are
-    * rebound onto the serve session through global temp views; the shared
-    * CacheManager still substitutes the parent's cached plans. */
-  def prepare(index: IndexTables, ranks: DataFrame): Prepared = {
+    * (AQE off, the derived shuffle partitions, the phrase aggregate's
+    * in-memory key bound) are set ONCE there and never
+    * touch the caller's session, so concurrent non-search queries can't
+    * observe serve conf. Index tables are rebound onto the serve session
+    * through global temp views; the shared CacheManager still substitutes
+    * the parent's cached plans. */
+  def prepare(index: IndexTables, ranks: DataFrame): Prepared =
+    prepare(index, ranks, MaxLocalTerms)
+
+  /** [[prepare]] holding a dictionary of at most `maxLocalTerms` terms
+    * driver-side; a larger one is looked up per query. */
+  private[graft] def prepare(index: IndexTables, ranks: DataFrame, maxLocalTerms: Int): Prepared = {
     val parent = ranks.sparkSession
     val cached = ranks.cache()
     // coalesce: max over ZERO rows is SQL NULL — an index built from an
@@ -150,23 +157,23 @@ object Searcher {
         "spark.sql.ansi.enabled", "spark.sql.autoBroadcastJoinThreshold")
       .foreach(k => parent.conf.getOption(k).foreach(serve.conf.set(k, _)))
     // AQE off: it turns every query stage of the SERP plan into its own
-    // driver-replanned job behind a materialization barrier, and the
-    // one-job-per-query invariant needs the whole DAG scheduled as one job
+    // driver-replanned job behind a materialization barrier, and a shape's
+    // plan must be one stage whose RDD can run again
     serve.conf.set("spark.sql.adaptive.enabled", "false")
-    // no exchange reuse: a query runs a copy of its shape's cached plan, and
-    // a copied ReusedExchange still points at the cached plan's exchange
-    // (two phrases share the forward index's shuffle), so racing queries
-    // would run one node
-    serve.conf.set("spark.sql.exchange.reuse", "false")
     // serve-side shuffle partitioning is derived from the index size: the
     // per-query matched set is ≤ n docs, so ~50k docs/partition, capped at
     // the parent's configured shuffle partitions
     val parentSp = parent.conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .getOrElse(parent.sparkContext.defaultParallelism)
-    val serveSp = math.max(1L,
-      math.min(parentSp.toLong, (index.n + 49999L) / 50000L)).toInt
+    val serveSp = math.max(1L, math.min(parentSp.toLong,
+      (index.n + DocsPerServePartition - 1) / DocsPerServePartition)).toInt
     serve.conf.set("spark.sql.shuffle.partitions", serveSp.toString)
+    // a phrase's scoring aggregate (collect_list) keys one serve partition's
+    // matched documents: keep them in its hash map rather than sort them
+    // in every query once 128 keys are held
+    serve.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      DocsPerServePartition.toString)
 
     val id = prepareIds.incrementAndGet()
     var views = List.empty[String]
@@ -189,7 +196,6 @@ object Searcher {
       val sIdx = IndexTables(
         urlDict = rebind(index.urlDict, "url_dict"),
         links = rebind(index.links, "links"),
-        docWords = rebind(index.docWords, "doc_words"),
         wordDict = rebind(index.wordDict, "word_dict"),
         postings = rebind(index.postings, "postings"),
         maxTf = rebind(index.maxTf, "max_tf"),
@@ -216,13 +222,13 @@ object Searcher {
       // tfidf's keyset equals postings' (tfidf derives from postings)
       val postingsTfidf = materialize(sIdx.postings
         .join(sIdx.tfidf, Seq("url_id", "word_id"))
-        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6")))
+        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6"), col("positions")))
 
       // coalesce(1): the bounded collect is one job reading at most
-      // MaxLocalTerms + 1 rows, whatever the dictionary's partitioning
-      val terms = sIdx.wordDict.coalesce(1).limit(MaxLocalTerms + 1).collect()
+      // maxLocalTerms + 1 rows, whatever the dictionary's partitioning
+      val terms = sIdx.wordDict.coalesce(1).limit(maxLocalTerms + 1).collect()
       val wordIdLocal =
-        if (terms.length <= MaxLocalTerms)
+        if (terms.length <= maxLocalTerms)
           Some(terms.map(r => r.getString(0) -> r.getLong(1)).toMap)
         else None
 
@@ -236,23 +242,21 @@ object Searcher {
     }
   }
 
-  private def emptyResult(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+  private def emptyResult(spark: SparkSession): DataFrame =
+    Bridge.localRows(spark,
       StructType(Seq(
         StructField("rank", IntegerType), StructField("url_id", LongType),
         StructField("url", StringType), StructField("total", DoubleType),
         StructField("cos", DoubleType), StructField("pr", DoubleType),
-        StructField("title_score", DoubleType), StructField("title", StringType))))
-  }
+        StructField("title_score", DoubleType), StructField("title", StringType))), Nil)
 
   /** The `spark` parameter is retained for API stability but the query
     * executes on the Prepared's dedicated serve session — the caller's
     * session conf is never touched. */
   def search(spark: SparkSession, p: Prepared, query: String, topK: Int = 50): DataFrame =
-    boundPlan(p, query, topK) match {
+    resolve(p, query, topK) match {
       case None => emptyResult(p.serve)
-      case Some(plan) => collectSerp(p.serve, plan)
+      case Some(q) => collectSerp(p, q)
     }
 
   /** What a query's scoring plan is built from besides its values: whether
@@ -260,6 +264,12 @@ object Searcher {
     * Every shape has at least one term group, so no plan has an empty
     * branch. */
   private[rank] final case class Shape(singles: Boolean, phrases: Int, topK: Int)
+
+  /** A shape's executed plan, with its top-K as the root, and the RDD under
+    * that top-K, built once: each query of the shape runs the RDD again
+    * with its own values. */
+  private[graft] final case class ShapeRun(plan: TakeOrderedAndProjectExec,
+                                           rows: RDD[InternalRow])
 
   /** A resolved query: its shape and the value of each [[QueryParam]] slot
     * — the query length, the stems, then three slots per term group (the
@@ -271,48 +281,80 @@ object Searcher {
   private val StemsSlot = 1
   private def groupSlot(g: Int) = 2 + 3 * g
 
-  /** The executed scoring plan of `query` on the serve session: the top-K
-    * rows (url_id, url, total, cos, pr, title_score, title) ordered by
-    * (NaN total last, total desc, url_id asc), or None when no query term
-    * resolves. It is a deep copy of its shape's cached executed plan with
-    * the query's values bound into it: an executed plan keeps its shuffle
-    * output, and code generation records each node's parent on the node,
-    * so two runs never share a node. */
-  private[graft] def boundPlan(p: Prepared, query: String, topK: Int): Option[SparkPlan] =
-    resolve(p, query, topK).map { q =>
-      p.plans.computeIfAbsent(q.shape, _ => executedShapePlan(shapePlan(p, q)))
-        .clone()
-        .transformAllExpressions {
-          case QueryParam(slot, dt, _) => QueryParam(slot, dt, q.values(slot))
-        }
-    }
+  /** The run of `query`'s shape on `p`, built if the shape is new, or None
+    * when no query term resolves. */
+  private[graft] def shapeRun(p: Prepared, query: String, topK: Int): Option[ShapeRun] =
+    resolve(p, query, topK).map(q => shapeRun(p, q.shape))
 
-  /** The nodes of `plan` that a bound copy would share with the plan it
-    * was copied from, or whose result another run could see: reused
-    * exchanges and subqueries (binding does not reach the node a reused
-    * one points at), subquery expressions, broadcast exchanges and
-    * adaptive plans (both re-plan or cache at run time). */
-  private[graft] def sharedNodes(plan: SparkPlan): Seq[String] =
+  private def shapeRun(p: Prepared, shape: Shape): ShapeRun =
+    p.runs.computeIfAbsent(shape, _ => Bridge.withSessionConf(p.serve) {
+      val plan = shapePlan(p, shape).queryExecution.executedPlan
+      val blockers = rerunBlockers(plan)
+      require(blockers.isEmpty, "a serve plan must be one stage that can run " +
+        s"again: ${blockers.mkString(", ")}\n${plan.treeString}")
+      plan match {
+        case top: TakeOrderedAndProjectExec if top.projectList == top.child.output =>
+          val rows = top.child.execute()
+          rows.partitions // computed once, before racing queries share the RDD
+          ShapeRun(top, rows)
+        case other =>
+          throw new IllegalStateException(s"a serve plan must end in its top-K:\n${other.treeString}")
+      }
+    })
+
+  /** The nodes of `plan` that keep a result between two runs of its RDD or
+    * re-plan at run time: exchanges (a shuffle's output is reused by the
+    * next job), reused exchanges and subqueries, subquery expressions,
+    * broadcasts and adaptive plans. */
+  private[graft] def rerunBlockers(plan: SparkPlan): Seq[String] =
     plan.collectWithSubqueries {
-      case n @ (_: ReusedExchangeExec | _: ReusedSubqueryExec | _: BroadcastExchangeExec |
+      case n @ (_: Exchange | _: ReusedExchangeExec | _: BaseSubqueryExec |
                 _: AdaptiveSparkPlanExec) => n.nodeName
       case n if n.subqueries.nonEmpty => s"${n.nodeName} with a subquery"
     }
 
-  /** `df`'s executed plan, required to hold no [[sharedNodes]]. */
-  private def executedShapePlan(df: DataFrame): SparkPlan = {
-    val plan = df.queryExecution.executedPlan
-    val shared = sharedNodes(plan)
-    require(shared.isEmpty, "a serve plan must share no node between queries: " +
-      s"${shared.mkString(", ")}\n${plan.treeString}")
-    plan
+  /** Runs `q`'s shape as one job carrying `q`'s values, and returns the
+    * SERP as a LocalRelation with the 1-based `rank` column prepended — ≤
+    * topK rows, and a broadcastable local table for downstream joins
+    * (serpDetails). */
+  private def collectSerp(p: Prepared, q: Bound): DataFrame = {
+    val run = shapeRun(p, q.shape)
+    val top = run.plan
+    val first = new TopK(new InterpretedOrdering(top.sortOrder, top.child.output), top.limit)
+    val sc = p.serve.sparkContext
+    val perPartition = Bridge.withSessionConf(p.serve)(QueryParam.withValues(sc, q.values)(
+      sc.runJob(run.rows, first)))
+    val rows = first(perPartition.iterator.flatten).zipWithIndex.map {
+      case (r, i) => InternalRow.fromSeq((i + 1) +: r.toSeq(top.schema))
+    }
+    if (rows.isEmpty) return emptyResult(p.serve) // pinned empty-SERP schema
+    Bridge.localRows(p.serve,
+      StructType(StructField("rank", IntegerType, nullable = false) +: top.schema.fields), rows.toSeq)
+  }
+
+  /** The first `k` rows under `ord`, in order and copied (a scan reuses
+    * its row objects): of one partition in a task, and of the partitions'
+    * results on the driver. A class, not a closure, so the job cleans no
+    * closure. */
+  private final class TopK(ord: Ordering[InternalRow], k: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(task: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = apply(rows)
+
+    def apply(rows: Iterator[InternalRow]): Array[InternalRow] = {
+      val kept = new java.util.PriorityQueue[InternalRow](k, ord.reverse) // head: the last kept
+      rows.foreach { r =>
+        if (kept.size < k) kept.add(r.copy())
+        else if (ord.lt(r, kept.peek())) { kept.poll(); kept.add(r.copy()) }
+      }
+      kept.toArray(new Array[InternalRow](0)).sorted(ord)
+    }
   }
 
   /** Driver-side query analysis (queries are tiny): stems → word ids with
     * the phrase-kill rule (Ranker.kt:100-119), and the parameter values. */
   private def resolve(p: Prepared, query: String, topK: Int): Option[Bound] = {
     val groups = TextPipeline.tokenizeQuery(query)
-    if (groups.isEmpty) return None
+    if (groups.isEmpty || topK <= 0) return None
     val allStems = groups.flatten
     val wordIdMap = p.wordIdLocal match {
       case Some(dict) => allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
@@ -342,51 +384,51 @@ object Searcher {
     Some(Bound(Shape(singles.nonEmpty, phrases.size, topK), values))
   }
 
-  /** `postingsTfidf` rows of the word ids in `ids`, each with its
-    * multiplicity from the aligned `mults` as the int column `mult`. The
-    * ids enter the plan as parameters rather than a joined relation, so
-    * the plan has no query-term leaf to broadcast. */
-  private def termRows(p: Prepared, ids: Column, mults: Column): DataFrame = {
-    val wordId = col("word_id")
-    p.postingsTfidf.filter(array_contains(ids, wordId))
-      .withColumn("mult", element_at(mults, array_position(ids, wordId).cast("int")))
-  }
-
-  /** The scoring plan of `q`'s shape, with `q`'s values in its parameters. */
-  private def shapePlan(p: Prepared, q: Bound): DataFrame = {
-    def param(slot: Int, dt: DataType): Column = Bridge.column(QueryParam(slot, dt, q.values(slot)))
+  /** The scoring plan of `shape`, reading every query value from its
+    * [[QueryParam]]s. */
+  private def shapePlan(p: Prepared, shape: Shape): DataFrame = {
+    def param(slot: Int, dt: DataType): Column = Bridge.column(QueryParam(slot, dt))
     val idsType = ArrayType(LongType, containsNull = false)
-    def group(g: Int) = (param(groupSlot(g), idsType),
-      param(groupSlot(g) + 1, ArrayType(IntegerType, containsNull = false)),
-      param(groupSlot(g) + 2, idsType))
-
-    // -- single-word contributions over the prepared postings⋈tfidf leaf ----
-    val singleScores =
-      if (!q.shape.singles) None
-      else {
-        val (ids, mults, _) = group(0)
-        Some(termRows(p, ids, mults)
-          .select(col("url_id"), (col("mult") * col("tf") * col("tfidf_r6")).as("contrib")))
-      }
-
-    // -- phrase contributions: forward-index scan per phrase ----------------
-    val firstPhrase = if (q.shape.singles) 1 else 0
-    val phraseScores = (firstPhrase until firstPhrase + q.shape.phrases).map { g =>
-      val (ids, mults, phrase) = group(g)
-      val matches = p.index.docWords
-        .select(col("url_id"), gfn.count_phrase(col("words"), phrase).as("c"))
-        .filter(col("c") > 0)
-      val termSum = termRows(p, ids, mults)
-        .groupBy("url_id")
-        .agg(sum(col("mult") * col("tfidf_r6")).as("term_sum"))
-      matches.join(termSum.hint("shuffle_hash"), Seq("url_id"))
-        .select(col("url_id"), (col("term_sum") * col("c")).as("contrib"))
+    val wordId = col("word_id")
+    // per term group: whether a postings row's word is in the group, the
+    // word's multiplicity in it, and the group's ids in query order
+    final case class Group(has: Column, mult: Column, order: Column)
+    val groups = (0 until (if (shape.singles) 1 else 0) + shape.phrases).map { g =>
+      val ids = param(groupSlot(g), idsType)
+      Group(array_contains(ids, wordId),
+        element_at(param(groupSlot(g) + 1, ArrayType(IntegerType, containsNull = false)),
+          array_position(ids, wordId).cast("int")),
+        param(groupSlot(g) + 2, idsType))
     }
+    val (singles, phrases) = groups.splitAt(if (shape.singles) 1 else 0)
 
-    val rawScores = (singleScores.toSeq ++ phraseScores)
-      .reduce(_ unionByName _)
+    // -- one aggregate per document over the postings leaf, which is
+    // url_id-partitioned, so it needs no exchange: the single-term sum, and
+    // per phrase its term sum and the positions of its words. Each input is
+    // projected before the aggregate, in generated code ---------------------
+    val single = if (shape.singles) Seq(col("single")) else Nil
+    val inputs = singles.map(s => when(s.has, s.mult * col("tf") * col("tfidf_r6")).as("single")) ++
+      phrases.indices.map(i => when(phrases(i).has, phrases(i).mult * col("tfidf_r6")).as(s"term$i")) ++
+      (if (phrases.isEmpty) Nil
+       else Seq(when(phrases.map(_.has).reduce(_ || _), struct(wordId, col("positions"))).as("at")))
+    val aggs = single.map(sum(_).as("single")) ++
+      phrases.indices.map(i => sum(s"term$i").as(s"term_sum$i")) ++
+      (if (phrases.isEmpty) Nil else Seq(collect_list("at").as("positions")))
+    val perDoc = p.postingsTfidf
+      .filter(groups.map(_.has).reduce(_ || _))
+      .select(col("url_id") +: inputs: _*)
       .groupBy("url_id")
-      .agg(sum("contrib").as("raw"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select((col("url_id") +: single) ++ phrases.indices.flatMap(i => Seq(col(s"term_sum$i"),
+        gfn.count_phrase_at(col("positions"), phrases(i).order).as(s"count$i"))): _*)
+
+    // a document's raw score adds its contributions left to right, single
+    // terms first, then each matched phrase (term sum × count), skipping an
+    // absent one as a sum does; a document with neither has no raw score
+    def plus(a: Column, b: Column) = coalesce(a + b, a, b)
+    val raw = (single ++ phrases.indices.map(i =>
+      when(col(s"count$i") > 0, col(s"term_sum$i") * col(s"count$i")))).reduce(plus)
+    val rawScores = perDoc.select(col("url_id"), raw.as("raw")).filter(col("raw").isNotNull)
 
     // -- normalization (Ranker.kt:92-95): one url_id join against statics,
     // which carries the doc length; both sides are url_id-partitioned. A
@@ -399,15 +441,16 @@ object Searcher {
 
     // meanScore (Σ score / 3n — the reference's driver-side mean) is a
     // window aggregate over every scored row, so it stays inside the SERP's
-    // job and the scoring join runs once. statics' keyset equals docLen's,
-    // so aggregating over the statics join changes no rows.
+    // job and the scoring join runs once. The narrow coalesce(1) gives the
+    // window its one partition without an exchange. statics' keyset equals
+    // docLen's, so aggregating over the statics join changes no rows.
     val all = Window.partitionBy()
     val meanScore = sum("score").over(all) / (count(lit(1)).over(all) * 3)
 
     // -- final scoring (WebController.kt:60-83): the title score adds the
     // mean once per matching stem, so no match scores 0.0 even when the
     // mean is NaN ------------------------------------------------------------
-    val scored = joined
+    val scored = joined.coalesce(1)
       .withColumn("mean_score", meanScore)
       .withColumn("cos", col("score") / col("max_tf"))
       .withColumn("pr", col("rank") / lit(p.maxPR * 3))
@@ -419,34 +462,13 @@ object Searcher {
         .otherwise(col("title_hits") * col("mean_score")))
       .withColumn("total", col("cos") + col("pr") + col("title_score"))
 
-    // global top-K as a TakeOrderedAndProject (no single-partition sort
-    // exchange); the rank column is assigned driver-side over the ≤ topK
-    // collected rows
+    // global top-K as a TakeOrderedAndProject, whose ordering the serve's
+    // per-partition top-K and driver merge use; the rank column is
+    // assigned driver-side over the ≤ topK collected rows
     scored
       .select("url_id", "url", "total", "cos", "pr", "title_score", "title")
       .orderBy(isnan(col("total")), desc("total"), asc("url_id"))
-      .limit(q.shape.topK)
-  }
-
-  /** Runs the bound scoring plan as one job and returns the SERP as a
-    * LocalRelation with the 1-based `rank` column prepended — ≤ topK rows,
-    * and a broadcastable local table for downstream joins (serpDetails). */
-  private def collectSerp(spark: SparkSession, plan: SparkPlan): DataFrame = {
-    val toRow = CatalystTypeConverters.createToScalaConverter(plan.schema)
-    val collected = Bridge.withSessionConf(spark)(plan.executeCollect())
-      .map(toRow(_).asInstanceOf[Row])
-    if (collected.isEmpty) return emptyResult(spark) // pinned empty-SERP schema
-    // re-assert the order driver-side (TakeOrderedAndProject returns rows
-    // already ordered; this is a ≤ topK-element no-op guard, not a sort job)
-    val ordered = collected.sortBy(r => (r.getDouble(2).isNaN, -r.getDouble(2), r.getLong(0)))
-    val rows: Seq[Row] = ordered.zipWithIndex.map {
-      case (r, i) => Row.fromSeq((i + 1) +: r.toSeq)
-    }.toSeq
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.IntegerType, nullable = false) +: plan.schema.fields)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+      .limit(shape.topK)
   }
 
   /** J7/T4/F12: the SERP metadata block — one multi-way left join of the

@@ -2,10 +2,13 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column↔Expression converters of Spark 4's
   * classic module — the supported way for third-party Catalyst expressions
@@ -23,6 +26,13 @@ object Bridge {
     val s = session.asInstanceOf[SparkSession]
     s.withActive(SQLExecution.withSQLConfPropagated(s)(body))
   }
+
+  /** `rows`, Catalyst values of `schema`, as a DataFrame on `session`: a
+    * LocalRelation, so no encoder converts them. */
+  def localRows(session: org.apache.spark.sql.SparkSession, schema: StructType,
+                rows: Seq[InternalRow]): DataFrame =
+    Dataset.ofRows(session.asInstanceOf[SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** An eager local checkpoint of `df` whose logical statistics are the
     * size of its stored blocks. `Dataset.localCheckpoint` keeps the source

@@ -7,14 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every result the crawl, index, rank, ops and snapshot packages pull to
   * the driver must be bounded by construction, or it grows with the corpus
   * until the driver runs out of memory. Each `.collect()`, `.head()`,
-  * `.take(`, `.first()`, and a physical plan's `.executeCollect()` and
-  * `.executeTake(`, in those packages is listed here with the bound
-  * that holds it; a new call fails this test until it is listed, with its
-  * bound. Source only: no Spark session. */
+  * `.take(`, `.first()`, a physical plan's `.executeCollect()` and
+  * `.executeTake(`, and each `runJob(`, in those packages is listed here
+  * with the bound that holds it; a new call fails this test until it is
+  * listed, with its bound. Source only: no Spark session. */
 class DriverCollectSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala/graft")
   private val packages = Seq("crawler", "index", "rank", "ops", "snapshot")
-  private val call = """\.(collect\(\)|head\(\)|take\(|first\(\)|executeCollect\(\)|executeTake\()""".r
+  private val call = """\.(collect\(\)|head\(\)|take\(|first\(\)|executeCollect\(\)|executeTake\()|runJob\(""".r
 
   /** (file under graft/, text on the call's line, the bound) */
   private val allowed = Seq(
@@ -30,12 +30,12 @@ class DriverCollectSpec extends AnyFunSuite {
       "dense-id offsets: one row per range partition"),
     ("rank/Searcher.scala", "agg(coalesce(max(\"rank\"), lit(0.0))).head()",
       "one row: the global max PageRank"),
-    ("rank/Searcher.scala", "limit(MaxLocalTerms + 1).collect()",
-      "the term map: ≤ MaxLocalTerms + 1 rows"),
+    ("rank/Searcher.scala", "limit(maxLocalTerms + 1).collect()",
+      "the term map: ≤ maxLocalTerms + 1 rows"),
     ("rank/Searcher.scala", ".collect().map(r => r.getString(0) -> r.getLong(1)).toMap",
       "dictionary rows of the query's stems"),
-    ("rank/Searcher.scala", "plan.executeCollect()",
-      "the SERP: ≤ topK rows"),
+    ("rank/Searcher.scala", "sc.runJob(run.rows, first)",
+      "the SERP: ≤ topK rows per serve partition, merged to ≤ topK"),
     ("ops/TrainingOps.scala", "hot.collect()",
       "hot bucket keys: ≤ rows / maxDf"),
     ("ops/TrainingOps.scala", "result.collect()",

@@ -30,6 +30,15 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A copy of `p` whose leaves are re-materialized at `partitions` url_id
+    * partitions, served at as many shuffle partitions (an index of
+    * 50,000 × `partitions` documents would be prepared so). */
+  def servedAt(p: Searcher.Prepared, partitions: Int): Searcher.Prepared = {
+    p.serve.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    def leaf(df: DataFrame) = Bridge.localCheckpoint(df.repartition(partitions, col("url_id")))
+    p.copy(statics = leaf(p.statics), postingsTfidf = leaf(p.postingsTfidf))
+  }
 }
 
 /** End-to-end fixtures: the Spark engine must match the sequential
@@ -328,6 +337,39 @@ class EngineOracleSpec extends AnyFunSuite {
     } finally prepared.close()
   }
 
+  test("search: with codegen off, SERPs match the oracle (interpreted QueryParam)") {
+    val prepared = Searcher.prepare(engineIndex,
+      PageRankSpark.run(engineIndex.links, engineIndex.urlDict.select("url_id"), 40))
+    val oracleRanks = ReferenceOracle.pageRank(oracleIndex, 40)
+    try {
+      // set before the shapes are planned: every expression, each QueryParam
+      // included, is evaluated by the interpreter inside the query's task
+      prepared.serve.conf.set("spark.sql.codegen.wholeStage", "false")
+      prepared.serve.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      Seq("research", "research systems networks", "\"hong kong\" research",
+        "\"hong kong\" \"crawler indexing\"", "networks \"hong kong\" networks")
+        .foreach(assertSerp(prepared, oracleIndex, oracleRanks, _))
+    } finally prepared.close()
+  }
+
+  test("search: the distributed term lookup serves the driver-side map's SERPs") {
+    val ranks = PageRankSpark.run(engineIndex.links, engineIndex.urlDict.select("url_id"), 40)
+    val local = Searcher.prepare(engineIndex, ranks)
+    // a term map of at most 0 terms: every query resolves through the
+    // distributed lookup, as a dictionary above MaxLocalTerms does
+    val distributed = Searcher.prepare(engineIndex, ranks, maxLocalTerms = 0)
+    def serp(p: Searcher.Prepared, q: String) = Searcher.search(spark, p, q).collect().toSeq
+    try {
+      assert(local.wordIdLocal.nonEmpty && distributed.wordIdLocal.isEmpty)
+      Seq("research", "university networks", "\"hong kong\" research", "\"hong kong\"",
+        "qqqunknown research", "\"hong qqqunknown\" systems", "the of and").foreach { q =>
+        val want = serp(local, q)
+        assert(serp(distributed, q) == want, s"'$q'")
+        assert(want.nonEmpty || q == "the of and", s"'$q' must match documents")
+      }
+    } finally { distributed.close(); local.close() }
+  }
+
   /** A five-page corpus with two matched zero-length documents: "alpha" is
     * on every page, so its idf is 0; p1 and p4 hold only "alpha", so their
     * tf-idf length is 0 and the normalization is 0/0. The oracle index and
@@ -378,19 +420,13 @@ class EngineOracleSpec extends AnyFunSuite {
 
   test("search: at 4 serve partitions, term, multi-term, phrase and " +
        "template SERPs match the oracle") {
-    // a copy of a Prepared whose leaves are re-materialized at 4 url_id
-    // partitions, served at 4 shuffle partitions: the mean score's window
-    // then gathers the scored rows across partitions
-    def at4(p: Searcher.Prepared): Searcher.Prepared = {
-      p.serve.conf.set("spark.sql.shuffle.partitions", "4")
-      def leaf(df: DataFrame) = Bridge.localCheckpoint(df.repartition(4, col("url_id")))
-      p.copy(statics = leaf(p.statics), postingsTfidf = leaf(p.postingsTfidf))
-    }
+    // the mean score's window reads the 4 scored partitions through one
+    // narrow coalesce
     def check(index: graft.index.IndexTables, oIdx: ReferenceOracle.Index,
               oRanks: Array[Double], queries: Seq[String]): Unit = {
       val p = Searcher.prepare(index,
         PageRankSpark.run(index.links, index.urlDict.select("url_id"), 40))
-      val p4 = at4(p)
+      val p4 = SparkTestSession.servedAt(p, 4)
       try {
         assert(Searcher.checkpointRdd(p4.statics).get.getNumPartitions == 4)
         queries.foreach(assertSerp(p4, oIdx, oRanks, _))

@@ -63,8 +63,28 @@ object PhraseProps extends Properties("phrase") {
       new GenericArrayData(words.toArray),
       new GenericArrayData(phrase.toArray))
 
+  /** `words`' positional postings: a (word_id, ascending positions) struct
+    * per distinct word. */
+  private def postingsOf(words: Vector[Long]): GenericArrayData =
+    new GenericArrayData(words.zipWithIndex.groupBy(_._1).toSeq.map { case (w, occ) =>
+      org.apache.spark.sql.catalyst.InternalRow(w,
+        new GenericArrayData(occ.map(_._2).sorted.toArray[Any]))
+    }.toArray[Any])
+
+  private def viaPositions(words: Vector[Long], phrase: Vector[Long]): Int =
+    graft.functions.ExprImpl.countPhraseAt(postingsOf(words), new GenericArrayData(phrase.toArray))
+
   val small: Gen[Vector[Long]] =
     Gen.listOf(Gen.choose(0L, 3L)).map(_.toVector)
+
+  property("positional count == oracle sliding-window count") =
+    forAll(small, small.suchThat(_.nonEmpty).map(_.take(4))) { (w, p) =>
+      viaPositions(w, p) == naive(w, p)
+    }
+
+  property("positional count of a repeated word: \"a a\" once in \"a a a\"") =
+    Prop(viaPositions(Vector(5L, 5L, 5L), Vector(5L, 5L)) == 1 &&
+      naive(Vector(5L, 5L, 5L), Vector(5L, 5L)) == 1)
 
   property("expression == oracle sliding-window count") =
     forAll(small, small.suchThat(_.nonEmpty).map(_.take(4))) { (w, p) =>

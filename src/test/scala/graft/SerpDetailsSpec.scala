@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
@@ -91,19 +91,24 @@ class SerpDetailsSpec extends AnyFunSuite {
   test("concurrent serves on the dedicated session: four racing search() " +
        "calls of one shape while the parent runs an AQE query — results " +
        "exact, parent conf untouched") {
+    // each SERP equals the oracle's, so each job read its own thread's values
     def serpOf(p: Searcher.Prepared, q: String): Seq[(Int, Long, Double)] =
       Searcher.search(spark, p, q)
         .select("rank", "url_id", "total")
         .as[(Int, Long, Double)].collect().toSeq
-    // distinct values bound into one shape (a phrase and a single term):
-    // the racing threads share its cached plan, built by the first of them
+    // distinct values of one shape (a phrase and a single term): the racing
+    // threads run its one prepared RDD, built by the first of them, each
+    // job carrying its own thread's values
     val queries = Seq("\"hong kong\" research", "\"hong kong\" systems",
       "\"crawler indexing\" networks", "\"databases research\" computing")
-    // reference results, computed single-threaded on their own prepared state
-    val serial = Searcher.prepare(eIdx,
-      PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
-    val expected = try queries.map(q => q -> serpOf(serial, q)).toMap finally serial.close()
+    val oRanks = ReferenceOracle.pageRank(oIdx, 40)
+    val expected = queries.map(q => q -> ReferenceOracle.search(q, oIdx, oRanks)
+      .map { case (rank, o) => (rank, o.urlId, o.total) }).toMap
     assert(expected.values.toSet.size == queries.size, "the queries must differ in their SERPs")
+    assert(expected.values.forall(_.nonEmpty), "every query must match documents")
+    def same(got: Seq[(Int, Long, Double)], want: Seq[(Int, Long, Double)]) =
+      got.size == want.size && got.zip(want).forall { case ((r, id, t), (or, oid, ot)) =>
+        r == or && id == oid && math.abs(t - ot) <= 1e-9 }
 
     val prepared = Searcher.prepare(eIdx,
       PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
@@ -123,15 +128,8 @@ class SerpDetailsSpec extends AnyFunSuite {
       }
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errors.isEmpty, s"concurrent serve threw: ${errors.peek()}")
-    queries.foreach(q => assert(results.get(q) == expected(q), s"racing serve changed the SERP of $q"))
-    // racing serves are safe because each runs its own copy of the shape's
-    // plan: code generation records a node's parent on the node, so a node
-    // shared by two runs could read the other query's values
-    val first = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-    Searcher.boundPlan(prepared, queries(0), 50).get.foreach(first.add)
-    val second = Searcher.boundPlan(prepared, queries(1), 50).get
-    assert(!second.exists(first.contains), s"two bound plans share a node:\n${second.treeString}")
+    queries.foreach(q => assert(same(results.get(q), expected(q)),
+      s"racing serve of $q: ${results.get(q)} against the oracle's ${expected(q)}"))
     // the parent session's conf was never touched by the serves
     assert(spark.conf.get("spark.sql.adaptive.enabled") == parentAqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parentSpBefore)
@@ -169,16 +167,21 @@ class SerpDetailsSpec extends AnyFunSuite {
       // a new id, multiplicity, query length and stems; more single terms;
       // a new phrase
       Seq("systems systems", "research systems networks", "\"crawler indexing\"").foreach { q =>
+        val run = Searcher.shapeRun(p, q, 50).get
         var rows = 0
-        var jobs = 0
+        var jobsStages = (0, 0)
         val compiled = SparkJobs.compiles {
-          jobs = jobsOf { rows = Searcher.search(spark, p, q).collect().length }
+          jobsStages = SparkJobs.jobsAndStages(spark.sparkContext) {
+            rows = Searcher.search(spark, p, q).collect().length
+          }
         }
+        val (jobs, stages) = jobsStages
         assert(rows > 0, s"'$q' must match documents")
         assert(compiled == 0, s"'$q' compiled $compiled classes")
-        assert(jobs == 1, s"'$q' ran $jobs jobs")
-        val plan = Searcher.boundPlan(p, q, 50).get
-        assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
+        assert(jobs == 1 && stages == 1, s"'$q' ran $jobs jobs of $stages stages")
+        // the query ran its shape's RDD: no plan or RDD was built for it
+        assert(Searcher.shapeRun(p, q, 50).get.rows eq run.rows, s"'$q' built a new RDD")
+        assert(run.plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, run.plan.treeString)
       }
     } finally p.close()
   }
@@ -187,7 +190,7 @@ class SerpDetailsSpec extends AnyFunSuite {
        "and has no broadcast exchange") {
     val p = Searcher.prepare(eIdx, freshRanks)
     try {
-      val plan: SparkPlan = Searcher.boundPlan(p, "research systems", 50).get
+      val plan: SparkPlan = Searcher.shapeRun(p, "research systems", 50).get.plan
       assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
       val staticsRdd = Searcher.checkpointRdd(p.statics).get.id
       val leafRdds = Set(staticsRdd, Searcher.checkpointRdd(p.postingsTfidf).get.id)
@@ -203,43 +206,56 @@ class SerpDetailsSpec extends AnyFunSuite {
         case _ => false
       }
       assert(leaves.exists(isStatics), "the statics leaf must be scanned")
-      // statics is partitioned for the scoring join: nothing re-shuffles it
-      plan.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
-        assert(!e.child.collectLeaves().forall(isStatics), plan.treeString)
-      }
+      // both leaves are partitioned for the scoring aggregate and join:
+      // nothing re-shuffles them
+      assert(Searcher.rerunBlockers(plan).isEmpty, plan.treeString)
     } finally p.close()
   }
 
-  test("serve plans: each shape kind's cached plan shares no node between " +
-       "queries, and the guard flags a reused exchange and an adaptive plan") {
+  test("serve plans: each shape kind is one stage at 1 and 4 serve partitions") {
+    // single terms, one phrase, terms plus a phrase, two phrases
+    val kinds = Seq("research systems", "\"hong kong\"", "\"hong kong\" research",
+      "\"hong kong\" \"crawler indexing\"")
+    def check(prepared: Searcher.Prepared): Unit = kinds.foreach { q =>
+      val run = Searcher.shapeRun(prepared, q, 50).get
+      val plan = run.plan
+      assert(Searcher.rerunBlockers(plan).isEmpty, plan.treeString)
+      assert(plan.exists(_.isInstanceOf[WindowExec]), s"'$q' has no window:\n${plan.treeString}")
+      assert(!plan.exists(_.isInstanceOf[CartesianProductExec]), plan.treeString)
+      // every serve partition is read by the one task of the query's job
+      assert(run.rows.getNumPartitions == 1, plan.treeString)
+    }
     val p = Searcher.prepare(eIdx, freshRanks)
     try {
-      // single terms, one phrase, terms plus a phrase, two phrases
-      Seq("research systems", "\"hong kong\"", "\"hong kong\" research",
-          "\"hong kong\" \"crawler indexing\"").foreach { q =>
-        val plan = Searcher.boundPlan(p, q, 50).get
-        assert(Searcher.sharedNodes(plan).isEmpty, plan.treeString)
-        assert(plan.exists(_.isInstanceOf[WindowExec]), s"'$q' has no window:\n${plan.treeString}")
-        assert(!plan.exists(_.isInstanceOf[CartesianProductExec]), plan.treeString)
-      }
-      // outside the serve session, a self-join reuses its aggregate's exchange
-      val plain = spark.newSession()
-      plain.conf.set("spark.sql.adaptive.enabled", "false")
-      plain.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val agg = plain.range(100).groupBy((col("id") % 3).as("k")).count()
-      val selfJoin = agg.join(agg, "k").queryExecution.executedPlan
-      assert(Searcher.sharedNodes(selfJoin) == Seq("ReusedExchange"), selfJoin.treeString)
-      val adaptive = spark.range(100).groupBy((col("id") % 3).as("k")).count()
-        .queryExecution.executedPlan
-      assert(Searcher.sharedNodes(adaptive) == Seq("AdaptiveSparkPlan"), adaptive.treeString)
+      check(p)
+      val p4 = SparkTestSession.servedAt(p, 4)
+      try {
+        assert(Searcher.checkpointRdd(p4.postingsTfidf).get.getNumPartitions == 4)
+        check(p4)
+      } finally p4.close()
     } finally p.close()
+  }
+
+  test("serve guard: an exchange, a subquery or an adaptive plan is rejected") {
+    val plain = spark.newSession()
+    plain.conf.set("spark.sql.adaptive.enabled", "false")
+    plain.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val exchange = plain.range(100).groupBy((col("id") % 3).as("k")).count()
+      .queryExecution.executedPlan
+    assert(Searcher.rerunBlockers(exchange) == Seq("Exchange"), exchange.treeString)
+    val subquery = plain.sql("SELECT id FROM range(10) WHERE id > (SELECT max(id) FROM range(3))")
+      .queryExecution.executedPlan
+    assert(Searcher.rerunBlockers(subquery).contains("Filter with a subquery"), subquery.treeString)
+    val adaptive = spark.range(100).groupBy((col("id") % 3).as("k")).count()
+      .queryExecution.executedPlan
+    assert(Searcher.rerunBlockers(adaptive) == Seq("AdaptiveSparkPlan"), adaptive.treeString)
   }
 
   test("close() releases every block prepare() materialized, checkpoints included") {
     val sc = spark.sparkContext
     // materialize the index's own lazy persists first: they belong to the
     // index, and prepare() would otherwise be the first to fill them
-    Seq(eIdx.urlDict, eIdx.links, eIdx.docWords, eIdx.wordDict, eIdx.postings,
+    Seq(eIdx.urlDict, eIdx.links, eIdx.wordDict, eIdx.postings,
       eIdx.maxTf, eIdx.tfidf, eIdx.docLen, eIdx.urlInfo, eIdx.urlWordCount)
       .foreach(_.count())
     val ranks = freshRanks

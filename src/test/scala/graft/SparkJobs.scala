@@ -33,13 +33,19 @@ object SparkJobs {
     props != null && props.getProperty(TagKey) == tag
 
   /** Jobs started by `f` on this thread. */
-  def count(sc: SparkContext)(f: => Unit): Int = {
-    val seen = new ConcurrentLinkedQueue[Int]()
+  def count(sc: SparkContext)(f: => Unit): Int = jobsAndStages(sc)(f)._1
+
+  /** Jobs started by `f` on this thread, and the stages they submitted. */
+  def jobsAndStages(sc: SparkContext)(f: => Unit): (Int, Int) = {
+    val jobs = new ConcurrentLinkedQueue[Int]()
+    val stages = new ConcurrentLinkedQueue[Int]()
     tagged(sc)(tag => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties, tag)) seen.add(e.jobId)
+        if (ours(e.properties, tag)) jobs.add(e.jobId)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties, tag)) stages.add(e.stageInfo.stageId)
     })(f)
-    seen.size
+    (jobs.size, stages.size)
   }
 
   /** Classes Janino compiled while `f` ran, on any thread: the generated
