@@ -141,7 +141,7 @@ object Plans {
         Searcher.search(spark, prepared, q)
         println(s"\n===== serve: $kind: the one-stage plan its shape prepared, " +
           "run as one job per query =====")
-        println(Searcher.shapeRun(prepared, q, 50).get.plan.treeString)
+        println(Searcher.shapeRun(prepared, q).get.plan.treeString)
       }
     } finally prepared.close()
 

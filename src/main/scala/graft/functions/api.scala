@@ -36,6 +36,10 @@ object gfn {
   def count_phrase_at(postings: Column, phrase: Column): Column =
     column(CountPhraseAtExpr(expression(postings), expression(phrase)))
 
+  /** How many `stems` are a `title_toks` element or a `title_lc` substring. */
+  def title_hits(stems: Column, titleToks: Column, titleLc: Column): Column =
+    column(TitleHitsExpr(expression(stems), expression(titleToks), expression(titleLc)))
+
   def simhash(tokens: Column): Column = column(SimHashExpr(expression(tokens)))
   def simhash_md5(tokens: Column): Column = column(SimHashMd5Expr(expression(tokens)))
   def winnow_fingerprints(text: Column, k: Column, w: Column): Column =

@@ -230,6 +230,26 @@ object ExprImpl {
     count
   }
 
+  /** See [[TitleHitsExpr]]. */
+  def titleHits(stems: ArrayData, toks: ArrayData, lc: UTF8String): Int = {
+    var hits = 0
+    var i = 0
+    while (i < stems.numElements()) {
+      if (!stems.isNullAt(i)) {
+        val t = stems.getUTF8String(i)
+        var hit = lc != null && lc.contains(t)
+        var j = 0
+        while (!hit && toks != null && j < toks.numElements()) {
+          hit = !toks.isNullAt(j) && toks.getUTF8String(j) == t
+          j += 1
+        }
+        if (hit) hits += 1
+      }
+      i += 1
+    }
+    hits
+  }
+
   private def containsSorted(a: ArrayData, x: Int): Boolean = {
     var lo = 0
     var hi = a.numElements() - 1
@@ -476,6 +496,39 @@ case class CountPhraseAtExpr(left: Expression, right: Expression) extends Binary
     defineCodeGen(ctx, ev, (w, p) => s"graft.functions.ExprImpl.countPhraseAt($w, $p)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** `title_hits(stems ARRAY<STRING>, toks ARRAY<STRING>, lc STRING) → INT`:
+  * how many of `stems`, repeats included, are an element of `toks` or a
+  * substring of `lc` — `size(filter(stems, t -> array_contains(toks, t) OR
+  * contains(lc, t)))` in generated code. A null `toks` or `lc` matches
+  * nothing; null stems give null. */
+case class TitleHitsExpr(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
+  override def nullable: Boolean = first.nullable
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "title_hits"
+  override def eval(input: InternalRow): Any = first.eval(input) match {
+    case null => null
+    case stems => ExprImpl.titleHits(stems.asInstanceOf[ArrayData],
+      second.eval(input).asInstanceOf[ArrayData], third.eval(input).asInstanceOf[UTF8String])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val Seq(stems, toks, lc) = children.map(_.genCode(ctx))
+    ev.copy(code =
+      code"""
+        ${stems.code}
+        ${toks.code}
+        ${lc.code}
+        boolean ${ev.isNull} = ${stems.isNull};
+        int ${ev.value} = ${ev.isNull} ? 0 : graft.functions.ExprImpl.titleHits(${stems.value},
+          ${toks.isNull} ? null : ${toks.value}, ${lc.isNull} ? null : ${lc.value});
+      """)
+  }
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
 }
 
 /** A per-query value of a plan that is built once and run again for each

@@ -6,12 +6,10 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.{BaseSubqueryExec, LogicalRDD, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{BaseSubqueryExec, LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
@@ -32,19 +30,23 @@ import graft.text.TextPipeline
   *  - one Spark job of one stage and one task per query (AQE off on the
   *    serve session, no exchange, no broadcast, no subquery): term resolve
   *    is driver-side whenever the term dictionary fits in memory, and the
-  *    scoring aggregate, mean score and per-partition top-K run in the job
-  *    that collects the SERP;
+  *    scoring aggregate, mean score and top-K run in the job that collects
+  *    the SERP;
   *  - `statics` and postings⋈tfidf are materialized leaves, hash-partitioned
   *    on url_id to the serve session's shuffle partitions, so the scoring
   *    aggregate and the statics join need no exchange. Phrases read the
   *    positions on the postings leaf, not a forward index;
+  *  - a query reads only its own posting lists: each postings partition is
+  *    kept as one block with, per word id, the numbers of its rows
+  *    ([[WordSlices]]), and emits the rows of the query's words in leaf
+  *    order, so every per-document sum adds in the order of a full scan;
   *  - no per-query cache: a query leaves nothing persisted behind;
   *  - one prepared run per query shape ([[Shape]]): its plan is analyzed,
-  *    optimized, planned and compiled, and the RDD under its top-K is
-  *    built, at the shape's first query, and kept on the Prepared until
-  *    close(). Every query of the shape runs that RDD again, so a query
-  *    runs no analysis, optimization, planning or whole-stage code
-  *    generation, builds no RDD, and posts no SQL-execution events;
+  *    optimized, planned and compiled, and its RDD is built, at the shape's
+  *    first query, and kept on the Prepared until close(). Every query of
+  *    the shape runs that RDD again, so a query runs no analysis,
+  *    optimization, planning or whole-stage code generation, builds no
+  *    RDD, and posts no SQL-execution events;
   *  - values carried per query: word ids, multiplicities, phrases, stems
   *    and the query length are [[QueryParam]]s, carried as a job-local
   *    property of the query's job and decoded once per task, so racing
@@ -53,10 +55,13 @@ import graft.text.TextPipeline
   *    node ([[rerunBlockers]], required at the shape's first query): a
   *    shuffle's output would be reused by the next run of the RDD, which
   *    would then return the first query's rows;
-  *  - the scoring join runs once: the mean score is a window aggregate
-  *    over a narrow `coalesce(1)` of the scored rows, so above one serve
-  *    partition the scored partitions are read by one task, with no
-  *    exchange.
+  *  - the scoring join runs once, and the stage runs in generated code
+  *    (but for a phrase's `collect_list` aggregate) below a narrow
+  *    `coalesce(1)` of the scored rows: the job's function ([[ScoreTopK]])
+  *    computes the mean score, the title score and the total over that one
+  *    partition and keeps the top K, so above one serve partition the
+  *    scored partitions are read by one task, with no exchange, and no
+  *    operator generates projection code in the query's task.
   *
   * Exactness notes:
   *  - single-word score = mult · tf · tfidf_r6 (the reference scatter-adds
@@ -87,7 +92,7 @@ object Searcher {
     private[rank] val runs = new ConcurrentHashMap[Shape, ShapeRun]()
 
     /** Release everything [[prepare]] materialized — the rank cache, the
-      * checkpointed statics and postings⋈tfidf blocks, the shape runs —
+      * checkpointed statics, the postings⋈tfidf blocks, the shape runs —
       * and the global temp views backing the serve session. A long-lived
       * serving session should close() retired Prepared instances. */
     def close(): Unit = {
@@ -107,14 +112,16 @@ object Searcher {
 
   private val prepareIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The RDD behind a checkpointed DataFrame (a LogicalRDD leaf). */
+  /** The RDD behind a leaf DataFrame (a LogicalRDD). */
   private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
 
-  /** Frees a checkpointed DataFrame's blocks — `Dataset.unpersist()` only
-    * drops cache entries, never a local checkpoint. */
-  private def release(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+  /** Frees a leaf's blocks — `Dataset.unpersist()` only drops cache
+    * entries, never a local checkpoint. */
+  private def release(df: DataFrame): Unit = checkpointRdd(df).foreach {
+    case slices: WordSlices => slices.blocks.unpersist(blocking = false)
+    case rdd => rdd.unpersist(blocking = false)
+  }
 
   /** One-time serving prep: all query-invariant work happens here.
     *  - the rank table is cached and the global max PR read once;
@@ -122,10 +129,11 @@ object Searcher {
     *    (max_tf ⋈ rank ⋈ title ⋈ url ⋈ doc length, plus the tokenized and
     *    lowercased title);
     *  - `postingsTfidf` pre-joins postings⋈tfidf on (url_id, word_id),
-    *    positions included;
-    *  - both are eager local checkpoints hash-partitioned on url_id: a
-    *    checkpoint is a leaf, so no per-query plan can re-derive it, and
-    *    its partitioning lets the scoring aggregate and join skip the
+    *    positions included, and keeps each partition as one block sliced
+    *    by word id ([[WordSlices]]), read through the query's word ids;
+    *  - both are leaves hash-partitioned on url_id, each materialized by
+    *    one job: no per-query plan can re-derive them, and their
+    *    partitioning lets the scoring aggregate and join skip the
     *    exchange;
     *  - a term dictionary of ≤ [[MaxLocalTerms]] terms is held driver-side
     *    (one bounded collect); larger ones keep the distributed lookup.
@@ -142,8 +150,12 @@ object Searcher {
     prepare(index, ranks, MaxLocalTerms)
 
   /** [[prepare]] holding a dictionary of at most `maxLocalTerms` terms
-    * driver-side; a larger one is looked up per query. */
-  private[graft] def prepare(index: IndexTables, ranks: DataFrame, maxLocalTerms: Int): Prepared = {
+    * driver-side (a larger one is looked up per query), and serving at
+    * `servePartitions` url_id partitions when given instead of the ones the
+    * index size derives (an index of 50,000 × that many documents would be
+    * prepared so). */
+  private[graft] def prepare(index: IndexTables, ranks: DataFrame, maxLocalTerms: Int = MaxLocalTerms,
+                             servePartitions: Option[Int] = None): Prepared = {
     val parent = ranks.sparkSession
     val cached = ranks.cache()
     // coalesce: max over ZERO rows is SQL NULL — an index built from an
@@ -166,8 +178,8 @@ object Searcher {
     val parentSp = parent.conf.getOption("spark.sql.shuffle.partitions")
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .getOrElse(parent.sparkContext.defaultParallelism)
-    val serveSp = math.max(1L, math.min(parentSp.toLong,
-      (index.n + DocsPerServePartition - 1) / DocsPerServePartition)).toInt
+    val serveSp = servePartitions.getOrElse(math.max(1L, math.min(parentSp.toLong,
+      (index.n + DocsPerServePartition - 1) / DocsPerServePartition)).toInt)
     serve.conf.set("spark.sql.shuffle.partitions", serveSp.toString)
     // a phrase's scoring aggregate (collect_list) keys one serve partition's
     // matched documents: keep them in its hash map rather than sort them
@@ -184,10 +196,10 @@ object Searcher {
       views ::= vn
       serve.table(s"global_temp.$vn")
     }
-    def materialize(df: DataFrame): DataFrame = {
-      val leaf = Bridge.localCheckpoint(df.repartition(serveSp, col("url_id")))
-      leaves ::= leaf
-      leaf
+    def materialize(df: DataFrame, leaf: DataFrame => DataFrame): DataFrame = {
+      val l = leaf(df.repartition(serveSp, col("url_id")))
+      leaves ::= l
+      l
     }
     // any failure after the first rebind must drop the views and leaves
     // created so far — Prepared was never constructed, so the caller has
@@ -217,12 +229,13 @@ object Searcher {
           coalesce(col("rank"), lit(0.0)).as("rank"), col("title"), col("url"),
           col("len"),
           gfn.tokenize_words(col("title")).as("title_toks"),
-          lower(col("title")).as("title_lc")))
+          lower(col("title")).as("title_lc")), Bridge.localCheckpoint)
 
       // tfidf's keyset equals postings' (tfidf derives from postings)
       val postingsTfidf = materialize(sIdx.postings
         .join(sIdx.tfidf, Seq("url_id", "word_id"))
-        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6"), col("positions")))
+        .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6"), col("positions")),
+        sliceByWord)
 
       // coalesce(1): the bounded collect is one job reading at most
       // maxLocalTerms + 1 rows, whatever the dictionary's partitioning
@@ -242,6 +255,20 @@ object Searcher {
     }
   }
 
+  /** `rows`, url_id-partitioned with the word id first, as the serve's
+    * postings leaf: one job packs each partition into a [[PostingsBlock]],
+    * kept as a local checkpoint, and a query's task emits only the rows of
+    * the words in its [[IdsSlot]]. */
+  private def sliceByWord(rows: DataFrame): DataFrame = Bridge.withSessionConf(rows.sparkSession) {
+    val width = rows.schema.length
+    val blocks = rows.queryExecution.toRdd
+      .mapPartitions(it => Iterator(PostingsBlock(width, it)))
+      .localCheckpoint()
+    blocks.count()
+    Bridge.hashPartitionedLeaf(rows.sparkSession, rows.schema, new WordSlices(blocks, IdsSlot),
+      "url_id", Bridge.storedBytes(blocks))
+  }
+
   private def emptyResult(spark: SparkSession): DataFrame =
     Bridge.localRows(spark,
       StructType(Seq(
@@ -254,37 +281,38 @@ object Searcher {
     * executes on the Prepared's dedicated serve session — the caller's
     * session conf is never touched. */
   def search(spark: SparkSession, p: Prepared, query: String, topK: Int = 50): DataFrame =
-    resolve(p, query, topK) match {
-      case None => emptyResult(p.serve)
-      case Some(q) => collectSerp(p, q)
+    resolve(p, query) match {
+      case Some(q) if topK > 0 => collectSerp(p, q, topK)
+      case _ => emptyResult(p.serve)
     }
 
   /** What a query's scoring plan is built from besides its values: whether
-    * single terms are present, the number of phrases and the SERP size.
-    * Every shape has at least one term group, so no plan has an empty
-    * branch. */
-  private[rank] final case class Shape(singles: Boolean, phrases: Int, topK: Int)
+    * single terms are present and the number of phrases. Every shape has at
+    * least one term group, so no plan has an empty branch. */
+  private[rank] final case class Shape(singles: Boolean, phrases: Int)
 
-  /** A shape's executed plan, with its top-K as the root, and the RDD under
-    * that top-K, built once: each query of the shape runs the RDD again
-    * with its own values. */
-  private[graft] final case class ShapeRun(plan: TakeOrderedAndProjectExec,
-                                           rows: RDD[InternalRow])
+  /** A shape's executed plan, whose root is the narrow coalesce of its
+    * scored rows, and the plan's RDD, built once: each query of the shape
+    * runs the RDD again with its own values. */
+  private[graft] final case class ShapeRun(plan: SparkPlan, rows: RDD[InternalRow])
 
   /** A resolved query: its shape and the value of each [[QueryParam]] slot
-    * — the query length, the stems, then three slots per term group (the
-    * single terms first, then each phrase): its distinct word ids, their
-    * multiplicities and its ids in query order (read by phrases only). */
+    * — the query length, the stems, the distinct word ids of all its term
+    * groups (ascending; the postings leaf emits their rows), then three
+    * slots per term group (the single terms first, then each phrase): its
+    * distinct word ids, their multiplicities and its ids in query order
+    * (read by phrases only). */
   private final case class Bound(shape: Shape, values: IndexedSeq[Any])
 
   private val LengthSlot = 0
   private val StemsSlot = 1
-  private def groupSlot(g: Int) = 2 + 3 * g
+  private val IdsSlot = 2
+  private def groupSlot(g: Int) = 3 + 3 * g
 
   /** The run of `query`'s shape on `p`, built if the shape is new, or None
     * when no query term resolves. */
-  private[graft] def shapeRun(p: Prepared, query: String, topK: Int): Option[ShapeRun] =
-    resolve(p, query, topK).map(q => shapeRun(p, q.shape))
+  private[graft] def shapeRun(p: Prepared, query: String): Option[ShapeRun] =
+    resolve(p, query).map(q => shapeRun(p, q.shape))
 
   private def shapeRun(p: Prepared, shape: Shape): ShapeRun =
     p.runs.computeIfAbsent(shape, _ => Bridge.withSessionConf(p.serve) {
@@ -292,14 +320,9 @@ object Searcher {
       val blockers = rerunBlockers(plan)
       require(blockers.isEmpty, "a serve plan must be one stage that can run " +
         s"again: ${blockers.mkString(", ")}\n${plan.treeString}")
-      plan match {
-        case top: TakeOrderedAndProjectExec if top.projectList == top.child.output =>
-          val rows = top.child.execute()
-          rows.partitions // computed once, before racing queries share the RDD
-          ShapeRun(top, rows)
-        case other =>
-          throw new IllegalStateException(s"a serve plan must end in its top-K:\n${other.treeString}")
-      }
+      val rows = plan.execute()
+      rows.partitions // computed once, before racing queries share the RDD
+      ShapeRun(plan, rows)
     })
 
   /** The nodes of `plan` that keep a result between two runs of its RDD or
@@ -317,44 +340,83 @@ object Searcher {
     * SERP as a LocalRelation with the 1-based `rank` column prepended — ≤
     * topK rows, and a broadcastable local table for downstream joins
     * (serpDetails). */
-  private def collectSerp(p: Prepared, q: Bound): DataFrame = {
+  private def collectSerp(p: Prepared, q: Bound, topK: Int): DataFrame = {
     val run = shapeRun(p, q.shape)
-    val top = run.plan
-    val first = new TopK(new InterpretedOrdering(top.sortOrder, top.child.output), top.limit)
+    val scoreTopK = new ScoreTopK(topK)
     val sc = p.serve.sparkContext
     val perPartition = Bridge.withSessionConf(p.serve)(QueryParam.withValues(sc, q.values)(
-      sc.runJob(run.rows, first)))
-    val rows = first(perPartition.iterator.flatten).zipWithIndex.map {
-      case (r, i) => InternalRow.fromSeq((i + 1) +: r.toSeq(top.schema))
-    }
+      sc.runJob(run.rows, scoreTopK)))
+    val rows = firstK(perPartition.iterator.flatten, topK)
     if (rows.isEmpty) return emptyResult(p.serve) // pinned empty-SERP schema
-    Bridge.localRows(p.serve,
-      StructType(StructField("rank", IntegerType, nullable = false) +: top.schema.fields), rows.toSeq)
+    rows.indices.foreach(i => rows(i).setInt(0, i + 1))
+    val scored = run.plan.schema
+    Bridge.localRows(p.serve, StructType(Seq(StructField("rank", IntegerType, nullable = false),
+      scored("url_id"), scored("url"), StructField("total", DoubleType), scored("cos"),
+      scored("pr"), StructField("title_score", DoubleType), scored("title"))), rows.toSeq)
   }
 
-  /** The first `k` rows under `ord`, in order and copied (a scan reuses
-    * its row objects): of one partition in a task, and of the partitions'
-    * results on the driver. A class, not a closure, so the job cleans no
-    * closure. */
-  private final class TopK(ord: Ordering[InternalRow], k: Int)
-      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
-    def apply(task: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = apply(rows)
+  // the ordinals of a shape plan's scored row, and of a SERP row
+  private val UrlIdAt = 0
+  private val UrlAt = 1
+  private val TitleAt = 2
+  private val ScoreAt = 3
+  private val CosAt = 4
+  private val PrAt = 5
+  private val HitsAt = 6
+  private val SerpUrlIdAt = 1
+  private val SerpTotalAt = 3
 
-    def apply(rows: Iterator[InternalRow]): Array[InternalRow] = {
-      val kept = new java.util.PriorityQueue[InternalRow](k, ord.reverse) // head: the last kept
-      rows.foreach { r =>
-        if (kept.size < k) kept.add(r.copy())
-        else if (ord.lt(r, kept.peek())) { kept.poll(); kept.add(r.copy()) }
-      }
-      kept.toArray(new Array[InternalRow](0)).sorted(ord)
+  /** The job's function over the one partition of a shape's scored rows
+    * (WebController.kt:60-83): the mean score Σ score / 3n, summed in row
+    * order as a sum aggregate adds it; per row the title score, the mean
+    * once per matching stem (so no match scores 0.0 even when the mean is
+    * NaN), and the total (cos + pr) + title score; then the first `k` SERP
+    * rows (rank left 0) under [[SerpOrder]]. A class, not a closure, so the
+    * job cleans no closure. */
+  private final class ScoreTopK(k: Int)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(task: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = {
+      val scored = rows.map(_.copy()).toArray // a scan reuses its row objects
+      var sum = 0.0
+      scored.foreach(r => sum += r.getDouble(ScoreAt))
+      val mean = sum / (3L * scored.length)
+      firstK(scored.iterator.map { r =>
+        val hits = r.getInt(HitsAt)
+        val titleScore = if (hits == 0) 0.0 else hits * mean
+        val (cos, pr) = (r.getDouble(CosAt), r.getDouble(PrAt))
+        InternalRow(0, r.getLong(UrlIdAt), r.getUTF8String(UrlAt), cos + pr + titleScore, cos, pr,
+          titleScore, r.getUTF8String(TitleAt))
+      }, k)
+    }
+  }
+
+  /** The first `k` of `rows` under [[SerpOrder]], in order: of one
+    * partition in a task, and of the partitions' results on the driver. */
+  private def firstK(rows: Iterator[InternalRow], k: Int): Array[InternalRow] = {
+    val kept = new java.util.PriorityQueue[InternalRow](math.min(k, 1024), SerpOrder.reverse)
+    rows.foreach { r => // head: the last kept
+      if (kept.size < k) kept.add(r)
+      else if (SerpOrder.lt(r, kept.peek())) { kept.poll(); kept.add(r) }
+    }
+    kept.toArray(new Array[InternalRow](0)).sorted(SerpOrder)
+  }
+
+  /** The SERP order `(isnan(total), total DESC, url_id ASC)`, with Spark's
+    * double comparison (−0.0 equals 0.0). */
+  private object SerpOrder extends Ordering[InternalRow] {
+    def compare(a: InternalRow, b: InternalRow): Int = {
+      val (x, y) = (a.getDouble(SerpTotalAt), b.getDouble(SerpTotalAt))
+      if (x.isNaN != y.isNaN) java.lang.Boolean.compare(x.isNaN, y.isNaN)
+      else if (x == y || x.isNaN) java.lang.Long.compare(a.getLong(SerpUrlIdAt), b.getLong(SerpUrlIdAt))
+      else java.lang.Double.compare(y, x)
     }
   }
 
   /** Driver-side query analysis (queries are tiny): stems → word ids with
     * the phrase-kill rule (Ranker.kt:100-119), and the parameter values. */
-  private def resolve(p: Prepared, query: String, topK: Int): Option[Bound] = {
+  private def resolve(p: Prepared, query: String): Option[Bound] = {
     val groups = TextPipeline.tokenizeQuery(query)
-    if (groups.isEmpty || topK <= 0) return None
+    if (groups.isEmpty) return None
     val allStems = groups.flatten
     val wordIdMap = p.wordIdLocal match {
       case Some(dict) => allStems.distinct.flatMap(s => dict.get(s).map(s -> _)).toMap
@@ -375,13 +437,14 @@ object Searcher {
     val termGroups = (if (singles.isEmpty) Nil else List(singles.flatten)) ++ phrases
     val values = Vector[Any](
       math.sqrt(idGroups.map(_.size).sum.toDouble),
-      new GenericArrayData(allStems.map(s => UTF8String.fromString(s): Any).toArray)) ++
+      new GenericArrayData(allStems.map(s => UTF8String.fromString(s): Any).toArray),
+      ArrayData.toArrayData(idGroups.flatten.distinct.sorted.toArray)) ++
       termGroups.flatMap { ids =>
         val mults = ids.groupBy(identity).map { case (w, occ) => (w, occ.size) }.toSeq.sortBy(_._1)
         Seq(ArrayData.toArrayData(mults.map(_._1).toArray),
           ArrayData.toArrayData(mults.map(_._2).toArray), ArrayData.toArrayData(ids.toArray))
       }
-    Some(Bound(Shape(singles.nonEmpty, phrases.size, topK), values))
+    Some(Bound(Shape(singles.nonEmpty, phrases.size), values))
   }
 
   /** The scoring plan of `shape`, reading every query value from its
@@ -402,10 +465,11 @@ object Searcher {
     }
     val (singles, phrases) = groups.splitAt(if (shape.singles) 1 else 0)
 
-    // -- one aggregate per document over the postings leaf, which is
-    // url_id-partitioned, so it needs no exchange: the single-term sum, and
-    // per phrase its term sum and the positions of its words. Each input is
-    // projected before the aggregate, in generated code ---------------------
+    // -- one aggregate per document over the postings leaf, which emits
+    // only the rows of the query's words and is url_id-partitioned, so it
+    // needs no exchange: the single-term sum, and per phrase its term sum
+    // and the positions of its words. Each input is projected before the
+    // aggregate, in generated code ------------------------------------------
     val single = if (shape.singles) Seq(col("single")) else Nil
     val inputs = singles.map(s => when(s.has, s.mult * col("tf") * col("tfidf_r6")).as("single")) ++
       phrases.indices.map(i => when(phrases(i).has, phrases(i).mult * col("tfidf_r6")).as(s"term$i")) ++
@@ -415,7 +479,6 @@ object Searcher {
       phrases.indices.map(i => sum(s"term$i").as(s"term_sum$i")) ++
       (if (phrases.isEmpty) Nil else Seq(collect_list("at").as("positions")))
     val perDoc = p.postingsTfidf
-      .filter(groups.map(_.has).reduce(_ || _))
       .select(col("url_id") +: inputs: _*)
       .groupBy("url_id")
       .agg(aggs.head, aggs.tail: _*)
@@ -439,36 +502,20 @@ object Searcher {
       .withColumn("score", when(norm === 0.0, signum(col("raw")) * Double.PositiveInfinity)
         .otherwise(col("raw") / norm))
 
-    // meanScore (Σ score / 3n — the reference's driver-side mean) is a
-    // window aggregate over every scored row, so it stays inside the SERP's
-    // job and the scoring join runs once. The narrow coalesce(1) gives the
-    // window its one partition without an exchange. statics' keyset equals
-    // docLen's, so aggregating over the statics join changes no rows.
-    val all = Window.partitionBy()
-    val meanScore = sum("score").over(all) / (count(lit(1)).over(all) * 3)
-
-    // -- final scoring (WebController.kt:60-83): the title score adds the
-    // mean once per matching stem, so no match scores 0.0 even when the
-    // mean is NaN ------------------------------------------------------------
-    val scored = joined.coalesce(1)
-      .withColumn("mean_score", meanScore)
-      .withColumn("cos", col("score") / col("max_tf"))
-      .withColumn("pr", col("rank") / lit(p.maxPR * 3))
-      .withColumn("title_hits",
-        size(filter(param(StemsSlot, ArrayType(StringType, containsNull = false)), t =>
-          array_contains(col("title_toks"), t) ||
-            contains(col("title_lc"), t))))
-      .withColumn("title_score", when(col("title_hits") === 0, lit(0.0))
-        .otherwise(col("title_hits") * col("mean_score")))
-      .withColumn("total", col("cos") + col("pr") + col("title_score"))
-
-    // global top-K as a TakeOrderedAndProject, whose ordering the serve's
-    // per-partition top-K and driver merge use; the rank column is
-    // assigned driver-side over the ≤ topK collected rows
-    scored
-      .select("url_id", "url", "total", "cos", "pr", "title_score", "title")
-      .orderBy(isnan(col("total")), desc("total"), asc("url_id"))
-      .limit(shape.topK)
+    // -- final scoring (WebController.kt:60-83): cos, pr and the number of
+    // query stems in the title, in the join's generated code. The mean score
+    // (Σ score / 3n — the reference's driver-side mean), the title score and
+    // the total are the job's function's ([[ScoreTopK]]): the narrow
+    // coalesce(1) gives it every scored row in one partition, without an
+    // exchange, so the scoring join runs once. statics' keyset equals
+    // docLen's, so the join changes no rows. The columns are in the order of
+    // the scored-row ordinals ------------------------------------------------
+    joined
+      .select(col("url_id"), col("url"), col("title"), col("score"),
+        (col("score") / col("max_tf")).as("cos"), (col("rank") / lit(p.maxPR * 3)).as("pr"),
+        gfn.title_hits(param(StemsSlot, ArrayType(StringType, containsNull = false)),
+          col("title_toks"), col("title_lc")).as("title_hits"))
+      .coalesce(1)
   }
 
   /** J7/T4/F12: the SERP metadata block — one multi-way left join of the

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
@@ -43,13 +45,29 @@ object Bridge {
     val cp = df.localCheckpoint(eager = true)
     cp.queryExecution.logical match {
       case r: LogicalRDD =>
-        val stored = r.rdd.sparkContext.getRDDStorageInfo
-          .find(_.id == r.rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
         val session = df.sparkSession.asInstanceOf[SparkSession]
-        Dataset.ofRows(session, r.copy()(session, Some(Statistics(BigInt(stored))), None))
+        Dataset.ofRows(session, r.copy()(session, Some(Statistics(BigInt(storedBytes(r.rdd)))), None))
       case _ => cp
     }
   }
+
+  /** A leaf of `schema`'s rows computed by `rdd`, whose partitions are
+    * hash-partitioned on the column `key` as `repartition(n, key)` leaves
+    * them, with logical size `sizeInBytes`: a plan over it needs no
+    * exchange to group or join on `key`. */
+  def hashPartitionedLeaf(session: org.apache.spark.sql.SparkSession, schema: StructType,
+                          rdd: RDD[InternalRow], key: String, sizeInBytes: Long): DataFrame = {
+    val s = session.asInstanceOf[SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    Dataset.ofRows(s, LogicalRDD(output, rdd,
+      HashPartitioning(output.filter(_.name == key), rdd.getNumPartitions))(
+      s, Some(Statistics(BigInt(sizeInBytes)))))
+  }
+
+  /** The bytes, in memory and on disk, of `rdd`'s stored blocks. */
+  def storedBytes(rdd: RDD[_]): Long =
+    rdd.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
+      .map(i => i.memSize + i.diskSize).getOrElse(0L)
 
   /** Blocks until the listener bus has delivered every posted event, so a
     * listener's view is complete right after an action returns. */

@@ -34,8 +34,8 @@ class DriverCollectSpec extends AnyFunSuite {
       "the term map: ≤ maxLocalTerms + 1 rows"),
     ("rank/Searcher.scala", ".collect().map(r => r.getString(0) -> r.getLong(1)).toMap",
       "dictionary rows of the query's stems"),
-    ("rank/Searcher.scala", "sc.runJob(run.rows, first)",
-      "the SERP: ≤ topK rows per serve partition, merged to ≤ topK"),
+    ("rank/Searcher.scala", "sc.runJob(run.rows, scoreTopK)",
+      "the SERP: ScoreTopK keeps ≤ topK rows per serve partition, merged to ≤ topK"),
     ("ops/TrainingOps.scala", "hot.collect()",
       "hot bucket keys: ≤ rows / maxDf"),
     ("ops/TrainingOps.scala", "result.collect()",

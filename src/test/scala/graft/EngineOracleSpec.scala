@@ -31,14 +31,11 @@ object SparkTestSession {
     s
   }
 
-  /** A copy of `p` whose leaves are re-materialized at `partitions` url_id
-    * partitions, served at as many shuffle partitions (an index of
-    * 50,000 × `partitions` documents would be prepared so). */
-  def servedAt(p: Searcher.Prepared, partitions: Int): Searcher.Prepared = {
-    p.serve.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    def leaf(df: DataFrame) = Bridge.localCheckpoint(df.repartition(partitions, col("url_id")))
-    p.copy(statics = leaf(p.statics), postingsTfidf = leaf(p.postingsTfidf))
-  }
+  /** `p`'s index and ranks prepared again, served at `partitions` url_id
+    * partitions (an index of 50,000 × `partitions` documents would be
+    * prepared so): its leaves are built as prepare() builds them. */
+  def servedAt(p: Searcher.Prepared, partitions: Int): Searcher.Prepared =
+    Searcher.prepare(p.index, p.ranks, servePartitions = Some(partitions))
 }
 
 /** End-to-end fixtures: the Spark engine must match the sequential

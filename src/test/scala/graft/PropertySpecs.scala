@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -95,6 +96,51 @@ object PhraseProps extends Properties("phrase") {
     forAll(small, Gen.choose(1, 3)) { (w, n) =>
       val p = w.take(n)
       p.isEmpty || viaExpr(w, p) * p.size <= w.size
+    }
+}
+
+object TitleHitsProps extends Properties("title_hits") {
+  import org.apache.spark.sql.{Row, SparkSession}
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types._
+
+  // each sample is a batch of rows evaluated by Spark jobs
+  override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(10)
+
+  // few short pieces, so stems repeat and match tokens and substrings often
+  private val piece = Gen.oneOf("ab", "abc", "b", "ca", "")
+  private val pieces = Gen.listOf(piece)
+  private def orNull[T](g: Gen[T]): Gen[Any] = Gen.frequency(4 -> g, 1 -> Gen.const(null))
+  private val row = for {
+    stems <- pieces
+    toks <- orNull(pieces)
+    lc <- orNull(Gen.listOf(Gen.oneOf("ab", "c", " ", "x")).map(_.mkString))
+  } yield Row(stems, toks, lc)
+
+  private val schema = StructType(Seq(
+    StructField("stems", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("toks", ArrayType(StringType, containsNull = false)),
+    StructField("lc", StringType)))
+
+  /** `c` over `rows`, in row order, as one job on `session`. */
+  private def eval(session: SparkSession, rows: List[Row], c: Column): Seq[Int] =
+    session.createDataFrame(session.sparkContext.parallelize(rows, 2), schema)
+      .select(c).collect().map(_.getInt(0)).toSeq
+
+  private lazy val interpreted = {
+    val s = SparkTestSession.spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
+
+  property("title_hits == size(filter(stems, t -> array_contains(toks, t) OR " +
+           "contains(lc, t))), in generated code and interpreted") =
+    forAll(Gen.listOf(row)) { rows =>
+      val lambda = size(filter(col("stems"), t => array_contains(col("toks"), t) || contains(col("lc"), t)))
+      val hits = gfn.title_hits(col("stems"), col("toks"), col("lc"))
+      Seq(SparkTestSession.spark, interpreted).forall(s => eval(s, rows, hits) == eval(s, rows, lambda))
     }
 }
 

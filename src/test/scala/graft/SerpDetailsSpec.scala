@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, InputAdapter, RDDScanExec, SparkPlan,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -167,7 +169,7 @@ class SerpDetailsSpec extends AnyFunSuite {
       // a new id, multiplicity, query length and stems; more single terms;
       // a new phrase
       Seq("systems systems", "research systems networks", "\"crawler indexing\"").foreach { q =>
-        val run = Searcher.shapeRun(p, q, 50).get
+        val run = Searcher.shapeRun(p, q).get
         var rows = 0
         var jobsStages = (0, 0)
         val compiled = SparkJobs.compiles {
@@ -180,7 +182,7 @@ class SerpDetailsSpec extends AnyFunSuite {
         assert(compiled == 0, s"'$q' compiled $compiled classes")
         assert(jobs == 1 && stages == 1, s"'$q' ran $jobs jobs of $stages stages")
         // the query ran its shape's RDD: no plan or RDD was built for it
-        assert(Searcher.shapeRun(p, q, 50).get.rows eq run.rows, s"'$q' built a new RDD")
+        assert(Searcher.shapeRun(p, q).get.rows eq run.rows, s"'$q' built a new RDD")
         assert(run.plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, run.plan.treeString)
       }
     } finally p.close()
@@ -190,7 +192,7 @@ class SerpDetailsSpec extends AnyFunSuite {
        "and has no broadcast exchange") {
     val p = Searcher.prepare(eIdx, freshRanks)
     try {
-      val plan: SparkPlan = Searcher.shapeRun(p, "research systems", 50).get.plan
+      val plan: SparkPlan = Searcher.shapeRun(p, "research systems").get.plan
       assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, plan.treeString)
       val staticsRdd = Searcher.checkpointRdd(p.statics).get.id
       val leafRdds = Set(staticsRdd, Searcher.checkpointRdd(p.postingsTfidf).get.id)
@@ -212,16 +214,37 @@ class SerpDetailsSpec extends AnyFunSuite {
     } finally p.close()
   }
 
+  /** The operators of `plan` that run outside whole-stage code generation:
+    * every node not inside a codegen stage, each stage's inputs included. */
+  private def outsideCodegen(plan: SparkPlan): Seq[SparkPlan] = {
+    def inputs(n: SparkPlan): Seq[SparkPlan] = n match {
+      case in: InputAdapter => Seq(in.child)
+      case other => other.children.flatMap(inputs)
+    }
+    plan match {
+      case stage: WholeStageCodegenExec => inputs(stage.child).flatMap(outsideCodegen)
+      case other => other +: other.children.flatMap(outsideCodegen)
+    }
+  }
+
   test("serve plans: each shape kind is one stage at 1 and 4 serve partitions") {
     // single terms, one phrase, terms plus a phrase, two phrases
     val kinds = Seq("research systems", "\"hong kong\"", "\"hong kong\" research",
       "\"hong kong\" \"crawler indexing\"")
     def check(prepared: Searcher.Prepared): Unit = kinds.foreach { q =>
-      val run = Searcher.shapeRun(prepared, q, 50).get
+      val run = Searcher.shapeRun(prepared, q).get
       val plan = run.plan
       assert(Searcher.rerunBlockers(plan).isEmpty, plan.treeString)
-      assert(plan.exists(_.isInstanceOf[WindowExec]), s"'$q' has no window:\n${plan.treeString}")
+      assert(!plan.exists(_.isInstanceOf[WindowExec]), s"'$q' has a window:\n${plan.treeString}")
       assert(!plan.exists(_.isInstanceOf[CartesianProductExec]), plan.treeString)
+      // every operator is generated code, a scan, the coalesce at the root
+      // or (for a phrase) the positions' collect_list aggregate
+      val phrase = q.contains('"')
+      outsideCodegen(plan).foreach {
+        case _: RDDScanExec | _: CoalesceExec =>
+        case _: ObjectHashAggregateExec if phrase =>
+        case n => fail(s"'$q': ${n.nodeName} runs outside generated code:\n${plan.treeString}")
+      }
       // every serve partition is read by the one task of the query's job
       assert(run.rows.getNumPartitions == 1, plan.treeString)
     }
@@ -233,6 +256,33 @@ class SerpDetailsSpec extends AnyFunSuite {
         assert(Searcher.checkpointRdd(p4.postingsTfidf).get.getNumPartitions == 4)
         check(p4)
       } finally p4.close()
+    } finally p.close()
+  }
+
+  test("serve leaf: a term, multi-term or phrase query reads only its words' " +
+       "postings, at 1 and 4 serve partitions") {
+    val ids = eIdx.wordDict.select("word", "word_id").as[(String, Long)].collect().toMap
+    val all = eIdx.postings.count()
+    def check(p: Searcher.Prepared): Unit =
+      Seq("research", "research systems networks", "\"hong kong\"").foreach { q =>
+        val words = graft.text.TextPipeline.tokenizeQuery(q).flatten.flatMap(ids.get).distinct
+        val want = eIdx.postings.filter(col("word_id").isin(words: _*)).count()
+        assert(want > 0 && want < all, s"'$q' must match some postings, not all: $want of $all")
+        val leafRdd = Searcher.checkpointRdd(p.postingsTfidf).get
+        val plan = Searcher.shapeRun(p, q).get.plan
+        val read = plan.collectFirst { case s: RDDScanExec if s.rdd eq leafRdd => s }
+          .getOrElse(fail(s"no postings scan:\n${plan.treeString}")).metrics("numOutputRows")
+        (1 to 2).foreach { _ =>
+          val before = read.value
+          Searcher.search(spark, p, q).collect()
+          assert(read.value - before == want, s"'$q' read ${read.value - before} postings rows")
+        }
+      }
+    val p = Searcher.prepare(eIdx, freshRanks)
+    try {
+      check(p)
+      val p4 = SparkTestSession.servedAt(p, 4)
+      try check(p4) finally p4.close()
     } finally p.close()
   }
 
