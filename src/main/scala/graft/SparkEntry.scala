@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
 
 import graft.corpus.TestCorpus
 import graft.crawler.{CrawlConfig, Crawler}
@@ -113,25 +114,17 @@ object SparkEntry {
   private var indexCache: Option[(SparkSession, graft.index.IndexTables, DataFrame)] = None
   private var demoSessionCache: Option[(SparkSession, SparkSession)] = None
 
-  /** The demo corpus is FIXTURE-scale by construction (demoSpec: 3 hosts ×
-    * 8 pages), so its crawl/index pipeline on a 32-partition AQE query
-    * session pays almost pure per-stage scheduling latency (~11 s of the
-    * bench's serp_index_build wall, measured round 7). The pipeline runs
-    * on a DEDICATED child session — AQE off (fixed tiny stages; the same
-    * rationale as PageRankSpark's loop session and Searcher.serveConf) and
-    * shuffle partitioning DERIVED from the corpus size — never touching
-    * the caller's session conf. Production-scale pipelines do not come
-    * through this path (they build their own sessions, e.g. Bench). */
+  /** The demo corpus is fixture-scale by construction (demoSpec: 3 hosts ×
+    * 8 pages), so its crawl/index pipeline runs on a
+    * [[Bridge.fixedPlanSession]] with shuffle partitions derived from the
+    * corpus size, never touching the caller's session conf. Production-scale
+    * pipelines do not come through this path (they build their own
+    * sessions, e.g. Bench). */
   private def demoSession(spark: SparkSession): SparkSession = synchronized {
     demoSessionCache match {
       case Some((s, c)) if s eq spark => c
       case _ =>
-        val child = spark.newSession()
-        Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
-          .foreach(k => spark.conf.getOption(k).foreach(child.conf.set(k, _)))
-        child.conf.set("spark.sql.adaptive.enabled", "false")
-        child.conf.set("spark.sql.shuffle.partitions",
-          math.max(2, demoCorpus.size / 16).toString)
+        val child = Bridge.fixedPlanSession(spark, math.max(2, demoCorpus.size / 16))
         demoSessionCache = Some((spark, child))
         child
     }

@@ -85,22 +85,19 @@ object Searcher {
 
   final case class Prepared(index: IndexTables, ranks: DataFrame, maxPR: Double,
                             statics: DataFrame, postingsTfidf: DataFrame,
-                            serve: SparkSession, viewNames: Seq[String],
+                            serve: SparkSession,
                             wordIdLocal: Option[Map[String, Long]] = None) {
     /** The prepared run of each query [[Shape]] served so far, built at
       * that shape's first query and run again by each query of it. */
     private[rank] val runs = new ConcurrentHashMap[Shape, ShapeRun]()
 
     /** Release everything [[prepare]] materialized — the rank cache, the
-      * checkpointed statics, the postings⋈tfidf blocks, the shape runs —
-      * and the global temp views backing the serve session. A long-lived
-      * serving session should close() retired Prepared instances. */
+      * checkpointed statics, the postings⋈tfidf blocks, the shape runs. A
+      * long-lived serving session should close() retired Prepared instances. */
     def close(): Unit = {
       runs.clear()
       ranks.unpersist()
       Seq(statics, postingsTfidf).foreach(release)
-      viewNames.foreach(serve.catalog.dropGlobalTempView)
-      ()
     }
   }
 
@@ -109,8 +106,6 @@ object Searcher {
 
   /** Documents per serve partition that [[prepare]] sizes the leaves for. */
   private val DocsPerServePartition = 50000L
-
-  private val prepareIds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The RDD behind a leaf DataFrame (a LogicalRDD). */
   private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
@@ -138,14 +133,11 @@ object Searcher {
     *  - a term dictionary of ≤ [[MaxLocalTerms]] terms is held driver-side
     *    (one bounded collect); larger ones keep the distributed lookup.
     *
-    * The serve runs on a DEDICATED session (`spark.newSession()` — own
-    * SQLConf, shared SparkContext + cache): the latency-path conf choices
-    * (AQE off, the derived shuffle partitions, the phrase aggregate's
-    * in-memory key bound) are set ONCE there and never
-    * touch the caller's session, so concurrent non-search queries can't
-    * observe serve conf. Index tables are rebound onto the serve session
-    * through global temp views; the shared CacheManager still substitutes
-    * the parent's cached plans. */
+    * The serve runs on a [[Bridge.fixedPlanSession]] with the derived serve
+    * partitions and the phrase aggregate's in-memory key bound, so
+    * concurrent non-search queries never observe serve conf. The index
+    * tables and ranks are bound onto it with [[Bridge.onSession]]; the
+    * shared cache still substitutes the parent's cached plans. */
   def prepare(index: IndexTables, ranks: DataFrame): Prepared =
     prepare(index, ranks, MaxLocalTerms)
 
@@ -162,16 +154,6 @@ object Searcher {
     // empty crawl must serve empty SERPs, not NPE inside prepare()
     val maxPR = cached.agg(coalesce(max("rank"), lit(0.0))).head().getDouble(0)
 
-    val serve = parent.newSession()
-    // builder-level confs propagate to new sessions via the SparkContext
-    // conf; runtime-set keys the serve path depends on are copied explicitly
-    Seq("spark.sql.session.timeZone",
-        "spark.sql.ansi.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .foreach(k => parent.conf.getOption(k).foreach(serve.conf.set(k, _)))
-    // AQE off: it turns every query stage of the SERP plan into its own
-    // driver-replanned job behind a materialization barrier, and a shape's
-    // plan must be one stage whose RDD can run again
-    serve.conf.set("spark.sql.adaptive.enabled", "false")
     // serve-side shuffle partitioning is derived from the index size: the
     // per-query matched set is ≤ n docs, so ~50k docs/partition, capped at
     // the parent's configured shuffle partitions
@@ -180,43 +162,35 @@ object Searcher {
       .getOrElse(parent.sparkContext.defaultParallelism)
     val serveSp = servePartitions.getOrElse(math.max(1L, math.min(parentSp.toLong,
       (index.n + DocsPerServePartition - 1) / DocsPerServePartition)).toInt)
-    serve.conf.set("spark.sql.shuffle.partitions", serveSp.toString)
+    val serve = Bridge.fixedPlanSession(parent, serveSp)
     // a phrase's scoring aggregate (collect_list) keys one serve partition's
     // matched documents: keep them in its hash map rather than sort them
     // in every query once 128 keys are held
     serve.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       DocsPerServePartition.toString)
 
-    val id = prepareIds.incrementAndGet()
-    var views = List.empty[String]
     var leaves = List.empty[DataFrame]
-    def rebind(df: DataFrame, name: String): DataFrame = {
-      val vn = s"graft_serve_${id}_$name"
-      df.createOrReplaceGlobalTempView(vn)
-      views ::= vn
-      serve.table(s"global_temp.$vn")
-    }
     def materialize(df: DataFrame, leaf: DataFrame => DataFrame): DataFrame = {
       val l = leaf(df.repartition(serveSp, col("url_id")))
       leaves ::= l
       l
     }
-    // any failure after the first rebind must drop the views and leaves
-    // created so far — Prepared was never constructed, so the caller has
-    // no close() handle to release them
+    def rebind(df: DataFrame): DataFrame = Bridge.onSession(df, serve)
+    // any failure must release the leaves made so far — Prepared was never
+    // constructed, so the caller has no close() handle to release them
     try {
       val sIdx = IndexTables(
-        urlDict = rebind(index.urlDict, "url_dict"),
-        links = rebind(index.links, "links"),
-        wordDict = rebind(index.wordDict, "word_dict"),
-        postings = rebind(index.postings, "postings"),
-        maxTf = rebind(index.maxTf, "max_tf"),
-        tfidf = rebind(index.tfidf, "tfidf"),
-        docLen = rebind(index.docLen, "doc_len"),
-        urlInfo = rebind(index.urlInfo, "url_info"),
+        urlDict = rebind(index.urlDict),
+        links = rebind(index.links),
+        wordDict = rebind(index.wordDict),
+        postings = rebind(index.postings),
+        maxTf = rebind(index.maxTf),
+        tfidf = rebind(index.tfidf),
+        docLen = rebind(index.docLen),
+        urlInfo = rebind(index.urlInfo),
         n = index.n,
-        urlWordCount = rebind(index.urlWordCount, "url_word_count"))
-      val sRanks = rebind(cached, "ranks")
+        urlWordCount = rebind(index.urlWordCount))
+      val sRanks = rebind(cached)
 
       // docLen's keyset equals maxTf's (both derive from the
       // postings-bearing docs), so the inner joins change no rows
@@ -245,11 +219,9 @@ object Searcher {
           Some(terms.map(r => r.getString(0) -> r.getLong(1)).toMap)
         else None
 
-      Prepared(sIdx, cached, maxPR, statics, postingsTfidf, serve, views,
-        wordIdLocal)
+      Prepared(sIdx, cached, maxPR, statics, postingsTfidf, serve, wordIdLocal)
     } catch { case e: Throwable =>
       leaves.foreach(l => scala.util.Try(release(l)))
-      views.foreach(v => scala.util.Try(serve.catalog.dropGlobalTempView(v)))
       scala.util.Try(cached.unpersist())
       throw e
     }

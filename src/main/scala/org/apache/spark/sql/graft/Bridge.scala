@@ -29,6 +29,34 @@ object Bridge {
     s.withActive(SQLExecution.withSQLConfPropagated(s)(body))
   }
 
+  /** Runtime-set keys a [[fixedPlanSession]] takes over from its parent;
+    * builder-level confs reach every session through the SparkContext conf. */
+  private val CarriedKeys = Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled",
+    "spark.sql.autoBroadcastJoinThreshold")
+
+  /** A child of `parent` (own SQL conf; shared SparkContext, cache and
+    * catalog) for plans whose shape does not depend on the data: the
+    * PageRank loop, the serve and the fixture-scale demo pipeline. AQE is
+    * off there: it runs each query stage as its own job, re-planned on the
+    * driver behind a materialization barrier, a fixed cost per stage that
+    * such plans gain nothing from, and a serve plan must be one stage whose
+    * RDD can run again. The child shuffles to `shufflePartitions`; the
+    * parent's conf is never touched. */
+  def fixedPlanSession(parent: org.apache.spark.sql.SparkSession,
+                       shufflePartitions: Int): org.apache.spark.sql.SparkSession = {
+    val child = parent.newSession()
+    CarriedKeys.foreach(k => parent.conf.getOption(k).foreach(child.conf.set(k, _)))
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    child
+  }
+
+  /** `df`'s analyzed plan as a DataFrame on `session`, planned under that
+    * session's conf. The shared cache still substitutes `df`'s cached
+    * parts, and column references taken from `df` still resolve. */
+  def onSession(df: DataFrame, session: org.apache.spark.sql.SparkSession): DataFrame =
+    Dataset.ofRows(session.asInstanceOf[SparkSession], df.queryExecution.analyzed)
+
   /** `rows`, Catalyst values of `schema`, as a DataFrame on `session`: a
     * LocalRelation, so no encoder converts them. */
   def localRows(session: org.apache.spark.sql.SparkSession, schema: StructType,

@@ -112,10 +112,10 @@ class SerpDetailsSpec extends AnyFunSuite {
       got.size == want.size && got.zip(want).forall { case ((r, id, t), (or, oid, ot)) =>
         r == or && id == oid && math.abs(t - ot) <= 1e-9 }
 
-    val prepared = Searcher.prepare(eIdx,
-      PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
     val parentAqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     val parentSpBefore = spark.conf.get("spark.sql.shuffle.partitions")
+    val prepared = Searcher.prepare(eIdx,
+      PageRankSpark.run(eIdx.links, eIdx.urlDict.select("url_id"), 40))
     val results = new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Long, Double)]]()
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val barrier = new java.util.concurrent.CyclicBarrier(queries.size + 1)
@@ -132,9 +132,11 @@ class SerpDetailsSpec extends AnyFunSuite {
     assert(errors.isEmpty, s"concurrent serve threw: ${errors.peek()}")
     queries.foreach(q => assert(same(results.get(q), expected(q)),
       s"racing serve of $q: ${results.get(q)} against the oracle's ${expected(q)}"))
-    // the parent session's conf was never touched by the serves
+    // the parent session's conf was never touched by PageRank or the serves
     assert(spark.conf.get("spark.sql.adaptive.enabled") == parentAqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == parentSpBefore)
+    // the tables reach the serve session with no catalog entry behind them
+    assert(spark.catalog.listTables("global_temp").collect().isEmpty)
     prepared.close()
   }
 
