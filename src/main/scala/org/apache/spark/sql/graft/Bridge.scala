@@ -34,8 +34,8 @@ object Bridge {
   private val CarriedKeys = Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled",
     "spark.sql.autoBroadcastJoinThreshold")
 
-  /** A child of `parent` (own SQL conf; shared SparkContext, cache and
-    * catalog) for plans whose shape does not depend on the data: the
+  /** A child of `parent` (own SQL conf; shared SparkContext and cache) for
+    * plans whose shape does not depend on the data: the
     * PageRank loop, the serve and the fixture-scale demo pipeline. AQE is
     * off there: it runs each query stage as its own job, re-planned on the
     * driver behind a materialization barrier, a fixed cost per stage that
