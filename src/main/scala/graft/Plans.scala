@@ -118,8 +118,8 @@ object Plans {
     section("sessionize: single user_id exchange shared by lag + running-sum windows and the aggregate") {
       T.sessionize(spark.read.parquet(s"$sf/events.parquet"), 21600L)
     }
-    section("tfidf DAG: partial aggregation") {
-      idx.tfidf
+    section("docTerms DAG: one url_id aggregate over the postings, which carry tf-idf") {
+      idx.docTerms
     }
     section("trigram shingles: row-local array transform (ZERO exchanges expected)") {
       T.trigramShingles(spark.read.parquet(s"$sf/documents.parquet"))

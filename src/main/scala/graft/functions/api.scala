@@ -30,9 +30,8 @@ object gfn {
   def url_host(url: Column): Column = column(UrlHostExpr(expression(url)))
   def url_path(url: Column): Column = column(UrlPathExpr(expression(url)))
 
-  def count_phrase(words: Column, phrase: Column): Column =
-    column(CountPhraseExpr(expression(words), expression(phrase)))
-  /** `count_phrase` over a document's (word_id, positions) postings. */
+  /** Non-overlapping phrase count over a document's (word_id, positions)
+    * postings. */
   def count_phrase_at(postings: Column, phrase: Column): Column =
     column(CountPhraseAtExpr(expression(postings), expression(phrase)))
 
@@ -40,10 +39,7 @@ object gfn {
   def title_hits(stems: Column, titleToks: Column, titleLc: Column): Column =
     column(TitleHitsExpr(expression(stems), expression(titleToks), expression(titleLc)))
 
-  def simhash(tokens: Column): Column = column(SimHashExpr(expression(tokens)))
   def simhash_md5(tokens: Column): Column = column(SimHashMd5Expr(expression(tokens)))
-  def winnow_fingerprints(text: Column, k: Column, w: Column): Column =
-    column(WinnowExpr(expression(text), expression(k), expression(w)))
   def winnow_md5(text: Column, k: Column, w: Column): Column =
     column(WinnowMd5Expr(expression(text), expression(k), expression(w)))
   def minhash_sigs(shingles: Column, k: Int): Column =
@@ -51,9 +47,9 @@ object gfn {
   def trigram_shingles(text: Column): Column =
     column(TrigramShinglesExpr(expression(text)))
   def round6_exact(x: Column): Column = column(Round6Expr(expression(x)))
+  def jvm_ln(x: Column): Column = column(JvmLnExpr(expression(x)))
   def round_exact(x: Column, scale: Int): Column =
     column(RoundExactExpr(expression(x), scale))
-  def srp_sketch(vec: Column): Column = column(SrpSketchExpr(expression(vec)))
   def srp_sketch_n(vec: Column, words: Int): Column =
     column(SrpSketchNExpr(expression(vec), words))
   def hamming_words(a: Column, b: Column): Column =
@@ -88,7 +84,6 @@ object gfn {
     reg1("strip_fragment", StripFragmentExpr.apply)
     reg1("url_host", UrlHostExpr.apply)
     reg1("url_path", UrlPathExpr.apply)
-    reg1("simhash", SimHashExpr.apply)
     reg1("simhash_md5", SimHashMd5Expr.apply)
     // SQL numeric literals arrive as DECIMAL — coerce at registration
     // (AbstractDataType is private[sql], so ImplicitCastInputTypes is not
@@ -106,7 +101,6 @@ object gfn {
         org.apache.spark.sql.catalyst.expressions.Cast(
           es(0), org.apache.spark.sql.types.DoubleType),
         foldableIntArg("round_exact", "scale", es(1))), "built-in")
-    reg1("srp_sketch", SrpSketchExpr.apply)
     reg.createOrReplaceTempFunction("srp_sketch_n",
       es => SrpSketchNExpr(es(0),
         foldableIntArg("srp_sketch_n", "words", es(1))), "built-in")
@@ -116,10 +110,6 @@ object gfn {
       es => DotProductExpr(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("extract_links",
       es => ExtractLinksExpr(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("count_phrase",
-      es => CountPhraseExpr(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fingerprints",
-      es => WinnowExpr(es(0), es(1), es(2)), "built-in")
     reg.createOrReplaceTempFunction("winnow_md5",
       es => WinnowMd5Expr(es(0), es(1), es(2)), "built-in")
     reg1("trigram_shingles", TrigramShinglesExpr.apply)

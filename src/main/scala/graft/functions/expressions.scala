@@ -148,29 +148,6 @@ object ExprImpl {
   def urlPath(url: UTF8String): UTF8String =
     UTF8String.fromString(UrlCanon.pathOf(url.toString))
 
-  /** Non-overlapping left-to-right count of `phrase` inside `words` —
-    * the array-equality equivalent of the reference's quoted-CSV substring
-    * count (Ranker.kt:64-76, StringUtils.countMatches): identical on CSV
-    * token boundaries because every token is quoted. */
-  def countPhrase(words: ArrayData, phrase: ArrayData): Int = {
-    val n = words.numElements()
-    val m = phrase.numElements()
-    if (m == 0 || m > n) return 0
-    var count = 0
-    var i = 0
-    while (i <= n - m) {
-      var j = 0
-      var ok = true
-      while (ok && j < m) {
-        if (words.getLong(i + j) != phrase.getLong(j)) ok = false
-        j += 1
-      }
-      if (ok) { count += 1; i += m } // non-overlapping: skip the match
-      else i += 1
-    }
-    count
-  }
-
   /** See [[WordPositionsExpr]]. */
   def wordPositions(tokens: ArrayData): ArrayData = {
     val at = new java.util.LinkedHashMap[UTF8String, scala.collection.mutable.ArrayBuilder.ofInt]()
@@ -194,11 +171,14 @@ object ExprImpl {
     new GenericArrayData(out)
   }
 
-  /** [[countPhrase]] from positions: a phrase of m words starts at p when
-    * its j-th word occurs at p + j for every j, and the greedy scan over the
-    * sorted starts of its first word skips m positions after each match, as
-    * [[countPhrase]]'s scan does. `postings` holds one (word_id, positions
-    * ascending) struct per word; a phrase word without one matches nothing. */
+  /** Non-overlapping left-to-right count of `phrase` in a document, from
+    * its positions — the equivalent of the reference's quoted-CSV substring
+    * count (Ranker.kt:64-76, StringUtils.countMatches; the sliding-window
+    * scan of `ReferenceOracle.countPhrase`). A phrase of m words starts at
+    * p when its j-th word occurs at p + j for every j, and the greedy scan
+    * over the sorted starts of its first word skips m positions after each
+    * match. `postings` holds one (word_id, positions ascending) struct per
+    * word; a phrase word without one matches nothing. */
   def countPhraseAt(postings: ArrayData, phrase: ArrayData): Int = {
     val m = phrase.numElements()
     if (m == 0) return 0
@@ -272,6 +252,20 @@ case class Round6Expr(child: Expression) extends UnaryExpression {
     ExprImpl.round6(v.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.ExprImpl.round6($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** `jvm_ln(x DOUBLE) → DOUBLE` — the natural log as `java.lang.Math.log`
+  * computes it, the reference's `kotlin.math.ln` (TfIdfMain.kt:35).
+  * Spark's `ln` calls `StrictMath.log`, which differs from it in the last
+  * bit for some inputs, and so would every tf-idf built on it. */
+case class JvmLnExpr(child: Expression) extends UnaryExpression {
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "jvm_ln"
+  override protected def nullSafeEval(v: Any): Any = java.lang.Math.log(v.asInstanceOf[Double])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"java.lang.Math.log($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -468,24 +462,10 @@ case class RobotsAllowedExpr(
     copy(left = l, right = r)
 }
 
-/** Non-overlapping phrase count over ARRAY<LONG> forward indexes
-  * (reference: Ranker.kt:52-77). */
-case class CountPhraseExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "count_phrase"
-  override protected def nullSafeEval(words: Any, phrase: Any): Any =
-    ExprImpl.countPhrase(words.asInstanceOf[ArrayData], phrase.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, p) => s"graft.functions.ExprImpl.countPhrase($w, $p)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Non-overlapping phrase count over one document's positional postings:
   * `postings` holds a (word_id, positions ARRAY<INT>) struct per word of
   * the document (positions ascending), `phrase` the phrase's word ids in
-  * query order. Equals `count_phrase` over the document's word array. */
+  * query order (see [[ExprImpl.countPhraseAt]]). */
 case class CountPhraseAtExpr(left: Expression, right: Expression) extends BinaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = IntegerType

@@ -7,16 +7,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static helpers for the training-data-pipeline expressions (SimHash,
-  * winnowing fingerprints). xxhash64-compatible avalanche mixing, all
-  * deterministic and seed-free so results are stable across runs/cluster
-  * sizes. */
+  * winnowing fingerprints, sketches). All deterministic and seed-free so
+  * results are stable across runs/cluster sizes. */
 object TextExprImpl {
-
-  /** 64-bit hash of a UTF8String (delegates to Spark's xxhash64 kernel so
-    * SQL `xxhash64(token)` and this agree). */
-  def hash64(s: UTF8String): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
 
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -25,9 +18,8 @@ object TextExprImpl {
 
   /** Signed little-endian int64 of the LAST 8 md5-digest bytes —
     * bit-identical to DuckDB's `md5_number_lower(s)` reinterpreted as a
-    * two's-complement BIGINT, so oracle SQL can recompute it exactly.
-    * Slower than [[hash64]]; used only by the portable (oracle-matched)
-    * fingerprint variants. */
+    * two's-complement BIGINT, so oracle SQL can recompute it exactly: the
+    * token and k-gram hash of the SimHash and winnowing fingerprints. */
   def md5Lower64(s: UTF8String): Long = {
     val md = md5Local.get()
     md.reset()
@@ -38,22 +30,18 @@ object TextExprImpl {
     v
   }
 
-  /** Charikar SimHash over a token array: per-token 64-bit hash votes
-    * +1/−1 on each bit position; the sign vector is the fingerprint.
-    * Near-duplicate docs differ in few bits (small Hamming distance). */
-  def simhash(tokens: ArrayData): Long = simhashWith(tokens, md5 = false)
-
-  /** SimHash over [[md5Lower64]] token hashes — DuckDB-reproducible. */
-  def simhashMd5(tokens: ArrayData): Long = simhashWith(tokens, md5 = true)
-
-  private def simhashWith(tokens: ArrayData, md5: Boolean): Long = {
+  /** Charikar SimHash over a token array: per-token [[md5Lower64]] hash
+    * votes +1/−1 on each bit position; the sign vector is the fingerprint —
+    * DuckDB-reproducible. Near-duplicate docs differ in few bits (small
+    * Hamming distance). */
+  def simhashMd5(tokens: ArrayData): Long = {
     val counts = new Array[Int](64)
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
       if (!tokens.isNullAt(i)) {
         val s = tokens.getUTF8String(i)
-        val h = if (md5) md5Lower64(s) else hash64(s)
+        val h = md5Lower64(s)
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -175,35 +163,13 @@ object TextExprImpl {
     z ^ (z >>> 31)
   }
 
-  /** 64-bit sign-random-projection sketch over ARRAY<DOUBLE> (see
-    * SrpSketchExpr). Hyperplanes are ±1-component, derived deterministically
-    * per (bit, dim) — identical across runs and cluster sizes. */
-  def srpSketch(vec: ArrayData): Long = {
-    val n = vec.numElements()
-    var out = 0L
-    var k = 0
-    while (k < 64) {
-      var acc = 0.0
-      var d = 0
-      while (d < n) {
-        if (!vec.isNullAt(d)) {
-          val sign = if ((splitmix(k.toLong * 1000003L + d) & 1L) == 1L) 1.0 else -1.0
-          acc += sign * vec.getDouble(d)
-        }
-        d += 1
-      }
-      if (acc > 0.0) out |= 1L << k
-      k += 1
-    }
-    out
-  }
-
-  /** `words`×64-bit sign-random-projection sketch — the wide
-    * generalization of [[srpSketch]] for low-threshold (research) dedup
-    * regimes where 64 bits cannot separate boundary pairs from noise.
-    * Global bit k = word·64 + i reuses the SAME per-(bit, dim) splitmix
-    * hyperplane derivation, so word 0 of the wide sketch IS the 64-bit
-    * sketch bit-for-bit (pinned in OpsSpec). */
+  /** `words`×64-bit sign-random-projection sketch over ARRAY<DOUBLE> (see
+    * SrpSketchNExpr): global bit k = word·64 + i is the sign of the dot
+    * product with a ±1-component hyperplane derived deterministically per
+    * (k, dim) by splitmix — identical across runs and cluster sizes. Wide
+    * sketches serve low-threshold (research) dedup regimes where 64 bits
+    * cannot separate boundary pairs from noise; word 0 is the same for
+    * every width (pinned in OpsSpec). */
   def srpSketchN(vec: ArrayData, words: Int): ArrayData = {
     val n = vec.numElements()
     val out = new Array[Any](words)
@@ -269,38 +235,20 @@ object TextExprImpl {
   }
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03):
-    * rolling 64-bit hashes of every k-gram (by char), then the minimum hash
-    * of each window of w consecutive k-grams, deduplicated, sorted. Robust
-    * local fingerprints for near-duplicate detection at corpus scale. */
-  def winnow(text: UTF8String, k: Int, w: Int): ArrayData =
-    winnowWith(text, k, w, md5 = false)
-
-  /** Winnowing over [[md5Lower64]] k-gram hashes — DuckDB-reproducible
-    * (oracle: `md5_number_lower(text[i:i+k-1])` two's-complemented, window
-    * minima via `list_min`). Char-indexed k-grams; identical to the oracle
-    * on the ASCII corpus. */
-  def winnowMd5(text: UTF8String, k: Int, w: Int): ArrayData =
-    winnowWith(text, k, w, md5 = true)
-
-  private def winnowWith(text: UTF8String, k: Int, w: Int, md5: Boolean): ArrayData = {
+    * the [[md5Lower64]] hash of every k-gram (by char), then the minimum
+    * hash of each window of w consecutive k-grams, deduplicated, sorted.
+    * Robust local fingerprints for near-duplicate detection at corpus
+    * scale, DuckDB-reproducible (oracle: `md5_number_lower(text[i:i+k-1])`
+    * two's-complemented, window minima via `list_min`). Char-indexed
+    * k-grams; identical to the oracle on the ASCII corpus. */
+  def winnowMd5(text: UTF8String, k: Int, w: Int): ArrayData = {
     val s = text.toString
     val n = s.length
     if (n < k) return new GenericArrayData(Array.empty[Any])
     val grams = new Array[Long](n - k + 1)
     var i = 0
     while (i + k <= n) {
-      if (md5) {
-        grams(i) = md5Lower64(UTF8String.fromString(s.substring(i, i + k)))
-      } else {
-        // polynomial rolling hash, then splitmix avalanche
-        var h = 1125899906842597L
-        var j = 0
-        while (j < k) { h = h * 31 + s.charAt(i + j); j += 1 }
-        var z = h + 0x9e3779b97f4a7c15L
-        z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-        z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-        grams(i) = z ^ (z >>> 31)
-      }
+      grams(i) = md5Lower64(UTF8String.fromString(s.substring(i, i + k)))
       i += 1
     }
     val picked = scala.collection.mutable.SortedSet.empty[Long]
@@ -319,37 +267,11 @@ object TextExprImpl {
   }
 }
 
-/** `simhash(tokens ARRAY<STRING>) → LONG` — near-duplicate fingerprint. */
-case class SimHashExpr(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
-  override protected def nullSafeEval(v: Any): Any =
-    TextExprImpl.simhash(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprImpl.simhash($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `srp_sketch(vec ARRAY<DOUBLE>) → LONG` — 64-bit sign-random-projection
-  * sketch (Charikar hyperplane LSH): bit k = sign(v · h_k) where
-  * hyperplane h_k's components are deterministic ±1 from a splitmix64 of
-  * (k, dim). Angular distance maps to Hamming distance
-  * (P[bit differs] = θ/π), so near-duplicate embeddings land within a
-  * small Hamming radius and the simhash block-join machinery buckets them. */
-case class SrpSketchExpr(child: Expression) extends UnaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = LongType
-  override def prettyName: String = "srp_sketch"
-  override protected def nullSafeEval(v: Any): Any =
-    TextExprImpl.srpSketch(v.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextExprImpl.srpSketch($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** `srp_sketch_n(vec ARRAY<DOUBLE>, words) → ARRAY<LONG>` — `words`×64-bit
-  * wide SRP sketch (see [[TextExprImpl.srpSketchN]]; word 0 ≡ `srp_sketch`).
+  * sign-random-projection sketch (Charikar hyperplane LSH, see
+  * [[TextExprImpl.srpSketchN]]): angular distance maps to Hamming distance
+  * (P[bit differs] = θ/π), so near-duplicate embeddings land within a
+  * small Hamming radius and the block-join machinery buckets them.
   * Wide sketches shrink the RELATIVE Hamming spread (σ/mean ∝ 1/√nbits),
   * which is what makes guaranteed-recall radii usable at low cosine
   * thresholds where a 64-bit radius would have to exceed the pigeonhole
@@ -455,22 +377,6 @@ case class MinhashSigsExpr(child: Expression, k: Int) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.TextExprImpl.minhashSigs($c, $k)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** `winnow_fingerprints(text, k, w) → ARRAY<LONG>` — winnowed k-gram
-  * fingerprint set. */
-case class WinnowExpr(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_fingerprints"
-  override protected def nullSafeEval(t: Any, k: Any, w: Any): Any =
-    TextExprImpl.winnow(t.asInstanceOf[UTF8String], k.asInstanceOf[Int], w.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, w) => s"graft.functions.TextExprImpl.winnow($t, $k, $w)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
 }
 
 /** `winnow_md5(text, k, w) → ARRAY<LONG>` — the portable winnowing variant

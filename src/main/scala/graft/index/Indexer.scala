@@ -9,19 +9,20 @@ import graft.gfn
 
 /** The index tables replacing the reference's 13 RocksDB stores
   * (SpiderMain.kt:19-31 → SURVEY.md §1.2). All columnar Parquet-friendly
-  * DataFrames; CSV-string encodings become native arrays. */
+  * DataFrames; CSV-string encodings become native arrays. Each value is
+  * stored once: a posting's tf-idf on its posting, and a document's
+  * count-desc word list, max_tf and length on its one `docTerms` row. */
 final case class IndexTables(
     urlDict: DataFrame,   // url, url_id, url_hash        (URL_DB + REVERSE_URL)
     links: DataFrame,     // src, dst                      (URL_CHILD; parent = swap)
     wordDict: DataFrame,  // word, word_id                 (WORD_DB + REVERSE_WORD)
-    postings: DataFrame,  // url_id, word_id, tf, first_pos, positions ARRAY<INT>
-                          //   (SPIDER + URL_WORD_COUNT; positions stand in for URL_WORDS)
-    maxTf: DataFrame,     // url_id, max_tf                 (URL_WORD_COUNT[1])
-    tfidf: DataFrame,     // url_id, word_id, tfidf, tfidf_r6 (TF_IDF rounded + raw)
-    docLen: DataFrame,    // url_id, len                    (URL_LENGTH)
+    postings: DataFrame,  // url_id, word_id, tf, first_pos, positions ARRAY<INT>,
+                          //   tfidf, tfidf_r6 (SPIDER + TF_IDF; positions stand in
+                          //   for URL_WORDS)
+    docTerms: DataFrame,  // url_id, pairs ARRAY<STRUCT<word_id,tf>> count-desc, max_tf, len
+                          //   (URL_WORD_COUNT, its head, and URL_LENGTH)
     urlInfo: DataFrame,   // url_id, title, last_modified, size_bytes (URL_INFO)
-    n: Long,              // corpus size (TfIdfMain.kt:19-20)
-    urlWordCount: DataFrame) // url_id, pairs ARRAY<STRUCT<word_id,tf>> count-desc (A3)
+    n: Long)              // corpus size (TfIdfMain.kt:19-20)
 
 object Indexer {
 
@@ -101,20 +102,37 @@ object Indexer {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // word ids: first-encounter order scanning docs ascending url_id, words
-    // in document order (canonicalized SpiderMain.kt:143-158)
+    // in document order (canonicalized SpiderMain.kt:143-158). One row per
+    // (doc, word), so the row count per word is its exact df (A4)
     val firstSeen = docPositions.groupBy("word")
-      .agg(min(struct(col("url_id"), col("positions")(0).as("pos"))).as("first"))
-      .select(col("word"), col("first.url_id").as("f_url"), col("first.pos").as("f_pos"))
-    val wordDict = denseIds(firstSeen, Seq("f_url", "f_pos"), "word_id", partitions)
-      .select("word", "word_id")
+      .agg(min(struct(col("url_id"), col("positions")(0).as("pos"))).as("first"),
+        count(lit(1)).as("df"))
+      .select(col("word"), col("first.url_id").as("f_url"), col("first.pos").as("f_pos"),
+        col("df"))
+    val words = denseIds(firstSeen, Seq("f_url", "f_pos"), "word_id", partitions)
+      .select("word", "word_id", "df")
+    val wordDict = words.select("word", "word_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // A1/A2: postings with tf, first position and every position in
-    // document order; the serve matches phrases on the positions, so no
-    // forward index (URL_WORDS) is built
-    val postings = docPositions.join(wordDict, Seq("word"))
-      .select(col("url_id"), col("word_id"), size(col("positions")).as("tf"),
-        col("positions")(0).as("first_pos"), col("positions"))
+    // A1/A2/A5: postings with tf, first position and every position in
+    // document order (the serve matches phrases on the positions, so no
+    // forward index — URL_WORDS — is built), and tf-idf with the
+    // reference's exact expression shape tf * ln(N/df) / ln(2)
+    // (TfIdfMain.kt:35), its ln the JVM's (gfn.jvm_ln, not Spark's
+    // StrictMath-based ln). The rounded copy is kept beside the raw one
+    // because the Ranker consumes the ROUNDED value while doc length uses
+    // the raw one (F11 split); it is exact-binary-value rounding
+    // (gfn.round6_exact), NOT Spark's round(): the reference formats with
+    // "%.6f" (java.math.BigDecimal semantics), and Spark's round() rounds
+    // the shortest decimal repr, which can differ on exact 6-dp
+    // half-boundary doubles
+    val tf = size(col("positions"))
+    val tfidf = tf.cast("double") * gfn.jvm_ln(lit(n.toDouble) / col("df").cast("double")) /
+      lit(math.log(2.0))
+    val postings = docPositions.join(words, Seq("word"))
+      .select(col("url_id"), col("word_id"), tf.as("tf"),
+        col("positions")(0).as("first_pos"), col("positions"), tfidf.as("tfidf"))
+      .withColumn("tfidf_r6", gfn.round6_exact(col("tfidf")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize BEFORE dropping the docPositions cache: postings is lazy,
     // and unpersisting its input first would re-run the whole
@@ -123,40 +141,22 @@ object Indexer {
     postings.count()
     docPositions.unpersist()
 
-    // A3: per-doc word-count list, count desc with FIRST-OCCURRENCE-stable
-    // ties (SpiderMain.kt:167-174 — Kotlin's stable sortedByDescending over
-    // a LinkedHashMap); encoded as sort by (-count, first_pos)
-    val urlWordCount = postings.groupBy("url_id")
-      .agg(transform(
-        sort_array(collect_list(struct((-col("tf")).as("neg"),
-          col("first_pos"), col("word_id"), col("tf")))),
-        x => struct(x.getField("word_id").as("word_id"), x.getField("tf").as("tf")))
-        .as("pairs"))
-
-    // maxTf = first count of the count-desc list (WebController.kt:64-65)
-    val maxTf = postings.groupBy("url_id").agg(max("tf").as("max_tf"))
-
-    // A4/A5: df exact, tfidf with the reference's exact expression shape
-    // tf * ln(N/df) / ln(2)  (TfIdfMain.kt:35); rounded copy kept separately
-    // because the Ranker consumes the ROUNDED value while doc length uses
-    // the raw one (F11 split)
-    val dfTbl = postings.groupBy("word_id").agg(count(lit(1)).as("df"))
-    val tfidf = postings.join(dfTbl, Seq("word_id"))
-      .withColumn("tfidf",
-        col("tf").cast("double") * log(lit(n.toDouble) / col("df").cast("double"))
-          / lit(math.log(2.0)))
-      // exact-binary-value rounding (gfn.round6_exact), NOT Spark's round():
-      // the reference formats with "%.6f" (java.math.BigDecimal semantics);
-      // Spark's round() rounds the shortest decimal repr, which can differ
-      // on exact 6-dp half-boundary doubles
-      .withColumn("tfidf_r6", gfn.round6_exact(col("tfidf")))
-      .select("url_id", "word_id", "tfidf", "tfidf_r6")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // A6: doc length over RAW tfidf (TfIdfMain.kt:38-42); empty docs have
-    // no entry (TfIdfMain.kt:26)
-    val docLen = tfidf.groupBy("url_id")
-      .agg(sqrt(sum(col("tfidf") * col("tfidf"))).as("len"))
+    // A3/A6: each document's word-count list, count desc with
+    // FIRST-OCCURRENCE-stable ties (SpiderMain.kt:167-174 — Kotlin's stable
+    // sortedByDescending over a LinkedHashMap, encoded as a sort by
+    // (-count, first_pos)); max_tf is its head (WebController.kt:64-65)
+    // and the doc length folds the RAW tf-idf squares over it in that
+    // order (TfIdfMain.kt:38-42), so it adds as the reference does,
+    // whatever the partitioning. Empty docs have no entry (TfIdfMain.kt:26)
+    val docTerms = postings.groupBy("url_id")
+      .agg(sort_array(collect_list(struct((-col("tf")).as("neg"), col("first_pos"),
+        col("word_id"), col("tf"), col("tfidf")))).as("terms"))
+      .select(col("url_id"),
+        transform(col("terms"),
+          x => struct(x.getField("word_id").as("word_id"), x.getField("tf").as("tf"))).as("pairs"),
+        col("terms")(0).getField("tf").as("max_tf"),
+        sqrt(aggregate(col("terms"), lit(0.0),
+          (acc, x) => acc + x.getField("tfidf") * x.getField("tfidf"))).as("len"))
 
     // F8-F10: metadata; warc_ts plays the Last-Modified header, the
     // copyright paragraph is the fallback, then the reference default
@@ -173,8 +173,7 @@ object Indexer {
         to_timestamp(lit("1990-01-01 00:00:00"))).as("last_modified"),
       coalesce(octet_length(col("html")), lit(0)).as("size_bytes"))
 
-    IndexTables(urlDict, links, wordDict, postings, maxTf, tfidf,
-      docLen, urlInfo, n, urlWordCount)
+    IndexTables(urlDict, links, wordDict, postings, docTerms, urlInfo, n)
   }
 
   /** S6: the reference's quoted-CSV value encoding (CSVParser.kt:10-34 /

@@ -32,7 +32,7 @@ import graft.text.TextPipeline
   *    is driver-side whenever the term dictionary fits in memory, and the
   *    scoring aggregate, mean score and top-K run in the job that collects
   *    the SERP;
-  *  - `statics` and postings⋈tfidf are materialized leaves, hash-partitioned
+  *  - `statics` and the postings are materialized leaves, hash-partitioned
   *    on url_id to the serve session's shuffle partitions, so the scoring
   *    aggregate and the statics join need no exchange. Phrases read the
   *    positions on the postings leaf, not a forward index;
@@ -71,7 +71,7 @@ import graft.text.TextPipeline
   *    tfidf_r6) × non-overlapping phrase count;
   *  - an unknown word inside a phrase kills the whole phrase; an unknown
   *    single word is dropped (Ranker.kt:100-119);
-  *  - normalizer = docLen · sqrt(#resolved term ids, flattened);
+  *  - normalizer = doc length · sqrt(#resolved term ids, flattened);
   *  - meanScore = Σ normalized / (3·|results|) — query-dependent;
   *  - title match uses ALL query stems (pre-resolution,
   *    WebController.kt:69), testing tokenized-title membership OR raw
@@ -92,7 +92,7 @@ object Searcher {
     private[rank] val runs = new ConcurrentHashMap[Shape, ShapeRun]()
 
     /** Release everything [[prepare]] materialized — the rank cache, the
-      * checkpointed statics, the postings⋈tfidf blocks, the shape runs. A
+      * checkpointed statics, the postings blocks, the shape runs. A
       * long-lived serving session should close() retired Prepared instances. */
     def close(): Unit = {
       runs.clear()
@@ -121,11 +121,11 @@ object Searcher {
   /** One-time serving prep: all query-invariant work happens here.
     *  - the rank table is cached and the global max PR read once;
     *  - `statics` pre-joins every per-doc value the serve consumes
-    *    (max_tf ⋈ rank ⋈ title ⋈ url ⋈ doc length, plus the tokenized and
-    *    lowercased title);
-    *  - `postingsTfidf` pre-joins postings⋈tfidf on (url_id, word_id),
-    *    positions included, and keeps each partition as one block sliced
-    *    by word id ([[WordSlices]]), read through the query's word ids;
+    *    (docTerms' max_tf and doc length ⋈ rank ⋈ title ⋈ url, plus the
+    *    tokenized and lowercased title);
+    *  - `postingsTfidf` is the postings' tf, rounded tf-idf and positions,
+    *    with each partition kept as one block sliced by word id
+    *    ([[WordSlices]]), read through the query's word ids;
     *  - both are leaves hash-partitioned on url_id, each materialized by
     *    one job: no per-query plan can re-derive them, and their
     *    partitioning lets the scoring aggregate and join skip the
@@ -184,30 +184,22 @@ object Searcher {
         links = rebind(index.links),
         wordDict = rebind(index.wordDict),
         postings = rebind(index.postings),
-        maxTf = rebind(index.maxTf),
-        tfidf = rebind(index.tfidf),
-        docLen = rebind(index.docLen),
+        docTerms = rebind(index.docTerms),
         urlInfo = rebind(index.urlInfo),
-        n = index.n,
-        urlWordCount = rebind(index.urlWordCount))
+        n = index.n)
       val sRanks = rebind(cached)
 
-      // docLen's keyset equals maxTf's (both derive from the
-      // postings-bearing docs), so the inner joins change no rows
-      val statics = materialize(sIdx.maxTf
+      val statics = materialize(sIdx.docTerms
         .join(sRanks, Seq("url_id"), "left")
         .join(sIdx.urlInfo.select("url_id", "title"), Seq("url_id"))
         .join(sIdx.urlDict.select("url_id", "url"), Seq("url_id"))
-        .join(sIdx.docLen, Seq("url_id"))
         .select(col("url_id"), col("max_tf"),
           coalesce(col("rank"), lit(0.0)).as("rank"), col("title"), col("url"),
           col("len"),
           gfn.tokenize_words(col("title")).as("title_toks"),
           lower(col("title")).as("title_lc")), Bridge.localCheckpoint)
 
-      // tfidf's keyset equals postings' (tfidf derives from postings)
       val postingsTfidf = materialize(sIdx.postings
-        .join(sIdx.tfidf, Seq("url_id", "word_id"))
         .select(col("word_id"), col("url_id"), col("tf"), col("tfidf_r6"), col("positions")),
         sliceByWord)
 
@@ -479,9 +471,8 @@ object Searcher {
     // (Σ score / 3n — the reference's driver-side mean), the title score and
     // the total are the job's function's ([[ScoreTopK]]): the narrow
     // coalesce(1) gives it every scored row in one partition, without an
-    // exchange, so the scoring join runs once. statics' keyset equals
-    // docLen's, so the join changes no rows. The columns are in the order of
-    // the scored-row ordinals ------------------------------------------------
+    // exchange, so the scoring join runs once. The columns are in the order
+    // of the scored-row ordinals ---------------------------------------------
     joined
       .select(col("url_id"), col("url"), col("title"), col("score"),
         (col("score") / col("max_tf")).as("cos"), (col("rank") / lit(p.maxPR * 3)).as("pr"),
@@ -513,7 +504,7 @@ object Searcher {
       .join(idx.urlDict.select(col("url_id").as("src"), col("url").as("purl")), "src")
       .groupBy(col("dst").as("url_id"))
       .agg(sort_array(collect_list("purl")).as("parent_urls"))
-    val top5 = idx.urlWordCount
+    val top5 = idx.docTerms
       .join(ids, Seq("url_id"), "left_semi")
       .select(col("url_id"), posexplode(slice(col("pairs"), 1, 5)).as(Seq("i", "p")))
       .join(idx.wordDict, col("p.word_id") === idx.wordDict("word_id"))

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.Platform
 
 import graft.functions.QueryParam
 
-/** One serve partition of postings⋈tfidf: its rows, in leaf order, packed
+/** One serve partition of the postings leaf: its rows, in leaf order, packed
   * in one byte array (row r at `offsets(r)` until `offsets(r + 1)`), and
   * for each word id of `words` (ascending) the numbers of its rows,
   * ascending: `rowNums(starts(i))` until `rowNums(starts(i + 1))`. */

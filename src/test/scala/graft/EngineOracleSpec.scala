@@ -239,21 +239,49 @@ class EngineOracleSpec extends AnyFunSuite {
   }
 
   test("index: 6-dp tfidf exact; raw doc length to 1e-9") {
-    val engine = engineIndex.tfidf.select("url_id", "word_id", "tfidf_r6")
+    val engine = engineIndex.postings.select("url_id", "word_id", "tfidf_r6")
       .as[(Long, Long, Double)].collect()
       .map { case (d, w, v) => (d, w) -> v }.toMap
     assert(engine.keySet == oracleIndex.tfidfR6.keySet)
     engine.foreach { case (k, v) =>
       assert(v == oracleIndex.tfidfR6(k), s"tfidf_r6 mismatch at $k") }
 
-    val engineLen = engineIndex.docLen.as[(Long, Double)].collect().toMap
+    val engineLen = engineLengths(engineIndex)
     assert(engineLen.keySet == oracleIndex.docLen.keySet)
     engineLen.foreach { case (d, l) =>
       assert(math.abs(l - oracleIndex.docLen(d)) <= 1e-9, s"docLen mismatch at $d") }
   }
 
+  private def engineLengths(index: graft.index.IndexTables): Map[Long, Double] =
+    index.docTerms.select("url_id", "len").as[(Long, Double)].collect().toMap
+
+  test("index: raw tf-idf and doc lengths == the oracle's, on this corpus and the demo index") {
+    // tf-idf takes the JVM's ln, as the reference does, and the length
+    // folds its squares in the oracle's count-desc, first-occurrence order,
+    // so both are bit-identical, not merely close
+    val raw = engineIndex.postings.select("url_id", "word_id", "tfidf")
+      .as[(Long, Long, Double)].collect().map { case (d, w, v) => (d, w) -> v }.toMap
+    assert(raw == oracleIndex.tfidfRaw)
+    assert(engineLengths(engineIndex) == oracleIndex.docLen)
+    val (demo, _) = SparkEntry.demoIndexForProfile(spark)
+    val demoPages = TestCorpus.generate(SparkEntry.demoSpec)
+    val demoOracle = ReferenceOracle.buildIndex(demoPages,
+      ReferenceOracle.crawl(demoPages, CrawlParams(seeds, filter)).seen, filter)
+    assert(engineLengths(demo) == demoOracle.docLen)
+  }
+
+  test("index: docTerms and postings' tf-idf are identical at 1 and 4 build partitions") {
+    val one = Indexer.build(spark, pagesDf, engineCrawl.seen, filter, partitions = 1)
+    def terms(index: graft.index.IndexTables) =
+      index.docTerms.orderBy("url_id").collect().toSeq
+    def tfidf(index: graft.index.IndexTables) =
+      index.postings.select("url_id", "word_id", "tfidf", "tfidf_r6").collect().toSet
+    assert(terms(one) == terms(engineIndex))
+    assert(tfidf(one) == tfidf(engineIndex))
+  }
+
   test("index: max_tf matches the head of the count-desc list") {
-    val engine = engineIndex.maxTf.as[(Long, Int)].collect().toMap
+    val engine = engineIndex.docTerms.select("url_id", "max_tf").as[(Long, Int)].collect().toMap
     val oracle = oracleIndex.wordCountList.collect {
       case (d, wc) if wc.nonEmpty => d -> wc.head._2 }
     assert(engine == oracle)

@@ -10,11 +10,10 @@ class OpsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def naiveSimhash(tokens: Seq[String], md5: Boolean): Long = {
+  private def naiveSimhash(tokens: Seq[String]): Long = {
     val counts = new Array[Int](64)
     tokens.foreach { t =>
-      val u = org.apache.spark.unsafe.types.UTF8String.fromString(t)
-      val h = if (md5) TextExprImpl.md5Lower64(u) else TextExprImpl.hash64(u)
+      val h = TextExprImpl.md5Lower64(org.apache.spark.unsafe.types.UTF8String.fromString(t))
       (0 until 64).foreach { b =>
         if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1 }
     }
@@ -49,25 +48,18 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("simhash expression == naive reference (both hash variants); near-dup property") {
+  test("simhash expression == naive reference (md5 token hash); near-dup property") {
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog"),
       (1L, "the quick brown fox jumps over the lazy cat"), // near dup
       (2L, "completely different content about spark engines")).toDF("doc_id", "text")
-    // md5 through the op; the xxhash64 kernel through gfn.simhash directly
-    val variants = Seq(
-      true -> T.simhashes(docs),
-      false -> docs.select(col("doc_id"),
-        gfn.simhash(T.wsTokens(col("text"))).as("simhash")))
-    for ((md5, fps) <- variants) {
-      val got = fps.as[(Long, Long)].collect().toMap
-      docs.collect().foreach { r =>
-        val toks = r.getString(1).split(" ").filter(_.nonEmpty)
-        assert(got(r.getLong(0)) == naiveSimhash(toks.toSeq, md5))
-      }
-      def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-      assert(hamming(got(0L), got(1L)) < hamming(got(0L), got(2L)))
+    val got = T.simhashes(docs).as[(Long, Long)].collect().toMap
+    docs.collect().foreach { r =>
+      val toks = r.getString(1).split(" ").filter(_.nonEmpty)
+      assert(got(r.getLong(0)) == naiveSimhash(toks.toSeq))
     }
+    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
+    assert(hamming(got(0L), got(1L)) < hamming(got(0L), got(2L)))
   }
 
   test("md5Lower64 == DuckDB md5_number_lower two's complement (pinned values)") {
@@ -153,7 +145,7 @@ class OpsSpec extends AnyFunSuite {
     val b = "the quick brown fox jumps over the lazy cat in the morning sun"
     val c = "entirely unrelated text with no shared substrings whatsoever here"
     def fps(s: String) = {
-      val arr = TextExprImpl.winnow(
+      val arr = TextExprImpl.winnowMd5(
         org.apache.spark.unsafe.types.UTF8String.fromString(s), 8, 4)
       (0 until arr.numElements()).map(arr.getLong).toSet
     }
@@ -299,7 +291,7 @@ class OpsSpec extends AnyFunSuite {
       .limit(50)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    val s = emb.select(col("vec_id"), gfn.srp_sketch(col("v")).as("s64"),
+    val s = emb.select(col("vec_id"), element_at(gfn.srp_sketch_n(col("v"), 1), 1).as("s64"),
       gfn.srp_sketch_n(col("v"), 2).as("sw"))
     assert(s.filter(element_at(col("sw"), 1) =!= col("s64")).count() == 0)
     val a = s.select(col("vec_id").as("ia"), col("sw").as("wa"))

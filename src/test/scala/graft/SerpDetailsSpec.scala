@@ -34,7 +34,7 @@ class SerpDetailsSpec extends AnyFunSuite {
   private lazy val eIdx = Indexer.build(spark, pagesDf, eCrawl.seen, filter, 4)
 
   test("A3: word-count list = count desc, first-occurrence-stable ties") {
-    val engine = eIdx.urlWordCount
+    val engine = eIdx.docTerms
       .select(col("url_id"), col("pairs"))
       .as[(Long, Seq[(Long, Int)])].collect().toMap
     val oracle = oIdx.wordCountList.filter(_._2.nonEmpty)
@@ -307,8 +307,7 @@ class SerpDetailsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     // materialize the index's own lazy persists first: they belong to the
     // index, and prepare() would otherwise be the first to fill them
-    Seq(eIdx.urlDict, eIdx.links, eIdx.wordDict, eIdx.postings,
-      eIdx.maxTf, eIdx.tfidf, eIdx.docLen, eIdx.urlInfo, eIdx.urlWordCount)
+    Seq(eIdx.urlDict, eIdx.links, eIdx.wordDict, eIdx.postings, eIdx.docTerms, eIdx.urlInfo)
       .foreach(_.count())
     val ranks = freshRanks
     ranks.count()
@@ -318,7 +317,7 @@ class SerpDetailsSpec extends AnyFunSuite {
     Searcher.search(spark, p, "research").collect()
     Searcher.search(spark, p, "\"hong kong\" research").collect()
     val added = stored -- before
-    assert(added.size >= 3, s"prepare() must hold ranks, statics and postings⋈tfidf: $added")
+    assert(added.size >= 3, s"prepare() must hold ranks, statics and postings: $added")
     p.close()
     // shrinkage is fine (the ContextCleaner may reclaim dead RDDs of other
     // suites concurrently); nothing prepare() added may survive close()
@@ -335,7 +334,7 @@ class SerpDetailsSpec extends AnyFunSuite {
   }
 
   test("F11: %.6f string form of tfidf matches the oracle's storage string") {
-    val engine = eIdx.tfidf
+    val engine = eIdx.postings
       .select(col("url_id"), col("word_id"), format_string("%.6f", col("tfidf")).as("s"))
       .as[(Long, Long, String)].collect()
       .map { case (d, w, s) => (d, w) -> s }.toMap

@@ -45,15 +45,12 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(sql1[String]("SELECT url_path('https://h.test/x/y.html')") == "/x/y.html")
   }
 
-  test("extract_links and count_phrase run via spark.sql") {
+  test("extract_links runs via spark.sql") {
     val links = sqlSeq[String](
       """SELECT extract_links(
         |  CAST('<html><body><a href="p2.html">x</a><a href="http://other/">y</a></body></html>' AS BINARY),
         |  'https://h.test/p1.html', '.test/', true)""".stripMargin)
     assert(links == Seq("https://h.test/p2.html"))
-    // count_phrase runs over ARRAY<LONG> forward word-id indexes
-    assert(sql1[Int](
-      "SELECT count_phrase(array(1L,2L,1L,2L,3L), array(1L,2L))") == 2)
   }
 
   test("hash/sketch/rounding functions run via spark.sql and match the column API") {
@@ -62,9 +59,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val viaApi = Seq(Tuple1(Seq("alpha", "beta", "gamma"))).toDF("t")
       .select(gfn.simhash_md5($"t")).collect().head.getLong(0)
     assert(viaSql == viaApi)
-    assert(sql1[Long]("SELECT simhash(array('alpha','beta'))") ==
-      Seq(Tuple1(Seq("alpha", "beta"))).toDF("t")
-        .select(gfn.simhash($"t")).collect().head.getLong(0))
 
     val text = "the winnowing fingerprint functions run from sql"
     val wSql = sqlSeq[Long](s"SELECT winnow_md5('$text', 8, 4)")
@@ -73,7 +67,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.lit(4)))
       .collect().head.getSeq[Long](0).toSeq
     assert(wSql == wApi && wSql.nonEmpty)
-    assert(sqlSeq[Long](s"SELECT winnow_fingerprints('$text', 8, 4)").nonEmpty)
 
     // exact-BINARY semantics: the double literal 0.1234565 is really
     // 0.12345649999…, i.e. BELOW the half-boundary → rounds DOWN (this is
@@ -122,10 +115,10 @@ class SqlSurfaceSpec extends AnyFunSuite {
     }
     assert(kErr.getMessage.contains("must be an integer literal"))
 
-    val s = sql1[Long]("SELECT srp_sketch(array(1.0d, -2.0d, 0.5d))")
+    val s = sqlSeq[Long]("SELECT srp_sketch_n(array(1.0d, -2.0d, 0.5d), 2)")
     val sApi = Seq(Tuple1(Seq(1.0, -2.0, 0.5))).toDF("v")
-      .select(gfn.srp_sketch($"v")).collect().head.getLong(0)
-    assert(s == sApi)
+      .select(gfn.srp_sketch_n($"v", 2)).collect().head.getSeq[Long](0).toSeq
+    assert(s == sApi && s.size == 2)
   }
 
   test("extract_copyright_date runs via spark.sql") {
